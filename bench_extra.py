@@ -7,7 +7,7 @@ discipline — without paying a full 134-query sweep per iteration).
 Usage:
   python bench_extra.py q1,q2,...      # time named queries, best-of-2
   python bench_extra.py q1 --reps 3    # more reps
-  python bench_extra.py q1 --explain plans/r09/q1_before.txt
+  python bench_extra.py q1 --explain /tmp/q1_plan.txt
                                        # also dump .explain("formatted")
 
 Prints one JSON line {"queries": {...}} compatible with bench.py's shape.

@@ -1,5 +1,6 @@
-"""Link-graph operators over crawled pages: degree statistics and
-dangling-aware PageRank as iterative DataFrame joins.
+"""Link-graph operators over crawled pages: degree statistics,
+dangling-aware PageRank and its relatives (personalized PageRank, spam
+mass, HITS, label propagation, seed BFS) as iterative DataFrame joins.
 
 A web corpus is a graph before it is a corpus: hyperlinks carry the
 quality signal every crawl-curation stack uses upstream of text filters
@@ -28,11 +29,31 @@ Design notes for 10^12-edge scale:
   per-node broadcast join.
 - Skew: a celebrity page with 10^8 in-links is a groupBy(dst) hot key —
   partial aggregation combines map-side, and AQE's skew-join handling
-  covers the contribution join. No windows, no UDFs, no driver-side
-  graph state.
+  covers the contribution join. No windows, no UDFs.
+
+One contract, two backends:
+
+- Size gate. Each iterative operator (pagerank, spam_mass, hits,
+  label_propagation, seed_distance) probes its side tables (seeds, init
+  ranks) and then its edge projection with limit(cap+1).collect(). When
+  all of them fit under `driver_fastpath_edges` (default
+  _DRIVER_FASTPATH_EDGES) the rounds run as plain-Python IEEE-double
+  loops on the driver over the collected rows; otherwise the distributed
+  loop runs, and the probe has read ~cap+1 rows, never the whole table.
+  Differential tests pin both paths equal.
+- Nulls. A null node never matches a key: it is never dangling, never a
+  seed, never reached by BFS and never receives a link contribution, but
+  it keeps its row in the vertex-listing outputs (pagerank, spam_mass,
+  hits, label_propagation). This is what the distributed equi-joins do,
+  and what the DuckDB oracles' NOT IN does.
+- Empty edge list. pagerank, hits, label_propagation and seed_distance
+  return an empty typed frame; an empty seed intersection (always the
+  case on an empty graph) raises for pagerank(seeds=...) and spam_mass.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -42,17 +63,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# Size gate for the driver fast path shared by the iterative operators
-# (pagerank / hits / label_propagation / seed_distance / spam_mass): a
-# graph whose FULL edge list comes back from a limit(cap+1) probe runs
-# its rounds as plain-Python IEEE-double loops on the driver instead of
-# paying ~2 scheduled jobs per round on a table that fits in one task.
-# The probe never counts the big table (CollectLimit short-circuits
-# after cap+1 rows, ~one split scan), so the 10^12-edge path is
-# unchanged; 200k edges of URL-sized strings collect to ~40 MB, well
-# inside default driver limits. Same scale-adaptive idiom as
-# textops.connected_min_labels' size-gated union-find finish; both
-# paths are pinned equal by differential tests.
+# The size gate (see the module docstring): a graph that fits runs its
+# rounds on the driver instead of paying ~2 scheduled jobs per round on
+# a table that fits in one task. The probe never counts the big table
+# (CollectLimit short-circuits after cap+1 rows, ~one split scan), so
+# the 10^12-edge path is unchanged; 200k edges of URL-sized strings
+# collect to ~40 MB, well inside default driver limits. Same
+# scale-adaptive idiom as textops.connected_min_labels' size-gated
+# union-find finish.
 _DRIVER_FASTPATH_EDGES = 200_000
 
 
@@ -66,71 +84,118 @@ def _probe_small(df: DataFrame, cap: int):
     return rows if len(rows) <= cap else None
 
 
-def _union_node_type(e0: DataFrame, a: str, b: str):
-    """The node dtype the distributed path's vertex union would carry
-    (schema-only — no job)."""
-    return (
+def _probe_graph(cap: int, edges: DataFrame, *side):
+    """The shared fast-path gate: (edge_rows, *side_rows) when the edge
+    projection and every side table (None passes through as None) come
+    back from _probe_small, else None. The side tables go FIRST, so an
+    oversized seed or init table falls through to the distributed path
+    without pulling cap+1 edge rows to the driver."""
+    side_rows = []
+    for t in side:
+        rows = None if t is None else _probe_small(t, cap)
+        if t is not None and rows is None:
+            return None
+        side_rows.append(rows)
+    rows = _probe_small(edges, cap)
+    return None if rows is None else (rows, *side_rows)
+
+
+def _load_graph(rows, a: str, b: str, weighted: bool = False):
+    """The driver-side graph of a fast path, built from probed edge rows
+    under the module's null rule: `nodes` holds every endpoint in
+    first-seen order (a null one too — it keeps its output row);
+    `edges` holds the (s, t, w) triples whose endpoints are both
+    non-null, the only ones an update can traverse; `out_w` maps each
+    non-null source to its out-weight over ALL its edges (an edge into
+    a null node still dilutes its source, as the distributed out-degree
+    groupBy counts it). w is the float weight, or the int 1 when
+    unweighted, so rank * w / out_w is exactly rank / outdeg."""
+    nodes: dict = {}
+    edges = []
+    out_w: dict = {}
+    for r in rows:
+        s, t = r[a], r[b]
+        w = float(r["__w"]) if weighted else 1
+        nodes.setdefault(s)
+        nodes.setdefault(t)
+        if s is not None:
+            out_w[s] = out_w.get(s, 0) + w
+            if t is not None:
+                edges.append((s, t, w))
+    return nodes, edges, out_w
+
+
+def _frame(e0: DataFrame, a: str, b: str, cols, rows) -> DataFrame:
+    """The typed result frame of a driver fast path (or of an empty
+    graph): `node` of the dtype the distributed path's vertex union
+    carries (schema-only — no job), then `cols` as (name, dtype) pairs,
+    where a None dtype means the node dtype."""
+    node_t = (
         e0.select(F.col(a).alias("node"))
         .union(e0.select(F.col(b).alias("node")))
         .schema["node"]
         .dataType
     )
+    schema = StructType(
+        [StructField("node", node_t, True)]
+        + [StructField(c, node_t if t is None else t, True) for c, t in cols]
+    )
+    return e0.sparkSession.createDataFrame(rows, schema)
+
+
+def _checked_weight(who: str, weight_col: str):
+    """The edge weight with the positivity guard fused into the
+    projection (raise_error CASE — no extra scan); the fast-path probe
+    collect raises on a bad weight exactly like the distributed
+    actions."""
+    return F.when(
+        F.col(weight_col) <= 0,
+        F.raise_error(F.lit(
+            f"{who}: non-positive {weight_col} — a weighted edge must "
+            f"carry positive endorsement"
+        )),
+    ).otherwise(F.col(weight_col))
+
+
+def _no_seed(who: str) -> ValueError:
+    return ValueError(
+        f"{who}: no seed appears in the graph — personalized teleport "
+        f"has nowhere to land"
+    )
 
 
 def _pagerank_driver(
-    e0: DataFrame,
-    rows,
-    n_iter: int,
-    damping: float,
-    src_col: str,
-    dst_col: str,
-    weight_col,
-    seed_rows,
-    init_rows,
-) -> DataFrame:
-    """The pagerank rounds as a plain-Python IEEE-double loop over an
-    already-collected edge list — update expressions mirror the
-    distributed path's exactly (contrib = rank*w/out_w, uniform or
-    seeded teleport, dangling mass as one scalar per round); summation
-    order differs, which the 6dp query contract absorbs (differential-
-    pinned against the distributed path)."""
-    spark = e0.sparkSession
-    weighted = weight_col is not None
-    nodes: dict = {}
-    edges = []
-    for r in rows:
-        s, t = r[src_col], r[dst_col]
-        nodes.setdefault(s)
-        nodes.setdefault(t)
-        edges.append((s, t, float(r["__w"]) if weighted else 1))
+    g, chains, n_iter: int, damping: float, seed_rows, init_rows, who: str
+):
+    """The pagerank rounds as plain-Python IEEE-double loops over a
+    _load_graph graph, one independent rank vector per chain (see
+    _pagerank_core) — update expressions mirror the distributed path's
+    exactly (contrib = rank*w/out_w, uniform or seeded teleport, dangling
+    mass as one scalar per round); summation order differs, which the
+    6dp query contract absorbs (differential-pinned against the
+    distributed path). Returns one {node: rank} dict per chain, or None
+    for an empty graph."""
+    nodes, edges, out_w = g
     n = len(nodes)
-    schema = StructType([
-        StructField("node", _union_node_type(e0, src_col, dst_col), True),
-        StructField("rank", DoubleType(), True),
-    ])
+    seed_tele = None
+    if any(seeded for _, seeded in chains):
+        inter = {
+            r["node"]
+            for r in seed_rows
+            if r["node"] is not None and r["node"] in nodes
+        }
+        if not inter:
+            raise _no_seed(who)
+        seed_tele = {
+            v: (1.0 / len(inter) if v in inter else 0.0) for v in nodes
+        }
     if n == 0:
-        return spark.createDataFrame([], schema)
-    out_w: dict = {}
-    for s, t, w in edges:
-        if s is not None:
-            out_w[s] = out_w.get(s, 0.0 if weighted else 0) + w
-    dangling = [v for v in nodes if v not in out_w]
-    tele = None
-    if seed_rows is not None:
-        inter = {r["node"] for r in seed_rows if r["node"] is not None}
-        inter &= set(k for k in nodes if k is not None)
-        ns = len(inter)
-        if ns == 0:
-            raise ValueError(
-                "pagerank: no seed appears in the graph — personalized "
-                "teleport has nowhere to land"
-            )
-        tele = {v: (1.0 / ns if v in inter else 0.0) for v in nodes}
+        return None
     if init_rows is not None:
         ir: dict = {}
         for r in init_rows:
             v = r["__r0"]
-            if v is not None:
+            if v is not None and r["node"] is not None:
                 ir[r["node"]] = ir.get(r["node"], 0.0) + v
         fill = 1.0 / float(n)
         r0 = {v: ir.get(v, fill) for v in nodes}
@@ -139,121 +204,69 @@ def _pagerank_driver(
             raise ValueError(
                 "pagerank: init_ranks total mass must be positive"
             )
-        ranks = {v: r0[v] / float(tot) for v in nodes}
+        r0 = {v: r0[v] / float(tot) for v in nodes}
     else:
-        ranks = {v: 1.0 / float(n) for v in nodes}
-
-    def dmass(rk) -> float:
-        return sum(rk[v] for v in dangling) if dangling else 0.0
-
+        r0 = dict.fromkeys(nodes, 1.0 / float(n))
+    dangling = [v for v in nodes if v is not None and v not in out_w]
     base = (1.0 - damping) / float(n)
-    dm = dmass(ranks)
-    for _ in range(n_iter):
-        contrib: dict = {}
-        for s, t, w in edges:
-            if s is None:
-                continue
-            c = ranks[s] * w / out_w[s] if weighted else ranks[s] / out_w[s]
-            contrib[t] = contrib.get(t, 0.0) + c
-        if tele is not None:
-            ranks = {
-                v: (1.0 - damping) * tele[v]
-                + damping
-                * (
-                    (contrib.get(v, 0.0) if v is not None else 0.0)
-                    + dm * tele[v]
-                )
-                for v in nodes
-            }
-        else:
-            ranks = {
-                v: base
-                + damping
-                * (
-                    (contrib.get(v, 0.0) if v is not None else 0.0)
-                    + dm / float(n)
-                )
-                for v in nodes
-            }
-        dm = dmass(ranks)
-    return spark.createDataFrame(
-        [(v, ranks[v]) for v in nodes], schema
-    )
+
+    def rounds(tele):
+        ranks = r0
+        dm = sum((ranks[v] for v in dangling), 0.0)
+        for _ in range(n_iter):
+            contrib: dict = {}
+            for s, t, w in edges:
+                contrib[t] = contrib.get(t, 0.0) + ranks[s] * w / out_w[s]
+            if tele is not None:
+                ranks = {
+                    v: (1.0 - damping) * tele[v]
+                    + damping * (contrib.get(v, 0.0) + dm * tele[v])
+                    for v in nodes
+                }
+            else:
+                ranks = {
+                    v: base
+                    + damping * (contrib.get(v, 0.0) + dm / float(n))
+                    for v in nodes
+                }
+            dm = sum((ranks[v] for v in dangling), 0.0)
+        return ranks
+
+    return [rounds(seed_tele if seeded else None) for _, seeded in chains]
 
 
-def _hits_driver(base_e: DataFrame, rows, n_iter: int, weighted: bool) -> DataFrame:
+def _hits_driver(g, n_iter: int):
     """The HITS rounds on the driver — same unnormalized-accumulate /
-    one-norm-pair-per-round math as the distributed loop."""
-    import math
-
-    spark = base_e.sparkSession
-    nodes: dict = {}
-    edges = []
-    for r in rows:
-        s, t = r["__s"], r["__d"]
-        nodes.setdefault(s)
-        nodes.setdefault(t)
-        edges.append((s, t, float(r["__w"]) if weighted else 1.0))
-    schema = StructType([
-        StructField("node", _union_node_type(base_e, "__s", "__d"), True),
-        StructField("hub", DoubleType(), True),
-        StructField("authority", DoubleType(), True),
-    ])
-    if not nodes:
-        return spark.createDataFrame([], schema)
-    hub = {v: 1.0 for v in nodes}
-    auth = {v: 1.0 for v in nodes}
+    one-norm-pair-per-round math as the distributed loop. Returns the
+    (node, hub, authority) rows."""
+    nodes, edges, _ = g
+    hub = dict.fromkeys(nodes, 1.0)
     for _ in range(n_iter):
         a_u: dict = {}
         for s, t, w in edges:
-            if s is None:
-                continue
-            a_u[t] = a_u.get(t, 0.0) + (w * hub[s] if weighted else hub[s])
-        auth_u = {
-            v: (a_u.get(v, 0.0) if v is not None else 0.0) for v in nodes
-        }
+            a_u[t] = a_u.get(t, 0.0) + w * hub[s]
+        auth_u = {v: a_u.get(v, 0.0) for v in nodes}
         h_u: dict = {}
         for s, t, w in edges:
-            if t is None:
-                continue
-            h_u[s] = h_u.get(s, 0.0) + (
-                w * auth_u[t] if weighted else auth_u[t]
-            )
-        hub_u = {
-            v: (h_u.get(v, 0.0) if v is not None else 0.0) for v in nodes
-        }
-        an = math.sqrt(sum(x * x for x in auth_u.values()))
-        hn = math.sqrt(sum(x * x for x in hub_u.values()))
-        an = an if an else 1.0
-        hn = hn if hn else 1.0
+            h_u[s] = h_u.get(s, 0.0) + w * auth_u[t]
+        hub_u = {v: h_u.get(v, 0.0) for v in nodes}
+        an = math.sqrt(sum(x * x for x in auth_u.values())) or 1.0
+        hn = math.sqrt(sum(x * x for x in hub_u.values())) or 1.0
         auth = {v: auth_u[v] / an for v in nodes}
         hub = {v: hub_u[v] / hn for v in nodes}
-    return spark.createDataFrame(
-        [(v, hub[v], auth[v]) for v in nodes], schema
-    )
+    return [(v, hub[v], auth[v]) for v in nodes]
 
 
-def _lpa_driver(e0: DataFrame, rows, n_iter: int) -> DataFrame:
+def _lpa_driver(g, n_iter: int):
     """The synchronous label-propagation rounds on the driver — integer
     counts and the (max count, min label) tie order are exact, so both
-    paths are bit-identical."""
-    spark = e0.sparkSession
-    nodes: dict = {}
+    paths are bit-identical. Returns the (node, label) rows."""
+    nodes, edges, _ = g
     und = set()
-    for r in rows:
-        a, b = r["node"], r["nbr"]
-        nodes.setdefault(a)
-        nodes.setdefault(b)
-        if a is not None and b is not None and a != b:
+    for a, b, _ in edges:
+        if a != b:
             und.add((a, b))
             und.add((b, a))
-    node_t = _union_node_type(e0, "node", "nbr")
-    schema = StructType([
-        StructField("node", node_t, True),
-        StructField("label", node_t, True),
-    ])
-    if not nodes:
-        return spark.createDataFrame([], schema)
     labels = {v: v for v in nodes}
     for _ in range(n_iter):
         cnt: dict = {}
@@ -269,136 +282,30 @@ def _lpa_driver(e0: DataFrame, rows, n_iter: int) -> DataFrame:
         labels = {
             v: (best[v][1] if v in best else labels[v]) for v in nodes
         }
-    return spark.createDataFrame(
-        [(v, labels[v]) for v in nodes], schema
-    )
+    return [(v, labels[v]) for v in nodes]
 
 
-def _bfs_driver(e: DataFrame, erows, seed_rows, max_hops: int) -> DataFrame:
-    """Frontier BFS on the driver — hop distances are integer-exact."""
-    spark = e.sparkSession
-    vertices = set()
+def _bfs_driver(g, seed_rows, max_hops: int):
+    """Frontier BFS on the driver — hop distances are integer-exact.
+    Returns the (node, hops) rows of the reached nodes."""
+    nodes, edges, _ = g
     adj: dict = {}
-    for r in erows:
-        s, t = r["__s"], r["__d"]
-        vertices.add(s)
-        vertices.add(t)
-        if s is not None and t is not None:
-            adj.setdefault(s, set()).add(t)
-    schema = StructType([
-        StructField("node", _union_node_type(e, "__s", "__d"), True),
-        StructField("hops", IntegerType(), True),
-    ])
-    visited: dict = {}
-    frontier = []
-    for r in seed_rows:
-        v = r["node"]
-        if v is not None and v in vertices and v not in visited:
-            visited[v] = 0
-            frontier.append(v)
+    for s, t, _ in edges:
+        adj.setdefault(s, set()).add(t)
+    visited = {
+        r["node"]: 0
+        for r in seed_rows
+        if r["node"] is not None and r["node"] in nodes
+    }
+    frontier = set(visited)
     for h in range(1, max_hops + 1):
-        nxt = []
-        seen_this_hop = set()
-        for s in frontier:
-            for t in adj.get(s, ()):
-                if t not in visited and t not in seen_this_hop:
-                    seen_this_hop.add(t)
-                    nxt.append(t)
-        if not nxt:
+        frontier = {
+            t for s in frontier for t in adj.get(s, ()) if t not in visited
+        }
+        if not frontier:
             break
-        for t in nxt:
-            visited[t] = h
-        frontier = nxt
-    return spark.createDataFrame(
-        [(v, h) for v, h in visited.items()], schema
-    )
-
-
-def _spam_mass_driver(
-    e0: DataFrame,
-    rows,
-    seed_rows,
-    n_iter: int,
-    damping: float,
-    src_col: str,
-    dst_col: str,
-) -> DataFrame:
-    """The fused (pr, ppr) rounds on the driver — per-vector arithmetic
-    identical to _pagerank_driver's uniform and seeded updates."""
-    spark = e0.sparkSession
-    nodes: dict = {}
-    edges = []
-    for r in rows:
-        s, t = r[src_col], r[dst_col]
-        nodes.setdefault(s)
-        nodes.setdefault(t)
-        edges.append((s, t))
-    n = len(nodes)
-    schema = StructType([
-        StructField("node", _union_node_type(e0, src_col, dst_col), True),
-        StructField("pr", DoubleType(), True),
-        StructField("ppr", DoubleType(), True),
-        StructField("mass", DoubleType(), True),
-    ])
-    inter = {r["node"] for r in seed_rows if r["node"] is not None}
-    inter &= set(k for k in nodes if k is not None)
-    ns = len(inter)
-    if ns == 0:
-        raise ValueError(
-            "spam_mass: no seed appears in the graph — personalized "
-            "teleport has nowhere to land"
-        )
-    out_w: dict = {}
-    for s, t in edges:
-        if s is not None:
-            out_w[s] = out_w.get(s, 0) + 1
-    dangling = [v for v in nodes if v not in out_w]
-    tele = {v: (1.0 / ns if v in inter else 0.0) for v in nodes}
-    pr = {v: 1.0 / float(n) for v in nodes}
-    ppr = {v: 1.0 / float(n) for v in nodes}
-
-    def dmass():
-        return (
-            sum(pr[v] for v in dangling) if dangling else 0.0,
-            sum(ppr[v] for v in dangling) if dangling else 0.0,
-        )
-
-    base = (1.0 - damping) / float(n)
-    dm_pr, dm_ppr = dmass()
-    for _ in range(n_iter):
-        c_pr: dict = {}
-        c_ppr: dict = {}
-        for s, t in edges:
-            if s is None:
-                continue
-            c_pr[t] = c_pr.get(t, 0.0) + pr[s] / out_w[s]
-            c_ppr[t] = c_ppr.get(t, 0.0) + ppr[s] / out_w[s]
-        pr = {
-            v: base
-            + damping
-            * (
-                (c_pr.get(v, 0.0) if v is not None else 0.0)
-                + dm_pr / float(n)
-            )
-            for v in nodes
-        }
-        ppr = {
-            v: (1.0 - damping) * tele[v]
-            + damping
-            * (
-                (c_ppr.get(v, 0.0) if v is not None else 0.0)
-                + dm_ppr * tele[v]
-            )
-            for v in nodes
-        }
-        dm_pr, dm_ppr = dmass()
-    return spark.createDataFrame(
-        [
-            (v, pr[v], ppr[v], (pr[v] - ppr[v]) / pr[v])
-            for v in nodes
-        ],
-        schema,
-    )
+        visited.update(dict.fromkeys(frontier, h))
+    return list(visited.items())
 
 
 def degrees(
@@ -498,15 +405,10 @@ def hits(
     src = F.col(src_col)
     dst = F.col(dst_col)
     if weight_col is not None:
-        w = F.when(
-            F.col(weight_col) <= 0,
-            F.raise_error(F.lit(
-                f"hits: non-positive {weight_col} — a weighted edge "
-                f"must carry positive endorsement"
-            )),
-        ).otherwise(F.col(weight_col))
         base_e = edges.select(
-            src.alias("__s"), dst.alias("__d"), w.alias("__w")
+            src.alias("__s"),
+            dst.alias("__d"),
+            _checked_weight("hits", weight_col).alias("__w"),
         )
     else:
         base_e = edges.select(src.alias("__s"), dst.alias("__d"))
@@ -521,11 +423,14 @@ def hits(
     # scale-adaptive fast path (see _DRIVER_FASTPATH_EDGES): the weight
     # guard rides the projection, so the probe collect raises on a
     # non-positive weight exactly like the distributed actions would
-    rows = _probe_small(base_e0, driver_fastpath_edges)
-    if rows is not None:
+    probed = _probe_graph(driver_fastpath_edges, base_e0)
+    if probed is not None:
         try:
-            return _hits_driver(
-                base_e0, rows, n_iter, weight_col is not None
+            g = _load_graph(probed[0], "__s", "__d", weight_col is not None)
+            return _frame(
+                base_e0, "__s", "__d",
+                [("hub", DoubleType()), ("authority", DoubleType())],
+                _hits_driver(g, n_iter),
             )
         finally:
             base_e0.unpersist()
@@ -737,11 +642,42 @@ def pagerank(
     rounds on the driver with identical update expressions — see
     _DRIVER_FASTPATH_EDGES. 0 disables (always distributed).
     """
+    return _pagerank_core(
+        edges, (("rank", seeds is not None),), n_iter, damping, src_col,
+        dst_col, checkpoint_every, seeds, weight_col, init_ranks,
+        driver_fastpath_edges, "pagerank",
+    )
+
+
+def _pagerank_core(
+    edges: DataFrame,
+    chains,
+    n_iter: int,
+    damping: float,
+    src_col: str,
+    dst_col: str,
+    checkpoint_every: int,
+    seeds: DataFrame | None,
+    weight_col: str | None,
+    init_ranks: DataFrame | None,
+    driver_fastpath_edges: int,
+    who: str,
+) -> DataFrame:
+    """The one PageRank round loop behind pagerank and spam_mass, on
+    both backends: k rank chains over one graph, given as (name, seeded)
+    pairs — each chain is its own double column `name` with a uniform
+    (seeded False) or seed-personalized teleport. Returns
+    (node, *names). The chains never mix arithmetic (each runs
+    pagerank's exact IEEE update expressions); they share every scan
+    and shuffle — per round ONE edges⋈ranks join with a k-column
+    contribution aggregate, ONE dangling-mass collect carrying k sums,
+    ONE vertex join-back — so k chains cost one chain's jobs."""
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     if not (0.0 < damping < 1.0):
         raise ValueError(f"damping must be in (0, 1), got {damping}")
-
+    names = [c for c, _ in chains]
+    rank_cols = [(c, DoubleType()) for c in names]
     src = F.col(src_col)
     dst = F.col(dst_col)
     # ONE pass over the (possibly expensive) upstream edge subtree:
@@ -750,51 +686,38 @@ def pagerank(
     # the upstream — 4-5x the edge-build cost for the host_* queries).
     # Dropped after round 0, when every derived cache holds blocks.
     if weight_col is not None:
-        w = F.when(
-            F.col(weight_col) <= 0,
-            F.raise_error(F.lit(
-                f"pagerank: non-positive {weight_col} — a weighted edge "
-                f"must carry positive endorsement"
-            )),
-        ).otherwise(F.col(weight_col))
-        e0 = edges.select(src_col, dst_col, w.alias("__w")).persist()
+        e0 = edges.select(
+            src_col, dst_col, _checked_weight(who, weight_col).alias("__w")
+        ).persist()
     else:
         e0 = edges.select(src_col, dst_col).persist()
+    seed_set = None if seeds is None else seeds.select("node").distinct()
+    init_t = None
+    if init_ranks is not None:
+        checked = F.when(
+            F.col("rank") < 0,
+            F.raise_error(F.lit(
+                "pagerank: negative rank in init_ranks — a warm start "
+                "must begin from a valid rank vector"
+            )),
+        ).otherwise(F.col("rank").cast("double"))
+        init_t = init_ranks.select("node", checked.alias("__r0"))
     # scale-adaptive fast path: if the whole graph (and the seed / init
     # side tables) fits under the probe cap, iterate on the driver —
-    # same update expressions, no per-round jobs. The weight guard
-    # rides the e0 projection, so the probe collect raises on a
-    # non-positive weight exactly like the distributed actions would.
-    rows = _probe_small(e0, driver_fastpath_edges)
-    if rows is not None:
-        seed_rows = init_rows = None
-        small = True
-        if seeds is not None:
-            seed_rows = _probe_small(
-                seeds.select("node").distinct(), driver_fastpath_edges
+    # same update expressions, no per-round jobs
+    probed = _probe_graph(driver_fastpath_edges, e0, seed_set, init_t)
+    if probed is not None:
+        rows, seed_rows, init_rows = probed
+        try:
+            g = _load_graph(rows, src_col, dst_col, weight_col is not None)
+            ranks = _pagerank_driver(
+                g, chains, n_iter, damping, seed_rows, init_rows, who
             )
-            small = seed_rows is not None
-        if small and init_ranks is not None:
-            checked0 = F.when(
-                F.col("rank") < 0,
-                F.raise_error(F.lit(
-                    "pagerank: negative rank in init_ranks — a warm "
-                    "start must begin from a valid rank vector"
-                )),
-            ).otherwise(F.col("rank").cast("double"))
-            init_rows = _probe_small(
-                init_ranks.select("node", checked0.alias("__r0")),
-                driver_fastpath_edges,
-            )
-            small = init_rows is not None
-        if small:
-            try:
-                return _pagerank_driver(
-                    e0, rows, n_iter, damping, src_col, dst_col,
-                    weight_col, seed_rows, init_rows,
-                )
-            finally:
-                e0.unpersist()
+            out = [(v, *(r[v] for r in ranks)) for v in g[0]] if ranks else []
+            return _frame(e0, src_col, dst_col, rank_cols, out)
+        finally:
+            e0.unpersist()
+
     vertices = (
         e0.select(src.alias("node"))
         .union(e0.select(dst.alias("node")))
@@ -815,152 +738,127 @@ def pagerank(
     dangling = vertices.join(
         e0.select(src.alias("node")).distinct(), "node", "left_anti"
     ).persist()
-
-    d = F.lit(damping)
-    if seeds is not None:
-        seed_set = seeds.select(F.col("node")).distinct()
-        tele_v = vertices.join(
-            seed_set, "node", "left_semi"
-        ).persist()
-        ns = tele_v.count()
-        if ns == 0:
-            raise ValueError(
-                "pagerank: no seed appears in the graph — personalized "
-                "teleport has nowhere to land"
-            )
-        # one static join: the teleport column rides the vertex table
-        vertices_t = vertices.join(
-            tele_v.withColumn("__is_seed", F.lit(True)), "node", "left"
-        ).select(
-            "node",
-            F.when(F.col("__is_seed"), F.lit(1.0 / ns))
-            .otherwise(F.lit(0.0)).alias("__tele"),
-        ).persist()
-        vertices_t.count()
-        tele_v.unpersist()
-    else:
-        vertices_t = None
-    base = (F.lit(1.0) - d) / F.lit(float(n))
-    if init_ranks is not None:
-        checked = F.when(
-            F.col("rank") < 0,
-            F.raise_error(F.lit(
-                "pagerank: negative rank in init_ranks — a warm start "
-                "must begin from a valid rank vector"
-            )),
-        ).otherwise(F.col("rank").cast("double"))
-        ir = (
-            init_ranks.select("node", checked.alias("__r0"))
-            .groupBy("node")
-            .agg(F.sum("__r0").alias("__r0"))
-        )
-        r0 = (
-            vertices.join(ir, "node", "left")
-            .select(
+    # unpersisted on the way out, whichever way that is (e0 already
+    # after round 0)
+    held = [e0, vertices, edges_w, dangling]
+    try:
+        d = F.lit(damping)
+        vertices_t = vertices
+        if seed_set is not None:
+            tele_v = vertices.join(seed_set, "node", "left_semi").persist()
+            ns = tele_v.count()
+            if ns == 0:
+                tele_v.unpersist()
+                raise _no_seed(who)
+            # one static join: the teleport column rides the vertex table
+            vertices_t = vertices.join(
+                tele_v.withColumn("__is_seed", F.lit(True)), "node", "left"
+            ).select(
                 "node",
-                F.coalesce(
-                    F.col("__r0"), F.lit(1.0) / F.lit(float(n))
-                ).alias("rank"),
+                F.when(F.col("__is_seed"), F.lit(1.0 / ns))
+                .otherwise(F.lit(0.0)).alias("__tele"),
+            ).persist()
+            held.append(vertices_t)
+            vertices_t.count()
+            tele_v.unpersist()
+        if n == 0:
+            return _frame(e0, src_col, dst_col, rank_cols, [])
+        base = (F.lit(1.0) - d) / F.lit(float(n))
+        if init_t is not None:
+            ir = init_t.groupBy("node").agg(F.sum("__r0").alias("__r0"))
+            r0 = (
+                vertices.join(ir, "node", "left")
+                .select(
+                    "node",
+                    F.coalesce(
+                        F.col("__r0"), F.lit(1.0) / F.lit(float(n))
+                    ).alias("rank"),
+                )
+                .persist()
             )
-            .persist()
-        )
-        tot = r0.agg(F.sum("rank").alias("t")).collect()[0]["t"]
-        if tot is None or not tot > 0:
+            held.append(r0)
+            tot = r0.agg(F.sum("rank").alias("t")).collect()[0]["t"]
+            if tot is None or not tot > 0:
+                raise ValueError(
+                    "pagerank: init_ranks total mass must be positive"
+                )
+            ranks = r0.select("node", *(
+                (F.col("rank") / F.lit(float(tot))).alias(c) for c in names
+            ))
+        else:
+            ranks = vertices.select("node", *(
+                (F.lit(1.0) / F.lit(float(n))).alias(c) for c in names
+            ))
+        ranks.persist()
+
+        def _dangling_mass(r: DataFrame):
+            # the k scalars per round in one collect; doubles as the
+            # cache-materializing action for a freshly persisted rank
+            # table (r9: a separate persist().count() + this collect was
+            # two jobs per round)
+            return (
+                r.join(dangling, "node", "left_semi")
+                .agg(*(
+                    F.coalesce(F.sum(c), F.lit(0.0)).alias(c) for c in names
+                ))
+                .collect()[0]
+            )
+
+        def _update(c: str, seeded: bool, dm: float):
+            got = F.coalesce(F.col(f"__c_{c}"), F.lit(0.0))
+            if seeded:
+                tele = F.col("__tele")
+                return (F.lit(1.0) - d) * tele + d * (got + F.lit(dm) * tele)
+            return base + d * (got + F.lit(dm) / F.lit(float(n)))
+
+        dm = _dangling_mass(ranks)
+        if init_t is not None:
             r0.unpersist()
-            raise ValueError(
-                "pagerank: init_ranks total mass must be positive"
+        for i in range(n_iter):
+            contrib = (
+                edges_w.join(ranks, edges_w[src_col] == ranks["node"])
+                .groupBy(dst_col)
+                .agg(*(
+                    F.sum(
+                        F.col(c) * F.col("__w") / F.col("__od")
+                        if weight_col is not None
+                        else F.col(c) / F.col("__od")
+                    ).alias(f"__c_{c}")
+                    for c in names
+                ))
             )
-        ranks = r0.select(
-            "node", (F.col("rank") / F.lit(float(tot))).alias("rank")
-        )
-        ranks.persist()
-    else:
-        ranks = vertices.withColumn("rank", F.lit(1.0) / F.lit(float(n)))
-        ranks.persist()
-
-    def _dangling_mass(r: DataFrame) -> float:
-        # the one scalar per round; doubles as the cache-materializing
-        # action for a freshly persisted rank table (r9: a separate
-        # persist().count() + this collect was two jobs per round)
-        return (
-            r.join(dangling, "node", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
-            .collect()[0]["dm"]
-        )
-
-    dm = _dangling_mass(ranks)
-    if init_ranks is not None:
-        r0.unpersist()
-    for i in range(n_iter):
-        contrib_expr = (
-            F.col("rank") * F.col("__w") / F.col("__od")
-            if weight_col is not None
-            else F.col("rank") / F.col("__od")
-        )
-        contrib = (
-            edges_w.join(ranks, edges_w[src_col] == ranks["node"])
-            .groupBy(dst_col)
-            .agg(F.sum(contrib_expr).alias("__c"))
-        )
-        if vertices_t is not None:
-            new_ranks = (
-                vertices_t.join(
-                    contrib, vertices_t["node"] == contrib[dst_col], "left"
-                )
-                .select(
-                    "node",
-                    (
-                        (F.lit(1.0) - d) * F.col("__tele")
-                        + d
-                        * (
-                            F.coalesce(F.col("__c"), F.lit(0.0))
-                            + F.lit(float(dm)) * F.col("__tele")
-                        )
-                    ).alias("rank"),
-                )
-            )
-        else:
-            new_ranks = (
-                vertices.join(
-                    contrib, vertices["node"] == contrib[dst_col], "left"
-                )
-                .select(
-                    "node",
-                    (
-                        base
-                        + d
-                        * (
-                            F.coalesce(F.col("__c"), F.lit(0.0))
-                            + F.lit(float(dm)) / F.lit(float(n))
-                        )
-                    ).alias("rank"),
-                )
-            )
-        if (i + 1) % checkpoint_every == 0:
-            new_ranks = new_ranks.localCheckpoint(eager=True)
-            if i + 1 < n_iter:
+            # join the STATIC vertex table, never `ranks` itself: contrib
+            # already contains ranks' lineage, and ranks⋈contrib would put
+            # it in the plan twice per round — exponential growth by the
+            # first checkpoint (observed as an analysis-time heap OOM)
+            new_ranks = vertices_t.join(
+                contrib, vertices_t["node"] == contrib[dst_col], "left"
+            ).select("node", *(
+                _update(c, seeded, float(dm[c])).alias(c)
+                for c, seeded in chains
+            ))
+            if (i + 1) % checkpoint_every == 0:
+                new_ranks = new_ranks.localCheckpoint(eager=True)
+                if i + 1 < n_iter:
+                    dm = _dangling_mass(new_ranks)
+            else:
+                # persist + next round's dangling-mass collect in ONE job
+                # (the agg materializes the fresh cache); the final round
+                # still needs the action so the returned table is backed
+                # by blocks before its parents are unpersisted
+                new_ranks.persist()
                 dm = _dangling_mass(new_ranks)
-        else:
-            # persist + next round's dangling-mass collect in ONE job
-            # (the agg materializes the fresh cache); the final round
-            # still needs the action so the returned table is backed by
-            # blocks before its parents are unpersisted
-            new_ranks.persist()
-            dm = _dangling_mass(new_ranks)
-        ranks.unpersist()
-        ranks = new_ranks
-        if i == 0:
-            # edges_w (during contrib), dangling (during the dm agg)
-            # and vertices (at setup) all hold blocks now — drop the
-            # upstream edge cache
-            e0.unpersist()
-
-    vertices.unpersist()
-    if vertices_t is not None:
-        vertices_t.unpersist()
-    edges_w.unpersist()
-    dangling.unpersist()
-    return ranks
+            ranks.unpersist()
+            ranks = new_ranks
+            if i == 0:
+                # edges_w (during contrib), dangling (during the dm agg)
+                # and vertices (at setup) all hold blocks now — drop the
+                # upstream edge cache
+                e0.unpersist()
+        return ranks
+    finally:
+        for t in held:
+            t.unpersist()
 
 
 def label_propagation(
@@ -1007,10 +905,13 @@ def label_propagation(
     e0 = edges.select(src.alias("node"), dst.alias("nbr")).persist()
     # scale-adaptive fast path (see _DRIVER_FASTPATH_EDGES): integer
     # counts + the deterministic tie order make both paths bit-identical
-    rows = _probe_small(e0, driver_fastpath_edges)
-    if rows is not None:
+    probed = _probe_graph(driver_fastpath_edges, e0)
+    if probed is not None:
         try:
-            return _lpa_driver(e0, rows, n_iter)
+            g = _load_graph(probed[0], "node", "nbr")
+            return _frame(
+                e0, "node", "nbr", [("label", None)], _lpa_driver(g, n_iter)
+            )
         finally:
             e0.unpersist()
     und = (
@@ -1094,31 +995,30 @@ def seed_distance(
     Scale shape: classic frontier BFS as DataFrame ops — per hop, join
     the CURRENT frontier (not the whole visited set) to the edge list,
     anti-join out already-visited nodes. Each hop is one shuffle pair
-    over frontier-sized inputs and ONE driver action (the emptiness
-    count, which doubles as the frontier's cache materialization — r9:
-    isEmpty + a per-hop checkpoint of the whole visited set was three).
-    The visited set is a lazy union over the per-hop frontier caches,
-    checkpointed once at the end (and every 8 hops, bounding lineage
-    growth for deep traversals). max_hops bounds the rounds (web BFS
+    over frontier-sized inputs, one eager checkpoint of the new
+    frontier and an emptiness check on that flat checkpoint. The
+    visited set is a lazy union of the checkpointed frontiers, so the
+    per-hop plan grows linearly. max_hops bounds the rounds (web BFS
     saturates in ~6; crawl features use 2-4)."""
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
     raw = edges.select(
         F.col(src_col).alias("__s"), F.col(dst_col).alias("__d")
     )
+    seed_set = seeds.select("node").distinct()
     # scale-adaptive fast path (see _DRIVER_FASTPATH_EDGES): probe the
     # RAW projection — no distinct exchange paid before the gate; the
     # driver adjacency sets dedup inherently, and hop distances are
     # integer-exact, so both paths are bit-identical. (A raw list over
     # the cap whose distinct would fit just falls through — the
     # conservative direction.)
-    erows = _probe_small(raw, driver_fastpath_edges)
-    if erows is not None:
-        seed_rows = _probe_small(
-            seeds.select("node").distinct(), driver_fastpath_edges
+    probed = _probe_graph(driver_fastpath_edges, raw, seed_set)
+    if probed is not None:
+        erows, seed_rows = probed
+        return _frame(
+            raw, "__s", "__d", [("hops", IntegerType())],
+            _bfs_driver(_load_graph(erows, "__s", "__d"), seed_rows, max_hops),
         )
-        if seed_rows is not None:
-            return _bfs_driver(raw, erows, seed_rows, max_hops)
     e = raw.distinct().persist()
     vertices = (
         e.select(F.col("__s").alias("node"))
@@ -1129,8 +1029,7 @@ def seed_distance(
     # personalized teleport, minus the empty-set raise: an empty
     # intersection just returns an empty frame)
     frontier = (
-        seeds.select(F.col("node")).distinct()
-        .join(vertices, "node", "left_semi")
+        seed_set.join(vertices, "node", "left_semi")
         .withColumn("hops", F.lit(0))
     )
     # bootstrap materialization: ONE cheap checkpoint fills the edge
@@ -1143,7 +1042,9 @@ def seed_distance(
     for h in range(1, max_hops + 1):
         nxt = (
             frontier.join(e, frontier["node"] == e["__s"])
+            # a null node is never reached (the module's null rule)
             .select(F.col("__d").alias("node"))
+            .where(F.col("node").isNotNull())
             .distinct()
             .join(visited, "node", "left_anti")
             .withColumn("hops", F.lit(h))
@@ -1188,144 +1089,18 @@ def spam_mass(
     super-endorsed by seeds (standard; callers threshold on the high
     end).
 
-    FUSED iteration: both rank vectors ride ONE (node, pr, ppr) table —
-    per round there is ONE edges⋈ranks join with a two-column
-    contribution aggregate, one dangling-mass collect carrying both
-    sums, one vertex join-back. Cost = 1x pagerank's shuffles/scans per
-    iteration for BOTH chains (the naive composition pays 2x), with
-    per-vector arithmetic identical to pagerank's (same IEEE update
-    expressions — the two chains never mix, pinned by a differential
-    against two separate pagerank runs). Every scale property of
-    pagerank's docstring applies unchanged."""
-    if n_iter < 1:
-        raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    if not (0.0 < damping < 1.0):
-        raise ValueError(f"damping must be in (0, 1), got {damping}")
-    src = F.col(src_col)
-    dst = F.col(dst_col)
-    # ONE pass over the upstream edge subtree (see pagerank): vertices,
-    # out-degrees, the annotated edge table and the dangling set all
-    # derive from this cache; dropped after round 0
-    e0 = edges.select(src_col, dst_col).persist()
-    # scale-adaptive fast path (see _DRIVER_FASTPATH_EDGES)
-    rows = _probe_small(e0, driver_fastpath_edges)
-    if rows is not None:
-        seed_rows = _probe_small(
-            seeds.select("node").distinct(), driver_fastpath_edges
-        )
-        if seed_rows is not None:
-            try:
-                return _spam_mass_driver(
-                    e0, rows, seed_rows, n_iter, damping, src_col, dst_col
-                )
-            finally:
-                e0.unpersist()
-    vertices = (
-        e0.select(src.alias("node"))
-        .union(e0.select(dst.alias("node")))
-        .distinct()
-        .persist()
+    Both rank vectors are chains of ONE pagerank core call
+    (_pagerank_core with [uniform, seeds]): per round ONE edges⋈ranks
+    join with a two-column contribution aggregate, one dangling-mass
+    collect carrying both sums, one vertex join-back — 1x pagerank's
+    shuffles/scans per iteration for BOTH chains (the naive composition
+    pays 2x), with pagerank's exact IEEE update expressions per chain
+    (pinned by a differential against two separate pagerank runs).
+    Every scale property of pagerank's docstring applies unchanged."""
+    ranks = _pagerank_core(
+        edges, (("pr", False), ("ppr", True)), n_iter, damping, src_col,
+        dst_col, 8, seeds, None, None, driver_fastpath_edges, "spam_mass",
     )
-    n = vertices.count()
-    seed_set = seeds.select(F.col("node")).distinct()
-    tele_v = vertices.join(seed_set, "node", "left_semi").persist()
-    ns = tele_v.count()
-    if ns == 0:
-        raise ValueError(
-            "spam_mass: no seed appears in the graph — personalized "
-            "teleport has nowhere to land"
-        )
-    vertices_t = vertices.join(
-        tele_v.withColumn("__is_seed", F.lit(True)), "node", "left"
-    ).select(
-        "node",
-        F.when(F.col("__is_seed"), F.lit(1.0 / ns))
-        .otherwise(F.lit(0.0)).alias("__tele"),
-    ).persist()
-    vertices_t.count()
-    tele_v.unpersist()
-    out_deg = e0.groupBy(src_col).agg(F.count("*").alias("__od"))
-    edges_w = e0.join(out_deg, src_col).persist()
-    dangling = vertices.join(
-        e0.select(src.alias("node")).distinct(), "node", "left_anti"
-    ).persist()
-    d = F.lit(damping)
-    base = (F.lit(1.0) - d) / F.lit(float(n))
-    ranks = vertices_t.select(
-        "node",
-        "__tele",
-        (F.lit(1.0) / F.lit(float(n))).alias("pr"),
-        (F.lit(1.0) / F.lit(float(n))).alias("ppr"),
-    )
-    ranks.persist()
-
-    def _dangling_mass(r: DataFrame):
-        # the two scalars per round in one collect; doubles as the
-        # cache-materializing action for a freshly persisted rank table
-        return (
-            r.join(dangling, "node", "left_semi")
-            .agg(
-                F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm_pr"),
-                F.coalesce(F.sum("ppr"), F.lit(0.0)).alias("dm_ppr"),
-            )
-            .collect()[0]
-        )
-
-    dm = _dangling_mass(ranks)
-    for i in range(n_iter):
-        contrib = (
-            edges_w.join(ranks, edges_w[src_col] == ranks["node"])
-            .groupBy(dst_col)
-            .agg(
-                F.sum(F.col("pr") / F.col("__od")).alias("__c_pr"),
-                F.sum(F.col("ppr") / F.col("__od")).alias("__c_ppr"),
-            )
-        )
-        # join the STATIC vertex table, never `ranks` itself: contrib
-        # already contains ranks' lineage, and ranks⋈contrib would put
-        # it in the plan twice per round — exponential growth by the
-        # first checkpoint (observed as an analysis-time heap OOM)
-        new_ranks = (
-            vertices_t.join(
-                contrib, vertices_t["node"] == contrib[dst_col], "left"
-            )
-            .select(
-                "node",
-                "__tele",
-                (
-                    base
-                    + d
-                    * (
-                        F.coalesce(F.col("__c_pr"), F.lit(0.0))
-                        + F.lit(float(dm["dm_pr"])) / F.lit(float(n))
-                    )
-                ).alias("pr"),
-                (
-                    (F.lit(1.0) - d) * F.col("__tele")
-                    + d
-                    * (
-                        F.coalesce(F.col("__c_ppr"), F.lit(0.0))
-                        + F.lit(float(dm["dm_ppr"])) * F.col("__tele")
-                    )
-                ).alias("ppr"),
-            )
-        )
-        if (i + 1) % 8 == 0:
-            new_ranks = new_ranks.localCheckpoint(eager=True)
-            if i + 1 < n_iter:
-                dm = _dangling_mass(new_ranks)
-        else:
-            # persist + next round's dangling-mass collect in ONE job
-            new_ranks.persist()
-            dm = _dangling_mass(new_ranks)
-        ranks.unpersist()
-        ranks = new_ranks
-        if i == 0:
-            e0.unpersist()
-    vertices.unpersist()
-    vertices_t.unpersist()
-    edges_w.unpersist()
-    dangling.unpersist()
     return ranks.select(
         "node",
         "pr",

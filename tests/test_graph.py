@@ -588,7 +588,11 @@ def test_driver_fastpath_matches_distributed(spark):
     """The size-gated driver fast path and the distributed loop are the
     same algorithm: exact equality for the integer/label operators,
     <=1e-9 relative for the float ones (summation order differs; every
-    declared query rounds floats to 6dp)."""
+    declared query rounds floats to 6dp). Pinned on a plain graph, on
+    one with null endpoints (a null node never matches a key: never
+    dangling, never reached, but it keeps its row in vertex listings)
+    and on an empty edge list (empty typed frames; an empty seed
+    intersection raises on both paths)."""
     from slowspark.graph import (
         hits, label_propagation, pagerank, seed_distance, spam_mass,
     )
@@ -597,17 +601,21 @@ def test_driver_fastpath_matches_distributed(spark):
              [(i, (i * 7 + 1) % 40) for i in range(40)]
              + [(i, (i * 13 + 5) % 40) for i in range(40) if i % 9 != 0]
              if s != d]
-    e = _edges(spark, pairs)
+    nulls = [(1, 2), (2, 3), (3, 1), (3, None), (None, 1), (4, None), (2, 4)]
     seeds = spark.createDataFrame([(3,), (7,), (11,)], "node long")
     init = spark.createDataFrame(
-        [(i, 0.01 + (i % 5) * 0.002) for i in range(0, 40, 2)],
+        [(i, 0.01 + (i % 5) * 0.002) for i in range(0, 40, 2)]
+        + [(None, 0.05)],
         "node long, rank double",
     )
 
-    def rows(df):
-        return {tuple(r) for r in df.collect()}
+    def rows(fast, dist):
+        assert fast.dtypes == dist.dtypes
+        assert {tuple(r) for r in fast.collect()} == {
+            tuple(r) for r in dist.collect()}
 
     def close(fast, dist, nfloat):
+        assert fast.dtypes == dist.dtypes
         f = {r[0]: r[1:] for r in fast.collect()}
         g = {r[0]: r[1:] for r in dist.collect()}
         assert set(f) == set(g)
@@ -615,22 +623,36 @@ def test_driver_fastpath_matches_distributed(spark):
             for a, b in zip(f[k][:nfloat], g[k][:nfloat]):
                 assert a == pytest.approx(b, rel=1e-9, abs=1e-12)
 
-    close(pagerank(e, n_iter=3),
-          pagerank(e, n_iter=3, driver_fastpath_edges=0), 1)
-    close(pagerank(e, n_iter=3, seeds=seeds),
-          pagerank(e, n_iter=3, seeds=seeds, driver_fastpath_edges=0), 1)
-    close(pagerank(e, n_iter=3, init_ranks=init),
-          pagerank(e, n_iter=3, init_ranks=init,
-                   driver_fastpath_edges=0), 1)
-    close(hits(e, n_iter=3),
-          hits(e, n_iter=3, driver_fastpath_edges=0), 2)
-    close(spam_mass(e, seeds, n_iter=3),
-          spam_mass(e, seeds, n_iter=3, driver_fastpath_edges=0), 3)
-    # integer/label operators: bit-identical row sets
-    assert rows(label_propagation(e, n_iter=3)) == rows(
-        label_propagation(e, n_iter=3, driver_fastpath_edges=0))
-    assert rows(seed_distance(e, seeds, max_hops=3)) == rows(
-        seed_distance(e, seeds, max_hops=3, driver_fastpath_edges=0))
+    for graph in (pairs, nulls, []):
+        e = _edges(spark, graph)
+        close(pagerank(e, n_iter=3),
+              pagerank(e, n_iter=3, driver_fastpath_edges=0), 1)
+        close(pagerank(e, n_iter=3, init_ranks=init),
+              pagerank(e, n_iter=3, init_ranks=init,
+                       driver_fastpath_edges=0), 1)
+        close(hits(e, n_iter=3),
+              hits(e, n_iter=3, driver_fastpath_edges=0), 2)
+        # integer/label operators: bit-identical row sets
+        rows(label_propagation(e, n_iter=3),
+             label_propagation(e, n_iter=3, driver_fastpath_edges=0))
+        rows(seed_distance(e, seeds, max_hops=3),
+             seed_distance(e, seeds, max_hops=3, driver_fastpath_edges=0))
+        if not graph:
+            for gate in ({}, {"driver_fastpath_edges": 0}):
+                with pytest.raises(ValueError, match="no seed"):
+                    pagerank(e, n_iter=3, seeds=seeds, **gate)
+                with pytest.raises(ValueError, match="no seed"):
+                    spam_mass(e, seeds, n_iter=3, **gate)
+            continue
+        close(pagerank(e, n_iter=3, seeds=seeds),
+              pagerank(e, n_iter=3, seeds=seeds, driver_fastpath_edges=0), 1)
+        close(spam_mass(e, seeds, n_iter=3),
+              spam_mass(e, seeds, n_iter=3, driver_fastpath_edges=0), 3)
+
+    # the null node keeps its HITS row, with no endorsement either way
+    for gate in ({}, {"driver_fastpath_edges": 0}):
+        h = {r["node"]: r for r in hits(_edges(spark, nulls), **gate).collect()}
+        assert h[None]["hub"] == h[None]["authority"] == 0.0
 
 
 def test_driver_fastpath_weighted_hits_and_hostlike_pagerank(spark):

@@ -17,6 +17,7 @@ Recall properties stay pinned by tests/test_similarity.py.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -121,13 +122,11 @@ def _ensure_oracle_artifacts(spark: SparkSession, sf_dir: str) -> None:
     import os
     from concurrent.futures import ThreadPoolExecutor
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    abase = f"{_ORACLE_ENTRIES_BASE}/{base}"
-    paths = [f"{abase}/{n}" for n in _ARTIFACT_NAMES]
+    paths = [_artifact_path(sf_dir, n) for n in _ARTIFACT_NAMES]
     if all(p in _ENTRIES_WRITTEN for p in paths):
         return
     stamp = _artifact_stamp(sf_dir)
-    mpath = f"{abase}/_MANIFEST.json"
+    mpath = _artifact_path(sf_dir, "_MANIFEST.json")
     try:
         with open(mpath) as f:
             if json.load(f).get("stamp") == stamp:
@@ -137,17 +136,12 @@ def _ensure_oracle_artifacts(spark: SparkSession, sf_dir: str) -> None:
         pass
 
     from slowspark.textops import minhash_signatures
-    from slowspark.util import materialize
+    from slowspark.util import materialize, spread
 
     with ThreadPoolExecutor(8) as ex:
         sig_fut = ex.submit(
             lambda: materialize(
-                # repartition: the signature UDF must not serialize on
-                # the one-file test input (content is per-row
-                # deterministic, so the artifact is layout-invariant)
-                minhash_signatures(
-                    _read(spark, sf_dir, "documents").repartition(32)
-                )
+                minhash_signatures(spread(_read(spark, sf_dir, "documents")))
             )
         )
         # ivf and pq train in parallel; the composed ivfpq build waits on
@@ -186,7 +180,7 @@ def _ensure_oracle_artifacts(spark: SparkSession, sf_dir: str) -> None:
         )
         for fut in [ex.submit(g) for g in groups]:
             fut.result()
-    os.makedirs(abase, exist_ok=True)
+    os.makedirs(os.path.dirname(mpath), exist_ok=True)
     tmp = mpath + ".tmp"
     with open(tmp, "w") as f:
         json.dump({"stamp": stamp}, f)
@@ -205,8 +199,6 @@ def _dedup_pairs_parquets(
     banding shuffle run once instead of twice. `sigs` (a default-parameter
     signature table over the same documents, already materialized) shares
     the pass further — with _incremental_index_parquet."""
-    import os
-
     from pyspark.sql import functions as F
 
     from slowspark.textops import (
@@ -216,24 +208,23 @@ def _dedup_pairs_parquets(
     )
     from slowspark.util import materialize
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    paths = {n: f"{_ORACLE_ENTRIES_BASE}/{base}/{n}"
-             for n in ("minhash_pairs", "jaccard_pairs")}
-    if all(p in _ENTRIES_WRITTEN for p in paths.values()):
-        return
     d = _read(spark, sf_dir, "documents")
-    if sigs is None:
-        sigs = materialize(minhash_signatures(d))
-    est = materialize(minhash_estimated_pairs(sigs))
-    _pairs_parquet(
-        spark, sf_dir, "minhash_pairs",
-        lambda: est.filter(F.col("est_jaccard") >= 0.7).select("id_a", "id_b"),
+
+    @functools.cache
+    def est():
+        s = sigs if sigs is not None else materialize(minhash_signatures(d))
+        return materialize(minhash_estimated_pairs(s))
+
+    _artifact(
+        sf_dir, "minhash_pairs",
+        lambda _: est().filter(F.col("est_jaccard") >= 0.7).select("id_a", "id_b"),
     )
-    _pairs_parquet(
-        spark, sf_dir, "jaccard_pairs",
-        lambda: (
+    _artifact(
+        sf_dir, "jaccard_pairs",
+        lambda _: (
             ngram_jaccard_pairs(
-                est.filter(F.col("est_jaccard") >= 0.7 - 0.25).select("id_a", "id_b"),
+                est().filter(F.col("est_jaccard") >= 0.7 - 0.25)
+                .select("id_a", "id_b"),
                 d,
             )
             .filter(F.col("jaccard") >= 0.7)
@@ -750,7 +741,37 @@ def _ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _ORACLE_ENTRIES_BASE = "/tmp/slowspark_oracle"
+# the artifact dir oracle_sql() reads: the one the sf0.01 queries write
+_ORACLE_DIR = f"{_ORACLE_ENTRIES_BASE}/sf0.01"
 _ENTRIES_WRITTEN: set[str] = set()
+
+
+def _artifact_path(sf_dir: str, name: str) -> str:
+    """Path of the driver-contract artifact `name` built from `sf_dir`."""
+    import os
+
+    base = os.path.basename(os.path.normpath(sf_dir))
+    return f"{_ORACLE_ENTRIES_BASE}/{base}/{name}"
+
+
+def _artifact(
+    sf_dir: str, name: str, build: Callable[[str], DataFrame | None]
+) -> str:
+    """Write the artifact `name` for `sf_dir` once per process and return
+    its path. `build(path)` returns the DataFrame to write there, or
+    writes under `path` itself and returns None (indexes, and artifacts
+    with sibling tables — those are keyed on the table written last, so a
+    recorded path means every table is on disk). Every artifact is a
+    deterministic function of its inputs, so an overwrite is always
+    content-identical; _ensure_oracle_artifacts records a stamp-verified
+    set across processes."""
+    path = _artifact_path(sf_dir, name)
+    if path not in _ENTRIES_WRITTEN:
+        df = build(path)
+        if df is not None:
+            df.write.mode("overwrite").parquet(path)
+        _ENTRIES_WRITTEN.add(path)
+    return path
 
 
 def _n_pages_for(spark: SparkSession, sf_dir: str) -> int:
@@ -762,26 +783,18 @@ def _entries_parquet(spark: SparkSession, sf_dir: str) -> str:
     process (parse output is fully deterministic, so an overwrite is always
     content-identical). Narrow column set — the aggregates below only need
     these, and log_meta rides along for the header-metadata census."""
-    import os
-
     from slowspark.gen import gen_pages
     from slowspark.parse import parse_pages
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_ORACLE_ENTRIES_BASE}/{base}/entries"
-    if path not in _ENTRIES_WRITTEN:
-        cols = ["url", "entry_kind", "sql_type", "fingerprint", "query_time",
-                "lock_time", "rows_sent", "rows_examined",
-                "admin_command", "log_meta", "objects",
-                # r8: comment/context/masking census columns (VERDICT r7 #2)
-                "statement", "comment_kv", "context"]
-        entries = parse_pages(
-            gen_pages(spark, _n_pages_for(spark, sf_dir)), columns=cols
-        )
-        # entry_id is the deterministic xxhash64(url, entry_index) lineage id
-        entries.select("entry_id", *cols).write.mode("overwrite").parquet(path)
-        _ENTRIES_WRITTEN.add(path)
-    return path
+    cols = ["url", "entry_kind", "sql_type", "fingerprint", "query_time",
+            "lock_time", "rows_sent", "rows_examined",
+            "admin_command", "log_meta", "objects",
+            # r8: comment/context/masking census columns (VERDICT r7 #2)
+            "statement", "comment_kv", "context"]
+    # entry_id is the deterministic xxhash64(url, entry_index) lineage id
+    return _artifact(sf_dir, "entries", lambda _: parse_pages(
+        gen_pages(spark, _n_pages_for(spark, sf_dir)), columns=cols
+    ).select("entry_id", *cols))
 
 
 def _kind_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -950,21 +963,6 @@ def _comment_context_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _pairs_parquet(spark: SparkSession, sf_dir: str, name: str, build) -> str:
-    """Materialize a deterministic (id_a, id_b) pair table once per process;
-    DuckDB then recomputes the component-min survivor set from the SAME
-    pairs via a recursive CTE — hash-checking the single-link dedup
-    semantics end-to-end."""
-    import os
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_ORACLE_ENTRIES_BASE}/{base}/{name}"
-    if path not in _ENTRIES_WRITTEN:
-        build().write.mode("overwrite").parquet(path)
-        _ENTRIES_WRITTEN.add(path)
-    return path
-
-
 def _component_dedup_oracle(pairs_sql: str) -> str:
     """Recursive-CTE single-link component-min dedup over a pair relation
     (any SELECT producing id_a, id_b): survivors = docs that are their
@@ -1004,9 +1002,7 @@ def _minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from slowspark.textops import dedup_by_pairs, minhash_verified_pairs
 
     d = _read(spark, sf_dir, "documents")
-    path = _pairs_parquet(
-        spark, sf_dir, "minhash_pairs", lambda: minhash_verified_pairs(d)
-    )
+    path = _artifact(sf_dir, "minhash_pairs", lambda _: minhash_verified_pairs(d))
     pairs = spark.read.parquet(path)
     return dedup_by_pairs(d, pairs).select("doc_id").orderBy("doc_id")
 
@@ -1021,9 +1017,7 @@ def _quality_keeper_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from slowspark.textops import dedup_by_pairs_quality, minhash_verified_pairs
 
     d = _read(spark, sf_dir, "documents")
-    path = _pairs_parquet(
-        spark, sf_dir, "minhash_pairs", lambda: minhash_verified_pairs(d)
-    )
+    path = _artifact(sf_dir, "minhash_pairs", lambda _: minhash_verified_pairs(d))
     pairs = spark.read.parquet(path)
     return (
         dedup_by_pairs_quality(d, pairs, "n_chars")
@@ -1038,9 +1032,7 @@ def _jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from slowspark.textops import dedup_by_pairs, jaccard_verified_pairs
 
     d = _read(spark, sf_dir, "documents")
-    path = _pairs_parquet(
-        spark, sf_dir, "jaccard_pairs", lambda: jaccard_verified_pairs(d)
-    )
+    path = _artifact(sf_dir, "jaccard_pairs", lambda _: jaccard_verified_pairs(d))
     pairs = spark.read.parquet(path)
     return dedup_by_pairs(d, pairs).select("doc_id").orderBy("doc_id")
 
@@ -1049,17 +1041,12 @@ def _simhash_sigs_parquet(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the (deterministic) simhash signature table once per
     process, like _entries_parquet — DuckDB then verifies candidate
     generation against the exact all-pairs hamming oracle."""
-    import os
-
     from slowspark.textops import simhash_signatures
+    from slowspark.util import spread
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_ORACLE_ENTRIES_BASE}/{base}/simhash_sigs"
-    if path not in _ENTRIES_WRITTEN:
-        d = _read(spark, sf_dir, "documents").repartition(32)
-        simhash_signatures(d).write.mode("overwrite").parquet(path)
-        _ENTRIES_WRITTEN.add(path)
-    return path
+    return _artifact(sf_dir, "simhash_sigs", lambda _: simhash_signatures(
+        spread(_read(spark, sf_dir, "documents"))
+    ))
 
 
 # deliberately crowded filter at sf0.01 (250-doc corpus, ~0.46 load):
@@ -1096,21 +1083,14 @@ def _bloom_positions_parquet(spark: SparkSession, sf_dir: str) -> str:
     primitive (xxhash64) in the family; DuckDB rebuilds the filter
     blocks, the k-bit membership test, and the exact verify from it in
     plain integer SQL."""
-    import os
-
     from slowspark.bloomdedup import bloom_positions
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_ORACLE_ENTRIES_BASE}/{base}/bloom_positions"
-    if path not in _ENTRIES_WRITTEN:
-        hashed = _bloom_decorated(spark, sf_dir).withColumn(
+    return _artifact(sf_dir, "bloom_positions", lambda _: bloom_positions(
+        _bloom_decorated(spark, sf_dir).withColumn(
             "text_hash", F.sha2(F.col("text"), 256)
-        )
-        bloom_positions(
-            hashed, "text_hash", "doc_id", _BLOOM_BITS, _BLOOM_K
-        ).write.mode("overwrite").parquet(path)
-        _ENTRIES_WRITTEN.add(path)
-    return path
+        ),
+        "text_hash", "doc_id", _BLOOM_BITS, _BLOOM_K,
+    ))
 
 
 def _bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1155,8 +1135,8 @@ def _bloom_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bloom_incremental_dedup_oracle(sf_dir_base: str = "sf0.01") -> str:
-    pos = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/bloom_positions"
+def _bloom_incremental_dedup_oracle() -> str:
+    pos = f"{_ORACLE_DIR}/bloom_positions"
     return f"""
         WITH dec AS (
             SELECT d.doc_id,
@@ -1207,24 +1187,15 @@ def _cms_positions_parquet(spark: SparkSession, sf_dir: str) -> str:
     documents' distinct whitespace tokens — the one Spark primitive
     (xxhash64) in the sketch family; DuckDB rebuilds the cell grid, the
     min-estimator, and the exact side from it in integer SQL."""
-    import os
-
     from slowspark.sketch import cms_positions
     from slowspark.textops import ws_token_array
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_ORACLE_ENTRIES_BASE}/{base}/cms_positions"
-    if path not in _ENTRIES_WRITTEN:
-        terms = (
-            _read(spark, sf_dir, "documents")
-            .select(F.explode(ws_token_array("text")).alias("term"))
-            .distinct()
-        )
-        cms_positions(terms, "term", _CMS_DEPTH, _CMS_WIDTH).write.mode(
-            "overwrite"
-        ).parquet(path)
-        _ENTRIES_WRITTEN.add(path)
-    return path
+    return _artifact(sf_dir, "cms_positions", lambda _: cms_positions(
+        _read(spark, sf_dir, "documents")
+        .select(F.explode(ws_token_array("text")).alias("term"))
+        .distinct(),
+        "term", _CMS_DEPTH, _CMS_WIDTH,
+    ))
 
 
 def _cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1249,8 +1220,8 @@ def _cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cms_heavy_hitters_oracle(sf_dir_base: str = "sf0.01") -> str:
-    pos = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/cms_positions"
+def _cms_heavy_hitters_oracle() -> str:
+    pos = f"{_ORACLE_DIR}/cms_positions"
     return f"""
         WITH toks AS (
             SELECT unnest(list_filter(
@@ -1546,20 +1517,11 @@ def _kmv_hashes_parquet(spark: SparkSession, sf_dir: str) -> str:
     the one Spark primitive in the KMV family; DuckDB recomputes the
     bottom-k, the estimator, and the exact distinct side (which needs no
     hash at all) from here."""
-    import os
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_ORACLE_ENTRIES_BASE}/{base}/kmv_hashes"
-    if path not in _ENTRIES_WRITTEN:
-        (
-            _kmv_bigrams(spark, sf_dir)
-            .distinct()
-            .select("lang", F.xxhash64("bg").alias("h"))
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        _ENTRIES_WRITTEN.add(path)
-    return path
+    return _artifact(sf_dir, "kmv_hashes", lambda _: (
+        _kmv_bigrams(spark, sf_dir)
+        .distinct()
+        .select("lang", F.xxhash64("bg").alias("h"))
+    ))
 
 
 def _kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1584,8 +1546,8 @@ def _kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmv_distinct_oracle(sf_dir_base: str = "sf0.01") -> str:
-    h = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/kmv_hashes"
+def _kmv_distinct_oracle() -> str:
+    h = f"{_ORACLE_DIR}/kmv_hashes"
     return f"""
         WITH t AS (
             SELECT lang, list_filter(
@@ -1647,12 +1609,12 @@ def _hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hll_distinct_oracle(sf_dir_base: str = "sf0.01") -> str:
+def _hll_distinct_oracle() -> str:
     import math as _math
 
     from slowspark.sketch import hll_alpha
 
-    h = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/kmv_hashes"
+    h = f"{_ORACLE_DIR}/kmv_hashes"
     p = _HLL_P
     m, w = 1 << p, 64 - p
     q = w + 1
@@ -1840,8 +1802,8 @@ def _robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _robots_filter_oracle(sf_dir_base: str = "sf0.01") -> str:
-    ent = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/entries"
+def _robots_filter_oracle() -> str:
+    ent = f"{_ORACLE_DIR}/entries"
     directive_re = (
         r"(?i)^\s*(user-agent|allow|disallow)\s*:\s*([^#]*?)\s*(?:#.*)?$"
     )
@@ -2185,8 +2147,8 @@ def _margin_mined_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return margin_knn_pairs(assigned, k=4, topm=1)
 
 
-def _margin_mined_pairs_oracle(sf_dir_base: str = "sf0.01") -> str:
-    cells = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/ivf_cells"
+def _margin_mined_pairs_oracle() -> str:
+    cells = f"{_ORACLE_DIR}/ivf_cells"
     return f"""
         WITH c AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, ivf_cell,
@@ -2276,8 +2238,8 @@ def _ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_balance(cells)
 
 
-def _ivf_balance_oracle(sf_dir_base: str = "sf0.01") -> str:
-    cells = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/ivf_cells"
+def _ivf_balance_oracle() -> str:
+    cells = f"{_ORACLE_DIR}/ivf_cells"
     return f"""
         WITH per AS (
             SELECT ivf_cell, count(*) AS n
@@ -2307,8 +2269,8 @@ def _crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     return crawl_schedule(pr)
 
 
-def _crawl_schedule_oracle(sf_dir_base: str = "sf0.01") -> str:
-    ent = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/entries"
+def _crawl_schedule_oracle() -> str:
+    ent = f"{_ORACLE_DIR}/entries"
     return f"""
         WITH pr AS (
             SELECT url, CAST(count(*) AS DOUBLE) AS priority
@@ -2343,8 +2305,8 @@ def _latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return group_quantiles(e, "query_time")
 
 
-def _latency_quantiles_oracle(sf_dir_base: str = "sf0.01") -> str:
-    ent = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/entries"
+def _latency_quantiles_oracle() -> str:
+    ent = f"{_ORACLE_DIR}/entries"
     return f"""
         WITH r AS (
             SELECT fingerprint, query_time,
@@ -2376,10 +2338,9 @@ def _containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gram generation, df pruning, the inverted-index candidate join, and
     both containment directions are recomputed by DuckDB."""
     from slowspark.textops import containment_pairs, ws_token_array
+    from slowspark.util import spread
 
-    # repartition: keep the gram projection off a single input split
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text") \
-        .repartition(32)
+    d = spread(_read(spark, sf_dir, "documents").select("doc_id", "text"))
     quotes = (
         d.filter(F.col("doc_id") % 5 == 0)
         .select(
@@ -2526,8 +2487,6 @@ def _hll_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-corpus sketch, and by max-idempotence the replay column MUST
     equal the first — both facts inside the value hash (the oracle emits
     the whole-corpus estimate twice)."""
-    import os
-
     from slowspark.sketch import (
         append_to_hll_index,
         build_hll_index,
@@ -2535,8 +2494,7 @@ def _hll_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _kmv_hashes_parquet(spark, sf_dir)  # for the DuckDB side
-    base = os.path.basename(os.path.normpath(sf_dir))
-    idx = f"{_ORACLE_ENTRIES_BASE}/{base}/hll_index"
+    idx = _artifact_path(sf_dir, "hll_index")
     docs = _read(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     from slowspark.textops import ws_token_array
 
@@ -2575,12 +2533,12 @@ def _hll_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return first_rows.join(replay, "lang")
 
 
-def _hll_incremental_oracle(sf_dir_base: str = "sf0.01") -> str:
+def _hll_incremental_oracle() -> str:
     import math as _math
 
     from slowspark.sketch import hll_alpha
 
-    h = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/kmv_hashes"
+    h = f"{_ORACLE_DIR}/kmv_hashes"
     p = _HLL_P
     m, w = 1 << p, 64 - p
     q = w + 1
@@ -2623,7 +2581,7 @@ _QCLF_BUCKETS = 1 << 15
 _QCLF_MARKER = " peer reviewed citation encyclopedia reference bibliography"
 
 
-def _qualityclf_parquet(spark: SparkSession, sf_dir: str) -> str:
+def _qualityclf_parquet(spark: SparkSession, sf_dir: str) -> None:
     """Materialize the quality-classifier fixtures once per process: the
     hashed-ngram feature table (qualityclf.hashed_text_features — id,
     bucket, tf) over ALL documents with the _QCLF_MARKER decoration on
@@ -2634,18 +2592,12 @@ def _qualityclf_parquet(spark: SparkSession, sf_dir: str) -> str:
     SQL-expressible) and is pinned by tests/test_qualityclf.py; the
     oracle recomputes the SCORING pass — join, margin sum, sigmoid — in
     SQL from these two parquets, so the full-corpus inference path is
-    inside the value hash. Returns the artifact dir holding both
-    tables."""
-    import os
-
+    inside the value hash."""
     from pyspark.sql import functions as F
 
     from slowspark.qualityclf import hashed_text_features, train_logreg
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    abase = f"{_ORACLE_ENTRIES_BASE}/{base}"
-    fpath, cpath = f"{abase}/qualityclf_features", f"{abase}/qualityclf_coeffs"
-    if fpath not in _ENTRIES_WRITTEN or cpath not in _ENTRIES_WRITTEN:
+    def build(cpath):
         d = _read(spark, sf_dir, "documents").withColumn(
             "text",
             F.when(
@@ -2654,7 +2606,9 @@ def _qualityclf_parquet(spark: SparkSession, sf_dir: str) -> str:
             ).otherwise(F.col("text")),
         )
         feats = hashed_text_features(d, n_buckets=_QCLF_BUCKETS).persist()
-        feats.write.mode("overwrite").parquet(fpath)
+        feats.write.mode("overwrite").parquet(
+            _artifact_path(sf_dir, "qualityclf_features")
+        )
         labels = d.filter(F.col("doc_id") % 2 == 0).select(
             F.col("doc_id").alias("id"), (F.col("doc_id") % 3 == 0).alias("label")
         )
@@ -2668,11 +2622,11 @@ def _qualityclf_parquet(spark: SparkSession, sf_dir: str) -> str:
             )
         ).coalesce(1).write.mode("overwrite").parquet(cpath)
         feats.unpersist()
-        _ENTRIES_WRITTEN.update((fpath, cpath))
-    return abase
+
+    _artifact(sf_dir, "qualityclf_coeffs", build)
 
 
-def _langid_parquet(spark: SparkSession, sf_dir: str) -> str:
+def _langid_parquet(spark: SparkSession, sf_dir: str) -> None:
     """Materialize the multilingual-langid fixtures once per process:
     the deterministic six-language corpus (qualityclf.langid_fixture —
     doc_id, lang), its hashed char-3-gram feature table, and the
@@ -2683,28 +2637,25 @@ def _langid_parquet(spark: SparkSession, sf_dir: str) -> str:
     margin join, intercept completion, rounded argmax — in SQL from
     these parquets. The fixture is sf-independent; it lives under the
     sf artifact dir purely to share the manifest stamp."""
-    import os
-
     from pyspark.sql import functions as F
 
     from slowspark.qualityclf import (
         hashed_char_ngram_features, langid_fixture, train_langid,
     )
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    abase = f"{_ORACLE_ENTRIES_BASE}/{base}"
-    paths = [f"{abase}/langid_{n}" for n in ("docs", "features", "coeffs")]
-    if any(p not in _ENTRIES_WRITTEN for p in paths):
+    def build(_):
         docs = langid_fixture(spark, n_per_lang=24)
-        docs.coalesce(1).write.mode("overwrite").parquet(paths[0])
-        feats = hashed_char_ngram_features(docs)
-        feats.write.mode("overwrite").parquet(paths[1])
-        co = train_langid(
-            docs.filter(F.col("doc_id") % 2 == 0), epochs=8
+        docs.coalesce(1).write.mode("overwrite").parquet(
+            _artifact_path(sf_dir, "langid_docs")
         )
-        co.coalesce(1).write.mode("overwrite").parquet(paths[2])
-        _ENTRIES_WRITTEN.update(paths)
-    return abase
+        hashed_char_ngram_features(docs).write.mode("overwrite").parquet(
+            _artifact_path(sf_dir, "langid_features")
+        )
+        return train_langid(
+            docs.filter(F.col("doc_id") % 2 == 0), epochs=8
+        ).coalesce(1)
+
+    _artifact(sf_dir, "langid_coeffs", build)
 
 
 def _minhash_sigs_parquet(
@@ -2715,18 +2666,12 @@ def _minhash_sigs_parquet(
     index when called from _ensure_oracle_artifacts). DuckDB recomputes
     LSH banding, estimated Jaccard, and the exact-verify stage of
     fuzzy_contamination_report from the SAME signatures."""
-    import os
-
     from slowspark.textops import minhash_signatures
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_ORACLE_ENTRIES_BASE}/{base}/minhash_sigs"
-    if path not in _ENTRIES_WRITTEN:
-        if sigs is None:
-            sigs = minhash_signatures(_read(spark, sf_dir, "documents"))
-        sigs.write.mode("overwrite").parquet(path)
-        _ENTRIES_WRITTEN.add(path)
-    return path
+    return _artifact(sf_dir, "minhash_sigs", lambda _: (
+        sigs if sigs is not None
+        else minhash_signatures(_read(spark, sf_dir, "documents"))
+    ))
 
 
 def _incremental_index_parquet(
@@ -2743,13 +2688,9 @@ def _incremental_index_parquet(
     lets both tables come from per-row FILTERS of one shared pass instead
     of two fresh signature-UDF runs — minhash_signatures is per-doc
     deterministic, so filter-of-full equals compute-on-subset exactly."""
-    import os
-
     from slowspark.textops import build_minhash_index, minhash_signatures
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    idx = f"{_ORACLE_ENTRIES_BASE}/{base}/minhash_index"
-    if idx not in _ENTRIES_WRITTEN:
+    def build(idx):
         d = _read(spark, sf_dir, "documents")
         even_sigs = (
             sigs.filter(F.col("doc_id") % 2 == 0) if sigs is not None else None
@@ -2763,8 +2704,8 @@ def _incremental_index_parquet(
             else minhash_signatures(d.filter(F.col("doc_id") % 2 == 1))
         )
         odd_sigs.write.mode("overwrite").parquet(f"{idx}/new_sigs")
-        _ENTRIES_WRITTEN.add(idx)
-    return idx
+
+    return _artifact(sf_dir, "minhash_index", build)
 
 
 def _simhash_index_parquet(spark: SparkSession, sf_dir: str) -> str:
@@ -2774,13 +2715,9 @@ def _simhash_index_parquet(spark: SparkSession, sf_dir: str) -> str:
     new_sigs. Both sides slice the already-materialized full signature
     artifact (_simhash_sigs_parquet) — one signature pass, and per-doc
     determinism makes filter-of-full equal compute-on-subset exactly."""
-    import os
-
     from slowspark.textops import build_simhash_index
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    idx = f"{_ORACLE_ENTRIES_BASE}/{base}/simhash_index"
-    if idx not in _ENTRIES_WRITTEN:
+    def build(idx):
         sigs = spark.read.parquet(_simhash_sigs_parquet(spark, sf_dir))
         build_simhash_index(
             None, idx, sigs=sigs.filter(F.col("doc_id") % 2 == 0)
@@ -2788,8 +2725,8 @@ def _simhash_index_parquet(spark: SparkSession, sf_dir: str) -> str:
         sigs.filter(F.col("doc_id") % 2 == 1).write.mode(
             "overwrite"
         ).parquet(f"{idx}/new_sigs")
-        _ENTRIES_WRITTEN.add(idx)
-    return idx
+
+    return _artifact(sf_dir, "simhash_index", build)
 
 
 def _incremental_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2815,15 +2752,11 @@ def _incremental_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold — banding, probe join, and estimate are all inside the
     hash check."""
     from slowspark.textops import incremental_near_dup_pairs
+    from slowspark.util import spread
 
     idx = _incremental_index_parquet(spark, sf_dir)
-    # repartition: the signature UDF over the batch must not serialize
-    # on the one-file test parquet's single split (a production batch
-    # scan already has the splits)
-    new = (
-        _read(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 2 == 1)
-        .repartition(32)
+    new = spread(
+        _read(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 1)
     )
     return incremental_near_dup_pairs(new, idx).select(
         "new_id", "corpus_id", F.round("est_jaccard", 4).alias("est_jaccard")
@@ -2937,21 +2870,11 @@ def _lsh_buckets_parquet(spark: SparkSession, sf_dir: str) -> str:
     deterministic hyperplane projection becomes DATA), so the probe query
     is pure relational algebra over the bucket column — and DuckDB can
     verify it from the same parquet."""
-    import os
-
     from slowspark.similarity import with_lsh_bucket
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_ORACLE_ENTRIES_BASE}/{base}/lsh_buckets"
-    if path not in _ENTRIES_WRITTEN:
-        emb = _read(spark, sf_dir, "embeddings")
-        (
-            with_lsh_bucket(emb, "embedding", n_planes=_LSH_N_PLANES)
-            .select("vec_id", "embedding", "lsh_bucket")
-            .write.mode("overwrite").parquet(path)
-        )
-        _ENTRIES_WRITTEN.add(path)
-    return path
+    return _artifact(sf_dir, "lsh_buckets", lambda _: with_lsh_bucket(
+        _read(spark, sf_dir, "embeddings"), "embedding", n_planes=_LSH_N_PLANES
+    ).select("vec_id", "embedding", "lsh_bucket"))
 
 
 def _ivf_index_parquet(spark: SparkSession, sf_dir: str) -> str:
@@ -2960,28 +2883,25 @@ def _ivf_index_parquet(spark: SparkSession, sf_dir: str) -> str:
     query and the DuckDB oracle rank the SAME stored centroids and scan the
     SAME cell assignments — the worker-side quantizer becomes data.
     Training is deterministic (hash-seeded sampling + fixed Lloyd rounds),
-    so an overwrite is always content-identical."""
-    import os
-
+    so an overwrite is always content-identical. Returns the cells path;
+    the centroids sit beside it at ivf_centroids."""
     from slowspark.similarity import ivf_assign, ivf_train
+    from slowspark.util import spread
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_ORACLE_ENTRIES_BASE}/{base}/ivf_cells"
-    cpath = f"{_ORACLE_ENTRIES_BASE}/{base}/ivf_centroids"
-    if path not in _ENTRIES_WRITTEN:
-        emb = _read(spark, sf_dir, "embeddings").repartition(32)
+    def build(_):
+        emb = spread(_read(spark, sf_dir, "embeddings"))
         centroids = ivf_train(emb, n_centroids=_IVF_N_CENTROIDS)
-        (
-            ivf_assign(emb, centroids=centroids)
-            .select("vec_id", "embedding", "ivf_cell")
-            .write.mode("overwrite").parquet(path)
-        )
         spark.createDataFrame(
             [(i, [float(x) for x in row]) for i, row in enumerate(centroids)],
             "cell int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(cpath)
-        _ENTRIES_WRITTEN.add(path)
-    return path
+        ).coalesce(1).write.mode("overwrite").parquet(
+            _artifact_path(sf_dir, "ivf_centroids")
+        )
+        return ivf_assign(emb, centroids=centroids).select(
+            "vec_id", "embedding", "ivf_cell"
+        )
+
+    return _artifact(sf_dir, "ivf_cells", build)
 
 
 _PQ_M, _PQ_K, _PQ_RERANK = 16, 16, 100
@@ -2994,14 +2914,11 @@ def _pq_index_parquet(spark: SparkSession, sf_dir: str) -> str:
     recompute the whole ADC prefilter + exact re-rank from the SAME
     parquet — encode correctness rides inside the hash check via the
     codes the prefilter ranks."""
-    import os
-
     from slowspark.similarity import pq_encode, pq_train
+    from slowspark.util import spread
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_ORACLE_ENTRIES_BASE}/{base}/pq_index"
-    if path not in _ENTRIES_WRITTEN:
-        emb = _read(spark, sf_dir, "embeddings").repartition(32)
+    def build(path):
+        emb = spread(_read(spark, sf_dir, "embeddings"))
         books = pq_train(emb, m=_PQ_M, k=_PQ_K)
         pq_encode(emb, books).write.mode("overwrite").parquet(f"{path}/codes")
         rows = [
@@ -3012,8 +2929,25 @@ def _pq_index_parquet(spark: SparkSession, sf_dir: str) -> str:
         spark.createDataFrame(
             rows, "j int, c int, centroid array<double>"
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-        _ENTRIES_WRITTEN.add(path)
-    return path
+
+    return _artifact(sf_dir, "pq_index", build)
+
+
+def _stored_centroids(spark: SparkSession, sf_dir: str):
+    """The IVF artifact's coarse centroids as an array indexed by cell,
+    or None when the artifact is absent."""
+    import numpy as np
+
+    try:
+        cent = spark.read.parquet(
+            _artifact_path(sf_dir, "ivf_centroids")
+        ).collect()
+        out = np.zeros((len(cent), len(cent[0]["centroid"])))
+    except Exception:
+        return None
+    for r in cent:
+        out[r["cell"]] = r["centroid"]
+    return out
 
 
 def _ivfpq_index_parquet(spark: SparkSession, sf_dir: str) -> str:
@@ -3023,45 +2957,37 @@ def _ivfpq_index_parquet(spark: SparkSession, sf_dir: str) -> str:
     tables as parquet so the DuckDB oracle can recompute the ENTIRE query
     — coarse cell ranking, partition-restricted ADC, candidate cutoff,
     exact re-rank — from the same artifacts the Spark path reads."""
-    import os
-
-    from slowspark.similarity import ivfpq_build_index
-
     import numpy as np
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_ORACLE_ENTRIES_BASE}/{base}/ivfpq_index"
-    if path not in _ENTRIES_WRITTEN:
-        emb = _read(spark, sf_dir, "embeddings").repartition(32)
+    from slowspark.similarity import ivfpq_build_index
+    from slowspark.util import spread
+
+    def build(path):
         # reuse the standalone artifacts' trained quantizers when present
         # (same parameters, deterministic trainers -> identical output;
         # _ensure_oracle_artifacts sequences this after both builders)
-        pre_c = pre_b = None
-        try:
-            cent = spark.read.parquet(
-                f"{_ORACLE_ENTRIES_BASE}/{base}/ivf_centroids"
-            ).collect()
-            pre_c = np.zeros((len(cent), len(cent[0]["centroid"])))
-            for r in cent:
-                pre_c[r["cell"]] = r["centroid"]
-            bk = spark.read.parquet(
-                f"{_ORACLE_ENTRIES_BASE}/{base}/pq_index/codebooks"
-            ).collect()
-            mm = max(r["j"] for r in bk) + 1
-            kk = max(r["c"] for r in bk) + 1
-            pre_b = np.zeros((mm, kk, len(bk[0]["centroid"])))
-            for r in bk:
-                pre_b[r["j"]][r["c"]] = r["centroid"]
-        except Exception:
-            pre_c = pre_b = None  # standalone artifacts absent: train fresh
+        pre_c, pre_b = _stored_centroids(spark, sf_dir), None
+        if pre_c is not None:
+            try:
+                bk = spark.read.parquet(
+                    f"{_artifact_path(sf_dir, 'pq_index')}/codebooks"
+                ).collect()
+                mm = max(r["j"] for r in bk) + 1
+                kk = max(r["c"] for r in bk) + 1
+                pre_b = np.zeros((mm, kk, len(bk[0]["centroid"])))
+                for r in bk:
+                    pre_b[r["j"]][r["c"]] = r["centroid"]
+            except Exception:
+                pre_c = None  # standalone artifacts absent: train fresh
         # the index build itself persists centroids/ and codebooks/ as
         # parquet — exactly the tables the DuckDB oracle reads
         ivfpq_build_index(
-            emb, path, n_centroids=_IVF_N_CENTROIDS, m=_PQ_M, k=_PQ_K,
+            spread(_read(spark, sf_dir, "embeddings")), path,
+            n_centroids=_IVF_N_CENTROIDS, m=_PQ_M, k=_PQ_K,
             centroids=pre_c, codebooks=pre_b,
         )
-        _ENTRIES_WRITTEN.add(path)
-    return path
+
+    return _artifact(sf_dir, "ivfpq_index", build)
 
 
 def _ivfpq_res_index_parquet(spark: SparkSession, sf_dir: str) -> str:
@@ -3071,34 +2997,19 @@ def _ivfpq_res_index_parquet(spark: SparkSession, sf_dir: str) -> str:
     Reuses the standalone IVF artifact's coarse centroids when present
     (same parameters, deterministic); the residual codebooks cannot be
     shared with the raw-vector PQ artifact by construction."""
-    import os
-
-    import numpy as np
-
     from slowspark.similarity import ivfpq_build_index
+    from slowspark.util import spread
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_ORACLE_ENTRIES_BASE}/{base}/ivfpq_res_index"
-    if path not in _ENTRIES_WRITTEN:
-        emb = _read(spark, sf_dir, "embeddings").repartition(32)
-        pre_c = None
-        try:
-            cent = spark.read.parquet(
-                f"{_ORACLE_ENTRIES_BASE}/{base}/ivf_centroids"
-            ).collect()
-            pre_c = np.zeros((len(cent), len(cent[0]["centroid"])))
-            for r in cent:
-                pre_c[r["cell"]] = r["centroid"]
-        except Exception:
-            pre_c = None
+    def build(path):
         # the index build itself persists centroids/ and codebooks/ as
         # parquet — exactly the tables the DuckDB oracle reads
         ivfpq_build_index(
-            emb, path, n_centroids=_IVF_N_CENTROIDS, m=_PQ_M, k=_PQ_K,
-            centroids=pre_c, residual=True,
+            spread(_read(spark, sf_dir, "embeddings")), path,
+            n_centroids=_IVF_N_CENTROIDS, m=_PQ_M, k=_PQ_K,
+            centroids=_stored_centroids(spark, sf_dir), residual=True,
         )
-        _ENTRIES_WRITTEN.add(path)
-    return path
+
+    return _artifact(sf_dir, "ivfpq_res_index", build)
 
 
 def _ivfpq_residual_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3115,12 +3026,12 @@ def _ivfpq_residual_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", F.round("cosine", 4).alias("cosine"))
 
 
-def _ivfpq_residual_ann_topk_oracle(sf_dir_base: str = "sf0.01") -> str:
+def _ivfpq_residual_ann_topk_oracle() -> str:
     """DuckDB replica of the residual composed query: identical to the
     ivfpq oracle except adc = (q . centroid_cell) + sum(residual LUT) —
     the bias is recomputed in SQL from the stored centroids."""
     dsub = 64 // _PQ_M
-    idx = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/ivfpq_res_index"
+    idx = f"{_ORACLE_DIR}/ivfpq_res_index"
     return f"""
         WITH cells AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
@@ -3231,7 +3142,7 @@ def _query_vec_0(spark: SparkSession, sf_dir: str) -> list:
     return [float(x) for x in qrow["embedding"]]
 
 
-def _ivfpq_ann_topk_oracle(sf_dir_base: str = "sf0.01") -> str:
+def _ivfpq_ann_topk_oracle() -> str:
     """DuckDB replica of the full composed query: probe = top-p stored
     centroids by cosine vs the vec_id=0 query row (same deterministic
     (score desc, cell) tie-break), ADC over codes restricted to the probed
@@ -3239,7 +3150,7 @@ def _ivfpq_ann_topk_oracle(sf_dir_base: str = "sf0.01") -> str:
     at rerank, exact re-rank of the candidates' raw vectors from the same
     probed partitions."""
     dsub = 64 // _PQ_M
-    idx = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/ivfpq_index"
+    idx = f"{_ORACLE_DIR}/ivfpq_index"
     return f"""
         WITH cells AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
@@ -3295,12 +3206,12 @@ def _ivfpq_ann_topk_oracle(sf_dir_base: str = "sf0.01") -> str:
     """
 
 
-def _ivfpq_batch_ann_topk_oracle(sf_dir_base: str = "sf0.01") -> str:
+def _ivfpq_batch_ann_topk_oracle() -> str:
     """Per-query generalization of _ivfpq_ann_topk_oracle: every stage
     (probe ranking, LUT, ADC aggregation, rerank cutoff, exact re-rank)
     is keyed by query_id with window-function cutoffs instead of LIMIT."""
     dsub = 64 // _PQ_M
-    idx = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/ivfpq_index"
+    idx = f"{_ORACLE_DIR}/ivfpq_index"
     return f"""
         WITH cells AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
@@ -3398,7 +3309,7 @@ def _pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", F.round("cosine", 4).alias("cosine"))
 
 
-def _pq_ann_topk_oracle(sf_dir_base: str = "sf0.01") -> str:
+def _pq_ann_topk_oracle() -> str:
     """DuckDB replica of BOTH PQ stages from the materialized parquet:
     LUT[j][c] = dot(q_sub_j, centroid) computed in SQL from the codebook
     table and the vec_id=0 query row, ADC = sum over subspaces of the
@@ -3413,10 +3324,10 @@ def _pq_ann_topk_oracle(sf_dir_base: str = "sf0.01") -> str:
             FROM embeddings WHERE vec_id = 0
         ), codes AS (
             SELECT * FROM read_parquet(
-                '{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/pq_index/codes/*.parquet')
+                '{_ORACLE_DIR}/pq_index/codes/*.parquet')
         ), books AS (
             SELECT * FROM read_parquet(
-                '{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/pq_index/codebooks/*.parquet')
+                '{_ORACLE_DIR}/pq_index/codebooks/*.parquet')
         ), lut AS (
             SELECT j, c,
                    list_sum(list_transform(range(1, {dsub} + 1),
@@ -3500,10 +3411,9 @@ def _gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     run counts, top-gram tie-breaks, and the char-interval union
     (gaps-and-islands) relationally in DuckDB."""
     from slowspark.gopherrep import _STAT_COLS, gopher_repetition_flags
+    from slowspark.util import spread
 
-    # repartition: the single Python stage must not serialize on the
-    # one-file test input
-    d = _read(spark, sf_dir, "documents").repartition(32)
+    d = spread(_read(spark, sf_dir, "documents"))
     decorated = d.withColumn(
         "text",
         F.when(
@@ -3678,9 +3588,9 @@ def _quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL from the same parquets."""
     from slowspark.qualityclf import score_documents
 
-    abase = _qualityclf_parquet(spark, sf_dir)
-    feats = spark.read.parquet(f"{abase}/qualityclf_features")
-    co = spark.read.parquet(f"{abase}/qualityclf_coeffs")
+    _qualityclf_parquet(spark, sf_dir)
+    feats = spark.read.parquet(_artifact_path(sf_dir, "qualityclf_features"))
+    co = spark.read.parquet(_artifact_path(sf_dir, "qualityclf_coeffs"))
     intercept = co.filter(F.col("bucket") == -1).collect()[0]["weight"]
     scores = score_documents(
         feats, co.filter(F.col("bucket") >= 0), float(intercept)
@@ -3704,10 +3614,10 @@ def _langid_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL from the same parquets."""
     from slowspark.qualityclf import score_langid
 
-    abase = _langid_parquet(spark, sf_dir)
-    feats = spark.read.parquet(f"{abase}/langid_features")
-    co = spark.read.parquet(f"{abase}/langid_coeffs")
-    docs = spark.read.parquet(f"{abase}/langid_docs")
+    _langid_parquet(spark, sf_dir)
+    feats = spark.read.parquet(_artifact_path(sf_dir, "langid_features"))
+    co = spark.read.parquet(_artifact_path(sf_dir, "langid_coeffs"))
+    docs = spark.read.parquet(_artifact_path(sf_dir, "langid_docs"))
     scored = score_langid(feats, co)
     return scored.join(
         docs.select(F.col("doc_id").alias("id"), F.col("lang").alias("lang_true")),
@@ -3722,18 +3632,17 @@ def _langid_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _langid_scores_oracle(sf_dir_base: str = "sf0.01") -> str:
-    abase = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}"
+def _langid_scores_oracle() -> str:
     return f"""
         WITH feats AS (
-            SELECT * FROM read_parquet('{abase}/langid_features/*.parquet')
+            SELECT * FROM read_parquet('{_ORACLE_DIR}/langid_features/*.parquet')
         ), co AS (
             SELECT lang, bucket, weight
-            FROM read_parquet('{abase}/langid_coeffs/*.parquet')
+            FROM read_parquet('{_ORACLE_DIR}/langid_coeffs/*.parquet')
             WHERE bucket >= 0
         ), ic AS (
             SELECT lang, weight AS b
-            FROM read_parquet('{abase}/langid_coeffs/*.parquet')
+            FROM read_parquet('{_ORACLE_DIR}/langid_coeffs/*.parquet')
             WHERE bucket = -1
         ), m AS (
             SELECT f.id, c.lang, sum(f.tf * c.weight) AS mw
@@ -3759,24 +3668,23 @@ def _langid_scores_oracle(sf_dir_base: str = "sf0.01") -> str:
                b.lang = d.lang AS correct,
                b.id % 2 = 1 AS heldout
         FROM best b
-        JOIN read_parquet('{abase}/langid_docs/*.parquet') d
+        JOIN read_parquet('{_ORACLE_DIR}/langid_docs/*.parquet') d
              ON d.doc_id = b.id
         WHERE b.rn = 1
     """
 
 
-def _quality_classifier_oracle(sf_dir_base: str = "sf0.01") -> str:
-    abase = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}"
+def _quality_classifier_oracle() -> str:
     return f"""
         WITH feats AS (
-            SELECT * FROM read_parquet('{abase}/qualityclf_features/*.parquet')
+            SELECT * FROM read_parquet('{_ORACLE_DIR}/qualityclf_features/*.parquet')
         ), co AS (
             SELECT bucket, weight
-            FROM read_parquet('{abase}/qualityclf_coeffs/*.parquet')
+            FROM read_parquet('{_ORACLE_DIR}/qualityclf_coeffs/*.parquet')
             WHERE bucket >= 0
         ), b AS (
             SELECT weight AS b
-            FROM read_parquet('{abase}/qualityclf_coeffs/*.parquet')
+            FROM read_parquet('{_ORACLE_DIR}/qualityclf_coeffs/*.parquet')
             WHERE bucket = -1
         ), m AS (
             SELECT f.id,
@@ -3794,23 +3702,21 @@ def _quality_classifier_oracle(sf_dir_base: str = "sf0.01") -> str:
 
 
 _BPE_MERGES = 8
-_BPE_CACHE: dict[str, list] = {}
 
 
-def _bpe_learned(spark: SparkSession, sf_dir: str) -> list:
+@functools.cache
+def _bpe_learned(
+    spark: SparkSession, sf_dir: str, byte_level: bool = False
+) -> list:
     """Per-process memo of the 8-merge BPE training run over the sf
-    dir's documents — bpe_merges and bpe_segment_counts share one
-    training loop instead of re-running the 8 argmax rounds."""
-    import os
-
+    dir's documents — bpe_merges and bpe_segment_counts (and their
+    byte-level twins, which add GPT-2 pre-tokenization + the byte map)
+    share one training loop instead of re-running the 8 argmax rounds."""
     from slowspark.bpe import bpe_learn
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    if base not in _BPE_CACHE:
-        _BPE_CACHE[base] = bpe_learn(
-            _read(spark, sf_dir, "documents"), _BPE_MERGES
-        )
-    return _BPE_CACHE[base]
+    return bpe_learn(
+        _read(spark, sf_dir, "documents"), _BPE_MERGES, byte_level=byte_level
+    )
 
 
 def _bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3947,22 +3853,6 @@ def _bpe_segment_counts_oracle() -> str:
     """
 
 
-def _bpe_byte_learned(spark: SparkSession, sf_dir: str) -> list:
-    """Per-process memo of the byte-level training run (GPT-2
-    pre-tokenization + byte map) — shared by bpe_byte_merges and
-    bpe_byte_segment_counts."""
-    import os
-
-    from slowspark.bpe import bpe_learn
-
-    key = os.path.basename(os.path.normpath(sf_dir)) + ":byte"
-    if key not in _BPE_CACHE:
-        _BPE_CACHE[key] = bpe_learn(
-            _read(spark, sf_dir, "documents"), _BPE_MERGES, byte_level=True
-        )
-    return _BPE_CACHE[key]
-
-
 def _bpe_byte_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-level BPE training (bpe.bpe_learn(byte_level=True), the
     GPT-2 recipe: pre-tokenization regex + byte->unicode map, merges
@@ -3975,7 +3865,7 @@ def _bpe_byte_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     chr(256+b) on controls — the full non-ASCII map is pinned by the
     pure-Python differential in tests/test_bpe.py instead), and runs
     the same unrolled merge rounds as the word-level oracle."""
-    merges = _bpe_byte_learned(spark, sf_dir)
+    merges = _bpe_learned(spark, sf_dir, byte_level=True)
     return spark.createDataFrame(
         [
             (m["merge_ix"], m["left"], m["right"], m["merged"], m["pair_count"])
@@ -3994,7 +3884,7 @@ def _bpe_byte_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the value hash, at byte level."""
     from slowspark.bpe import bpe_segment_udf
 
-    merges = _bpe_byte_learned(spark, sf_dir)
+    merges = _bpe_learned(spark, sf_dir, byte_level=True)
     # counts_only: map-side-combined sum, no token-array shuffle (r9)
     return bpe_segment_udf(
         _read(spark, sf_dir, "documents"), merges, byte_level=True,
@@ -4210,8 +4100,7 @@ def _ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from slowspark.similarity import brute_force_topk
 
     cells = spark.read.parquet(_ivf_index_parquet(spark, sf_dir))
-    base_dir = _ivf_index_parquet(spark, sf_dir).rsplit("/", 1)[0]
-    cent = spark.read.parquet(f"{base_dir}/ivf_centroids").collect()
+    cent = spark.read.parquet(_artifact_path(sf_dir, "ivf_centroids")).collect()
     qrow = cells.filter(F.col("vec_id") == 0).select("embedding").first()
     q = np.asarray([float(x) for x in qrow["embedding"]], dtype=np.float64)
     qn = np.linalg.norm(q) or 1.0
@@ -4362,11 +4251,9 @@ def _substring_dedup_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving characters — flagging, maximal extension, and rebuild are
     all inside the value hash."""
     from slowspark.textops import exact_substring_dedup_chars
+    from slowspark.util import spread
 
-    # repartition: the one-file test parquet must not serialize the
-    # O(len*L) window projection on a single input split (the
-    # winnow_overlaps lesson; a production scan already has the splits)
-    d = _read(spark, sf_dir, "documents").repartition(32)
+    d = spread(_read(spark, sf_dir, "documents"))
     return exact_substring_dedup_chars(d, min_len=40).select(
         "doc_id",
         F.col("n_chars").cast("int").alias("n_chars"),
@@ -4960,8 +4847,6 @@ def _warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     value hash covers the full framing: any byte lost or reordered in
     either direction changes md5(payload) or drops a row vs the oracle
     reading the parquet directly."""
-    import os as _os
-
     from slowspark.sources import read_warc, write_warc
 
     d = _read(spark, sf_dir, "documents").select(
@@ -4972,8 +4857,7 @@ def _warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "doc_id",
     )
-    base = _os.path.basename(_os.path.normpath(sf_dir))
-    out = f"{_ORACLE_ENTRIES_BASE}/{base}/warc_export"
+    out = _artifact_path(sf_dir, "warc_export")
     write_warc(d, out, n_files=4, header_cols=("lang", "doc_id"))
     back = read_warc(spark, out + "/*.warc.gz")
     return back.select(
@@ -4993,8 +4877,6 @@ def _warc_selective_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     seek+length reads return byte-identical payloads for exactly the
     selected subset; the never-opens-untouched-files IO contract is
     pinned by tests/test_warc.py's corruption test."""
-    import os as _os
-
     from slowspark.sources import read_warc_selective, write_warc
 
     d = _read(spark, sf_dir, "documents").select(
@@ -5005,9 +4887,8 @@ def _warc_selective_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "doc_id",
     )
-    base = _os.path.basename(_os.path.normpath(sf_dir))
-    out = f"{_ORACLE_ENTRIES_BASE}/{base}/warc_export_cdx"
-    idx = f"{_ORACLE_ENTRIES_BASE}/{base}/warc_cdx_index"
+    out = _artifact_path(sf_dir, "warc_export_cdx")
+    idx = _artifact_path(sf_dir, "warc_cdx_index")
     write_warc(d, out, n_files=4, header_cols=("lang", "doc_id"),
                index_path=idx)
     sel = d.filter(F.col("doc_id") % 7 == 0).select("url")
@@ -5324,12 +5205,12 @@ _RAKE_TOPK_ORACLE = f"""
 """
 
 
-def _hll_windowed_distinct_oracle(sf_dir_base: str = "sf0.01") -> str:
+def _hll_windowed_distinct_oracle() -> str:
     import math as _math
 
     from slowspark.sketch import hll_alpha
 
-    h = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/hll_window_hashes"
+    h = f"{_ORACLE_DIR}/hll_window_hashes"
     p = _HLL_P
     m, w = 1 << p, 64 - p
     q = w + 1
@@ -5474,23 +5355,12 @@ def _hll_window_hashes_parquet(spark: SparkSession, sf_dir: str) -> str:
     per-hour user — the one Spark primitive in the windowed-HLL query;
     DuckDB recomputes registers + estimate from here and the exact side
     from `events` directly."""
-    import os
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_ORACLE_ENTRIES_BASE}/{base}/hll_window_hashes"
-    if path not in _ENTRIES_WRITTEN:
-        (
-            _read(spark, sf_dir, "events")
-            .select(
-                F.date_trunc("hour", "ts").alias("window_start"), "user_id"
-            )
-            .distinct()
-            .select("window_start", F.xxhash64("user_id").alias("h"))
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        _ENTRIES_WRITTEN.add(path)
-    return path
+    return _artifact(sf_dir, "hll_window_hashes", lambda _: (
+        _read(spark, sf_dir, "events")
+        .select(F.date_trunc("hour", "ts").alias("window_start"), "user_id")
+        .distinct()
+        .select("window_start", F.xxhash64("user_id").alias("h"))
+    ))
 
 
 def _hll_windowed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5526,14 +5396,9 @@ def _winnow_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin, tie rule, dedup, df prune, and pair rollup are all inside
     the value hash."""
     from slowspark.textops import winnow_fingerprints
-    from slowspark.util import materialize
+    from slowspark.util import materialize, spread
 
-    # repartition before the CPU-heavy array projection: the test
-    # parquet is ONE file -> one task; per-row winnowing work must not
-    # serialize on input-split count (at production scale the scan
-    # already has thousands of splits and this reshuffle is a no-op
-    # cost relative to the projection it parallelizes)
-    d = _read(spark, sf_dir, "documents").repartition(32)
+    d = spread(_read(spark, sf_dir, "documents"))
     # positions=False: distinct fp per doc comes out of the projection
     # ARRAY-LOCALLY (no corpus-wide distinct shuffle) — n_shared counts
     # DISTINCT shared fingerprints, and the join must not cross-product
@@ -5627,20 +5492,6 @@ _SOFT_DEDUP_ORACLE = """
 """
 
 
-def _unigram_model_parquet(spark: SparkSession, sf_dir: str,
-                           model: DataFrame) -> str:
-    """Materialize the trained (piece, logp) unigram model — float64
-    log-probs computed ONCE on the driver (the no-engine-ln contract);
-    DuckDB replays the Viterbi DP from these exact doubles."""
-    import os
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_ORACLE_ENTRIES_BASE}/{base}/unigram_model"
-    model.select("piece", "logp").write.mode("overwrite").parquet(path)
-    _ENTRIES_WRITTEN.add(path)
-    return path
-
-
 def _unigram_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM tokenizer (unigramlm.unigram_train /
     unigram_segment_counts, Kudo 2018 as deterministic Viterbi
@@ -5659,23 +5510,25 @@ def _unigram_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the multi-piece DP (not the trivial whole-word path) is what the
     # hash pins
     from slowspark.bpe import word_frequencies
-    from slowspark.util import materialize
+    from slowspark.util import materialize, spread
 
     # ONE tokenize + distinct-word pass shared by the trainer's two EM
     # rounds AND the final segmentation (r9: train and segment_counts
-    # each built their own); repartitioned so the Viterbi UDF passes
-    # don't serialize on the AQE-coalesced single partition
-    words = materialize(word_frequencies(d).repartition(32))
+    # each built their own)
+    words = spread(materialize(word_frequencies(d)))
     model = unigram_train(
         d, vocab_size=12, n_rounds=2, max_piece_len=4, seed_size=800,
         words=words,
     )
-    _unigram_model_parquet(spark, sf_dir, model)
+    # the (piece, logp) model — float64 log-probs computed ONCE on the
+    # driver (the no-engine-ln contract); DuckDB replays the Viterbi DP
+    # from these exact doubles
+    _artifact(sf_dir, "unigram_model", lambda _: model.select("piece", "logp"))
     return unigram_segment_counts(d, model, max_piece_len=4, words=words)
 
 
-def _unigram_tokens_oracle(sf_dir_base: str = "sf0.01") -> str:
-    mp = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/unigram_model"
+def _unigram_tokens_oracle() -> str:
+    mp = f"{_ORACLE_DIR}/unigram_model"
     L = 4
     return f"""
         WITH RECURSIVE words AS (
@@ -5747,22 +5600,14 @@ def _embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary decision are all inside the value hash."""
     from slowspark.similarity import embedding_outliers
 
-    _ivf_index_parquet(spark, sf_dir)
-    import os
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    assigned = spark.read.parquet(
-        f"{_ORACLE_ENTRIES_BASE}/{base}/ivf_cells"
-    )
-    cents = spark.read.parquet(
-        f"{_ORACLE_ENTRIES_BASE}/{base}/ivf_centroids"
-    )
+    assigned = spark.read.parquet(_ivf_index_parquet(spark, sf_dir))
+    cents = spark.read.parquet(_artifact_path(sf_dir, "ivf_centroids"))
     return embedding_outliers(assigned, cents)
 
 
-def _embedding_outliers_oracle(sf_dir_base: str = "sf0.01") -> str:
-    cells = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/ivf_cells"
-    cents = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/ivf_centroids"
+def _embedding_outliers_oracle() -> str:
+    cells = f"{_ORACLE_DIR}/ivf_cells"
+    cents = f"{_ORACLE_DIR}/ivf_centroids"
     return f"""
         WITH a AS (
             SELECT vec_id, ivf_cell, embedding
@@ -6111,8 +5956,9 @@ def _multi_pattern_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (position, pattern) pair relationally (O(len*n_patterns)); the
     automaton is the O(len) scale path and must agree exactly."""
     from slowspark.textops import multi_pattern_counts
+    from slowspark.util import spread
 
-    d = _read(spark, sf_dir, "documents").repartition(32)
+    d = spread(_read(spark, sf_dir, "documents"))
     return multi_pattern_counts(d, list(_SCAN_PATTERNS))
 
 
@@ -6192,20 +6038,16 @@ def _diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-balanced diversity sampling (similarity.diversity_sample):
     at most 3 vectors per IVF cell by the md5-rank keeper, over the
     stored cell assignments — the per-cell rank order is the hash."""
-    import os
-
     from slowspark.similarity import diversity_sample
 
-    _ivf_index_parquet(spark, sf_dir)
-    base = os.path.basename(os.path.normpath(sf_dir))
     assigned = spark.read.parquet(
-        f"{_ORACLE_ENTRIES_BASE}/{base}/ivf_cells"
+        _ivf_index_parquet(spark, sf_dir)
     ).select("vec_id", "ivf_cell")
     return diversity_sample(assigned, k_per_cell=3)
 
 
-def _diversity_sample_oracle(sf_dir_base: str = "sf0.01") -> str:
-    cells = f"{_ORACLE_ENTRIES_BASE}/{sf_dir_base}/ivf_cells"
+def _diversity_sample_oracle() -> str:
+    cells = f"{_ORACLE_DIR}/ivf_cells"
     return f"""
         SELECT vec_id, ivf_cell
         FROM (
@@ -6762,7 +6604,7 @@ def oracle_sql() -> dict[str, str]:
         "url_canonical_dedup": f"""
             WITH e AS (
                 SELECT entry_id, url
-                FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/entries/*.parquet')
+                FROM read_parquet('{_ORACLE_DIR}/entries/*.parquet')
             ), messy AS (
                 SELECT entry_id,
                        CASE abs(entry_id) % 4
@@ -6837,7 +6679,7 @@ def oracle_sql() -> dict[str, str]:
                                '^([a-zA-Z][a-zA-Z0-9+.-]*)://([^/?#]*)([^?#]*)(.*)$',
                                2)),
                            '^[^@]*@', ''), ':[0-9]*$', '') AS host
-                FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/entries/*.parquet')
+                FROM read_parquet('{_ORACLE_DIR}/entries/*.parquet')
             )
             SELECT host, count(*) AS n_entries
             FROM e
@@ -7045,7 +6887,7 @@ def oracle_sql() -> dict[str, str]:
         "fuzzy_contamination": f"""
             WITH cs AS (
                 SELECT doc_id, signature
-                FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/minhash_sigs/*.parquet')
+                FROM read_parquet('{_ORACLE_DIR}/minhash_sigs/*.parquet')
             ), es AS (
                 SELECT doc_id AS eval_id, signature FROM cs
                 WHERE doc_id % 50 = 0
@@ -7819,19 +7661,19 @@ def oracle_sql() -> dict[str, str]:
         # sf0.01 one because the driver runs correctness at sf=0.01.
         "kind_census": f"""
             SELECT entry_kind, count(*) AS n
-            FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/entries/*.parquet')
+            FROM read_parquet('{_ORACLE_DIR}/entries/*.parquet')
             GROUP BY entry_kind
         """,
         "fingerprint_rollup": f"""
             SELECT fingerprint, sql_type, count(*) AS n_calls,
                    round(sum(query_time), 4) AS sum_query_time
-            FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/entries/*.parquet')
+            FROM read_parquet('{_ORACLE_DIR}/entries/*.parquet')
             WHERE entry_kind = 'SqlStatement'
             GROUP BY fingerprint, sql_type
         """,
         "admin_histogram": f"""
             SELECT admin_command, count(*) AS n
-            FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/entries/*.parquet')
+            FROM read_parquet('{_ORACLE_DIR}/entries/*.parquet')
             WHERE entry_kind = 'AdminCommand'
             GROUP BY admin_command
         """,
@@ -7839,12 +7681,12 @@ def oracle_sql() -> dict[str, str]:
             SELECT log_meta.version AS version,
                    log_meta.tcp_port AS tcp_port,
                    count(*) AS n
-            FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/entries/*.parquet')
+            FROM read_parquet('{_ORACLE_DIR}/entries/*.parquet')
             GROUP BY log_meta.version, log_meta.tcp_port
         """,
         "comment_context_census": f"""
             WITH e AS (
-                SELECT * FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/entries/*.parquet')
+                SELECT * FROM read_parquet('{_ORACLE_DIR}/entries/*.parquet')
             ),
             m AS (
                 SELECT *, CASE WHEN entry_kind = 'SqlStatement'
@@ -7874,7 +7716,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT coalesce(regexp_extract(url, '^https?://([^/]+)/', 1), '') AS domain,
                    count(*) AS n_entries,
                    round(sum(query_time), 4) AS sum_query_time
-            FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/entries/*.parquet')
+            FROM read_parquet('{_ORACLE_DIR}/entries/*.parquet')
             GROUP BY 1
         """,
         "object_usage": f"""
@@ -7883,21 +7725,21 @@ def oracle_sql() -> dict[str, str]:
                    round(sum(query_time), 4) AS sum_query_time
             FROM (
                 SELECT unnest(objects) AS obj, query_time
-                FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/entries/*.parquet')
+                FROM read_parquet('{_ORACLE_DIR}/entries/*.parquet')
                 WHERE entry_kind = 'SqlStatement'
             )
             GROUP BY 1
         """,
         "language_id": _language_id_oracle(),
         "minhash_dedup": _component_dedup_oracle(
-            _pairs_parquet_sql(f"{_ORACLE_ENTRIES_BASE}/sf0.01/minhash_pairs")
+            _pairs_parquet_sql(f"{_ORACLE_DIR}/minhash_pairs")
         ),
         # same recursive components, quality-argmax keeper: per
         # component the highest-n_chars member survives (ties -> lowest
         # id); isolated docs survive trivially
         "quality_keeper_dedup": f"""
             WITH RECURSIVE pairs AS (
-                {_pairs_parquet_sql(f"{_ORACLE_ENTRIES_BASE}/sf0.01/minhash_pairs")}
+                {_pairs_parquet_sql(f"{_ORACLE_DIR}/minhash_pairs")}
             ), nodes AS (
                 SELECT id_a AS id FROM pairs
                 UNION SELECT id_b FROM pairs
@@ -7923,22 +7765,22 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY doc_id
         """,
         "jaccard_dedup": _component_dedup_oracle(
-            _pairs_parquet_sql(f"{_ORACLE_ENTRIES_BASE}/sf0.01/jaccard_pairs")
+            _pairs_parquet_sql(f"{_ORACLE_DIR}/jaccard_pairs")
         ),
         # simhash survivors: the edge set is recomputed IN SQL from the
         # materialized signatures (all-pairs hamming), so the Manku
         # bucketing AND the fixpoint dedup are both inside the check
         "simhash_dedup": _component_dedup_oracle(f"""
             SELECT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/simhash_sigs/*.parquet') a
-            JOIN read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/simhash_sigs/*.parquet') b
+            FROM read_parquet('{_ORACLE_DIR}/simhash_sigs/*.parquet') a
+            JOIN read_parquet('{_ORACLE_DIR}/simhash_sigs/*.parquet') b
               ON a.doc_id < b.doc_id
             WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
         """),
         "embedding_near_dup": f"""
             WITH b AS (
                 SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, lsh_bucket
-                FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/lsh_buckets/*.parquet')
+                FROM read_parquet('{_ORACLE_DIR}/lsh_buckets/*.parquet')
             )
             SELECT a.vec_id AS id_a, c.vec_id AS id_b,
                    round(CAST(list_cosine_similarity(a.emb, c.emb) AS DOUBLE), 4)
@@ -7956,7 +7798,7 @@ def oracle_sql() -> dict[str, str]:
         "semdedup_pairs": f"""
             WITH c AS (
                 SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, ivf_cell
-                FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/ivf_cells/*.parquet')
+                FROM read_parquet('{_ORACLE_DIR}/ivf_cells/*.parquet')
             )
             SELECT a.vec_id AS id_a, b.vec_id AS id_b,
                    round(CAST(list_cosine_similarity(a.emb, b.emb) AS DOUBLE), 4)
@@ -7972,11 +7814,11 @@ def oracle_sql() -> dict[str, str]:
         "incremental_near_dups": f"""
             WITH nb AS (
                 SELECT doc_id, i, signature[(i*4+1):(i*4+4)] AS band
-                FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/minhash_index/new_sigs/*.parquet'),
+                FROM read_parquet('{_ORACLE_DIR}/minhash_index/new_sigs/*.parquet'),
                      (SELECT unnest(range(16)) AS i)
             ), cb AS (
                 SELECT doc_id, i, signature[(i*4+1):(i*4+4)] AS band
-                FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/minhash_index/sigs/*.parquet'),
+                FROM read_parquet('{_ORACLE_DIR}/minhash_index/sigs/*.parquet'),
                      (SELECT unnest(range(16)) AS i)
             ), cand AS (
                 SELECT DISTINCT nb.doc_id AS new_id, cb.doc_id AS corpus_id
@@ -7987,9 +7829,9 @@ def oracle_sql() -> dict[str, str]:
                          i -> ns.signature[i] = cs.signature[i])) / 64.0, 4)
                        AS est_jaccard
             FROM cand c
-            JOIN read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/minhash_index/new_sigs/*.parquet') ns
+            JOIN read_parquet('{_ORACLE_DIR}/minhash_index/new_sigs/*.parquet') ns
               ON ns.doc_id = c.new_id
-            JOIN read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/minhash_index/sigs/*.parquet') cs
+            JOIN read_parquet('{_ORACLE_DIR}/minhash_index/sigs/*.parquet') cs
               ON cs.doc_id = c.corpus_id
             WHERE length(list_filter(range(1, 65),
                   i -> ns.signature[i] = cs.signature[i])) / 64.0 >= 0.7
@@ -7997,8 +7839,8 @@ def oracle_sql() -> dict[str, str]:
         "simhash_candidates": f"""
             SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                    CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-            FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/simhash_sigs/*.parquet') a
-            JOIN read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/simhash_sigs/*.parquet') b
+            FROM read_parquet('{_ORACLE_DIR}/simhash_sigs/*.parquet') a
+            JOIN read_parquet('{_ORACLE_DIR}/simhash_sigs/*.parquet') b
               ON a.doc_id < b.doc_id
             WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
         """,
@@ -8010,8 +7852,8 @@ def oracle_sql() -> dict[str, str]:
         "incremental_simhash_near_dups": f"""
             SELECT n.doc_id AS new_id, c.doc_id AS corpus_id,
                    CAST(bit_count(xor(n.simhash, c.simhash)) AS INTEGER) AS hamming
-            FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/simhash_index/new_sigs/*.parquet') n
-            JOIN read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/simhash_index/sigs/*.parquet') c
+            FROM read_parquet('{_ORACLE_DIR}/simhash_index/new_sigs/*.parquet') n
+            JOIN read_parquet('{_ORACLE_DIR}/simhash_index/sigs/*.parquet') c
               ON bit_count(xor(n.simhash, c.simhash)) <= 3
         """,
         # ANN oracles: DuckDB reads the SAME materialized bucket/cell
@@ -8078,7 +7920,7 @@ def oracle_sql() -> dict[str, str]:
         "lsh_ann_topk": f"""
             WITH b AS (
                 SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, lsh_bucket
-                FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/lsh_buckets/*.parquet')
+                FROM read_parquet('{_ORACLE_DIR}/lsh_buckets/*.parquet')
             ), q AS (
                 SELECT emb AS qv, lsh_bucket AS qb FROM b WHERE vec_id = 0
             )
@@ -8097,12 +7939,12 @@ def oracle_sql() -> dict[str, str]:
         "ivf_ann_topk": f"""
             WITH c AS (
                 SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, ivf_cell
-                FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/ivf_cells/*.parquet')
+                FROM read_parquet('{_ORACLE_DIR}/ivf_cells/*.parquet')
             ), q AS (
                 SELECT emb AS qv FROM c WHERE vec_id = 0
             ), probe AS (
                 SELECT cell
-                FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/ivf_centroids/*.parquet')
+                FROM read_parquet('{_ORACLE_DIR}/ivf_centroids/*.parquet')
                 ORDER BY list_cosine_similarity(centroid, (SELECT qv FROM q)) DESC, cell
                 LIMIT {_IVF_PROBE_CELLS}
             )
@@ -8122,7 +7964,7 @@ def oracle_sql() -> dict[str, str]:
                            PARTITION BY fingerprint
                            ORDER BY query_time DESC, entry_id
                        ) AS rnk
-                FROM read_parquet('{_ORACLE_ENTRIES_BASE}/sf0.01/entries/*.parquet')
+                FROM read_parquet('{_ORACLE_DIR}/entries/*.parquet')
                 WHERE entry_kind = 'SqlStatement'
             ) WHERE rnk <= 3
         """,

@@ -13,7 +13,6 @@ restartability guarantee (same 310 entries at any read-buffer size,
 from __future__ import annotations
 
 import json
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -42,40 +41,25 @@ def _manifest_path(cat: Catalog, stage: str) -> str:
     return f"{cat.warehouse}/_manifests/{stage}.json"
 
 
-def load_manifest(
-    cat: Catalog, stage: str, spark: SparkSession | None = None
-) -> dict | None:
-    """Manifest IO goes through the Hadoop FS util when a session is
-    given, so an object-store warehouse resumes correctly; the local
-    fallback keeps Spark-free callers (and tests) working."""
-    p = _manifest_path(cat, stage)
-    if spark is not None:
-        from slowspark.util import fs_exists, fs_read_text
+def load_manifest(cat: Catalog, stage: str, spark: SparkSession) -> dict | None:
+    """Manifest IO goes through the Hadoop FS util, so an object-store
+    warehouse resumes correctly."""
+    from slowspark.util import fs_exists, fs_read_text
 
-        if not fs_exists(spark, p):
-            return None
-        return json.loads(fs_read_text(spark, p))
-    if not os.path.exists(p):
+    p = _manifest_path(cat, stage)
+    if not fs_exists(spark, p):
         return None
-    with open(p) as f:
-        return json.load(f)
+    return json.loads(fs_read_text(spark, p))
 
 
 def save_manifest(
-    cat: Catalog, stage: str, manifest: dict, spark: SparkSession | None = None
+    cat: Catalog, stage: str, manifest: dict, spark: SparkSession
 ) -> None:
-    p = _manifest_path(cat, stage)
-    body = json.dumps(manifest, sort_keys=True)
-    if spark is not None:
-        from slowspark.util import fs_write_text_atomic
+    from slowspark.util import fs_write_text_atomic
 
-        fs_write_text_atomic(spark, p, body)
-        return
-    os.makedirs(os.path.dirname(p), exist_ok=True)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(body)
-    os.replace(tmp, p)  # atomic: a torn manifest never looks valid
+    fs_write_text_atomic(
+        spark, _manifest_path(cat, stage), json.dumps(manifest, sort_keys=True)
+    )
 
 
 def run_stage(

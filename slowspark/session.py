@@ -1,8 +1,9 @@
 """SparkSession factory with scale-appropriate defaults.
 
-Local sandbox runs local[32] single-JVM; the same config block is what we'd
-ship to a multi-executor cluster via spark-submit --py-files (the partition
-sizing knobs are per-executor, so they transfer).
+Local runs use local[SPARK_GRAFT_CPUS] (default: all cores) in one JVM; the
+same config block is what we'd ship to a multi-executor cluster via
+spark-submit --py-files (the partition sizing knobs are per-executor, so
+they transfer).
 """
 
 from __future__ import annotations

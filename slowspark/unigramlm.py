@@ -178,16 +178,14 @@ def unigram_train(
         raise ValueError("unigram_train: vocab_size and n_rounds must "
                          f"be >= 1, got {vocab_size}, {n_rounds}")
     from slowspark.bpe import word_frequencies
-    from slowspark.util import materialize
+    from slowspark.util import materialize, spread
 
     if words is None:
-        # repartition before the checkpoint: the word table comes out of
-        # an AQE-coalesced groupBy (~1 partition at test scale), and the
-        # three Viterbi mapInPandas passes below would otherwise run on
-        # that single partition (r9; a production word table spans many
-        # partitions naturally). An already-materialized `words` (the
-        # shared-pass path) is used as-is.
-        words = materialize(word_frequencies(df, text_col).repartition(32))
+        # the word table comes out of an AQE-coalesced groupBy (~1
+        # partition at test scale) and feeds three Viterbi passes; an
+        # already-materialized `words` (the shared-pass path) is used
+        # as-is
+        words = spread(materialize(word_frequencies(df, text_col)))
     pieces = seed_pieces(words, max_piece_len, seed_size)
     # bounded collect: <= seed_size + |alphabet| rows per round
     pairs = [(r["piece"], r["count"]) for r in pieces.collect()]
@@ -234,13 +232,13 @@ def unigram_segment_counts(
     `words` table to share ONE tokenize + distinct pass between
     training and segmentation (r9: each built its own)."""
     from slowspark.bpe import word_frequencies
-    from slowspark.util import materialize
+    from slowspark.util import materialize, spread
 
     logp = {
         r["piece"]: r["logp"] for r in model.select("piece", "logp").collect()
     }
     if words is None:
-        words = materialize(word_frequencies(df, text_col).repartition(32))
+        words = spread(materialize(word_frequencies(df, text_col)))
     return _viterbi_counts(words, logp, max_piece_len).select(
         "piece", F.col("count").alias("n")
     )

@@ -1,7 +1,11 @@
-"""Shared plan-shape utilities: eager materialization and bucket capping.
+"""Shared plan-shape utilities: input spreading, eager materialization and
+bucket capping.
 
-These exist because two patterns recur across the dedup/similarity family:
+These exist because three patterns recur across the dedup/similarity family:
 
+  - a Python/UDF-heavy stage over a scan with fewer splits than cores
+    (a one-file input) must spread its input first, or it runs as one
+    task;
   - self-joins on UDF-produced tables must materialize the UDF output
     first (a lazy cache lets both join sides race to recompute the UDF
     subtree — measured 2-3x signature cost run-to-run);
@@ -16,6 +20,23 @@ import logging
 from pyspark.sql import DataFrame, functions as F
 
 logger = logging.getLogger("slowspark")
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Repartition `df` to the session's defaultParallelism when it has
+    fewer partitions than that; otherwise return it unchanged.
+
+    A CPU-heavy stage (a Python UDF, a per-row array projection) runs one
+    task per input partition, so on a one-file input it would serialize
+    on a single core. A large scan already has at least as many splits as
+    cores, and a fixed count would cap it, so it is left alone. Call it
+    on a scan or a materialized table: counting the partitions of an
+    un-run adaptive aggregate runs its map stage, whereas a file scan or
+    a checkpoint reports them from the plan without a job."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
 
 
 def materialize(df: DataFrame) -> DataFrame:

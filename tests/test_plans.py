@@ -501,3 +501,56 @@ def test_coverage_index_names_every_query():
     documented = set(re.findall(r"`([A-Za-z0-9_.]+)`", text))
     missing = sorted(set(contract.queries()) - documented)
     assert not missing, f"queries absent from COVERAGE.md: {missing}"
+
+
+def test_spread_widens_only_narrow_inputs_without_a_job(spark, tmp_path):
+    """util.spread: a one-file parquet comes back with defaultParallelism
+    partitions, and an input already that wide comes back unchanged. The
+    partition count must come from the plan: neither call may run a Spark
+    job (checked through the status tracker's job group)."""
+    from slowspark.util import spread
+
+    sc = spark.sparkContext
+    target = sc.defaultParallelism
+    path = str(tmp_path / "one_file.parquet")
+    spark.range(200).coalesce(1).write.parquet(path)
+    narrow = spark.read.parquet(path)
+    wide = spark.range(0, 200, 1, numPartitions=target + 1)
+    group = "test_spread_no_job"
+    sc.setJobGroup(group, "util.spread")
+    try:
+        spread_narrow = spread(narrow)
+        spread_wide = spread(wide)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert spread_wide is wide
+    assert spread_narrow.rdd.getNumPartitions() == target
+    assert sorted(r.id for r in spread_narrow.collect()) == list(range(200))
+
+
+def test_no_literal_partition_counts():
+    """A literal `.repartition(32)` caps a 100 TB scan at 32 partitions
+    and over-splits a small one; the one partition rule is util.spread.
+    No `.repartition(<int literal>)` may appear in the library or the
+    driver contract."""
+    import ast
+    import glob
+
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = sorted(glob.glob(os.path.join(here, "slowspark", "*.py")))
+    files.append(os.path.join(here, "__spark_entry__.py"))
+    hits = []
+    for path in files:
+        tree = ast.parse(open(path).read(), path)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "repartition"
+                and node.args
+                and isinstance(node.args[0], ast.Constant)
+                and isinstance(node.args[0].value, int)
+            ):
+                hits.append(f"{os.path.relpath(path, here)}:{node.lineno}")
+    assert not hits, f"literal repartition counts: {hits}"

@@ -13,6 +13,7 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _is_temp_view(spark: SparkSession, name: str) -> bool:
@@ -130,7 +131,12 @@ class Catalog:
         w.saveAsTable(name)
         return name
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
+    def read(
+        self, spark: SparkSession, name: str, schema: StructType | None = None
+    ) -> DataFrame:
+        """`schema`, the table's schema as written (partition columns
+        last), spares a path read its schema-inference job; Iceberg and
+        metastore reads ignore it."""
         if self.fmt == "iceberg":
             return spark.read.format("iceberg").load(name)
         # Metastore-registered tables (write_bucketed's saveAsTable) MUST be
@@ -148,7 +154,10 @@ class Catalog:
             is_table = False
         if is_table:
             return spark.table(name)
-        return spark.read.format(self.fmt).load(self.path(name))
+        reader = spark.read.format(self.fmt)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.load(self.path(name))
 
     def exists(self, spark: SparkSession, name: str) -> bool:
         if self.fmt == "iceberg":

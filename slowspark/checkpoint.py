@@ -1,8 +1,12 @@
 """Checkpoint-resumable stage boundaries (BASELINE.json north_rule).
 
 Each pipeline stage (parsed, enriched, routed, aggregated) materializes as a
-table plus a manifest row {stage, input_signature, row_count, content_hash}.
-Resume = skip stages whose manifest matches the current input signature.
+table plus a manifest {stage, input_signature, row_count, content_hash,
+partition_by, schema}. Resume = skip stages whose manifest matches the
+current input signature. A fresh stage runs one job, the write: the row
+count and content hash are observed on the rows as they are written, and
+the stored schema lets every read of the table skip Parquet schema
+inference, so a resumed stage runs no job at all.
 Content hashes are order-insensitive (sum of per-row xxhash64) and every
 upstream value is deterministic (hash-derived ids, no rand()), so a resumed
 run is bit-identical to a fresh one — the Spark analog of the reference's
@@ -15,26 +19,40 @@ from __future__ import annotations
 import json
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import (
+    Column,
+    DataFrame,
+    Observation,
+    SparkSession,
+    functions as F,
+    types as T,
+)
 
 from slowspark.catalog import Catalog
 
 
-def content_hash(df: DataFrame, cols: list[str] | None = None) -> int:
-    """Order-insensitive content hash: SUM of per-row xxhash64 (mod 2^64)
-    over selected columns. Sum — not xor — because xor cancels duplicate
-    rows pairwise (two identical rows hash like zero rows), which would
-    silently pass a corrupted aggregate output that happened to duplicate a
-    row; sum counts multiplicity. The sum runs in decimal(38,0) so ANSI
-    mode can't overflow, reduced mod 2^64 on the driver. One extra
-    aggregate job; cheap relative to the write."""
-    cols = cols or [c for c in df.columns]
-    s = df.select(
-        F.xxhash64(*[F.col(c).cast("string") for c in cols])
-        .cast("decimal(38,0)")
-        .alias("h")
-    ).agg(F.sum("h").alias("s")).collect()[0]["s"]
+def _hash_sum(cols: list[Column]) -> Column:
+    """SUM of per-row xxhash64 over `cols` cast to string. Sum — not xor —
+    because xor cancels duplicate rows pairwise (two identical rows hash
+    like zero rows), which would silently pass a corrupted aggregate output
+    that happened to duplicate a row; sum counts multiplicity. The sum runs
+    in decimal(38,0) so ANSI mode can't overflow; `_mod64` reduces it."""
+    return F.sum(
+        F.xxhash64(*[c.cast("string") for c in cols]).cast("decimal(38,0)")
+    )
+
+
+def _mod64(s) -> int:
     return int(s or 0) % (1 << 64)
+
+
+def content_hash(df: DataFrame, cols: list[str] | None = None) -> int:
+    """Order-insensitive content hash (`_hash_sum` mod 2^64) over selected
+    columns, all of them by default. Runs one aggregate job; run_stage
+    gets the same value from its write instead."""
+    cols = cols or df.columns
+    s = df.agg(_hash_sum([F.col(c) for c in cols]).alias("s")).first()["s"]
+    return _mod64(s)
 
 
 def _manifest_path(cat: Catalog, stage: str) -> str:
@@ -72,23 +90,52 @@ def run_stage(
     hash_cols: list[str] | None = None,
 ) -> DataFrame:
     """Materialize `build()` as table `stage` unless a manifest with the
-    same input signature already covers it (resume path)."""
+    same input signature already covers it (resume path). A manifest
+    without a schema (written before manifests carried one) still resumes,
+    through an inferred read."""
     m = load_manifest(cat, stage, spark)
     if (
         m is not None
         and m.get("input_signature") == input_signature
         and cat.exists(spark, stage)
     ):
-        return cat.read(spark, stage)
+        schema = m.get("schema")
+        return cat.read(
+            spark, stage, schema=T.StructType.fromJson(schema) if schema else None
+        )
     df = build()
-    cat.write(df, stage, partition_by=partition_by)
-    out = cat.read(spark, stage)
-    manifest = {
+    partition_by = partition_by or []
+    # in the column order a read of the written table has: partition
+    # columns last
+    schema = T.StructType(
+        [f for f in df.schema.fields if f.name not in partition_by]
+        + [df.schema[c] for c in partition_by]
+    )
+    # hash the values a read of the table returns: a Hive partition
+    # directory stores "" as null
+    read_back = [
+        F.nullif(F.col(c), F.lit(""))
+        if c in partition_by and isinstance(schema[c].dataType, T.StringType)
+        else F.col(c)
+        for c in hash_cols or schema.names
+    ]
+    stats = Observation()
+    cat.write(
+        df.observe(
+            stats,
+            F.count(F.lit(1)).alias("row_count"),
+            _hash_sum(read_back).alias("hash_sum"),
+        ),
+        stage,
+        partition_by=partition_by,
+    )
+    got = stats.get
+    save_manifest(cat, stage, {
         "stage": stage,
         "input_signature": input_signature,
-        "row_count": out.count(),
-        "content_hash": content_hash(out, hash_cols),
-        "partition_by": partition_by or [],
-    }
-    save_manifest(cat, stage, manifest, spark)
-    return out
+        "row_count": got["row_count"],
+        "content_hash": _mod64(got["hash_sum"]),
+        "partition_by": partition_by,
+        "schema": schema.jsonValue(),
+    }, spark)
+    return cat.read(spark, stage, schema=schema)

@@ -221,6 +221,15 @@ def gen_pages(spark: SparkSession, n_pages: int, partitions: int | None = None) 
     )
 
 
+def _local_dim(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
+    """A dim table that plans as a LocalRelation: built from pandas on the
+    Arrow path (the session enables it), so broadcasting it runs no Python
+    worker. createDataFrame(list) would plan a Python-RDD scan instead."""
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=schema.names), schema=schema
+    )
+
+
 def host_dc_dim(spark: SparkSession) -> DataFrame:
     from slowspark.schema import HOST_DC_SCHEMA
 
@@ -231,10 +240,10 @@ def host_dc_dim(spark: SparkSession) -> DataFrame:
     seen: dict[str, str] = {}
     for h, dc in rows:
         seen.setdefault(h, dc)
-    return spark.createDataFrame(list(seen.items()), schema=HOST_DC_SCHEMA)
+    return _local_dim(spark, list(seen.items()), HOST_DC_SCHEMA)
 
 
 def lang_locale_dim(spark: SparkSession) -> DataFrame:
     from slowspark.schema import LANG_LOCALE_SCHEMA
 
-    return spark.createDataFrame(list(LANG_LOCALE.items()), schema=LANG_LOCALE_SCHEMA)
+    return _local_dim(spark, list(LANG_LOCALE.items()), LANG_LOCALE_SCHEMA)

@@ -141,8 +141,13 @@ def test_byte_identity_vs_pure_python_oracle(pages, entries):
 def test_enrich_plan_is_broadcast(spark, entries):
     enriched = enrich(entries, host_dc_dim(spark), lang_locale_dim(spark))
     plan = enriched._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") >= 2
+    assert plan.count("BroadcastHashJoin") == 2
     assert "SortMergeJoin" not in plan
+    # the dims are local relations: broadcasting them starts no Python
+    # worker (a Python-RDD dim plans as LogicalRDD / Scan ExistingRDD)
+    optimized = enriched._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in optimized
+    assert "Scan ExistingRDD" not in plan
     # left joins never drop rows
     assert enriched.count() == entries.count()
     # known lookups resolve
@@ -300,6 +305,58 @@ def test_checkpoint_resume(spark, tmp_path, pages):
     t3 = run_pipeline(spark, pages, wh, "sig-b")
     census3 = {r["entry_kind"]: r["n"] for r in t3["kind_census"].collect()}
     assert census3 == census1
+
+
+def test_manifests_match_their_tables(spark, tmp_path, pages):
+    """Each manifest describes its table: the row count and content hash
+    run_stage observes on the write equal those of the table read back
+    (with schema inference, so the stored schema is checked too), for the
+    sql_type-partitioned sink and for the parse_errors sink that two
+    malformed pages fill. A resumed run reads every table with the fresh
+    run's schema; a stage of zero rows hashes to 0 and resumes."""
+    from slowspark.checkpoint import content_hash, load_manifest, run_stage
+    from slowspark.job import run_pipeline
+    from slowspark.schema import PAGES_SCHEMA
+
+    bad = []
+    for doc_id in (N_PAGES, N_PAGES + 1):
+        row = render_page(doc_id)
+        i = row["text"].index("# Time: ")
+        row["text"] = row["text"][:i] + "not a slow-log line\n" + row["text"][i:]
+        bad.append(tuple(row[f.name] for f in PAGES_SCHEMA.fields))
+    with_bad = pages.unionByName(spark.createDataFrame(bad, PAGES_SCHEMA))
+    hash_cols = {"parsed": ["entry_id", "entry_kind", "fingerprint", "statement_raw"]}
+
+    wh = str(tmp_path / "wh")
+    cat = Catalog(wh)
+    fresh = run_pipeline(spark, with_bad, wh, "sig-m")
+    assert len(fresh) == 11
+    for stage, df in fresh.items():
+        m = load_manifest(cat, stage, spark)
+        back = cat.read(spark, stage)
+        assert back.schema == df.schema, stage
+        assert m["row_count"] == back.count(), stage
+        assert m["content_hash"] == content_hash(back, hash_cols.get(stage)), stage
+    assert load_manifest(cat, "parse_errors", spark)["row_count"] == 2
+    assert load_manifest(cat, "sql_statements", spark)["partition_by"] == ["sql_type"]
+
+    resumed = run_pipeline(spark, with_bad, wh, "sig-m")
+    for stage, df in resumed.items():
+        assert df.schema == fresh[stage].schema, stage
+        m = load_manifest(cat, stage, spark)
+        assert content_hash(df, hash_cols.get(stage)) == m["content_hash"], stage
+
+    empty = run_stage(
+        spark, cat, "empty", "sig-m",
+        lambda: fresh["parse_errors"].filter(F.lit(False)),
+    )
+    m = load_manifest(cat, "empty", spark)
+    assert (m["row_count"], m["content_hash"]) == (0, 0)
+    again = run_stage(
+        spark, cat, "empty", "sig-m", lambda: pytest.fail("empty stage rebuilt")
+    )
+    assert again.schema == empty.schema
+    assert again.count() == 0
 
 
 @needs_fixtures

@@ -529,6 +529,100 @@ def test_spread_widens_only_narrow_inputs_without_a_job(spark, tmp_path):
     assert sorted(r.id for r in spread_narrow.collect()) == list(range(200))
 
 
+def _job_ids(spark, group, fn):
+    """(fn(), ids of the Spark jobs fn ran), through the status tracker's
+    job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _stage_source(spark, tmp_path):
+    """60 rows; k is "" on a third of them (a Hive partition directory
+    reads "" back as null) and a non-numeric string on the rest."""
+    path = str(tmp_path / "stage_src")
+    spark.range(60).select(
+        "id",
+        F.when(F.col("id") % 3 == 0, F.lit(""))
+        .otherwise(F.concat(F.lit("k"), (F.col("id") % 3).cast("string")))
+        .alias("k"),
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_checkpoint_stage_jobs(spark, tmp_path):
+    """A fresh run_stage over a parquet scan with no shuffle runs one job,
+    the write: the manifest's row count and content hash come from the
+    write, and the read-back uses the manifest's schema instead of a
+    schema-inference job. A resumed run_stage runs no job, and neither does
+    a whole resumed run_pipeline."""
+    from slowspark.catalog import Catalog
+    from slowspark.checkpoint import run_stage
+    from slowspark.gen import gen_pages
+    from slowspark.job import run_pipeline
+
+    src = _stage_source(spark, tmp_path)
+    cat = Catalog(str(tmp_path / "wh"))
+
+    def stage():
+        return run_stage(
+            spark, cat, "t", "sig", lambda: src.filter(F.col("id") % 2 == 0)
+        )
+
+    fresh, jobs = _job_ids(spark, "checkpoint_fresh", stage)
+    assert len(jobs) == 1
+    resumed, jobs = _job_ids(spark, "checkpoint_resumed", stage)
+    assert jobs == []
+    assert sorted(resumed.collect()) == sorted(fresh.collect())
+
+    pages = gen_pages(spark, 40, partitions=2)
+    wh = str(tmp_path / "pipeline")
+    run_pipeline(spark, pages, wh, "sig")
+    _, jobs = _job_ids(
+        spark, "pipeline_resumed", lambda: run_pipeline(spark, pages, wh, "sig")
+    )
+    assert jobs == []
+
+
+def test_checkpoint_resumes_manifest_without_schema(spark, tmp_path):
+    """A manifest written before manifests carried the schema still
+    resumes, through an inferred read: no rebuild (the table's files keep
+    their mtime) and the same rows. The partitioned table's manifest hash
+    is that of the table as read back, "" partition values read as null."""
+    from slowspark.catalog import Catalog
+    from slowspark.checkpoint import (
+        content_hash,
+        load_manifest,
+        run_stage,
+        save_manifest,
+    )
+
+    src = _stage_source(spark, tmp_path)
+    cat = Catalog(str(tmp_path / "wh"))
+    fresh = run_stage(spark, cat, "t", "sig", lambda: src, partition_by=["k"])
+    m = load_manifest(cat, "t", spark)
+    assert fresh.filter(F.col("k").isNull()).count() == 20
+    assert m["content_hash"] == content_hash(fresh)
+    del m["schema"]
+    save_manifest(cat, "t", m, spark)
+    marker = os.path.join(cat.path("t"), "_SUCCESS")
+    mtime = os.stat(marker).st_mtime_ns
+
+    resumed = run_stage(
+        spark, cat, "t", "sig", lambda: pytest.fail("stage rebuilt"),
+        partition_by=["k"],
+    )
+    assert os.stat(marker).st_mtime_ns == mtime
+    assert resumed.columns == fresh.columns == ["id", "k"]
+    assert sorted(resumed.collect(), key=lambda r: r.id) == sorted(
+        fresh.collect(), key=lambda r: r.id
+    )
+
+
 def test_no_literal_partition_counts():
     """A literal `.repartition(32)` caps a 100 TB scan at 32 partitions
     and over-splits a small one; the one partition rule is util.spread.

@@ -536,13 +536,14 @@ def _url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     (suffix explode + broadcast semi-join), then roll surviving traffic
     up per host. The oracle applies the same label-boundary suffix rule
     with EXISTS (host = d OR host LIKE '%.' || d)."""
+    from slowspark.util import local_frame
     from slowspark.weburl import host_expr, url_blocklist_filter
 
     e = spark.read.parquet(_entries_parquet(spark, sf_dir)).select(
         "entry_id", "url"
     )
-    bl = spark.createDataFrame(
-        [(d,) for d in _BLOCKLIST_DOMAINS], "domain string"
+    bl = local_frame(
+        spark, [(d,) for d in _BLOCKLIST_DOMAINS], "domain string"
     )
     kept = url_blocklist_filter(e, bl, url_col="url", id_col="entry_id")
     return kept.groupBy(host_expr("url").alias("host")).agg(
@@ -2511,7 +2512,7 @@ def _hll_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bg"),
         )
 
-    from slowspark.util import materialize
+    from slowspark.util import local_frame, materialize
 
     even = bigrams_of(docs.filter(F.col("doc_id") % 2 == 0))
     # materialized: the append AND its replay both consume the odd-doc
@@ -2525,7 +2526,7 @@ def _hll_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     first = hll_index_estimate(spark, idx, _HLL_P, group_cols=("lang",)).select(
         "lang", F.round("hll_est", 4).alias("hll_est")
     )
-    first_rows = spark.createDataFrame(first.collect(), first.schema)
+    first_rows = local_frame(spark, first.collect(), first.schema)
     append_to_hll_index(odd, idx, "bg", _HLL_P, group_cols=("lang",))  # replay
     replay = hll_index_estimate(spark, idx, _HLL_P, group_cols=("lang",)).select(
         "lang", F.round("hll_est", 4).alias("hll_est_after_replay")
@@ -2596,6 +2597,7 @@ def _qualityclf_parquet(spark: SparkSession, sf_dir: str) -> None:
     from pyspark.sql import functions as F
 
     from slowspark.qualityclf import hashed_text_features, train_logreg
+    from slowspark.util import local_frame
 
     def build(cpath):
         d = _read(spark, sf_dir, "documents").withColumn(
@@ -2617,8 +2619,8 @@ def _qualityclf_parquet(spark: SparkSession, sf_dir: str) -> None:
             train_feats, labels, n_buckets=_QCLF_BUCKETS, epochs=25, lr=6.0
         )
         coeffs.unionByName(
-            spark.createDataFrame(
-                [(-1, float(intercept))], "bucket int, weight double"
+            local_frame(
+                spark, [(-1, float(intercept))], "bucket int, weight double"
             )
         ).coalesce(1).write.mode("overwrite").parquet(cpath)
         feats.unpersist()
@@ -2886,12 +2888,13 @@ def _ivf_index_parquet(spark: SparkSession, sf_dir: str) -> str:
     so an overwrite is always content-identical. Returns the cells path;
     the centroids sit beside it at ivf_centroids."""
     from slowspark.similarity import ivf_assign, ivf_train
-    from slowspark.util import spread
+    from slowspark.util import local_frame, spread
 
     def build(_):
         emb = spread(_read(spark, sf_dir, "embeddings"))
         centroids = ivf_train(emb, n_centroids=_IVF_N_CENTROIDS)
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(i, [float(x) for x in row]) for i, row in enumerate(centroids)],
             "cell int, centroid array<double>",
         ).coalesce(1).write.mode("overwrite").parquet(
@@ -2915,7 +2918,7 @@ def _pq_index_parquet(spark: SparkSession, sf_dir: str) -> str:
     parquet — encode correctness rides inside the hash check via the
     codes the prefilter ranks."""
     from slowspark.similarity import pq_encode, pq_train
-    from slowspark.util import spread
+    from slowspark.util import local_frame, spread
 
     def build(path):
         emb = spread(_read(spark, sf_dir, "embeddings"))
@@ -2926,8 +2929,8 @@ def _pq_index_parquet(spark: SparkSession, sf_dir: str) -> str:
             for j in range(books.shape[0])
             for c in range(books.shape[1])
         ]
-        spark.createDataFrame(
-            rows, "j int, c int, centroid array<double>"
+        local_frame(
+            spark, rows, "j int, c int, centroid array<double>"
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
 
     return _artifact(sf_dir, "pq_index", build)
@@ -3727,14 +3730,9 @@ def _bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL stages over the identical sentinel-string representation, so a
     divergence in ANY round's counts, tie-break, or replace semantics
     breaks the hash."""
-    merges = _bpe_learned(spark, sf_dir)
-    return spark.createDataFrame(
-        [
-            (m["merge_ix"], m["left"], m["right"], m["merged"], m["pair_count"])
-            for m in merges
-        ],
-        "merge_ix int, lhs string, rhs string, merged string, pair_count long",
-    )
+    from slowspark.bpe import merge_table
+
+    return merge_table(spark, _bpe_learned(spark, sf_dir))
 
 
 def _bpe_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3865,14 +3863,9 @@ def _bpe_byte_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     chr(256+b) on controls — the full non-ASCII map is pinned by the
     pure-Python differential in tests/test_bpe.py instead), and runs
     the same unrolled merge rounds as the word-level oracle."""
-    merges = _bpe_learned(spark, sf_dir, byte_level=True)
-    return spark.createDataFrame(
-        [
-            (m["merge_ix"], m["left"], m["right"], m["merged"], m["pair_count"])
-            for m in merges
-        ],
-        "merge_ix int, lhs string, rhs string, merged string, pair_count long",
-    )
+    from slowspark.bpe import merge_table
+
+    return merge_table(spark, _bpe_learned(spark, sf_dir, byte_level=True))
 
 
 def _bpe_byte_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

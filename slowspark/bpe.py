@@ -410,27 +410,36 @@ def bpe_segment(
     return (_count_tokens if counts_only else _reassemble)(toks, id_col)
 
 
-_MERGES_SCHEMA = (
-    "merge_ix int, left string, right string, merged string,"
-    " pair_count long"
-)
+def merge_table(spark, merges: list[dict]) -> DataFrame:
+    """A learned merge list as the typed frame (merge_ix int, lhs string,
+    rhs string, merged string, pair_count long) — the curate CLI's
+    bpe_vocab stage and the driver contract's merge-table queries. A
+    util.local_frame of an n_merges-bounded list: no job until consumed,
+    and consuming it starts no Python worker. A missing pair_count is
+    0."""
+    from slowspark.util import local_frame
+
+    return local_frame(
+        spark,
+        [
+            (m["merge_ix"], m["left"], m["right"], m["merged"],
+             m.get("pair_count", 0))
+            for m in merges
+        ],
+        "merge_ix int, lhs string, rhs string, merged string,"
+        " pair_count long",
+    )
 
 
 def save_merges(spark, merges: list[dict], path: str) -> None:
     """Persist a learned merge table as parquet — the tokenizer artifact
-    a training pipeline ships alongside the packed corpus (same layout
-    the curate CLI's bpe_vocab stage writes, with the trainer's own
-    column names). One driver-side createDataFrame of an
-    n_merges-bounded list; the write is the only job."""
+    a training pipeline ships alongside the packed corpus: merge_table's
+    rows under the trainer's own column names (left, right), which
+    load_merges reads. The write is the only job."""
     if not merges:
         raise ValueError("save_merges: empty merge table")
-    spark.createDataFrame(
-        [
-            (m["merge_ix"], m["left"], m["right"], m["merged"],
-             int(m.get("pair_count", 0)))
-            for m in merges
-        ],
-        _MERGES_SCHEMA,
+    merge_table(spark, merges).withColumnsRenamed(
+        {"lhs": "left", "rhs": "right"}
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
 

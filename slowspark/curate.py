@@ -1052,20 +1052,12 @@ def run_curation(
         )
         pack_tokens_col = "unigram_n_tokens"
     if bpe_merges_n is not None:
-        from slowspark.bpe import bpe_learn, bpe_segment
+        from slowspark.bpe import bpe_learn, bpe_segment, merge_table
 
         def _vocab() -> DataFrame:
-            merges = bpe_learn(
-                sampled, bpe_merges_n, byte_level=bpe_byte_level
-            )
-            return spark.createDataFrame(
-                [
-                    (m["merge_ix"], m["left"], m["right"], m["merged"],
-                     m["pair_count"])
-                    for m in merges
-                ],
-                "merge_ix int, lhs string, rhs string, merged string,"
-                " pair_count long",
+            return merge_table(
+                spark,
+                bpe_learn(sampled, bpe_merges_n, byte_level=bpe_byte_level),
             )
 
         vocab = run_stage(spark, cat, "bpe_vocab", sig, _vocab)

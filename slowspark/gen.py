@@ -221,17 +221,12 @@ def gen_pages(spark: SparkSession, n_pages: int, partitions: int | None = None) 
     )
 
 
-def _local_dim(spark: SparkSession, rows: list[tuple], schema) -> DataFrame:
-    """A dim table that plans as a LocalRelation: built from pandas on the
-    Arrow path (the session enables it), so broadcasting it runs no Python
-    worker. createDataFrame(list) would plan a Python-RDD scan instead."""
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=schema.names), schema=schema
-    )
-
-
 def host_dc_dim(spark: SparkSession) -> DataFrame:
+    """The host -> data-centre enrich dim. Like lang_locale_dim it is a
+    util.local_frame (a LocalRelation), so broadcasting it runs no Python
+    worker."""
     from slowspark.schema import HOST_DC_SCHEMA
+    from slowspark.util import local_frame
 
     rows = [(h, f"dc-{_h64('dc', h) % 4}") for h in _HOSTS if h] + [
         ("localhost", "dc-local")
@@ -240,10 +235,12 @@ def host_dc_dim(spark: SparkSession) -> DataFrame:
     seen: dict[str, str] = {}
     for h, dc in rows:
         seen.setdefault(h, dc)
-    return _local_dim(spark, list(seen.items()), HOST_DC_SCHEMA)
+    return local_frame(spark, seen.items(), HOST_DC_SCHEMA)
 
 
 def lang_locale_dim(spark: SparkSession) -> DataFrame:
+    """The lang -> locale enrich dim, a util.local_frame."""
     from slowspark.schema import LANG_LOCALE_SCHEMA
+    from slowspark.util import local_frame
 
-    return _local_dim(spark, list(LANG_LOCALE.items()), LANG_LOCALE_SCHEMA)
+    return local_frame(spark, LANG_LOCALE.items(), LANG_LOCALE_SCHEMA)

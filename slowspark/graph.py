@@ -40,7 +40,9 @@ One contract, two backends:
   _DRIVER_FASTPATH_EDGES) the rounds run as plain-Python IEEE-double
   loops on the driver over the collected rows; otherwise the distributed
   loop runs, and the probe has read ~cap+1 rows, never the whole table.
-  Differential tests pin both paths equal.
+  The fast-path result is a util.local_frame: it plans as a
+  LocalRelation, so consuming it starts no Python worker. Differential
+  tests pin both paths equal.
 - Nulls. A null node never matches a key: it is never dangling, never a
   seed, never reached by BFS and never receives a link contribution, but
   it keeps its row in the vertex-listing outputs (pagerank, spam_mass,
@@ -63,6 +65,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from slowspark.util import local_frame
+
 # The size gate (see the module docstring): a graph that fits runs its
 # rounds on the driver instead of paying ~2 scheduled jobs per round on
 # a table that fits in one task. The probe never counts the big table
@@ -77,7 +81,9 @@ _DRIVER_FASTPATH_EDGES = 200_000
 def _probe_small(df: DataFrame, cap: int):
     """limit(cap+1).collect() probe: the full row list when df has at
     most cap rows, else None (at which point ~cap+1 rows were scanned,
-    not the whole table)."""
+    not the whole table). Not toArrow(): an Arrow collect of a limit runs
+    the limit on every partition and shuffles the results, so on a big
+    table it would read up to cap+1 rows per split."""
     if cap <= 0:
         return None
     rows = df.limit(cap + 1).collect()
@@ -129,7 +135,8 @@ def _frame(e0: DataFrame, a: str, b: str, cols, rows) -> DataFrame:
     """The typed result frame of a driver fast path (or of an empty
     graph): `node` of the dtype the distributed path's vertex union
     carries (schema-only — no job), then `cols` as (name, dtype) pairs,
-    where a None dtype means the node dtype."""
+    where a None dtype means the node dtype. It is a util.local_frame,
+    so consuming it starts no Python worker."""
     node_t = (
         e0.select(F.col(a).alias("node"))
         .union(e0.select(F.col(b).alias("node")))
@@ -140,7 +147,7 @@ def _frame(e0: DataFrame, a: str, b: str, cols, rows) -> DataFrame:
         [StructField("node", node_t, True)]
         + [StructField(c, node_t if t is None else t, True) for c, t in cols]
     )
-    return e0.sparkSession.createDataFrame(rows, schema)
+    return local_frame(e0.sparkSession, rows, schema)
 
 
 def _checked_weight(who: str, weight_col: str):

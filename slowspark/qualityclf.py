@@ -40,6 +40,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from slowspark.textops import ws_token_array
+from slowspark.util import local_frame
 
 
 def hashed_text_features(
@@ -149,8 +150,9 @@ def train_logreg(
     history: list[float] = []
     for _ in range(epochs):
         nz = np.flatnonzero(w)
-        wdf = spark.createDataFrame(
-            [(int(i), float(w[i])) for i in nz] or [(0, 0.0)],
+        wdf = local_frame(
+            spark,
+            [(int(i), float(w[i])) for i in nz],
             "bucket int, weight double",
         )
         margins = (
@@ -198,8 +200,8 @@ def train_logreg(
     feats.unpersist()
     doc_y.unpersist()
     nz = np.flatnonzero(w)
-    coeffs = spark.createDataFrame(
-        [(int(i), float(w[i])) for i in nz], "bucket int, weight double"
+    coeffs = local_frame(
+        spark, [(int(i), float(w[i])) for i in nz], "bucket int, weight double"
     )
     return coeffs, b, history
 
@@ -352,8 +354,8 @@ def train_langid(
             epochs=epochs, lr=lr, reg=reg,
         )
         part = coeffs.unionByName(
-            spark.createDataFrame(
-                [(-1, float(intercept))], "bucket int, weight double"
+            local_frame(
+                spark, [(-1, float(intercept))], "bucket int, weight double"
             )
         ).select(F.lit(lang).alias("lang"), "bucket", "weight")
         out = part if out is None else out.unionByName(part)
@@ -493,4 +495,4 @@ def langid_fixture(spark, n_per_lang: int = 60):
                 pool[(i * s + lx + k) % m] for k, s in ((0, 1), (1, 3), (2, 5))
             )
             rows.append((lx * 10**6 + i, text, lang))
-    return spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    return local_frame(spark, rows, "doc_id long, text string, lang string")

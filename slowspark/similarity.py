@@ -947,7 +947,7 @@ def ivfpq_build_index(
     deterministic, so the composed index is identical either way)."""
     import json
 
-    from slowspark.util import fs_write_text_atomic, materialize
+    from slowspark.util import fs_write_text_atomic, local_frame, materialize
 
     if centroids is None:
         centroids = ivf_train(
@@ -998,11 +998,13 @@ def ivfpq_build_index(
         .parquet(f"{index_path}/cells")
     )
     spark = corpus.sparkSession
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, [float(x) for x in row]) for i, row in enumerate(centroids)],
         "cell int, centroid array<double>",
     ).write.mode("overwrite").parquet(f"{index_path}/centroids")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [
             (j, c, [float(x) for x in books[j][c]])
             for j in range(books.shape[0])

@@ -364,14 +364,14 @@ def read_warc_selective(
 
     import pandas as pd
 
+    from slowspark.util import local_frame
+
     idx = (
         spark.read.parquet(index) if isinstance(index, str) else index
     ).select("url", "warc_path", "record_ix", "offset", "length")
     if urls is not None:
         if not isinstance(urls, DataFrame):
-            urls = spark.createDataFrame(
-                [(u,) for u in urls], "url string"
-            )
+            urls = local_frame(spark, [(u,) for u in urls], "url string")
         idx = idx.join(
             F.broadcast(urls.select("url").distinct()), "url", "left_semi"
         )

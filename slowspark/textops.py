@@ -28,7 +28,11 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from slowspark.util import capped_by_bucket, materialize as _materialize
+from slowspark.util import (
+    capped_by_bucket,
+    local_frame,
+    materialize as _materialize,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -320,7 +324,8 @@ def connected_min_labels(
         from pyspark.sql.types import StructField, StructType
 
         id_type = mapping.schema["m"].dataType
-        comp_df = spark.createDataFrame(
+        comp_df = local_frame(
+            spark,
             rows,
             StructType(
                 [StructField("m", id_type), StructField("label", id_type)]
@@ -1601,7 +1606,7 @@ def badword_filter(
     if not wl:
         raise ValueError("badword_filter: empty word list")
     spark = df.sparkSession
-    wdf = spark.createDataFrame([(w,) for w in wl], "__bw string")
+    wdf = local_frame(spark, [(w,) for w in wl], "__bw string")
     hits = (
         df.select(id_col, F.explode(ws_token_array(text_col)).alias("__t"))
         .join(F.broadcast(wdf), F.col("__t") == F.col("__bw"), "left_semi")
@@ -3104,8 +3109,8 @@ def multi_pattern_counts(
             ]
         ),
     )
-    pat_df = df.sparkSession.createDataFrame(
-        [(i, p) for i, p in enumerate(pats)], "__ix int, pattern string"
+    pat_df = local_frame(
+        df.sparkSession, enumerate(pats), "__ix int, pattern string"
     )
     return scanned.join(F.broadcast(pat_df), "__ix").select(
         F.col("__id").alias(id_col), "pattern", "n_matches"

@@ -178,7 +178,7 @@ def unigram_train(
         raise ValueError("unigram_train: vocab_size and n_rounds must "
                          f"be >= 1, got {vocab_size}, {n_rounds}")
     from slowspark.bpe import word_frequencies
-    from slowspark.util import materialize, spread
+    from slowspark.util import local_frame, materialize, spread
 
     if words is None:
         # the word table comes out of an AQE-coalesced groupBy (~1
@@ -210,7 +210,8 @@ def unigram_train(
     final_counts = dict(keep)
     final_model = _logp_model(sorted(final_counts.items()))
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(p, int(final_counts[p]), float(final_model[p]))
          for p in sorted(final_counts)],
         "piece string, count long, logp double",

@@ -1,7 +1,9 @@
-"""Shared plan-shape utilities: input spreading, eager materialization and
-bucket capping.
+"""Shared plan-shape utilities: driver-built frames, input spreading, eager
+materialization and bucket capping.
 
-These exist because three patterns recur across the dedup/similarity family:
+Every DataFrame built from driver-side rows goes through local_frame, so
+it plans as a LocalRelation. The other helpers exist because three
+patterns recur across the dedup/similarity family:
 
   - a Python/UDF-heavy stage over a scan with fewer splits than cores
     (a one-file input) must spread its input first, or it runs as one
@@ -18,8 +20,37 @@ from __future__ import annotations
 import logging
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 logger = logging.getLogger("slowspark")
+
+
+def local_frame(spark, rows, schema: StructType | str) -> DataFrame:
+    """A DataFrame of driver-side `rows` (tuples or Rows, in schema column
+    order) under `schema` (a StructType or a DDL string), planned as a
+    LocalRelation.
+
+    The rows go to the JVM as one Arrow table with one typed array per
+    column, so no action over the frame starts a Python worker;
+    createDataFrame(list) would plan a Python-RDD scan whose every action
+    forks one to unpickle the rows. The arrays are built from the Python
+    values, not through pandas, so a null in an integer column stays null
+    instead of becoming NaN. Zero rows give an empty typed frame."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=f.type)
+            for i, f in enumerate(arrow)
+        ],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def spread(df: DataFrame) -> DataFrame:

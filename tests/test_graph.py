@@ -609,12 +609,19 @@ def test_driver_fastpath_matches_distributed(spark):
         "node long, rank double",
     )
 
+    def local(fast):
+        # a driver-path result is a local relation: no Python-RDD scan
+        plan = fast._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan
+
     def rows(fast, dist):
+        local(fast)
         assert fast.dtypes == dist.dtypes
         assert {tuple(r) for r in fast.collect()} == {
             tuple(r) for r in dist.collect()}
 
     def close(fast, dist, nfloat):
+        local(fast)
         assert fast.dtypes == dist.dtypes
         f = {r[0]: r[1:] for r in fast.collect()}
         g = {r[0]: r[1:] for r in dist.collect()}

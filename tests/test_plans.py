@@ -648,3 +648,69 @@ def test_no_literal_partition_counts():
             ):
                 hits.append(f"{os.path.relpath(path, here)}:{node.lineno}")
     assert not hits, f"literal repartition counts: {hits}"
+
+
+def test_no_direct_create_dataframe():
+    """A DataFrame built from driver rows with createDataFrame(list) plans
+    as a Python-RDD scan, so every action over it forks a Python worker;
+    the one driver-frame rule is util.local_frame. No `createDataFrame(`
+    call may appear in the library or the driver contract outside it."""
+    import ast
+    import glob
+
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = sorted(glob.glob(os.path.join(here, "slowspark", "*.py")))
+    files.append(os.path.join(here, "__spark_entry__.py"))
+    hits = []
+    for path in files:
+        tree = ast.parse(open(path).read(), path)
+        allowed = set()
+        if os.path.relpath(path, here) == os.path.join("slowspark", "util.py"):
+            allowed = {
+                n
+                for fn in tree.body
+                if isinstance(fn, ast.FunctionDef) and fn.name == "local_frame"
+                for n in ast.walk(fn)
+            }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+                and node not in allowed
+            ):
+                hits.append(f"{os.path.relpath(path, here)}:{node.lineno}")
+    assert not hits, f"createDataFrame outside util.local_frame: {hits}"
+
+
+def test_local_frame_matches_list_frame_as_local_relation(spark):
+    """util.local_frame keeps the rows createDataFrame(list) gives — nulls
+    in long/int/double/string columns stay null (not NaN), arrays and
+    collected Rows pass through, a DDL string schema works, zero rows give
+    an empty typed frame — and plans as a LocalRelation, never a
+    Python-RDD LogicalRDD."""
+    from pyspark.sql import Row
+    from pyspark.sql.types import StructType
+
+    from slowspark.util import local_frame
+
+    ddl = "a long, b int, c double, d string, e array<double>"
+    rows = [
+        (1, 2, 1.5, "x", [1.0, None]),
+        (None, None, None, None, None),
+        (-(2**62), 0, float("nan"), "", []),
+    ]
+    collected = [Row(lang="en", est=2.5), Row(lang=None, est=None)]
+    cases = [
+        (rows, ddl),
+        (rows, StructType.fromDDL(ddl)),
+        ([], ddl),
+        (collected, "lang string, est double"),
+    ]
+    for data, schema in cases:
+        got = local_frame(spark, data, schema)
+        want = spark.createDataFrame(data, schema)
+        assert got.schema == want.schema
+        assert repr(got.collect()) == repr(want.collect())
+        opt = _optimized(got)
+        assert opt.startswith("LocalRelation") and "LogicalRDD" not in opt

@@ -1,5 +1,5 @@
-"""Distributed Bloom-filter membership index — incremental exact dedup
-against a corpus snapshot without joining the corpus.
+"""Distributed Bloom-filter membership index — the pruning half of
+incremental exact dedup against a corpus snapshot.
 
 The 100 TB problem: continuous ingest must answer "is this exact text
 already in the corpus?" per incoming batch. The exact answer is an
@@ -9,10 +9,11 @@ spent proving that brand-new documents are new. A Bloom filter inverts
 the cost: ~1.2 GB of bits per 10^9 corpus docs at 1% false-positive
 rate answers "definitely new" for ~99% of a fresh batch from a
 broadcast table, and only the tiny maybe-present remainder pays the
-exact verify join. False positives are then REMOVED by that verify, so
-the composed operator is exact — the Bloom is a pruning structure, not
-an approximation of the answer (same discipline as the LSH-then-verify
-near-dup path, textops.jaccard_verified_pairs).
+exact verify join (the caller's, e.g. the bloom_incremental_dedup
+query). False positives are then REMOVED by that verify, so the composed
+dedup is exact — the Bloom is a pruning structure, not an approximation
+of the answer (same discipline as the LSH-then-verify near-dup path,
+textops.jaccard_verified_pairs).
 
 Representation: the filter is a DataFrame of NONZERO 64-bit blocks
 (block_id, bits) — built with one groupBy(block_id){bit_or} over the
@@ -28,29 +29,13 @@ Spark-reproducible from a materialized position table by any engine
 SQL both engines share.
 
 No reference analog (/root/reference is a slow-log parser, src/*.rs);
-sizing follows the standard Bloom analysis (Bloom 1970; m/n = -ln p /
-ln^2 2, k = (m/n) ln 2).
+size (n_bits, k) by the standard Bloom analysis (Bloom 1970; m/n = -ln p
+/ ln^2 2, k = (m/n) ln 2).
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, functions as F
-
-
-def bloom_params(n: int, fpp: float = 0.01) -> tuple[int, int]:
-    """(n_bits, k) for an expected `n` members at false-positive rate
-    `fpp` — the textbook optimum, n_bits rounded up to a multiple of 64
-    so the last block is full-width."""
-    if n <= 0:
-        raise ValueError(f"bloom_params: n must be positive, got {n}")
-    if not 0.0 < fpp < 1.0:
-        raise ValueError(f"bloom_params: fpp must be in (0, 1), got {fpp}")
-    m = math.ceil(-n * math.log(fpp) / (math.log(2) ** 2))
-    m = ((m + 63) // 64) * 64
-    k = max(1, round(m / n * math.log(2)))
-    return m, k
 
 
 def bloom_positions(
@@ -125,40 +110,3 @@ def bloom_probe(
     return tested.groupBy("id").agg(
         (F.min(F.col("set").cast("int")) == 1).alias("maybe_present")
     )
-
-
-def incremental_exact_new_docs(
-    new_df: DataFrame,
-    blocks: DataFrame,
-    corpus_hashes: DataFrame,
-    n_bits: int,
-    k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """New-batch docs that are NOT exact duplicates of the corpus
-    snapshot the filter was built over: bloom-negative docs pass with NO
-    corpus join at all (the ~99% fast path); bloom-positive docs —
-    true duplicates plus the filter's false positives — are
-    exact-verified with an anti-join against `corpus_hashes`
-    (text_hash column, the build_bloom input). Exact by construction:
-    a Bloom filter has no false negatives, so every true duplicate is
-    routed to the verify join, and the verify removes the false
-    positives. Returns the new docs' rows plus (text_hash,
-    maybe_present) for auditability.
-
-    Scale shape: one broadcast probe over the batch, then a join whose
-    LEFT side is only the maybe-present sliver; the corpus hash table is
-    scanned once per batch in that join (hash-bucket it on text_hash to
-    make the verify a zero-exchange bucket join at 10^12 rows)."""
-    hashed = new_df.withColumn("text_hash", F.sha2(F.col(text_col), 256))
-    probed = bloom_probe(hashed, blocks, "text_hash", id_col, n_bits, k)
-    withp = hashed.join(
-        probed.withColumnRenamed("id", id_col), id_col
-    )
-    negatives = withp.filter(~F.col("maybe_present"))
-    maybes = withp.filter(F.col("maybe_present"))
-    verified_new = maybes.join(
-        corpus_hashes.select("text_hash"), "text_hash", "left_anti"
-    )
-    return negatives.unionByName(verified_new)

@@ -431,43 +431,6 @@ def merge_table(spark, merges: list[dict]) -> DataFrame:
     )
 
 
-def save_merges(spark, merges: list[dict], path: str) -> None:
-    """Persist a learned merge table as parquet — the tokenizer artifact
-    a training pipeline ships alongside the packed corpus: merge_table's
-    rows under the trainer's own column names (left, right), which
-    load_merges reads. The write is the only job."""
-    if not merges:
-        raise ValueError("save_merges: empty merge table")
-    merge_table(spark, merges).withColumnsRenamed(
-        {"lhs": "left", "rhs": "right"}
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_merges(spark, path: str) -> list[dict]:
-    """Load a save_merges artifact back into the list-of-dicts form
-    bpe_segment / bpe_segment_udf consume, ordered by merge_ix.
-    Validates contiguity (a truncated or hand-edited table would
-    silently re-rank every later merge — the ordering IS the
-    tokenizer)."""
-    rows = spark.read.parquet(path).orderBy("merge_ix").collect()
-    merges = [
-        {
-            "merge_ix": r["merge_ix"],
-            "left": r["left"],
-            "right": r["right"],
-            "merged": r["merged"],
-            "pair_count": r["pair_count"],
-        }
-        for r in rows
-    ]
-    if [m["merge_ix"] for m in merges] != list(range(len(merges))):
-        raise ValueError(
-            f"load_merges: merge_ix not contiguous 0..{len(merges) - 1} "
-            f"at {path} — refusing a reordered/truncated merge table"
-        )
-    return merges
-
-
 def _merge_word(word: str, ranks: dict) -> list[str]:
     """Segment one word by greedy lowest-merge-rank application — the
     classic BPE inference loop (GPT-2 bpe()). Equivalent to replaying

@@ -96,17 +96,17 @@ def hashed_ngram_rows(
     )
 
 
-def bucket_log_ratio(
-    raw_df: DataFrame,
+def _bucket_log_ratio_from_grams(
+    raw_grams: DataFrame,
     target_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 10_000,
-    alpha: float = 1.0,
-    salt: str = "",
+    text_col: str,
+    id_col: str,
+    n_buckets: int,
+    alpha: float,
+    salt: str,
 ) -> DataFrame:
-    """(bucket, log_ratio) for every bucket OBSERVED in the raw corpus:
-    log_ratio = log p_target(bucket) - log p_raw(bucket) under
+    """(bucket, log_ratio) for every bucket OBSERVED in the raw gram
+    table: log_ratio = log p_target(bucket) - log p_raw(bucket) under
     add-``alpha`` smoothed bag-of-hashed-ngrams models,
     p(b) = (count(b) + alpha) / (total + alpha * n_buckets).
 
@@ -117,28 +117,12 @@ def bucket_log_ratio(
     the left join. Both count tables are <= n_buckets rows (groupBy
     map-side combined); the totals are 1-row aggregates attached with a
     broadcast scalar cross-join (the corpus.py unigram_logprob pattern),
-    so nothing here touches the driver."""
-    if alpha <= 0.0:
-        raise ValueError(f"bucket_log_ratio: alpha must be > 0, got {alpha}")
-    return _bucket_log_ratio_from_grams(
-        hashed_ngram_rows(raw_df, text_col, id_col, n_buckets, salt),
-        target_df, text_col, id_col, n_buckets, alpha, salt,
-    )
+    so nothing here touches the driver.
 
-
-def _bucket_log_ratio_from_grams(
-    raw_grams: DataFrame,
-    target_df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n_buckets: int,
-    alpha: float,
-    salt: str,
-) -> DataFrame:
-    """bucket_log_ratio over an already-featurized raw gram table —
-    lets dsir_log_weights share ONE (materialized) gram pass between
-    the raw model fit and the scoring join (r9: the md5-per-gram
-    explode over the whole raw corpus ran twice per selection)."""
+    Taking the featurized raw grams lets dsir_log_weights share ONE
+    (materialized) gram pass between the raw model fit and the scoring
+    join (r9: the md5-per-gram explode over the whole raw corpus ran
+    twice per selection)."""
     raw_counts = raw_grams.groupBy("bucket").agg(
         F.count("*").alias("c_raw")
     )
@@ -180,7 +164,6 @@ def dsir_log_weights(
     n_buckets: int = 10_000,
     alpha: float = 1.0,
     salt: str = "",
-    ratio_df: DataFrame | None = None,
     length_normalize: bool = False,
 ) -> DataFrame:
     """(id, n_grams, log_weight) per raw document: log_weight = the bag's
@@ -199,22 +182,20 @@ def dsir_log_weights(
     mass alpha * n_buckets, or every p_target collapses toward uniform
     and the ratio degenerates to rare-gram-seeking.
 
-    ``ratio_df``: optional pre-materialized bucket_log_ratio output
-    (must match n_buckets/alpha/salt) so repeated selections against the
-    same corpora share one model fit.
-
     Scale shape: gram rows join a BROADCAST <= n_buckets-row ratio table,
     then one map-side-combined groupBy(id) sum — a single shuffle keyed
     on the id."""
-    grams = hashed_ngram_rows(raw_df, text_col, id_col, n_buckets, salt)
-    if ratio_df is None:
-        # ONE featurize pass: the raw model fit and the scoring join
-        # both read the materialized (id, bucket) rows instead of each
-        # re-running the tokenize + md5-per-gram explode
-        grams = _materialize(grams)
-        ratio_df = _bucket_log_ratio_from_grams(
-            grams, target_df, text_col, id_col, n_buckets, alpha, salt
-        )
+    if alpha <= 0.0:
+        raise ValueError(f"dsir_log_weights: alpha must be > 0, got {alpha}")
+    # ONE featurize pass: the raw model fit and the scoring join both
+    # read the materialized (id, bucket) rows instead of each re-running
+    # the tokenize + md5-per-gram explode
+    grams = _materialize(
+        hashed_ngram_rows(raw_df, text_col, id_col, n_buckets, salt)
+    )
+    ratio_df = _bucket_log_ratio_from_grams(
+        grams, target_df, text_col, id_col, n_buckets, alpha, salt
+    )
     sums = (
         grams.join(F.broadcast(ratio_df), "bucket")
         .groupBy(id_col)
@@ -271,7 +252,6 @@ def dsir_topk(
     alpha: float = 1.0,
     seed: str = "0",
     salt: str = "",
-    ratio_df: DataFrame | None = None,
     length_normalize: bool = False,
 ) -> DataFrame:
     """Gumbel top-k importance resampling: the k raw documents with the
@@ -294,7 +274,7 @@ def dsir_topk(
     from slowspark.corpus import _distributed_rank
 
     w = dsir_log_weights(
-        raw_df, target_df, text_col, id_col, n_buckets, alpha, salt, ratio_df,
+        raw_df, target_df, text_col, id_col, n_buckets, alpha, salt,
         length_normalize,
     )
     scored = w.select(

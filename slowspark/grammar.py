@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import re
 from datetime import datetime, timedelta, timezone
-from typing import Any, Callable, Iterator, Optional
+from typing import Any, Callable, Optional
 
 # ---------------------------------------------------------------------------
 # Compiled line regexes (module level == once per worker process)
@@ -381,22 +381,17 @@ _STARTERS = frozenset({
 })
 
 
-def classify_sql_type(tokens: list[tuple[str, str]]) -> Optional[str]:
-    """Map a meaningful-token list to the reference EntrySqlType Display
-    string (src/types.rs:140-177 + 363-405), or None when the statement is
-    not recognized (-> InvalidStatement).
+def _classify_meaningful(toks: list[tuple[str, str]]) -> Optional[str]:
+    """Map an already-_meaningful token list (the resolve_statement hot
+    path computes that list once and shares it) to the reference
+    EntrySqlType Display string (src/types.rs:140-177 + 363-405), or None
+    when the statement is not recognized (-> InvalidStatement).
 
     Replicated quirk: UNLOCK TABLES maps to "LOCK TABLES"
     (Statement::UnlockTables -> EntrySqlType::LockTables, src/types.rs:173).
     ANALYZE/TRUNCATE/CALL parse under sqlparser but fall to the reference's
     catch-all Unknown arm (src/types.rs:175) whose Display is "NULL".
     """
-    return _classify_meaningful(_meaningful(tokens))
-
-
-def _classify_meaningful(toks: list[tuple[str, str]]) -> Optional[str]:
-    """classify_sql_type over an already-_meaningful token list (the
-    resolve_statement hot path computes that list once and shares it)."""
     if not toks:
         return None
     words = [t[1].upper() for t in toks if t[0] == "ident" or t[1] == ";"]
@@ -924,11 +919,3 @@ def parse_entries(
         index += 1
 
     return entries
-
-
-def iter_pages_entries(
-    texts: Iterator[str],
-    context_mapper: Optional[ContextMapper] = default_comment_context,
-) -> Iterator[list[dict[str, Any]]]:
-    for t in texts:
-        yield parse_entries(t, context_mapper)

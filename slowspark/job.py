@@ -28,6 +28,7 @@ from slowspark.metrics import page_lineage, partition_metrics
 from slowspark.parse import parse_pages
 from slowspark.route import SINK_NAMES, route
 from slowspark.session import get_spark
+from slowspark.sources import read_pages
 
 
 def run_pipeline(
@@ -105,7 +106,7 @@ def main(argv: list[str] | None = None) -> int:
             pages = gen_pages(spark, args.n_pages)
             sig = f"gen:{args.n_pages}"
         elif args.pages:
-            pages = spark.read.parquet(args.pages)
+            pages = read_pages(spark, args.pages, Catalog(args.warehouse).fmt)
             sig = f"path:{args.pages}"
         else:
             p.error("one of --pages / --n-pages required")

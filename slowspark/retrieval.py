@@ -31,7 +31,7 @@ convention, so postings line up with term_stats/tfidf oracles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from slowspark.textops import ws_token_array
 from slowspark.util import materialize
@@ -60,9 +60,7 @@ def build_index(
     so a PROBE never pays a full-postings aggregate (r8 VERDICT #2:
     bm25_topk recomputed doclens.distinct() + dfreq from raw postings
     on every probe — two full scans plus a distinct-shuffle of the
-    web-scale postings table to serve one small query batch). At 100 TB
-    the three tables are written once by write_postings and probes read
-    only the stats + the term-bucket-pruned postings files."""
+    web-scale postings table to serve one small query batch)."""
     postings = materialize(build_postings(docs, id_col, text_col))
     term_stats = postings.groupBy("term").agg(F.count("*").alias("df_t"))
     corpus_stats = (
@@ -71,78 +69,6 @@ def build_index(
         .agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
     )
     return postings, term_stats, corpus_stats
-
-
-def write_postings(
-    postings: DataFrame,
-    term_stats: DataFrame,
-    corpus_stats: DataFrame,
-    path: str,
-    n_buckets: int = 1024,
-) -> None:
-    """Persist the index with probe-prunable layout: postings files are
-    hash-partitioned by `term_bucket = pmod(xxhash64(term), n_buckets)`
-    so a probe's scan reads only the buckets its query terms hash into
-    (partition pruning — everything else is never opened); the side
-    tables land next to them. n_buckets bounds file-count overhead:
-    at web scale choose so each bucket is ~0.1-1 GB."""
-    if n_buckets < 1:
-        raise ValueError(f"write_postings: n_buckets must be >= 1, got {n_buckets}")
-    (
-        postings.withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets))
-        )
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(f"{path}/postings")
-    )
-    term_stats.write.mode("overwrite").parquet(f"{path}/term_stats")
-    corpus_stats.write.mode("overwrite").parquet(f"{path}/corpus_stats")
-
-
-def bm25_topk_from_store(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    *,
-    n_buckets: int = 1024,
-    topk: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    max_df: int | None = None,
-    query_id_col: str = "query_id",
-    query_text_col: str = "query_text",
-) -> DataFrame:
-    """Probe a write_postings store: the postings scan is restricted to
-    the partition buckets the query terms hash into (a driver-side
-    collect of the SMALL query batch's distinct term buckets -> an
-    isin() partition filter the scan prunes on), and the corpus/df
-    statistics come from the persisted side tables — no full-postings
-    aggregate anywhere in the probe plan (plan-pinned in
-    tests/test_retrieval.py)."""
-    qterms = (
-        queries.select(ws_token_array(query_text_col).alias("tk"))
-        .select(F.explode("tk").alias("term"))
-        .distinct()
-        .select(F.pmod(F.xxhash64("term"), F.lit(n_buckets)).alias("b"))
-        .distinct()
-    )
-    buckets = [r["b"] for r in qterms.collect()]  # bounded: |query terms|
-    postings = spark.read.parquet(f"{path}/postings").filter(
-        F.col("term_bucket").isin(buckets)
-    )
-    return bm25_topk(
-        postings,
-        queries,
-        topk=topk,
-        k1=k1,
-        b=b,
-        max_df=max_df,
-        term_stats=spark.read.parquet(f"{path}/term_stats"),
-        corpus_stats=spark.read.parquet(f"{path}/corpus_stats"),
-        query_id_col=query_id_col,
-        query_text_col=query_text_col,
-    )
 
 
 def bm25_topk(
@@ -169,11 +95,11 @@ def bm25_topk(
     dragging a billion-row postings list into the aggregation.
 
     `term_stats` ((term, df_t)) and `corpus_stats` (1-row (n_docs,
-    avgdl)) are the INDEX-TIME side tables from build_index /
-    write_postings; pass them so the probe never aggregates the full
-    postings table. When omitted (ad-hoc probes over a small corpus)
-    they are derived from `postings` here — two extra full scans the
-    100 TB path must not pay per probe.
+    avgdl)) are the INDEX-TIME side tables from build_index; pass them
+    so the probe never aggregates the full postings table. When omitted
+    (ad-hoc probes over a small corpus) they are derived from
+    `postings` here — two extra full scans the 100 TB path must not pay
+    per probe.
     """
     if topk < 1:
         raise ValueError(f"bm25_topk: topk must be >= 1, got {topk}")

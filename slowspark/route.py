@@ -5,8 +5,9 @@ is the routing key: SqlStatement / AdminCommand / InvalidStatement, plus our
 ParseError lane (the reference panics instead, src/codec.rs:313-327).
 
 Kind discrimination is a column, not control flow: each sink is a filter on
-the same cached parsed DataFrame, so the expensive parse stage runs once and
-the four writes are narrow scans of the cached result.
+the entry_kind column. Under job.run_pipeline's checkpointing each sink is
+its own run_stage over the written `enriched` table, so parse and enrich run
+once and each sink write is a narrow filtered scan of that table.
 """
 
 from __future__ import annotations
@@ -32,41 +33,3 @@ def route(entries: DataFrame) -> dict[str, DataFrame]:
     return {
         SINK_NAMES[k]: entries.filter(F.col("entry_kind") == k) for k in KINDS
     }
-
-
-def write_sinks(
-    entries: DataFrame,
-    base_path: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> dict[str, str]:
-    """Fan-out writes. The sql sink is partitioned by sql_type (query-time
-    partition pruning for per-type rollups); dt-partitioning (by
-    date(log_time)) is what a production Iceberg table would add.
-
-    The input is persisted for the duration of the four writes: each sink is
-    a filter over the SAME materialized rows, so the upstream plan (the
-    expensive Python parse stage, when called on an unmaterialized
-    parse_pages output) executes once, not once per sink. Inputs that are
-    already cached/materialized are left alone."""
-    paths: dict[str, str] = {}
-    already_cached = entries.storageLevel.useMemory or entries.storageLevel.useDisk
-    if not already_cached:
-        entries = entries.persist()
-    try:
-        sinks = route(entries)
-        for name, df in sinks.items():
-            path = f"{base_path}/{name}"
-            writer = df.write.mode(mode).format(fmt)
-            if name == "sql_statements":
-                writer = (
-                    df.withColumn("dt", F.to_date("log_time"))
-                    .write.mode(mode).format(fmt)
-                    .partitionBy("sql_type", "dt")
-                )
-            writer.save(path)
-            paths[name] = path
-    finally:
-        if not already_cached:
-            entries.unpersist()
-    return paths

@@ -91,38 +91,6 @@ def brute_force_topk(
     )
 
 
-def topk_per_query(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    corpus_id: str = "vec_id",
-    query_id: str = "query_id",
-    k: int = 10,
-) -> DataFrame:
-    """Batch top-k: broadcast the (small) query set against the corpus,
-    window-rank per query. Corpus is scanned once, never shuffled; only the
-    k best rows per query survive to the window."""
-    q = queries.select(
-        F.col(query_id), F.col(vec_col).alias("__qv"),
-        _norm(vec_col).alias("__qn"),
-    )
-    scored = (
-        corpus.select(F.col(corpus_id), F.col(vec_col), _norm(vec_col).alias("__cn"))
-        .join(F.broadcast(q))
-        .withColumn(
-            "cosine",
-            _dot(vec_col, "__qv")
-            / (F.greatest(F.col("__cn") * F.col("__qn"), F.lit(1e-12))),
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id, corpus_id, "cosine", "rank")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Random-hyperplane LSH — vectorized projection
 # ---------------------------------------------------------------------------
@@ -194,41 +162,6 @@ def with_lsh_bucket(
         return pd.Series(buckets)
 
     return df.withColumn(out, bucket_udf(F.col(vec_col)))
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    query: list[float],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-    n_planes: int = 12,
-    seed: int = 42,
-    probe_hamming: int = 1,
-) -> DataFrame:
-    """ANN top-k: restrict the exact cosine scan to the query's LSH bucket
-    plus multi-probe neighbors within `probe_hamming` bit flips (standard
-    multi-probe LSH: near vectors most likely land one sign-flip away).
-    Recall/latency trade-off is (n_planes, probe_hamming); at scale the
-    bucket column is a partition/cluster key so the scan prunes to the
-    probed buckets' files."""
-    dim = len(query)
-    planes = _hyperplanes(dim, n_planes, seed)
-    qbucket = int(_bucket_of(np.asarray(query, dtype=np.float64)[None, :], planes)[0])
-    probes = {qbucket}
-    if probe_hamming >= 1:
-        probes |= {qbucket ^ (1 << i) for i in range(n_planes)}
-    if probe_hamming >= 2:
-        probes |= {
-            qbucket ^ (1 << i) ^ (1 << j)
-            for i in range(n_planes)
-            for j in range(i + 1, n_planes)
-        }
-    bucketed = with_lsh_bucket(corpus, vec_col, n_planes, dim, seed)
-    return brute_force_topk(
-        bucketed.filter(F.col("lsh_bucket").isin(list(probes))),
-        vec_col, query, k, id_col,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -388,7 +321,7 @@ def ivf_topk(
     lloyd_iters: int = 2,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
-    """IVF ANN top-k (the probe path lsh_topk has): rank centroids against
+    """IVF ANN top-k: rank centroids against
     the query driver-side (k x dim matmul — trivial), scan only the best
     `probe_cells` cells, exact cosine within them."""
     if centroids is None:
@@ -401,67 +334,6 @@ def ivf_topk(
     assigned = _assign_with(corpus, cmat, vec_col)
     return brute_force_topk(
         assigned.filter(F.col("ivf_cell").isin(probe)), vec_col, query, k, id_col
-    )
-
-
-def ivf_build_index(
-    corpus: DataFrame,
-    index_path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_centroids: int = 16,
-    seed: int = 42,
-    lloyd_iters: int = 2,
-) -> np.ndarray:
-    """Persist an IVF index: the corpus written PARTITIONED BY ivf_cell
-    (one directory per cell) plus the centroid matrix as JSON. This is the
-    at-scale ANN shape: a probe-p query's `ivf_cell IN (...)` filter becomes
-    a PARTITION FILTER, so the scan never opens the other cells' files —
-    IO per query is p/n_centroids of the corpus, not a full scan.
-    Returns the trained centroids."""
-    import json
-
-    from slowspark.util import fs_write_text_atomic
-
-    centroids = ivf_train(corpus, vec_col, id_col, n_centroids, seed, lloyd_iters)
-    assigned = _assign_with(corpus, centroids, vec_col)
-    (
-        assigned.write.mode("overwrite")
-        .partitionBy("ivf_cell")
-        .parquet(f"{index_path}/cells")
-    )
-    meta = {"centroids": centroids.tolist(), "vec_col": vec_col, "id_col": id_col}
-    fs_write_text_atomic(
-        corpus.sparkSession, f"{index_path}/centroids.json", json.dumps(meta)
-    )
-    return centroids
-
-
-def ivf_topk_indexed(
-    spark,
-    index_path: str,
-    query: list[float],
-    k: int = 10,
-    probe_cells: int = 4,
-) -> DataFrame:
-    """ANN top-k against a persisted IVF index: rank centroids driver-side,
-    scan ONLY the probed cells' partitions (partition pruning — assert it
-    with .explain(): PartitionFilters carries the ivf_cell IN list), exact
-    cosine within."""
-    import json
-
-    from slowspark.util import fs_read_text
-
-    meta = json.loads(fs_read_text(spark, f"{index_path}/centroids.json"))
-    cmat = _normalize_rows(np.asarray(meta["centroids"], dtype=np.float64))
-    q = np.asarray(query, dtype=np.float64)
-    qn = np.linalg.norm(q) or 1.0
-    order = np.argsort(-(cmat @ (q / qn)))
-    probe = [int(c) for c in order[: max(1, probe_cells)]]
-    cells = spark.read.parquet(f"{index_path}/cells")
-    return brute_force_topk(
-        cells.filter(F.col("ivf_cell").isin(probe)),
-        meta["vec_col"], query, k, meta["id_col"],
     )
 
 
@@ -478,7 +350,6 @@ def embedding_near_dup_pairs(
     seed: int = 42,
     dim: int | None = None,
     max_bucket_size: int | None = None,
-    log_drops: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: LSH-bucket the corpus (no
     all-pairs cross join — the shuffle is keyed on the bucket), verify exact
@@ -512,8 +383,7 @@ def embedding_near_dup_pairs(
     )
     if max_bucket_size is not None:
         b = capped_by_bucket(
-            b, ["lsh_bucket"], max_bucket_size,
-            "embedding_near_dup_pairs", log_drops,
+            b, ["lsh_bucket"], max_bucket_size, "embedding_near_dup_pairs"
         )
     l, r = b.alias("l"), b.alias("r")
     pairs = l.join(
@@ -537,32 +407,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def embedding_dedup(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    cosine_threshold: float = 0.95,
-    dim: int | None = None,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Drop the higher-id member of every near-dup pair (min-id keeper,
-    same policy as textops.minhash_dedup). ``max_bucket_size`` caps
-    pathological LSH buckets (dropped counts are logged, never silent)."""
-    losers = (
-        embedding_near_dup_pairs(
-            corpus, vec_col, id_col, cosine_threshold, dim=dim,
-            max_bucket_size=max_bucket_size,
-        )
-        .select(F.greatest("id_a", "id_b").alias(id_col))
-        .distinct()
-    )
-    return corpus.join(losers, on=id_col, how="left_anti")
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ) — compressed ANN for corpora too big for floats
-# ---------------------------------------------------------------------------
-
 def semantic_near_dup_pairs(
     corpus: DataFrame,
     vec_col: str = "embedding",
@@ -573,7 +417,6 @@ def semantic_near_dup_pairs(
     lloyd_iters: int = 2,
     centroids: np.ndarray | None = None,
     max_cluster_size: int | None = None,
-    log_drops: bool = True,
     assigned: DataFrame | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023,
@@ -624,8 +467,7 @@ def semantic_near_dup_pairs(
         )
     if max_cluster_size is not None:
         assigned = capped_by_bucket(
-            assigned, ["ivf_cell"], max_cluster_size,
-            "semantic_near_dup_pairs", log_drops,
+            assigned, ["ivf_cell"], max_cluster_size, "semantic_near_dup_pairs"
         )
     l, r = assigned.alias("l"), assigned.alias("r")
     cos = F.expr(
@@ -649,28 +491,9 @@ def semantic_near_dup_pairs(
     )
 
 
-def semantic_dedup(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_clusters: int = 16,
-    cosine_threshold: float = 0.95,
-    seed: int = 42,
-    max_cluster_size: int | None = None,
-) -> DataFrame:
-    """Drop the higher-id member of every semantic near-dup pair (min-id
-    keeper, the embedding_dedup policy) over SemDeDup cluster-blocked
-    pairs."""
-    losers = (
-        semantic_near_dup_pairs(
-            corpus, vec_col, id_col, n_clusters, cosine_threshold,
-            seed=seed, max_cluster_size=max_cluster_size,
-        )
-        .select(F.greatest("id_a", "id_b").alias(id_col))
-        .distinct()
-    )
-    return corpus.join(losers, on=id_col, how="left_anti")
-
+# ---------------------------------------------------------------------------
+# Product quantization (PQ) — compressed ANN for corpora too big for floats
+# ---------------------------------------------------------------------------
 
 def pq_train(
     corpus: DataFrame,
@@ -1098,32 +921,6 @@ def _rank_cells(cmat: np.ndarray, query: list[float], probe_cells: int) -> list[
     return [int(c) for c in order[: max(1, probe_cells)]]
 
 
-def ivfpq_candidates(
-    spark,
-    index_path: str,
-    query: list[float],
-    rerank: int = 100,
-    probe_cells: int = 4,
-) -> DataFrame:
-    """The IVF-PQ ADC prefilter: rank centroids driver-side, scan ONLY the
-    probed cells' code columns (PartitionFilters on ivf_cell; ReadSchema
-    never includes the vector column — both plan-pinned by tests), rank by
-    asymmetric distance, keep the best `rerank` ids. IO per query is
-    (probe_cells / n_centroids) x (code bytes / vector bytes) of the
-    corpus — at 16 cells / 4 probes / 32x PQ compression, ~1/128 of what
-    brute force scans."""
-    cmat, books, _vec_col, id_col, residual = _ivfpq_meta(spark, index_path)
-    probe = _rank_cells(cmat, query, probe_cells)
-    bias = _cell_bias(cmat, query) if residual else None
-    cells = spark.read.parquet(f"{index_path}/cells")
-    probed_codes = cells.filter(F.col("ivf_cell").isin(probe)).select(
-        id_col, "pq_codes", "norm", "ivf_cell"
-    )
-    return pq_topk(
-        probed_codes, books, query, k=rerank, id_col=id_col, cell_bias=bias
-    )
-
-
 def ivfpq_topk(
     spark,
     index_path: str,
@@ -1136,8 +933,8 @@ def ivfpq_topk(
     probe p cells -> ADC over codes within them -> exact cosine re-rank of
     the surviving `rerank` ids' raw vectors, fetched from the SAME probed
     partitions via a broadcast semi-join. Strictly better than either
-    half alone: pq_topk ADC-scans every cell's codes; ivf_topk_indexed
-    reads raw float vectors for the whole probed fraction. recall@k = 1
+    half alone: pq_topk ADC-scans every cell's codes; ivf_topk reads
+    raw float vectors for the whole probed fraction. recall@k = 1
     whenever the true top-k lands in the probed cells AND survives the
     ADC cutoff; raise probe_cells / rerank independently to trade IO for
     recall on each axis."""
@@ -1387,51 +1184,6 @@ def ivfpq_topk_batch(
         .filter(F.col("rank") <= k)
         .select(query_id, id_col, "cosine", "rank")
     )
-
-
-def ivfpq_topk_batch_chunked(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    n_chunks: int,
-    query_id: str = "query_id",
-    query_vec: str = "embedding",
-    k: int = 10,
-    probe_cells: int = 4,
-    rerank: int = 100,
-    max_batch_queries: int = 100_000,
-) -> DataFrame:
-    """The RUNBOOK §8 chunk-and-union recipe as a function: split the
-    query table into `n_chunks` deterministic xxhash64(query_id) chunks,
-    run ivfpq_topk_batch per chunk, union the results. Per-query output
-    is independent of its batch-mates (identical arithmetic, pinned by
-    a differential test), so chunking is EXACT — use it when the query
-    set exceeds the single-batch driver-broadcast bound
-    (`max_batch_queries` still guards each chunk; size n_chunks so
-    |queries|/n_chunks clears it). Each chunk's probe join dynamically
-    prunes to that chunk's cells, so the scan cost grows sublinearly in
-    n_chunks."""
-    if n_chunks < 1:
-        raise ValueError(
-            f"ivfpq_topk_batch_chunked: n_chunks must be >= 1, "
-            f"got {n_chunks}"
-        )
-    import functools
-
-    chunked = queries.withColumn(
-        "__chunk", F.pmod(F.xxhash64(query_id), F.lit(n_chunks))
-    )
-    parts = [
-        ivfpq_topk_batch(
-            spark, index_path,
-            chunked.filter(F.col("__chunk") == i).drop("__chunk"),
-            query_id=query_id, query_vec=query_vec, k=k,
-            probe_cells=probe_cells, rerank=rerank,
-            max_batch_queries=max_batch_queries,
-        )
-        for i in range(n_chunks)
-    ]
-    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def pq_topk_rerank(

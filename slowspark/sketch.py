@@ -33,16 +33,6 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 
-def cms_params(epsilon: float, delta: float) -> tuple[int, int]:
-    """(depth, width) for additive error <= epsilon * N with probability
-    >= 1 - delta: width = ceil(e / epsilon), depth = ceil(ln(1/delta))."""
-    if not 0.0 < epsilon < 1.0:
-        raise ValueError(f"cms_params: epsilon must be in (0, 1), got {epsilon}")
-    if not 0.0 < delta < 1.0:
-        raise ValueError(f"cms_params: delta must be in (0, 1), got {delta}")
-    return math.ceil(math.log(1.0 / delta)), math.ceil(math.e / epsilon)
-
-
 def cms_positions(
     df: DataFrame, value_col: str, depth: int, width: int
 ) -> DataFrame:
@@ -74,17 +64,6 @@ def build_cms(
         .groupBy("j", "col")
         .agg(F.sum(w).alias("c"))
     )
-
-
-def merge_cms(*sketches: DataFrame) -> DataFrame:
-    """Union per-batch/per-partition sketches into one — cell-wise sum,
-    the CMS merge law. Same cell bound as build_cms."""
-    if not sketches:
-        raise ValueError("merge_cms: need at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("j", "col").agg(F.sum("c").alias("c"))
 
 
 def cms_query(
@@ -164,29 +143,6 @@ def kmv_estimate(
         F.when(F.col("__n") < k, F.col("__n").cast("double"))
         .otherwise(F.lit(float(k - 1)) / u)
         .alias("n_distinct_est"),
-    )
-
-
-def merge_kmv(
-    k: int, *sketches: DataFrame, group_cols: tuple[str, ...] = ()
-) -> DataFrame:
-    """Union per-batch sketches and keep the bottom-k again — the KMV
-    merge law (hash values are values, so distinct-union then bottom-k
-    equals the whole-stream sketch exactly)."""
-    if not sketches:
-        raise ValueError("merge_kmv: need at least one sketch")
-    from pyspark.sql import Window
-
-    gcols = list(group_cols)
-    out = sketches[0].select(*gcols, "h")
-    for s in sketches[1:]:
-        out = out.unionByName(s.select(*gcols, "h"))
-    w = Window.partitionBy(*gcols).orderBy("h") if gcols else Window.orderBy("h")
-    return (
-        out.distinct()
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(*gcols, "h", "rk")
     )
 
 
@@ -363,22 +319,4 @@ def hll_index_estimate(
     regs = spark.read.parquet(f"{index_path}/regs")
     return hll_estimate(
         merge_hll(regs, group_cols=group_cols), p, group_cols=group_cols
-    )
-
-
-def compact_hll_index(
-    spark,
-    index_path: str,
-    compacted_path: str,
-    p: int,
-    group_cols: tuple[str, ...] = (),
-) -> None:
-    """Rewrite an append-grown register index into its merged form at a
-    NEW path (at most m rows per group): the file-count bound for a
-    long-lived stream. Writing to a fresh path keeps the swap atomic at
-    the metastore/manifest layer; the merged table is estimate-identical
-    to the original by the merge law."""
-    regs = spark.read.parquet(f"{index_path}/regs")
-    merge_hll(regs, group_cols=group_cols).write.mode("overwrite").parquet(
-        f"{compacted_path}/regs"
     )

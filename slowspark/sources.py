@@ -28,43 +28,6 @@ def read_pages(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFram
     return spark.read.schema(PAGES_SCHEMA).format(fmt).load(path)
 
 
-def compact_pages(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    target_file_mb: int = 256,
-) -> int:
-    """Small-file compaction: rewrite a pages directory into
-    ceil(total_bytes / target_file_mb) files. Crawl outputs arrive as
-    millions of tiny objects; scanning them costs a task per file and
-    overwhelms the driver's listing — the standard fix is a periodic
-    size-aware rewrite (Iceberg's rewrite_data_files; this is the Parquet
-    equivalent). Input size comes from the Hadoop FileSystem API (works for
-    HDFS/S3A paths too, not just local), the rewrite is one round-robin
-    repartition. Returns the output file count."""
-    from slowspark.util import _hadoop_fs
-
-    sfs, sp = _hadoop_fs(spark, src_path)
-    dfs, dp = _hadoop_fs(spark, dst_path)
-    # compare scheme-qualified URIs, NOT os.path.abspath: abspath maps any
-    # URI ('s3a://bucket/x') to a driver-cwd-relative local path, so two
-    # distinct remote paths (or a remote src and a local dst of the same
-    # basename) could collide or, worse, a true src==dst could pass
-    if str(sfs.makeQualified(sp)) == str(dfs.makeQualified(dp)):
-        # mode('overwrite') deletes dst BEFORE the lazy read of src runs —
-        # an in-place call would destroy its own input
-        raise ValueError(
-            "compact_pages: dst_path must differ from src_path "
-            "(overwrite deletes the destination before the source is read); "
-            "write to a temp dir and swap"
-        )
-    df = spark.read.schema(PAGES_SCHEMA).parquet(src_path)
-    total = sfs.getContentSummary(sp).getLength()
-    n_files = max(1, -(-int(total) // (target_file_mb * 1024 * 1024)))
-    df.repartition(n_files).write.mode("overwrite").parquet(dst_path)
-    return n_files
-
-
 _WARC_SCHEMA = (
     "warc_path string, record_ix int, warc_type string, url string, "
     "warc_ts timestamp, headers map<string,string>, payload binary"

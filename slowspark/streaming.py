@@ -486,113 +486,3 @@ def windowed_hll_registers(
     return regs.select(
         F.col("__w.start").alias("window_start"), "reg", "rho"
     )
-
-
-def schedule_fetches_stream(
-    requests_stream: DataFrame,
-    host_col: str = "host",
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    min_interval_s: float = 1.0,
-    watermark: str = "5 seconds",
-) -> DataFrame:
-    """Streaming politeness scheduler (the crawl-frontier analog of
-    weburl.crawl_schedule): per-host token-interval rate limiting as a
-    custom stateful operator — each fetch request is assigned the
-    earliest slot >= its arrival that is >= min_interval after the
-    host's previous assigned slot. Output rows:
-    (host, url, ts, scheduled_ts, delay_s).
-
-    DETERMINISM + FINALITY: requests are scheduled in strict
-    (event-time, url) order per host, and a request is emitted only
-    once the watermark passes its event time — i.e. once no
-    earlier-or-equal request can still arrive to claim its slot. The
-    emitted schedule is therefore a pure function of the input set,
-    independent of micro-batch boundaries (pinned batch-vs-stream in
-    tests), exactly the sessionize_stream contract applied to a
-    running-fold instead of an interval merge.
-
-    State per host = (last assigned slot, buffered not-yet-final
-    requests) — bounded by one watermark-delay of requests; the
-    last-slot scalar itself expires once the watermark passes
-    last_slot + interval (it can no longer delay anything), so idle
-    hosts leave NO state behind. Event-time timeouts drain buffered
-    requests when a host goes quiet."""
-    interval_us = int(min_interval_s * 1_000_000)
-    out_schema = (
-        f"{host_col} string, {url_col} string, ts timestamp, "
-        f"scheduled_ts timestamp, delay_s double"
-    )
-    state_schema = "last_us long, pending string"
-
-    def fn(key, pdfs, state):
-        import json
-
-        import pandas as pd
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-
-        def emit_df(rows):
-            # rows: list of (ts_us, url, sched_us)
-            return pd.DataFrame({
-                host_col: [key[0]] * len(rows),
-                url_col: [r[1] for r in rows],
-                "ts": [pd.Timestamp(r[0], unit="us") for r in rows],
-                "scheduled_ts": [pd.Timestamp(r[2], unit="us")
-                                 for r in rows],
-                "delay_s": [(r[2] - r[0]) / 1e6 for r in rows],
-            })
-
-        if state.hasTimedOut:
-            last_us, pending = state.get
-            pending = json.loads(pending)
-        else:
-            if state.exists:
-                last_us, pending = state.get
-                pending = json.loads(pending)
-            else:
-                last_us, pending = None, []
-            rows = pd.concat(list(pdfs), ignore_index=True)
-            ts_us = (
-                pd.to_datetime(rows[ts_col]).astype("datetime64[ns]")
-                .astype("int64") // 1000
-            ).tolist()
-            pending += [[t, u] for t, u in zip(ts_us, rows[url_col])]
-        # strict <: rows at exactly the watermark are still admissible
-        pending.sort(key=lambda r: (r[0], r[1]))
-        ready = [r for r in pending if r[0] < wm_us]
-        keep = [r for r in pending if r[0] >= wm_us]
-        out = []
-        for t, u in ready:
-            sched = t if last_us is None else max(t, last_us + interval_us)
-            out.append((t, u, sched))
-            last_us = sched
-        if keep:
-            state.update((last_us, json.dumps(keep)))
-            # buffered rows finalize when the watermark passes their ts
-            state.setTimeoutTimestamp(
-                max(min(r[0] for r in keep) // 1000 + 1,
-                    state.getCurrentWatermarkMs() + 1)
-            )
-        elif last_us is not None and last_us + interval_us >= wm_us:
-            # the last slot can still delay a future in-watermark row
-            state.update((last_us, json.dumps([])))
-            state.setTimeoutTimestamp(
-                max((last_us + interval_us) // 1000 + 1,
-                    state.getCurrentWatermarkMs() + 1)
-            )
-        elif state.exists:
-            state.remove()
-        if out:
-            yield emit_df(out)
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return (
-        requests_stream.withWatermark(ts_col, watermark)
-        .groupBy(host_col)
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )

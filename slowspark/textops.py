@@ -52,15 +52,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return df.join(keep, on=id_col, how="left_semi")
 
 
-def duplicate_clusters(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact-duplicate cluster sizes (diagnostic view)."""
-    return (
-        df.select(F.sha2(F.col(text_col), 256).alias("text_hash"), F.col(id_col))
-        .groupBy("text_hash")
-        .agg(F.count("*").alias("n_dupes"), F.min(id_col).alias("keeper_id"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dup
 # ---------------------------------------------------------------------------
@@ -172,7 +163,6 @@ def minhash_lsh_candidates(
     bands: int = 16,
     rows_per_band: int = 4,
     max_bucket_size: int | None = None,
-    log_drops: bool = True,
 ) -> DataFrame:
     """Banding: split each signature into `bands` bands of `rows_per_band`,
     hash each band, group by (band_id, band_hash) -> candidate pairs.
@@ -190,8 +180,7 @@ def minhash_lsh_candidates(
     b = band_keys(signatures, id_col, bands, rows_per_band)
     if max_bucket_size is not None:
         b = capped_by_bucket(
-            b, ["band_id", "band_hash"], max_bucket_size,
-            "minhash_lsh_candidates", log_drops,
+            b, ["band_id", "band_hash"], max_bucket_size, "minhash_lsh_candidates"
         )
     left = b.alias("l")
     right = b.alias("r")
@@ -439,33 +428,6 @@ def dedup_by_pairs_quality(
         .select(F.col("id").alias(id_col))
     )
     return df.join(losers, on=id_col, how="left_anti")
-
-
-def exact_dedup_quality(
-    df: DataFrame,
-    quality_col: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """exact_dedup with the quality-aware keeper (highest quality, ties
-    -> lowest id) — same single map-side-combined shuffle on the 256-bit
-    hash, the min() just becomes a max_by(struct)."""
-    keep = (
-        df.select(
-            F.sha2(F.col(text_col), 256).alias("text_hash"),
-            F.col(id_col),
-            F.col(quality_col).cast("double").alias("__q"),
-        )
-        .groupBy("text_hash")
-        .agg(
-            F.expr(
-                f"max_by({id_col}, struct("
-                f"coalesce(__q, cast('-Infinity' as double)) as q, "
-                f"-{id_col} as t))"
-            ).alias(id_col)
-        )
-    )
-    return df.join(keep.select(id_col), on=id_col, how="left_semi")
 
 
 def minhash_estimated_pairs(
@@ -865,7 +827,6 @@ def simhash_candidates(
     max_hamming: int = 3,
     n_blocks: int | None = None,
     max_bucket_size: int | None = None,
-    log_drops: bool = True,
 ) -> DataFrame:
     """Multi-table candidate generation (Manku et al., WWW'07): split the
     64-bit simhash into n_blocks (default max_hamming + 3) blocks; any pair
@@ -892,8 +853,7 @@ def simhash_candidates(
     keyed = _manku_keyed(sigs, id_col, max_hamming, n_blocks)
     if max_bucket_size is not None:
         keyed = capped_by_bucket(
-            keyed, ["tbl", "tkey"], max_bucket_size,
-            "simhash_candidates", log_drops,
+            keyed, ["tbl", "tkey"], max_bucket_size, "simhash_candidates"
         )
     l, r = keyed.alias("l"), keyed.alias("r")
     return (
@@ -1127,17 +1087,6 @@ def with_ngram_set(
             ),
         )
         .drop(toks_col)
-    )
-
-
-def ngram_set(text_col: str, n: int = 3):
-    """DEPRECATED expression form (kept for API compat): re-tokenizes inside
-    the lambda — O(len^2). Prefer with_ngram_set."""
-    return F.array_distinct(
-        F.expr(
-            f"transform(sequence(0, greatest(size(split(trim(lower({text_col})), '\\\\s+')) - {n}, 0)), "
-            f"i -> concat_ws(' ', slice(split(trim(lower({text_col})), '\\\\s+'), i + 1, {n})))"
-        )
     )
 
 
@@ -2155,13 +2104,6 @@ def term_stats(
         F.sum("n").alias("term_freq"),
         F.count("*").alias("doc_freq"),
     )
-
-
-def doc_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Stable content fingerprint: xxhash64 of the whitespace-normalized
-    lowercased text (the document-level analog of the SQL fingerprint)."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    return df.withColumn("doc_fp", F.xxhash64(norm))
 
 
 def pmi_pairs(

@@ -245,20 +245,6 @@ def unigram_segment_counts(
     )
 
 
-def save_model(model: DataFrame, path: str) -> None:
-    model.select("piece", "count", "logp").write.mode("overwrite").parquet(
-        path
-    )
-
-
-def load_model(spark, path: str) -> DataFrame:
-    m = spark.read.parquet(path)
-    missing = {"piece", "count", "logp"} - set(m.columns)
-    if missing:
-        raise ValueError(f"unigram load_model: {path} lacks {missing}")
-    return m
-
-
 def unigram_segment(
     df: DataFrame,
     model: DataFrame,

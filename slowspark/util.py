@@ -96,9 +96,8 @@ def _hadoop_fs(spark, path: str):
     scheme (file://, hdfs://, s3a://, ...) from the session's Hadoop conf,
     so the same call works on local dirs in the sandbox and object stores
     on a cluster. This is the one sanctioned way slowspark probes/writes
-    index and marker files (sources.compact_pages uses the same API for
-    sizing); os.path/open on an s3a:// string would silently probe the
-    driver's local disk instead."""
+    index and marker files; os.path/open on an s3a:// string would
+    silently probe the driver's local disk instead."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
@@ -108,11 +107,6 @@ def fs_exists(spark, path: str) -> bool:
     """True iff `path` exists on its (scheme-resolved) filesystem."""
     fs, p = _hadoop_fs(spark, path)
     return bool(fs.exists(p))
-
-
-def fs_mkdirs(spark, path: str) -> None:
-    fs, p = _hadoop_fs(spark, path)
-    fs.mkdirs(p)
 
 
 def fs_write_text_atomic(spark, path: str, content: str) -> None:
@@ -176,43 +170,38 @@ def capped_by_bucket(
     keys: list[str],
     max_bucket_size: int,
     label: str,
-    log_drops: bool = True,
 ) -> DataFrame:
     """Drop every bucket (group over `keys`) larger than `max_bucket_size`
     via a left-semi join on the surviving keys.
 
-    No-silent-caps rule: by default the dropped-bucket count and row count
-    are computed eagerly (one tiny aggregate job over the bucket-size
-    table — the caller explicitly opted into capping, and a cap that
-    truncates recall without a trace is how candidates disappear unnoticed)
-    and emitted through the `slowspark` logger at WARNING. Pass
-    log_drops=False to keep the plan fully lazy (e.g. inside plan-shape
-    tests).
+    No-silent-caps rule: the dropped-bucket count and row count are
+    computed eagerly (one tiny aggregate job over the bucket-size table —
+    the caller explicitly opted into capping, and a cap that truncates
+    recall without a trace is how candidates disappear unnoticed) and
+    emitted through the `slowspark` logger at WARNING.
 
-    The input is materialized first on the eager path: `df` is almost
-    always a UDF-derived band/signature table, and without truncating its
-    lineage the drop-stats job, the size aggregate, and BOTH sides of the
-    left-semi join would each recompute the whole upstream UDF subtree
-    (measured 4x wall on the sf0.1 dedup-skew bench: capped 42s vs
-    uncapped 10.8s before this materialize)."""
-    if log_drops:
-        df = materialize(df)
+    The input is materialized first: `df` is almost always a UDF-derived
+    band/signature table, and without truncating its lineage the
+    drop-stats job, the size aggregate, and BOTH sides of the left-semi
+    join would each recompute the whole upstream UDF subtree (measured 4x
+    wall on the sf0.1 dedup-skew bench: capped 42s vs uncapped 10.8s
+    before this materialize)."""
+    df = materialize(df)
     sizes = df.groupBy(*keys).agg(F.count("*").alias("__bn"))
-    if log_drops:
-        stats = (
-            sizes.filter(F.col("__bn") > max_bucket_size)
-            .agg(
-                F.count("*").alias("nb"),
-                F.coalesce(F.sum("__bn"), F.lit(0)).alias("nr"),
-            )
-            .first()
+    stats = (
+        sizes.filter(F.col("__bn") > max_bucket_size)
+        .agg(
+            F.count("*").alias("nb"),
+            F.coalesce(F.sum("__bn"), F.lit(0)).alias("nr"),
         )
-        if stats["nb"]:
-            logger.warning(
-                "%s: max_bucket_size=%d dropped %d bucket(s) / %d row(s) "
-                "from candidate generation (recall truncated for those "
-                "buckets; run the bucket histogram to inspect)",
-                label, max_bucket_size, stats["nb"], stats["nr"],
-            )
+        .first()
+    )
+    if stats["nb"]:
+        logger.warning(
+            "%s: max_bucket_size=%d dropped %d bucket(s) / %d row(s) "
+            "from candidate generation (recall truncated for those "
+            "buckets; run the bucket histogram to inspect)",
+            label, max_bucket_size, stats["nb"], stats["nr"],
+        )
     kept = sizes.filter(F.col("__bn") <= max_bucket_size).select(*keys)
     return df.join(kept, keys, "left_semi")

@@ -635,12 +635,6 @@ def _robots_like_pattern(pattern: Column) -> Column:
     return F.when(anchored, like_pat).otherwise(F.concat(like_pat, F.lit("%")))
 
 
-def _robots_like_expr(path: Column, pattern: Column) -> Column:
-    """True iff `path` matches a robots `pattern` (see
-    _robots_like_pattern)."""
-    return F.like(path, _robots_like_pattern(pattern))
-
-
 def robots_filter(
     df: DataFrame,
     rules: DataFrame,

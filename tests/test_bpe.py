@@ -237,31 +237,6 @@ def test_bpe_segment_guard_rejects_large_merge_tables(spark):
     assert out.count() == len(CORPUS)
 
 
-def test_bpe_save_load_roundtrip(spark, tmp_path):
-    """save_merges/load_merges round-trip the tokenizer artifact and
-    segmentation from the loaded table equals segmentation from the
-    in-memory one; a gap in merge_ix is refused."""
-    from slowspark.bpe import bpe_segment_udf, load_merges, save_merges
-
-    df = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    merges = bpe_learn(df, n_merges=6)
-    path = str(tmp_path / "vocab")
-    save_merges(spark, merges, path)
-    loaded = load_merges(spark, path)
-    assert loaded == merges
-    a = {r["doc_id"]: r["tokens"] for r in bpe_segment_udf(df, merges).collect()}
-    b = {r["doc_id"]: r["tokens"] for r in bpe_segment_udf(df, loaded).collect()}
-    assert a == b
-    # truncated/reordered table refused
-    spark.read.parquet(path).filter("merge_ix != 2").write.mode(
-        "overwrite"
-    ).parquet(str(tmp_path / "bad"))
-    with pytest.raises(ValueError, match="contiguous"):
-        load_merges(spark, str(tmp_path / "bad"))
-    with pytest.raises(ValueError, match="empty"):
-        save_merges(spark, [], str(tmp_path / "empty"))
-
-
 # ---------------------------------------------------------------------------
 # Byte-level mode (GPT-2): pre-tokenization mirror + end-to-end differentials
 # ---------------------------------------------------------------------------

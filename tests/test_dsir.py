@@ -21,7 +21,8 @@ def _grams(text: str) -> list[str]:
 
 
 def _py_log_weights(raw, target, n_buckets=10_000, alpha=1.0):
-    """Pure-Python reimplementation of bucket_log_ratio + dsir_log_weights."""
+    """Pure-Python reimplementation of the bucket log-ratio model +
+    dsir_log_weights."""
     c_raw: dict = {}
     c_tgt: dict = {}
     for _, t in raw:
@@ -86,18 +87,6 @@ def test_log_weights_match_python_model(spark):
     assert got[3][1] > got[2][1]
 
 
-def test_ratio_df_reuse_path_identical(spark):
-    raw = spark.createDataFrame(RAW, "doc_id long, text string")
-    tgt = spark.createDataFrame(TARGET, "doc_id long, text string")
-    ratio = dsir.bucket_log_ratio(raw, tgt)
-    a = {r["doc_id"]: r["log_weight"] for r in dsir.dsir_log_weights(raw, tgt).collect()}
-    b = {
-        r["doc_id"]: r["log_weight"]
-        for r in dsir.dsir_log_weights(raw, tgt, ratio_df=ratio).collect()
-    }
-    assert a == b
-
-
 def test_topk_deterministic_seeded_and_cut(spark):
     raw = spark.createDataFrame(RAW, "doc_id long, text string")
     tgt = spark.createDataFrame(TARGET, "doc_id long, text string")
@@ -122,6 +111,8 @@ def test_topk_validates_k(spark):
     tgt = spark.createDataFrame(TARGET, "doc_id long, text string")
     with pytest.raises(ValueError, match="k must be >= 1"):
         dsir.dsir_topk(raw, tgt, k=0)
+    with pytest.raises(ValueError, match="alpha must be > 0"):
+        dsir.dsir_topk(raw, tgt, k=1, alpha=0.0)
 
 
 def test_selection_bias_toward_target_distribution(spark):

@@ -1,6 +1,6 @@
 """Jar-gated Iceberg integration: exercises Catalog's fmt="iceberg"
-branches (catalog.py writeTo/createOrReplace, partitionedBy(bucket(n,
-col)), format("iceberg") read) against a real local Iceberg HADOOP
+branches (catalog.py writeTo/createOrReplace/partitionedBy,
+format("iceberg") read) against a real local Iceberg HADOOP
 catalog WHEN the iceberg-spark-runtime jar is on the classpath.
 
 This sandbox has no Iceberg jars and no network to fetch them
@@ -44,10 +44,7 @@ needs_iceberg = pytest.mark.skipif(
 @pytest.fixture(scope="module")
 def iceberg_spark(tmp_path_factory):
     """A dedicated session: Iceberg catalogs must be configured BEFORE the
-    session starts, so the shared test session cannot be reused. Includes
-    the storage-partitioned-join configs that make bucket-partitioned
-    Iceberg tables join Exchange-free (the Iceberg analog of
-    write_bucketed's saveAsTable contract)."""
+    session starts, so the shared test session cannot be reused."""
     from pyspark.sql import SparkSession
 
     wh = str(tmp_path_factory.mktemp("iceberg_wh"))
@@ -60,52 +57,10 @@ def iceberg_spark(tmp_path_factory):
         .config("spark.sql.catalog.it.type", "hadoop")
         .config("spark.sql.catalog.it.warehouse", wh)
         .config("spark.sql.shuffle.partitions", "4")
-        # storage-partitioned join: report Iceberg's bucket partitioning to
-        # the planner and let V2 bucketing satisfy the join distribution
-        .config("spark.sql.sources.v2.bucketing.enabled", "true")
-        .config("spark.sql.iceberg.planning.preserve-data-grouping", "true")
-        .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-        .config("spark.sql.adaptive.enabled", "false")
         .getOrCreate()
     )
     yield spark
     spark.stop()
-
-
-@needs_iceberg
-def test_write_bucketed_roundtrip_and_join_plan(iceberg_spark):
-    from pyspark.sql import functions as F
-
-    from slowspark.catalog import Catalog
-
-    spark = iceberg_spark
-    cat = Catalog(warehouse="unused-for-iceberg", fmt="iceberg")
-    left = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    right = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("w")
-    )
-    cat.write_bucketed(left, "it.db.left_t", ["k"], n_buckets=8)
-    cat.write_bucketed(right, "it.db.right_t", ["k"], n_buckets=8)
-
-    # partitionedBy(bucket(8, k)) must land in table metadata
-    parts = spark.sql("SELECT partition FROM it.db.left_t.files").collect()
-    assert parts, "bucketed write produced no partitioned files"
-    ddl = spark.sql("SHOW CREATE TABLE it.db.left_t").collect()[0][0]
-    assert "bucket(8, k)" in ddl
-
-    l = cat.read(spark, "it.db.left_t")
-    r = cat.read(spark, "it.db.right_t")
-    assert l.count() == 1000 and r.count() == 1000
-
-    joined = l.join(r, "k")
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, (
-        "bucket-partitioned Iceberg join still shuffles — check the "
-        "storage-partitioned-join configs in this fixture:\n" + plan
-    )
-    assert joined.count() == 1000
 
 
 @needs_iceberg

@@ -1,10 +1,7 @@
-"""Multimodal plumbing (stubbed decode, real Spark plumbing) and the
-Structured Streaming mode."""
+"""The Structured Streaming mode."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from slowspark import multimodal
 from slowspark.gen import expected_kind_counts, gen_pages
 from slowspark.streaming import (
     parse_stream,
@@ -12,150 +9,6 @@ from slowspark.streaming import (
     start_fanout_sink,
     windowed_kind_counts,
 )
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    return multimodal.gen_media(spark, 50).cache()
-
-
-def test_decode_images_schema_and_determinism(media):
-    meta = multimodal.decode_images(media, feature_dim=8)
-    rows1 = {r["media_id"]: (r["width"], r["sha256"], tuple(r["feature"]))
-             for r in meta.collect()}
-    rows2 = {r["media_id"]: (r["width"], r["sha256"], tuple(r["feature"]))
-             for r in multimodal.decode_images(media, feature_dim=8).collect()}
-    assert rows1 == rows2
-    assert len(rows1) == media.filter(F.col("kind") == "image").count()
-    assert all(len(v[2]) == 8 for v in rows1.values())
-
-
-def _golden_png(w: int = 3, h: int = 2) -> bytes:
-    """A minimal valid RGB PNG built with stdlib only (struct + zlib), so
-    the real-decode gate can be exercised without PIL being installed."""
-    import struct
-    import zlib
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # 8-bit RGB
-    raw = b"".join(
-        b"\x00" + bytes(v for x in range(w) for v in (x * 30 % 256, y * 60 % 256, 120))
-        for y in range(h)
-    )
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_real_decode_gate(spark):
-    """real_decode=True must either actually decode (executor image has
-    PIL) or refuse loudly at the documented wire-in point — green on both
-    paths, so a cluster image WITH PIL runs the real kernel unchanged."""
-    media_df = spark.createDataFrame(
-        [(1, "image", bytearray(_golden_png(3, 2)))],
-        "media_id long, kind string, payload binary",
-    )
-    try:
-        import PIL  # noqa: F401
-
-        have_pil = True
-    except ImportError:
-        have_pil = False
-    if have_pil:
-        rows = multimodal.decode_images(media_df, real_decode=True).collect()
-        assert len(rows) == 1
-        assert (rows[0]["width"], rows[0]["height"], rows[0]["n_channels"]) == (3, 2, 3)
-    else:
-        with pytest.raises(Exception, match="wire PIL.Image.open here"):
-            multimodal.decode_images(media_df, real_decode=True).collect()
-
-
-def test_audio_real_decode_gate(spark):
-    """Audio real_decode: fully real when soundfile exists (decoded
-    samples -> numpy mel), loud refusal at the documented wire-in point
-    otherwise — green on either path."""
-    media_df = spark.createDataFrame(
-        [(1, "audio", bytearray(b"not-actually-audio"))],
-        "media_id long, kind string, payload binary",
-    )
-    try:
-        import soundfile  # noqa: F401
-
-        have_sf = True
-    except ImportError:
-        have_sf = False
-    if have_sf:
-        # garbage bytes: soundfile itself errors, which is the real path
-        with pytest.raises(Exception):
-            multimodal.extract_audio_features(media_df, real_decode=True).collect()
-    else:
-        with pytest.raises(Exception, match="wire\\s+sf.read"):
-            multimodal.extract_audio_features(media_df, real_decode=True).collect()
-
-
-def test_video_real_decode_gate(spark):
-    """Video real_decode: PyAV demux loop when `av` exists, loud refusal
-    otherwise — green on either path."""
-    media_df = spark.createDataFrame(
-        [(1, "video", bytearray(b"not-actually-video"))],
-        "media_id long, kind string, payload binary",
-    )
-    try:
-        import av  # noqa: F401
-
-        have_av = True
-    except ImportError:
-        have_av = False
-    if have_av:
-        with pytest.raises(Exception):  # garbage bytes fail the real demux
-            multimodal.sample_frames(media_df, real_decode=True).collect()
-    else:
-        with pytest.raises(Exception, match="wire av.open here"):
-            multimodal.sample_frames(media_df, real_decode=True).collect()
-
-
-def test_mel_band_means_kernel_is_real_dsp():
-    """The mel kernel is genuine DSP, testable without any audio codec: a
-    pure sine at f Hz must put its energy in the mel band containing f,
-    and moving the tone up in frequency must move the argmax band up."""
-    import numpy as np
-
-    sr, n_mel = 16000, 16
-
-    def argmax_band(freq):
-        t = np.arange(sr) / sr  # 1 second
-        tone = np.sin(2 * np.pi * freq * t)
-        mel = multimodal._mel_band_means(tone, sr, n_mel=n_mel)
-        assert mel.shape == (n_mel,) and mel.dtype == np.float32
-        return int(np.argmax(mel))
-
-    low, mid, high = argmax_band(200), argmax_band(1200), argmax_band(5000)
-    assert low < mid < high
-    # determinism
-    t = np.arange(sr) / sr
-    tone = np.sin(2 * np.pi * 440.0 * t)
-    a = multimodal._mel_band_means(tone, sr, n_mel=n_mel)
-    b = multimodal._mel_band_means(tone, sr, n_mel=n_mel)
-    assert np.array_equal(a, b)
-    # stereo downmix accepted
-    stereo = np.stack([tone, tone], axis=1)
-    c = multimodal._mel_band_means(stereo, sr, n_mel=n_mel)
-    assert np.allclose(a, c)
-
-
-def test_sample_frames_udtf_shape(media):
-    frames = multimodal.sample_frames(media, every_n=10, max_frames=5)
-    per_video = frames.groupBy("media_id").count().collect()
-    assert len(per_video) == media.filter(F.col("kind") == "video").count()
-    assert all(1 <= r["count"] <= 5 for r in per_video)
 
 
 def test_streaming_pipeline(spark, tmp_path):
@@ -411,41 +264,6 @@ def test_sessionize_stream_random_differential(spark, tmp_path):
     assert all(e + gap <= wm_hi + slack for _, s, e, n, q_ in got)
 
 
-def test_audio_features_and_chunks(spark, media):
-    from slowspark import multimodal
-
-    feats = multimodal.extract_audio_features(media, n_mel=16)
-    rows = feats.collect()
-    n_audio = media.filter(F.col("kind") == "audio").count()
-    assert len(rows) == n_audio
-    assert all(len(r["mel_means"]) == 16 for r in rows)
-    assert all(r["sample_rate"] in (8000, 16000, 22050, 44100) for r in rows)
-    assert all(0.5 <= r["duration_s"] <= 61.0 for r in rows)
-    # deterministic across reruns
-    again = {r["media_id"]: r["mel_means"] for r in feats.collect()}
-    assert {r["media_id"]: r["mel_means"] for r in rows} == again
-
-    chunks = multimodal.chunk_audio(media, window_s=10.0, max_chunks=4)
-    crows = chunks.collect()
-    per = {}
-    for r in crows:
-        per.setdefault(r["media_id"], []).append(r)
-    assert set(per) == {r["media_id"] for r in rows}
-    dur = {r["media_id"]: r["duration_s"] for r in rows}
-    for mid, cs in per.items():
-        want = min(4, 1 + int(dur[mid] // 10.0))
-        assert len(cs) == want
-        assert sorted(c["chunk_index"] for c in cs) == list(range(want))
-    try:
-        import soundfile  # noqa: F401
-    except ImportError:
-        # no soundfile in this image: the gate must refuse at the
-        # documented wire-in point (with it, the payloads here are fake
-        # bytes, so the real path is exercised by a cluster-image test)
-        with pytest.raises(Exception, match="wire sf.read"):
-            multimodal.extract_audio_features(media, real_decode=True).collect()
-
-
 def test_sessionize_stream_out_of_order_within_watermark(spark, tmp_path):
     """Late-but-within-watermark rows must extend a buffered session
     BACKWARD (session_start moves earlier) and strictly-earlier rows must
@@ -574,84 +392,3 @@ def test_streaming_windowed_hll_registers(spark, tmp_path):
     }
     assert abs(est["2024-01-01 00:00:00"] - 30) / 30 < 0.2
     assert abs(est["2024-01-01 01:00:00"] - 10) / 10 < 0.2
-
-
-def _mirror_schedule(rows, interval_s, final_before):
-    """Pure-Python politeness schedule over finalized rows (ts < final_before)."""
-    out = {}
-    by_host = {}
-    for h, u, t in rows:
-        by_host.setdefault(h, []).append((t, u))
-    for h, rs in by_host.items():
-        last = None
-        for t, u in sorted(rs):
-            if t >= final_before:
-                continue
-            us = int(t.timestamp() * 1e6)
-            sched = us if last is None else max(us, last + int(interval_s * 1e6))
-            out[(h, u)] = (us, sched)
-            last = sched
-    return out
-
-
-def test_streaming_fetch_scheduler(spark, tmp_path):
-    """Per-host token-interval scheduling: the emitted (finalized)
-    schedule equals the pure-Python fold, independent of micro-batch
-    boundaries; the sentinel's own request stays buffered."""
-    from datetime import datetime
-
-    from datetime import timedelta
-
-    from slowspark.streaming import schedule_fetches_stream
-
-    t = lambda s: datetime(2024, 1, 1) + timedelta(seconds=s)
-    rows = (
-        # host a: 4 requests inside 2s -> must spread at 1s intervals
-        [("a.com", f"http://a.com/{i}", t(i // 2)) for i in range(4)]
-        # host b: sparse, no delays
-        + [("b.com", "http://b.com/x", t(0)),
-           ("b.com", "http://b.com/y", t(30))]
-    )
-    sentinel = [("zzz.com", "http://zzz.com/", t(300))]
-    src = str(tmp_path / "req")
-    main = spark.createDataFrame(
-        rows, "host string, url string, warc_ts timestamp"
-    )
-    main.repartition(2).write.parquet(src)
-    import time as _time
-
-    _time.sleep(1.1)
-    spark.createDataFrame(sentinel, main.schema).write.mode(
-        "append"
-    ).parquet(src)
-
-    stream = (
-        spark.readStream.format("parquet").schema(main.schema)
-        .option("maxFilesPerTrigger", 1).load(src)
-    )
-    q = (
-        schedule_fetches_stream(
-            stream, min_interval_s=1.0, watermark="40 seconds"
-        )
-        .writeStream.outputMode("append")
-        .format("memory").queryName("sched")
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["host"], r["url"]): (
-            int(r["ts"].timestamp() * 1e6),
-            int(r["scheduled_ts"].timestamp() * 1e6),
-        )
-        for r in spark.sql("SELECT * FROM sched").collect()
-    }
-    # finalized = ts < max_event - 40s = 05:00 - 40s
-    want = _mirror_schedule(rows + sentinel, 1.0, t(300 - 40))
-    assert got == want
-    # host a requests at equal ts got consecutive slots in url order
-    a = sorted((u, s) for (h, u), (_, s) in got.items() if h == "a.com")
-    scheds = [s for _, s in a]
-    assert scheds == sorted(scheds)
-    assert all(b - x >= 1_000_000 for x, b in zip(scheds, scheds[1:]))
-    # the sentinel itself is not final
-    assert not any(h == "zzz.com" for h, _ in got)

@@ -307,6 +307,31 @@ def test_checkpoint_resume(spark, tmp_path, pages):
     assert census3 == census1
 
 
+def test_job_cli_reads_pages_path(spark, tmp_path):
+    """`slowspark.job --pages` reads the pages table through
+    sources.read_pages (the catalog's format, the declared pages schema);
+    the census equals the analytic one. A subprocess, because main()
+    stops its own SparkSession."""
+    import json
+    import subprocess
+    import sys
+
+    n_pages = 100
+    src = str(tmp_path / "pages")
+    gen_pages(spark, n_pages).write.parquet(src)
+    r = subprocess.run(
+        [sys.executable, "-m", "slowspark.job", "--pages", src,
+         "--warehouse", str(tmp_path / "wh"), "--master", "local[2]"],
+        capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    lines = [
+        ln for ln in r.stdout.replace("\r", "\n").splitlines()
+        if ln.strip().startswith("{")
+    ]
+    assert json.loads(lines[-1])["kind_census"] == expected_kind_counts(n_pages)
+
+
 def test_manifests_match_their_tables(spark, tmp_path, pages):
     """Each manifest describes its table: the row count and content hash
     run_stage observes on the write equal those of the table read back
@@ -441,38 +466,6 @@ def test_masking_placeholder_switch(spark, pages):
         parse_pages(pages, masking="bogus")
 
 
-def test_write_sinks_parses_once(spark, tmp_path):
-    """write_sinks must materialize its input once: an accumulator inside an
-    upstream mapInPandas stage counts how many times each page is processed
-    across the four sink writes."""
-    from slowspark.route import write_sinks
-
-    n_pages = 30
-    acc = spark.sparkContext.accumulator(0)
-    raw = gen_pages(spark, n_pages, partitions=2)
-
-    def counting(batches):
-        for pdf in batches:
-            acc.add(len(pdf))
-            yield pdf
-
-    counted = raw.mapInPandas(counting, schema=raw.schema)
-    entries = parse_pages(counted)
-    paths = write_sinks(entries, str(tmp_path / "sinks"))
-    assert set(paths) == {
-        "sql_statements", "admin_commands", "invalid_statements", "parse_errors"
-    }
-    # one materialization (persist) = each page processed exactly once;
-    # the pre-fix behavior re-ran the parse per sink (4x)
-    assert acc.value == n_pages
-    total = sum(
-        spark.read.parquet(p).count()
-        for n, p in paths.items()
-        if os.path.isfile(os.path.join(p, "_SUCCESS")) and n != "parse_errors"
-    )
-    assert total == sum(expected_kind_counts(n_pages).values())
-
-
 def test_salted_repartition_spreads_genuinely_hot_key(spark):
     """One key repeated 4000x with distinct payloads must land on multiple
     partitions (the round-1 salt was a pure function of the key - a no-op)."""
@@ -516,24 +509,6 @@ def test_catalog_exists_requires_success_marker(spark, tmp_path):
     assert not cat.exists(spark, "t1")
 
 
-def test_compact_pages_rewrites_small_files(spark, tmp_path):
-    """60 tiny files -> one compacted file; row set identical."""
-    from slowspark.sources import compact_pages
-
-    src = str(tmp_path / "tiny")
-    dst = str(tmp_path / "compact")
-    gen_pages(spark, 60, partitions=60).write.parquet(src)
-    n_src = len([f for f in os.listdir(src) if f.endswith(".parquet")])
-    assert n_src == 60
-    n_out = compact_pages(spark, src, dst, target_file_mb=256)
-    assert n_out == 1
-    n_dst = len([f for f in os.listdir(dst) if f.endswith(".parquet")])
-    assert n_dst == 1
-    a = {r["url"] for r in spark.read.parquet(src).select("url").collect()}
-    b = {r["url"] for r in spark.read.parquet(dst).select("url").collect()}
-    assert a == b
-
-
 def test_catalog_writes_zstd_by_default(spark, tmp_path):
     cat = Catalog(str(tmp_path))
     assert cat.codec == "zstd"
@@ -543,26 +518,6 @@ def test_catalog_writes_zstd_by_default(spark, tmp_path):
     assert files and all(".zstd." in f for f in files)
     back = cat.read(spark, "tz")
     assert back.count() == 100
-
-
-def test_compact_pages_refuses_in_place(spark, tmp_path):
-    from slowspark.sources import compact_pages
-
-    src = str(tmp_path / "inplace")
-    gen_pages(spark, 10, partitions=1).write.parquet(src)
-    with pytest.raises(ValueError, match="dst_path must differ"):
-        compact_pages(spark, src, src)
-    # input untouched
-    assert spark.read.parquet(src).count() == 10
-
-
-def test_write_bucketed_iceberg_rejects_unsupported_combos(spark, tmp_path):
-    cat = Catalog(str(tmp_path), fmt="iceberg")
-    df = spark.createDataFrame([(1, 2)], "a long, b long")
-    with pytest.raises(ValueError, match="exactly one bucket"):
-        cat.write_bucketed(df, "t", bucket_by=["a", "b"])
-    with pytest.raises(ValueError, match="exactly one bucket"):
-        cat.write_bucketed(df, "t", bucket_by=["a"], sort_by=["b"])
 
 
 def test_masking_does_not_change_projection_schema(spark, pages):

@@ -39,16 +39,6 @@ def test_regex_extract_stats_prunes_scan_columns(spark):
     assert "lang" not in read and "source" not in read and "n_chars" not in read
 
 
-def test_duplicate_clusters_is_partial_plus_final_agg(spark):
-    from slowspark.textops import duplicate_clusters
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = _plan(duplicate_clusters(docs))
-    # map-side combine: two HashAggregates around exactly one shuffle
-    assert plan.count("HashAggregate") == 2
-    assert plan.count("Exchange") == 1
-
-
 def test_parse_census_has_no_shuffle_before_python_stage(spark):
     """The parse is narrow: the ONLY Exchange in scan -> parse -> census is
     the tiny post-parse aggregation shuffle."""
@@ -123,35 +113,6 @@ def test_manku_simhash_join_is_key_equijoin(spark):
     assert "Cartesian" not in plan
     # the join keys are (tbl, tkey) — an equi-join, hash or sort-merge
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed identically on the join key: the SortMergeJoin
-    must read the bucketing metadata and plan with ZERO Exchange — the
-    pre-pay-the-shuffle-once pattern for repeatedly-joined fact tables."""
-    from slowspark.catalog import Catalog
-
-    cat = Catalog(str(tmp_path))
-    a = spark.range(0, 2000).selectExpr("id AS k", "id * 2 AS va")
-    b = spark.range(0, 2000).selectExpr("id AS k", "id * 3 AS vb")
-    cat.write_bucketed(a, "bt_a", ["k"], n_buckets=4, sort_by=["k"])
-    cat.write_bucketed(b, "bt_b", ["k"], n_buckets=4, sort_by=["k"])
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # read through Catalog.read, not spark.table directly: the reader
-        # must resolve metastore-registered names via the catalog (a path
-        # load silently drops the bucketing metadata and re-introduces the
-        # Exchange this feature exists to avoid)
-        joined = cat.read(spark, "bt_a").join(cat.read(spark, "bt_b"), "k")
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert joined.count() == 2000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bt_a")
-        spark.sql("DROP TABLE IF EXISTS bt_b")
 
 
 def test_incremental_simhash_probe_prunes_index_columns(spark, tmp_path):
@@ -681,6 +642,103 @@ def test_no_direct_create_dataframe():
             ):
                 hits.append(f"{os.path.relpath(path, here)}:{node.lineno}")
     assert not hits, f"createDataFrame outside util.local_frame: {hits}"
+
+
+# Unreached library defs that stay, each with the reason it stays.
+_REACH_KEEP = {
+    "aggregate.sql_type_census": "the reference's examples/iterator.rs fold",
+    "bpe.decode_token": "tests decode byte-level tokens with it",
+    "bpe.unicode_to_bytes": "decode_token's byte table",
+    "gen.expected_kind_counts": "the analytic census tests compare against",
+    "grammar.canonical_sql": "tests build expected fingerprints with it",
+    "grammar.mask_fingerprint": "tests build expected fingerprints with it",
+    "parse.split_errors": "tests split parse errors from entries with it",
+    "qualityclf.classifier_accuracy": "tests score the trained classifier",
+    "qualityclf.sigmoid": "tests build expected scores with it",
+    "similarity.ivf_topk": "the exact reference for ivfpq_topk's tests",
+    "similarity.sq_query_code": "tests build expected SQ8 codes with it",
+    "skew.salted_repartition": "BASELINE north_star names it",
+    "sources.read_slow_logs": "the reference's raw slow-log file input",
+    "textops.simhash_bucket_histogram": "capped_by_bucket's warning names it",
+}
+
+
+def test_every_library_function_is_reached():
+    """Every def in slowspark/ is reached by name from a root, or is on
+    _REACH_KEEP with a reason. Roots: the driver contract, the bench
+    scripts, perfbench/ and scripts/, module-level code in slowspark/ (the
+    job and curate mains), and the streaming mode's entry points. A def is
+    reached when a reached body names it: a Name, an attribute, an import,
+    or a whole string (queries() names its operators by string). Methods
+    count as Class.method; dunder methods belong to their class. A new
+    public def needs a root that calls it or a keep-list reason."""
+    import ast
+    import glob
+
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    streaming = {
+        "start_curate_ingest", "read_page_stream", "parse_stream",
+        "start_fanout_sink", "windowed_kind_counts", "dedup_stream",
+        "sessionize_stream", "windowed_hll_registers",
+    }
+
+    def names(nodes):
+        out = set()
+        for node in nodes:
+            for n in ast.walk(node):
+                if isinstance(n, ast.Name):
+                    out.add(n.id)
+                elif isinstance(n, ast.Attribute):
+                    out.add(n.attr)
+                elif isinstance(n, ast.alias):
+                    out.add(n.name.split(".")[-1])
+                elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                    out.add(n.value)
+        return out
+
+    fn_types = (ast.FunctionDef, ast.AsyncFunctionDef)
+    defs = {}  # qualified name -> (bare name, names its body references)
+    roots = set(streaming)
+    for path in sorted(glob.glob(os.path.join(here, "slowspark", "*.py"))):
+        mod = os.path.basename(path)[:-3]
+        for st in ast.parse(open(path).read(), path).body:
+            if isinstance(st, fn_types):
+                defs[f"{mod}.{st.name}"] = (st.name, names([st]) - {st.name})
+                roots |= names(st.decorator_list)
+            elif isinstance(st, ast.ClassDef):
+                body = []
+                for b in st.body:
+                    if isinstance(b, fn_types) and not b.name.startswith("__"):
+                        defs[f"{mod}.{st.name}.{b.name}"] = (
+                            b.name, names([b]) - {b.name}
+                        )
+                    else:
+                        body.append(b)
+                defs[f"{mod}.{st.name}"] = (st.name, names(body))
+            else:
+                roots |= names([st])
+    entry_files = [
+        os.path.join(here, f)
+        for f in ("__spark_entry__.py", "bench.py", "bench_extra.py")
+    ]
+    entry_files += glob.glob(os.path.join(here, "perfbench", "*.py"))
+    entry_files += glob.glob(os.path.join(here, "scripts", "*.py"))
+    for path in entry_files:
+        roots |= names([ast.parse(open(path).read(), path)])
+
+    by_name = {}
+    for q, (bare, _) in defs.items():
+        by_name.setdefault(bare, []).append(q)
+    reached, frontier = set(), set(roots)
+    while frontier:
+        for q in by_name.get(frontier.pop(), ()):
+            if q not in reached:
+                reached.add(q)
+                frontier |= defs[q][1]
+    unreached = sorted(set(defs) - reached - set(_REACH_KEEP))
+    assert not unreached, f"defs no root reaches: {unreached}"
+    stale = sorted(q for q in _REACH_KEEP if q not in defs or q in reached)
+    assert not stale, f"keep-list entries gone or now reached: {stale}"
 
 
 def test_local_frame_matches_list_frame_as_local_relation(spark):

@@ -157,30 +157,3 @@ def test_build_index_matches_adhoc_and_probe_has_no_postings_aggregate(
     # ad-hoc: query tokenize + THREE corpus re-tokenizes (postings,
     # dfreq, doclens/corpus)
     assert adhoc_final.count("Generate explode") == 4
-
-
-def test_write_postings_store_probe_prunes_partitions(spark, corpus, tmp_path):
-    """The persisted store is term-bucket partitioned; a probe reads
-    only the buckets its query terms hash into (partition pruning in
-    the scan) and returns the same rows as the in-memory path."""
-    from slowspark.retrieval import (
-        bm25_topk_from_store, build_index, write_postings,
-    )
-
-    q = spark.createDataFrame(
-        [("q1", "spark query")], "query_id string, query_text string"
-    )
-    postings, term_stats, corpus_stats = build_index(corpus)
-    path = str(tmp_path / "bm25_store")
-    write_postings(postings, term_stats, corpus_stats, path, n_buckets=16)
-    got = bm25_topk_from_store(spark, path, q, n_buckets=16, topk=10)
-    want = bm25_topk(
-        postings, q, topk=10, term_stats=term_stats,
-        corpus_stats=corpus_stats,
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-    # the scan's partition filter must name term_bucket (pruned probe)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "term_bucket" in plan.split("PartitionFilters")[1].split("]")[0]

@@ -9,20 +9,8 @@ from pyspark.sql import functions as F
 from slowspark.sketch import (
     build_cms,
     cms_heavy_hitters,
-    cms_params,
     cms_query,
-    merge_cms,
 )
-
-
-def test_cms_params_textbook():
-    d, w = cms_params(0.01, 0.01)
-    assert d == math.ceil(math.log(100))  # 5
-    assert w == math.ceil(math.e / 0.01)  # 272
-    with pytest.raises(ValueError, match="epsilon"):
-        cms_params(0, 0.1)
-    with pytest.raises(ValueError, match="delta"):
-        cms_params(0.1, 1.0)
 
 
 @pytest.fixture(scope="module")
@@ -57,22 +45,6 @@ def test_cms_exact_at_generous_width(spark, stream):
     ).collect()
     assert len(out) == 50
     assert all(r["cms_est"] == r["exact"] for r in out)
-
-
-def test_cms_merge_equals_whole(spark, stream):
-    d, w = 4, 256
-    rows = [r["term"] for r in stream.collect()]
-    a = rows[:600]
-    b = rows[600:]
-    df_a = spark.createDataFrame([(t,) for t in a], "term string")
-    df_b = spark.createDataFrame([(t,) for t in b], "term string")
-    merged = merge_cms(
-        build_cms(df_a, "term", d, w), build_cms(df_b, "term", d, w)
-    )
-    whole = build_cms(stream, "term", d, w)
-    got = {(r["j"], r["col"]): r["c"] for r in merged.collect()}
-    want = {(r["j"], r["col"]): r["c"] for r in whole.collect()}
-    assert got == want
 
 
 def test_cms_cell_bound(spark, stream):
@@ -126,21 +98,6 @@ def test_kmv_estimate_accuracy_and_groups(spark):
     }
     for g in ("g0", "g1"):
         assert 350 <= est[g] <= 700  # ~1/sqrt(k) ≈ 12.5% rel error, loose x3
-
-
-def test_kmv_merge_equals_whole(spark):
-    from slowspark.sketch import kmv_sketch, merge_kmv
-
-    rows = [(f"val{i}",) for i in range(300)]
-    df = spark.createDataFrame(rows, "term string")
-    a = spark.createDataFrame(rows[:150], "term string")
-    b = spark.createDataFrame(rows[100:], "term string")  # overlapping
-    k = 32
-    merged = merge_kmv(k, kmv_sketch(a, "term", k), kmv_sketch(b, "term", k))
-    whole = kmv_sketch(df, "term", k)
-    assert {(r["h"], r["rk"]) for r in merged.collect()} == {
-        (r["h"], r["rk"]) for r in whole.collect()
-    }
 
 
 def test_kmv_bad_k(spark):
@@ -244,7 +201,6 @@ def test_hll_index_roundtrip_replay_and_compaction(spark, tmp_path):
     from slowspark.sketch import (
         append_to_hll_index,
         build_hll_index,
-        compact_hll_index,
         hll_index_estimate,
         hll_sketch,
         hll_estimate,
@@ -263,9 +219,3 @@ def test_hll_index_roundtrip_replay_and_compaction(spark, tmp_path):
     # replaying the SAME append changes nothing (idempotent by algebra)
     append_to_hll_index(b, idx, "t", p)
     assert hll_index_estimate(spark, idx, p).collect()[0]["hll_est"] == want
-    # compaction: merged table, identical estimate, <= m rows
-    cidx = str(tmp_path / "hll_c")
-    compact_hll_index(spark, idx, cidx, p)
-    regs = spark.read.parquet(f"{cidx}/regs")
-    assert regs.count() <= (1 << p)
-    assert hll_index_estimate(spark, cidx, p).collect()[0]["hll_est"] == want

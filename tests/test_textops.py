@@ -39,11 +39,6 @@ def test_exact_dedup(docs, docs_with_dupes):
     ).count() == 0
 
 
-def test_duplicate_clusters(docs_with_dupes):
-    clusters = textops.duplicate_clusters(docs_with_dupes)
-    assert clusters.filter(F.col("n_dupes") == 2).count() == 20
-
-
 def test_minhash_dedup_removes_near_dupes(docs, docs_with_dupes):
     deduped = textops.minhash_dedup(
         docs_with_dupes, jaccard_threshold=0.6, n_perm=64, bands=16
@@ -132,17 +127,6 @@ def test_term_stats(spark):
     # two-level aggregation: repeats collapse map-side before the shuffle
     plan = textops.term_stats(df)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("HashAggregate") >= 4  # partial+final at both levels
-
-
-def test_doc_fingerprint_normalizes_whitespace(spark):
-    df = spark.createDataFrame(
-        [(1, "Hello   World"), (2, "hello world"), (3, "something else")],
-        "doc_id long, text string",
-    )
-    rows = textops.doc_fingerprint(df).collect()
-    fp = {r["doc_id"]: r["doc_fp"] for r in rows}
-    assert fp[1] == fp[2]
-    assert fp[1] != fp[3]
 
 
 def test_simhash_candidates_match_bruteforce_oracle(spark, docs_with_dupes):
@@ -1008,23 +992,6 @@ def test_connected_min_labels_rejects_nonpositive_max_iters(spark):
         textops.connected_min_labels(pairs, max_iters=0)
 
 
-def test_capped_by_bucket_lazy_when_logging_off(spark):
-    """log_drops=False must keep the plan fully lazy (no eager stats job):
-    pin it by capping an un-computable source — a UDF that would raise if
-    any job ran."""
-    from pyspark.sql import functions as F
-
-    from slowspark.util import capped_by_bucket
-
-    @F.udf("long")
-    def boom(x):
-        raise RuntimeError("must not execute at plan-construction time")
-
-    df = spark.range(10).select(boom("id").alias("k"), "id")
-    out = capped_by_bucket(df, ["k"], 3, "lazy-test", log_drops=False)
-    assert out.columns == ["k", "id"]  # plan built, nothing executed
-
-
 def test_bucket_cap_reachable_from_public_dedup_apis(spark, caplog):
     """max_bucket_size must thread end-to-end through the four public dedup
     entry points, and capped drops must be LOGGED (no silent caps).
@@ -1173,17 +1140,6 @@ def test_dedup_by_pairs_quality_keeper(spark):
     # degenerate: empty pair set keeps everything
     nopairs = spark.createDataFrame([], "id_a long, id_b long")
     assert textops.dedup_by_pairs_quality(docs, nopairs, "q").count() == 6
-
-
-def test_exact_dedup_quality_keeper(spark):
-    docs = spark.createDataFrame(
-        [(1, "same", 1.0), (2, "same", 7.0), (3, "same", 7.0),
-         (4, "other", None)],
-        "doc_id long, text string, q double",
-    )
-    kept = {r["doc_id"]
-            for r in textops.exact_dedup_quality(docs, "q").collect()}
-    assert kept == {2, 4}
 
 
 # ----------------------------------------------------------- pmi_pairs

@@ -12,8 +12,6 @@ from pyspark.sql import functions as F
 
 from slowspark.unigramlm import (
     UNK_LOGP,
-    load_model,
-    save_model,
     seed_pieces,
     unigram_segment_counts,
     unigram_train,
@@ -139,14 +137,6 @@ def test_save_load_roundtrip(spark, tmp_path):
     )
     m = unigram_train(df, vocab_size=8, n_rounds=1, max_piece_len=2,
                       seed_size=10)
-    p = str(tmp_path / "uni")
-    save_model(m, p)
-    m2 = load_model(spark, p)
-    assert sorted(map(tuple, m.collect())) == sorted(map(tuple, m2.collect()))
-    bad = str(tmp_path / "bad")
-    m.select("piece").write.parquet(bad)
-    with pytest.raises(ValueError, match="lacks"):
-        load_model(spark, bad)
     with pytest.raises(ValueError, match="vocab_size"):
         unigram_train(df, vocab_size=0)
 

@@ -4701,16 +4701,12 @@ def _personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r.select("node", F.round("rank", 6).alias("rank"))
 
 
-def _host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-level crawl ranking (graph.host_graph + weighted pagerank):
-    page-URL edges (same affine targets as _link_edges, materialized as
-    urls via a documents self-join) collapse to the host graph — one
-    weighted edge per (src host, dst host), intra-host links dropped —
-    then 3 weighted PageRank iterations rank the hosts. The oracle
-    rebuilds the page edges, the host collapse, and the weighted
-    updates (rank * w / out-weight)."""
-    from slowspark.graph import host_graph, pagerank
-
+def _host_page_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst) page-URL edges of the host-graph queries: the affine
+    targets of _link_edges (doc_id*7+1 and doc_id*13+5 mod n, every
+    doc_id%10 != 0 linking, self-links dropped) with both ends
+    materialized as https://<source>.example.com/p/<doc_id> urls via a
+    documents self-join."""
     d = _read(spark, sf_dir, "documents").select("doc_id", "source")
     n = d.count()
     pages = d.select(
@@ -4741,6 +4737,20 @@ def _host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("src", "dst")
         )
         pe = j if pe is None else pe.unionByName(j)
+    return pe
+
+
+def _host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-level crawl ranking (graph.host_graph + weighted pagerank):
+    page-URL edges (same affine targets as _link_edges, materialized as
+    urls via a documents self-join) collapse to the host graph — one
+    weighted edge per (src host, dst host), intra-host links dropped —
+    then 3 weighted PageRank iterations rank the hosts. The oracle
+    rebuilds the page edges, the host collapse, and the weighted
+    updates (rank * w / out-weight)."""
+    from slowspark.graph import host_graph, pagerank
+
+    pe = _host_page_edges(spark, sf_dir)
     r = pagerank(host_graph(pe), n_iter=3, weight_col="weight")
     return r.select("node", F.round("rank", 6).alias("rank"))
 
@@ -4766,36 +4776,7 @@ def _host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     as hits_scores with weighted sums (w * hub / w * authority)."""
     from slowspark.graph import hits, host_graph
 
-    d = _read(spark, sf_dir, "documents").select("doc_id", "source")
-    n = d.count()
-    pages = d.select(
-        "doc_id",
-        F.concat(
-            F.lit("https://"), F.col("source"), F.lit(".example.com/p/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url"),
-    )
-    linkers = d.filter(F.col("doc_id") % 10 != 0)
-    pe = None
-    for k, c in ((7, 1), (13, 5)):
-        j = (
-            linkers.select(
-                "doc_id", ((F.col("doc_id") * k + c) % n).alias("__dst_id")
-            )
-            .filter(F.col("doc_id") != F.col("__dst_id"))
-            .join(
-                pages.select(
-                    F.col("doc_id").alias("__dst_id"),
-                    F.col("url").alias("dst"),
-                ),
-                "__dst_id",
-            )
-            .join(
-                pages.select("doc_id", F.col("url").alias("src")), "doc_id"
-            )
-            .select("src", "dst")
-        )
-        pe = j if pe is None else pe.unionByName(j)
+    pe = _host_page_edges(spark, sf_dir)
     s = hits(host_graph(pe), n_iter=3, weight_col="weight")
     return s.select(
         "node",

@@ -32,14 +32,13 @@ from slowspark.catalog import Catalog
 
 
 def _hash_sum(cols: list[Column]) -> Column:
-    """SUM of per-row xxhash64 over `cols` cast to string. Sum — not xor —
-    because xor cancels duplicate rows pairwise (two identical rows hash
-    like zero rows), which would silently pass a corrupted aggregate output
-    that happened to duplicate a row; sum counts multiplicity. The sum runs
-    in decimal(38,0) so ANSI mode can't overflow; `_mod64` reduces it."""
-    return F.sum(
-        F.xxhash64(*[c.cast("string") for c in cols]).cast("decimal(38,0)")
-    )
+    """SUM of per-row xxhash64 over `cols` (stage hashes pass them cast to
+    string). Sum — not xor — because xor cancels duplicate rows pairwise
+    (two identical rows hash like zero rows), which would silently pass a
+    corrupted aggregate output that happened to duplicate a row; sum
+    counts multiplicity. The sum runs in decimal(38,0) so ANSI mode can't
+    overflow; `_mod64` reduces it."""
+    return F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))
 
 
 def _mod64(s) -> int:
@@ -51,7 +50,9 @@ def content_hash(df: DataFrame, cols: list[str] | None = None) -> int:
     columns, all of them by default. Runs one aggregate job; run_stage
     gets the same value from its write instead."""
     cols = cols or df.columns
-    s = df.agg(_hash_sum([F.col(c) for c in cols]).alias("s")).first()["s"]
+    s = df.agg(
+        _hash_sum([F.col(c).cast("string") for c in cols]).alias("s")
+    ).first()["s"]
     return _mod64(s)
 
 
@@ -114,9 +115,11 @@ def run_stage(
     # hash the values a read of the table returns: a Hive partition
     # directory stores "" as null
     read_back = [
-        F.nullif(F.col(c), F.lit(""))
-        if c in partition_by and isinstance(schema[c].dataType, T.StringType)
-        else F.col(c)
+        (
+            F.nullif(F.col(c), F.lit(""))
+            if c in partition_by and isinstance(schema[c].dataType, T.StringType)
+            else F.col(c)
+        ).cast("string")
         for c in hash_cols or schema.names
     ]
     stats = Observation()

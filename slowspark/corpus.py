@@ -241,6 +241,53 @@ def passage_dedup(
     return out
 
 
+def _bigram_trunk(df, text_col, id_col, model_df):
+    """The shared trunk of the bigram LMs (stupid_backoff_logprob,
+    kneser_ney_logprob): (toks, pairs, mtoks, big) where toks = (id, tk)
+    lowercased whitespace tokens of `df`, pairs = (id, w1, w2) one row per
+    bigram position of `df`, mtoks = (tk) tokens of the model corpus
+    (`model_df`, or `df` itself when None) and big = (w1, w2, cb) the
+    model's bigram counts, one map-side-combined groupBy. Bigrams come
+    from a transform/slice expression, no self-join. Each LM chooses what
+    to materialize."""
+    tk = F.array_remove(
+        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), ""
+    ).alias("tk")
+
+    def bigrams(t, *keep):
+        return t.filter(F.size("tk") >= 2).select(
+            *keep,
+            F.explode(
+                F.expr(
+                    "transform(slice(tk, 1, greatest(size(tk) - 1, 0)),"
+                    " (t, i) -> struct(t AS w1, tk[i + 1] AS w2))"
+                )
+            ).alias("p"),
+        ).select(*keep, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+
+    toks = df.select(F.col(id_col), tk)
+    mtoks = (df if model_df is None else model_df).select(tk)
+    big = bigrams(mtoks).groupBy("w1", "w2").agg(F.count("*").alias("cb"))
+    return toks, bigrams(toks, id_col), mtoks, big
+
+
+def _bigram_doc_scores(scored, toks, id_col) -> DataFrame:
+    """The shared per-doc tail of the bigram LMs: (id, n_bigrams,
+    avg_neg_logprob) = avg over the doc's bigram positions of -ln s,
+    rounded to 6 (only the avg carries sum-order jitter, under that
+    grain), plus one (id, 0, 0.0) row per doc with < 2 tokens."""
+    per_doc = scored.groupBy(id_col).agg(
+        F.count("*").alias("n_bigrams"),
+        F.round(F.avg(-F.log("s")), 6).alias("avg_neg_logprob"),
+    )
+    short = toks.filter(F.size("tk") < 2).select(
+        F.col(id_col),
+        F.lit(0).cast("long").alias("n_bigrams"),
+        F.lit(0.0).alias("avg_neg_logprob"),
+    )
+    return per_doc.unionByName(short)
+
+
 def stupid_backoff_logprob(
     df: DataFrame,
     text_col: str = "text",
@@ -280,35 +327,9 @@ def stupid_backoff_logprob(
     S is a ratio of exact integer counts — engine-reproducible; only
     the final avg carries float sum-order jitter, under the round-6
     grain."""
-    toks = df.select(
-        F.col(id_col),
-        F.array_remove(
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), ""
-        ).alias("tk"),
-    )
-    pairs = (
-        toks.filter(F.size("tk") >= 2)
-        .select(
-            id_col,
-            F.explode(
-                F.expr(
-                    "transform(slice(tk, 1, greatest(size(tk) - 1, 0)),"
-                    " (t, i) -> struct(t AS w1, tk[i + 1] AS w2))"
-                )
-            ).alias("p"),
-        )
-        .select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    )
-    mtoks = (
-        (df if model_df is None else model_df)
-        .select(
-            F.array_remove(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), ""
-            ).alias("tk")
-        )
-    )
     from slowspark.util import materialize as _materialize
 
+    toks, pairs, mtoks, big = _bigram_trunk(df, text_col, id_col, model_df)
     # vocabulary-sized; materialized because THREE consumers (the total
     # scalar + the cu1/cu2 scoring joins) otherwise each re-run the
     # model tokenize + explode + groupBy (r9)
@@ -318,20 +339,6 @@ def stupid_backoff_logprob(
         .agg(F.count("*").alias("cu"))
     )
     total = uni.agg(F.sum("cu").cast("double").alias("N"))
-    big = (
-        mtoks.filter(F.size("tk") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(slice(tk, 1, greatest(size(tk) - 1, 0)),"
-                    " (t, i) -> struct(t AS w1, tk[i + 1] AS w2))"
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("cb"))
-    )
     scored = (
         pairs.join(big, ["w1", "w2"], "left")
         .join(
@@ -357,19 +364,7 @@ def stupid_backoff_logprob(
             .alias("s"),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
-        F.count("*").alias("n_bigrams"),
-        F.round(F.avg(-F.log("s")), 6).alias("avg_neg_logprob"),
-    )
-    short = (
-        toks.filter(F.size("tk") < 2)
-        .select(
-            F.col(id_col),
-            F.lit(0).cast("long").alias("n_bigrams"),
-            F.lit(0.0).alias("avg_neg_logprob"),
-        )
-    )
-    return per_doc.unionByName(short)
+    return _bigram_doc_scores(scored, toks, id_col)
 
 
 def kneser_ney_logprob(
@@ -416,7 +411,7 @@ def kneser_ney_logprob(
     perplexity_buckets(scored=...) and curate's --ppl-scorer; documents
     with < 2 tokens return n_bigrams = 0, avg_neg_logprob = 0.0.
 
-    Scale shape: identical to the stupid-backoff sibling plus two
+    Scale shape: the stupid-backoff sibling's trunk (_bigram_trunk) plus two
     bounded aggregates — the bigram table is computed once and reused
     for the forward/backward type counts (both map-side-combined
     groupBys over the already-aggregated bigram TYPES, not the token
@@ -432,48 +427,12 @@ def kneser_ney_logprob(
         raise ValueError(
             f"kneser_ney_logprob: discount must be in (0, 1), got {discount}"
         )
-    toks = df.select(
-        F.col(id_col),
-        F.array_remove(
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), ""
-        ).alias("tk"),
-    )
-    pairs = (
-        toks.filter(F.size("tk") >= 2)
-        .select(
-            id_col,
-            F.explode(
-                F.expr(
-                    "transform(slice(tk, 1, greatest(size(tk) - 1, 0)),"
-                    " (t, i) -> struct(t AS w1, tk[i + 1] AS w2))"
-                )
-            ).alias("p"),
-        )
-        .select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    )
-    mtoks = (df if model_df is None else model_df).select(
-        F.array_remove(
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), ""
-        ).alias("tk")
-    )
-    big = _materialize(
-        mtoks.filter(F.size("tk") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(slice(tk, 1, greatest(size(tk) - 1, 0)),"
-                    " (t, i) -> struct(t AS w1, tk[i + 1] AS w2))"
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("cb"))
-    )
-    # bigram-TYPE-sized (the model itself); materialized above because
+    toks, pairs, _, big = _bigram_trunk(df, text_col, id_col, model_df)
+    # bigram-TYPE-sized (the model itself); materialized because
     # FOUR consumers (fw, bw, the (B, n1, n2) scalar, and the scoring
     # join) would otherwise each re-run the model tokenize + bigram
     # groupBy
+    big = _materialize(big)
     fw = big.groupBy("w1").agg(
         F.count("*").alias("nf"), F.sum("cb").alias("cfw")
     )
@@ -509,16 +468,7 @@ def kneser_ney_logprob(
             F.when(F.col("cfw").isNotNull(), seen).otherwise(pc).alias("s"),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
-        F.count("*").alias("n_bigrams"),
-        F.round(F.avg(-F.log("s")), 6).alias("avg_neg_logprob"),
-    )
-    short = toks.filter(F.size("tk") < 2).select(
-        F.col(id_col),
-        F.lit(0).cast("long").alias("n_bigrams"),
-        F.lit(0.0).alias("avg_neg_logprob"),
-    )
-    return per_doc.unionByName(short)
+    return _bigram_doc_scores(scored, toks, id_col)
 
 
 def unigram_logprob(

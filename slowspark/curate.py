@@ -38,11 +38,11 @@ import json
 import os
 import sys
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from slowspark.catalog import Catalog
-from slowspark.checkpoint import run_stage
-from slowspark.util import logger
+from slowspark.checkpoint import _hash_sum, run_stage
+from slowspark.util import fs_listing_stamp, logger
 from slowspark.corpus import (
     hash_sample,
     pack_sequences,
@@ -56,6 +56,17 @@ _RULE_COLS = (
     "rule_word_count", "rule_mean_word_len", "rule_symbol_ratio",
     "rule_digit_ratio", "rule_stopwords",
 )
+
+
+def _content_sig(df: DataFrame, *cols: Column) -> str:
+    """`n:h` — the row count and checkpoint._hash_sum over `cols` (0 for
+    no rows) of a side input, so its CONTENT joins the resume signature
+    and a changed table misses the resume. One aggregate job."""
+    r = df.agg(
+        F.count("*").alias("n"),
+        F.coalesce(_hash_sum(list(cols)), F.lit(0)).alias("h"),
+    ).first()
+    return f"{r['n']}:{r['h']}"
 
 
 def run_curation(
@@ -378,20 +389,13 @@ def run_curation(
         )
     cat = Catalog(warehouse)
     if eval_df is not None:
-        # sum in decimal(38,0): a long sum of xxhash64 values overflows
-        # (and raises under ANSI mode) as soon as a couple of rows share
-        # a sign; decimal keeps the content hash exact at any row count
-        ev = eval_df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("text").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).first()
         fz = (
             f"{fuzzy_decontaminate_threshold}:{fuzzy_decontaminate_ngram}"
             if fuzzy_decontaminate_threshold is not None else "off"
         )
-        eval_sig = f"{decontaminate_ngram}:{fz}:{ev['n']}:{ev['h']}"
+        eval_sig = (
+            f"{decontaminate_ngram}:{fz}:{_content_sig(eval_df, F.col('text'))}"
+        )
     else:
         eval_sig = "0"
     rates_sig = ",".join(
@@ -411,34 +415,17 @@ def run_curation(
         ]
         if semantic_cells_df is not None:
             hash_cols.append(F.col("ivf_cell").cast("string"))
-        eh = sem_src.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64(*hash_cols).cast("decimal(38,0)")),
-                F.lit(0),
-            ).alias("h"),
-        ).first()
         sem_sig = (
             f"{semantic_n_clusters}:{semantic_threshold}"
-            f":{int(semantic_cells_df is not None)}:{eh['n']}:{eh['h']}"
+            f":{int(semantic_cells_df is not None)}"
+            f":{_content_sig(sem_src, *hash_cols)}"
         )
     else:
         sem_sig = "0"
     if quality_coeffs_df is not None:
-        qh = quality_coeffs_df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(
-                    F.xxhash64(
-                        F.col("bucket").cast("string"),
-                        F.col("weight").cast("string"),
-                    ).cast("decimal(38,0)")
-                ),
-                F.lit(0),
-            ).alias("h"),
-        ).first()
-        qc_sig = (
-            f"{quality_threshold}:{quality_n_buckets}:{qh['n']}:{qh['h']}"
+        qc_sig = f"{quality_threshold}:{quality_n_buckets}:" + _content_sig(
+            quality_coeffs_df,
+            F.col("bucket").cast("string"), F.col("weight").cast("string"),
         )
     else:
         qc_sig = "0"
@@ -447,26 +434,15 @@ def run_curation(
             f"run_curation: ppl_scorer must be 'unigram', 'bigram', or"
             f" 'kneser_ney', got {ppl_scorer!r}"
         )
-    if ppl_model_df is not None:
-        pm = ppl_model_df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("text").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).first()
-        ppl_model_sig = f"{pm['n']}:{pm['h']}"
-    else:
-        ppl_model_sig = "self"
+    ppl_model_sig = (
+        _content_sig(ppl_model_df, F.col("text"))
+        if ppl_model_df is not None else "self"
+    )
     if dsir_target_df is not None:
-        dt = dsir_target_df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("text").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).first()
         dsir_sig = (
             f"{dsir_k}:{dsir_buckets}:{dsir_alpha}"
-            f":{int(dsir_length_normalize)}:{dt['n']}:{dt['h']}"
+            f":{int(dsir_length_normalize)}"
+            f":{_content_sig(dsir_target_df, F.col('text'))}"
         )
     else:
         dsir_sig = "off"
@@ -475,16 +451,7 @@ def run_curation(
             F.col("fingerprint") if "fingerprint" in delta_old_df.columns
             else F.md5("text")
         )
-        dd = delta_old_df.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(
-                    F.xxhash64(F.col("url"), fp).cast("decimal(38,0)")
-                ),
-                F.lit(0),
-            ).alias("h"),
-        ).first()
-        delta_sig = f"{dd['n']}:{dd['h']}"
+        delta_sig = _content_sig(delta_old_df, F.col("url"), fp)
     else:
         delta_sig = "off"
     sig = (
@@ -1459,6 +1426,7 @@ def main(argv: list[str] | None = None) -> int:
         tables = run_curation(
             spark, docs, args.warehouse,
             f"path:{args.input}:{args.input_format}"
+            f":files={fs_listing_stamp(spark, args.input)}"
             f":ni={int(args.respect_noindex)}"
             f":mc={int(args.main_content)}",
             min_words=args.min_words,

@@ -29,6 +29,7 @@ from slowspark.parse import parse_pages
 from slowspark.route import SINK_NAMES, route
 from slowspark.session import get_spark
 from slowspark.sources import read_pages
+from slowspark.util import fs_listing_stamp
 
 
 def run_pipeline(
@@ -106,8 +107,13 @@ def main(argv: list[str] | None = None) -> int:
             pages = gen_pages(spark, args.n_pages)
             sig = f"gen:{args.n_pages}"
         elif args.pages:
-            pages = read_pages(spark, args.pages, Catalog(args.warehouse).fmt)
+            fmt = Catalog(args.warehouse).fmt
+            pages = read_pages(spark, args.pages, fmt)
             sig = f"path:{args.pages}"
+            if fmt != "iceberg":
+                # a table name has no file listing; a path's files are
+                # stamped so a rewrite at the same path misses the resume
+                sig += f":files={fs_listing_stamp(spark, args.pages)}"
         else:
             p.error("one of --pages / --n-pages required")
         tables = run_pipeline(spark, pages, args.warehouse, sig, args.masking)

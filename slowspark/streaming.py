@@ -246,9 +246,9 @@ def curate_ingest_batch(
     """One epoch of the continuous-ingest curation flow (the foreachBatch
     body of start_curate_ingest, factored out so tests and backfills can
     drive it directly): quality filter -> in-batch exact dedup ->
-    near-dup dedup against the persisted MinHash index (corpus priority;
-    the index is built from the first epoch if absent) -> write accepted
-    docs to an epoch-keyed sink -> append them to the index.
+    near-dup dedup against the persisted MinHash or SimHash index (corpus
+    priority; the index is built from the first epoch if absent) -> write
+    accepted docs to an epoch-keyed sink -> append them to the index.
 
     Replay contract (foreachBatch is at-least-once; the checkpoint replays
     a failed epoch with the SAME epoch_id):
@@ -272,11 +272,14 @@ def curate_ingest_batch(
 
     `method` selects the near-dup semantics — "minhash" (Jaccard over
     shingles, `jaccard_threshold`) or "simhash" (hamming distance,
-    `max_hamming`) — dispatching to the matching persisted-index family
-    (build/incremental/append_*_{minhash,simhash}_*). Both families share
-    the identical lifecycle contract (sigs table with the id column,
-    keys-written-before-sigs appends, candidate-DISTINCT neutralization),
-    so the epoch/marker/anti-join machinery here is method-agnostic; an
+    `max_hamming`) — dispatching to the matching public textops names
+    (build/incremental/append_*_{minhash,simhash}_*, looked up at call
+    time). Both are one index core in textops: one layout
+    (INDEX_LAYOUT: the `sigs` table plus the method's key table, whose
+    _SUCCESS marks a completed build), one write path
+    (sigs-before-keys builds, keys-before-sigs appends), one probe
+    (candidate DISTINCT before the sig joins), so the epoch/marker/
+    anti-join machinery here is method-agnostic; an
     index built with one method must never be probed with the other —
     the index carries a `_method` stamp (written BEFORE the first build,
     so no crash window leaves a built index unstamped) and a mismatching
@@ -285,6 +288,8 @@ def curate_ingest_batch(
     REBUILD over it — data loss, not an error)."""
     from slowspark.corpus import quality_filter_flags
     from slowspark.textops import (
+        INDEX_LAYOUT,
+        INDEX_SIGS,
         append_to_minhash_index,
         append_to_simhash_index,
         build_minhash_index,
@@ -303,7 +308,6 @@ def curate_ingest_batch(
     )
 
     if method == "minhash":
-        key_table = "bands"
         _build = lambda df: build_minhash_index(df, index_path)
         _append = lambda df: append_to_minhash_index(df, index_path)
         _incremental = lambda df: incremental_dedup(
@@ -315,7 +319,6 @@ def curate_ingest_batch(
             max_bucket_size=max_bucket_size,
         )
     elif method == "simhash":
-        key_table = "tables"
         _build = lambda df: build_simhash_index(df, index_path)
         _append = lambda df: append_to_simhash_index(df, index_path)
         _incremental = lambda df: incremental_simhash_dedup(
@@ -332,6 +335,7 @@ def curate_ingest_batch(
         )
 
     spark = batch_df.sparkSession
+    key_table = INDEX_LAYOUT[method][0]
     method_stamp = f"{index_path}/_method"
     if fs_exists(spark, method_stamp):
         recorded = fs_read_text(spark, method_stamp).strip()
@@ -395,7 +399,9 @@ def curate_ingest_batch(
             # but incremental_near_dup_pairs would return duplicated pair
             # rows (its DISTINCT runs before the sig join). The anti-join
             # against the index's id column keeps the append idempotent.
-            idx_ids = spark.read.parquet(f"{index_path}/sigs").select("doc_id")
+            idx_ids = spark.read.parquet(
+                f"{index_path}/{INDEX_SIGS}"
+            ).select("doc_id")
             to_index = accepted.join(idx_ids, "doc_id", "left_anti")
         if index_exists:
             _append(to_index)

@@ -430,6 +430,14 @@ def dedup_by_pairs_quality(
     return df.join(losers, on=id_col, how="left_anti")
 
 
+# estimated Jaccard of two MinHash signatures sig_a, sig_b: the fraction
+# of matching minhashes
+_EST_JACCARD = (
+    "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) "
+    "/ cast(size(sig_a) as double)"
+)
+
+
 def minhash_estimated_pairs(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -452,14 +460,7 @@ def minhash_estimated_pairs(
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("signature").alias("sig_b"))
     return (
         cands.join(sa, "id_a").join(sb, "id_b")
-        .withColumn(
-            "est_jaccard",
-            F.expr(
-                "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) "
-                "/ cast(size(sig_a) as double)"
-            ),
-        )
-        .select("id_a", "id_b", "est_jaccard")
+        .select("id_a", "id_b", F.expr(_EST_JACCARD).alias("est_jaccard"))
     )
 
 
@@ -519,178 +520,6 @@ def minhash_dedup(
         max_bucket_size,
     )
     return dedup_by_pairs(df, pairs, id_col)
-
-
-# ---------------------------------------------------------------------------
-# Persisted MinHash index — incremental (new-batch-vs-corpus) dedup
-# ---------------------------------------------------------------------------
-
-def build_minhash_index(
-    df: DataFrame,
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_perm: int = _N_PERM_DEFAULT,
-    bands: int = 16,
-    shingle_k: int = 5,
-    sigs: DataFrame | None = None,
-) -> None:
-    """Persist a MinHash-LSH index for CONTINUOUS dedup: the signature
-    table plus the banded key table (partitioned by band_id — a probe
-    join's band_id equi-condition prunes to one directory per band).
-
-    The production ingest pattern: the corpus pays the signature UDF once
-    at index-build; every incremental batch signatures only ITS OWN
-    documents and probes the index with a band-keyed join — per-batch cost
-    is O(batch), never a corpus rescan. Growing the index after accepting
-    a batch is an append of the batch's sigs/band rows (mode='append' on
-    the same paths).
-
-    Pass `sigs` (a signature table already computed with the SAME
-    n_perm/shingle_k, e.g. shared with a batch dedup pass over the same
-    corpus) to skip the signature UDF entirely — the caller owns the
-    parameter-match guarantee."""
-    if sigs is None:
-        sigs = _materialize(
-            minhash_signatures(df, text_col, id_col, n_perm, shingle_k)
-        )
-    sigs.write.mode("overwrite").parquet(f"{index_path}/sigs")
-    (
-        band_keys(sigs, id_col, bands, n_perm // bands)
-        .write.mode("overwrite")
-        .partitionBy("band_id")
-        .parquet(f"{index_path}/bands")
-    )
-
-
-def append_to_minhash_index(
-    accepted_df: DataFrame,
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_perm: int = _N_PERM_DEFAULT,
-    bands: int = 16,
-    shingle_k: int = 5,
-) -> None:
-    """Grow a persisted MinHash index with an ACCEPTED batch (the rows
-    incremental_dedup returned): appends the batch's signature and band-key
-    rows to the same paths. Parameters must match the original
-    build_minhash_index call — band keys computed under different
-    n_perm/bands/shingle_k would silently never collide with the corpus's.
-
-    Crash-recovery contract: band rows are written BEFORE signature rows.
-    A crash between the two writes leaves band rows without signatures;
-    a sig-less doc produces NO pair from incremental_near_dup_pairs (the
-    candidate join is inner against the sigs table), so on replay it is
-    re-accepted and re-appended: its signature rows (written last, hence
-    absent after the crash) land exactly once, and the duplicate band
-    rows are neutralized by the candidate pipeline's DISTINCT. Replay
-    idempotency of the ACCEPTED SET therefore relies on the caller's
-    epoch-authoritative sink (curate_ingest_batch re-reads accepted rows
-    from the epoch's _SUCCESS-marked sink rather than recomputing); a
-    caller without such a sink will duplicate accepted rows on replay.
-    The reverse write order would strand signature-only docs whose
-    re-append duplicates sig rows — duplicated pair rows downstream.
-    (This is at-least-once plus dedup, not a transaction; a cluster
-    deployment that needs atomic appends should put both tables in one
-    Iceberg/Delta commit.)"""
-    sigs = _materialize(
-        minhash_signatures(accepted_df, text_col, id_col, n_perm, shingle_k)
-    )
-    (
-        band_keys(sigs, id_col, bands, n_perm // bands)
-        .write.mode("append")
-        .partitionBy("band_id")
-        .parquet(f"{index_path}/bands")
-    )
-    sigs.write.mode("append").parquet(f"{index_path}/sigs")
-
-
-def incremental_near_dup_pairs(
-    new_df: DataFrame,
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_perm: int = _N_PERM_DEFAULT,
-    bands: int = 16,
-    jaccard_threshold: float = 0.7,
-    shingle_k: int = 5,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """(new_id, corpus_id, est_jaccard) pairs between an incoming batch
-    and a persisted MinHash index (build_minhash_index) whose estimated
-    Jaccard clears the threshold. The batch side is signatured and banded
-    fresh; the index side is a parquet scan. The join is keyed on
-    (band_id, band_hash) — shuffle volume is O(batch bands + matching
-    index buckets), and `max_bucket_size` (logged drops) caps viral index
-    buckets the same way the in-corpus path does."""
-    spark = new_df.sparkSession
-    new_sigs = _materialize(
-        minhash_signatures(new_df, text_col, id_col, n_perm, shingle_k)
-    )
-    new_bands = band_keys(new_sigs, id_col, bands, n_perm // bands)
-    idx_bands = spark.read.parquet(f"{index_path}/bands")
-    if max_bucket_size is not None:
-        idx_bands = capped_by_bucket(
-            idx_bands, ["band_id", "band_hash"], max_bucket_size,
-            "incremental_near_dup_pairs",
-        )
-    cands = (
-        new_bands.select(
-            F.col(id_col).alias("new_id"), "band_id", "band_hash"
-        )
-        .join(
-            idx_bands.select(
-                F.col(id_col).alias("corpus_id"), "band_id", "band_hash"
-            ),
-            ["band_id", "band_hash"],
-        )
-        .select("new_id", "corpus_id")
-        .distinct()
-    )
-    idx_sigs = spark.read.parquet(f"{index_path}/sigs")
-    sa = new_sigs.select(F.col(id_col).alias("new_id"), F.col("signature").alias("sig_a"))
-    sb = idx_sigs.select(F.col(id_col).alias("corpus_id"), F.col("signature").alias("sig_b"))
-    return (
-        cands.join(sa, "new_id").join(sb, "corpus_id")
-        .withColumn(
-            "est_jaccard",
-            F.expr(
-                "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) "
-                "/ cast(size(sig_a) as double)"
-            ),
-        )
-        .filter(F.col("est_jaccard") >= jaccard_threshold)
-        .select("new_id", "corpus_id", "est_jaccard")
-    )
-
-
-def incremental_dedup(
-    new_df: DataFrame,
-    index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_perm: int = _N_PERM_DEFAULT,
-    bands: int = 16,
-    jaccard_threshold: float = 0.7,
-    shingle_k: int = 5,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Incremental-batch dedup with CORPUS PRIORITY: any new document that
-    is a near-dup of an indexed document is dropped (the corpus copy is
-    already in the training set — unlike min-id dedup, arrival order wins),
-    then the survivors are near-dup-deduped among themselves
-    (minhash_dedup min-id policy). Returns the accepted rows of new_df."""
-    vs_corpus = incremental_near_dup_pairs(
-        new_df, index_path, text_col, id_col, n_perm, bands,
-        jaccard_threshold, shingle_k, max_bucket_size,
-    )
-    losers = vs_corpus.select(F.col("new_id").alias(id_col)).distinct()
-    fresh = new_df.join(losers, on=id_col, how="left_anti")
-    return minhash_dedup(
-        fresh, text_col, id_col, n_perm, bands, jaccard_threshold,
-        shingle_k, max_bucket_size,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -915,8 +744,218 @@ def simhash_bucket_histogram(
 
 
 # ---------------------------------------------------------------------------
-# Persisted SimHash index — incremental (new-batch-vs-corpus) near-dups
+# Persisted near-dup index — incremental (new-batch-vs-corpus) dedup, one
+# core for MinHash and SimHash
 # ---------------------------------------------------------------------------
+
+# The index layout, declared once for both methods: <index>/sigs holds one
+# (id, signature) row per indexed doc; the key table holds (id, part, key)
+# rows partitioned by the part column, so a probe join's part
+# equi-condition prunes to one directory per LSH band / Manku table.
+INDEX_SIGS = "sigs"
+INDEX_LAYOUT = {
+    # method: (key table, part column, key column, signature column)
+    "minhash": ("bands", "band_id", "band_hash", "signature"),
+    "simhash": ("tables", "tbl", "tkey", "simhash"),
+}
+
+
+def _minhash_index_rows(df, text_col, id_col, n_perm, bands, shingle_k, sigs=None):
+    """(sigs, band keys) of `df`, the rows a MinHash index holds for it."""
+    if sigs is None:
+        sigs = _materialize(
+            minhash_signatures(df, text_col, id_col, n_perm, shingle_k)
+        )
+    return sigs, band_keys(sigs, id_col, bands, n_perm // bands)
+
+
+def _simhash_index_rows(df, text_col, id_col, max_hamming, n_blocks, sigs=None):
+    """(sigs, Manku table keys) of `df`, the rows a SimHash index holds."""
+    if sigs is None:
+        sigs = _materialize(simhash_signatures(df, text_col, id_col))
+    return sigs, _manku_keyed(sigs, id_col, max_hamming, n_blocks)
+
+
+def _write_index(method, index_path, id_col, sigs, keys, build: bool) -> None:
+    """Write one batch's index rows: `build` overwrites, otherwise appends.
+    The two tables land in opposite orders, and both orders are crash
+    contracts:
+
+      - a build writes sigs, then the key table: the key table's _SUCCESS
+        is what curate_ingest_batch reads as "the index exists", so a
+        build that crashes before it reads as absent and is rebuilt;
+      - an append writes the key table, then sigs. A crash between the
+        two leaves key rows without a signature; such a doc produces NO
+        pair (the probe's verify join is inner against sigs), so on
+        replay it is re-accepted and re-appended: its sig rows land
+        exactly once and the duplicate key rows fall to the candidate
+        DISTINCT. The reverse order would strand signature-only docs
+        whose re-append duplicates sig rows, and so pair rows downstream.
+
+    Replay idempotency of the ACCEPTED SET relies on the caller's
+    epoch-authoritative sink (curate_ingest_batch re-reads accepted rows
+    from the epoch's _SUCCESS-marked sink rather than recomputing); a
+    caller without such a sink duplicates accepted rows on replay. This
+    is at-least-once plus dedup, not a transaction: a deployment that
+    needs atomic appends should put both tables in one Iceberg/Delta
+    commit."""
+    key_table, part, key, sig = INDEX_LAYOUT[method]
+    mode = "overwrite" if build else "append"
+    writes = [
+        (sigs.select(id_col, sig).write.mode(mode), INDEX_SIGS),
+        (keys.select(id_col, part, key).write.mode(mode).partitionBy(part),
+         key_table),
+    ]
+    for writer, table in writes if build else writes[::-1]:
+        writer.parquet(f"{index_path}/{table}")
+
+
+def _probe_index(
+    method, index_path, id_col, new_sigs, new_keys, max_bucket_size, label,
+    verify, keep,
+) -> DataFrame:
+    """(new_id, corpus_id, verify) rows between a batch's index rows and a
+    persisted index, kept where `keep` holds. The batch side is computed
+    fresh; the index side is a parquet scan. Candidates are a key-table
+    equi-join on (part, key) — the part condition prunes the scan to one
+    directory per band/table — then DISTINCT (a pair surfaces in several
+    bands/tables), then one join to each signature table, where `verify`
+    (an aliased expression over sig_a/sig_b) scores the pair. Shuffle
+    volume is O(batch keys + matching index buckets); `max_bucket_size`
+    caps viral index buckets with logged drops, as the in-corpus path
+    does."""
+    spark = new_sigs.sparkSession
+    key_table, part, key, sig = INDEX_LAYOUT[method]
+    idx_keys = spark.read.parquet(f"{index_path}/{key_table}")
+    if max_bucket_size is not None:
+        idx_keys = capped_by_bucket(idx_keys, [part, key], max_bucket_size, label)
+    cands = (
+        new_keys.select(F.col(id_col).alias("new_id"), part, key)
+        .join(
+            idx_keys.select(F.col(id_col).alias("corpus_id"), part, key),
+            [part, key],
+        )
+        .select("new_id", "corpus_id")
+        .distinct()
+    )
+    idx_sigs = spark.read.parquet(f"{index_path}/{INDEX_SIGS}")
+    sa = new_sigs.select(F.col(id_col).alias("new_id"), F.col(sig).alias("sig_a"))
+    sb = idx_sigs.select(F.col(id_col).alias("corpus_id"), F.col(sig).alias("sig_b"))
+    return (
+        cands.join(sa, "new_id").join(sb, "corpus_id")
+        .select("new_id", "corpus_id", verify)
+        .filter(keep)
+    )
+
+
+def _corpus_priority(new_df, pairs, id_col, batch_dedup) -> DataFrame:
+    """Incremental-batch dedup with CORPUS PRIORITY: every new doc in a
+    (new_id, corpus_id) pair is dropped (the corpus copy is already in
+    the training set — unlike min-id dedup, arrival order wins), then
+    `batch_dedup` dedups the survivors among themselves."""
+    losers = pairs.select(F.col("new_id").alias(id_col)).distinct()
+    return batch_dedup(new_df.join(losers, on=id_col, how="left_anti"))
+
+
+def build_minhash_index(
+    df: DataFrame,
+    index_path: str,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_perm: int = _N_PERM_DEFAULT,
+    bands: int = 16,
+    shingle_k: int = 5,
+    sigs: DataFrame | None = None,
+) -> None:
+    """Persist a MinHash-LSH index (INDEX_LAYOUT: sigs plus band keys
+    partitioned by band_id) for CONTINUOUS dedup. The corpus pays the
+    signature UDF once here; every incremental batch signatures only ITS
+    OWN documents and probes the index with a band-keyed join — per-batch
+    cost is O(batch), never a corpus rescan. Accepted batches grow it
+    through append_to_minhash_index.
+
+    Pass `sigs` (a signature table already computed with the SAME
+    n_perm/shingle_k, e.g. shared with a batch dedup pass over the same
+    corpus) to skip the signature UDF entirely — the caller owns the
+    parameter-match guarantee."""
+    _write_index(
+        "minhash", index_path, id_col,
+        *_minhash_index_rows(df, text_col, id_col, n_perm, bands, shingle_k, sigs),
+        build=True,
+    )
+
+
+def append_to_minhash_index(
+    accepted_df: DataFrame,
+    index_path: str,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_perm: int = _N_PERM_DEFAULT,
+    bands: int = 16,
+    shingle_k: int = 5,
+) -> None:
+    """Grow a persisted MinHash index with an ACCEPTED batch (the rows
+    incremental_dedup returned). Parameters must match the original
+    build_minhash_index call — band keys computed under different
+    n_perm/bands/shingle_k would silently never collide with the
+    corpus's. Band rows land BEFORE signature rows (the crash contract in
+    _write_index)."""
+    _write_index(
+        "minhash", index_path, id_col,
+        *_minhash_index_rows(accepted_df, text_col, id_col, n_perm, bands, shingle_k),
+        build=False,
+    )
+
+
+def incremental_near_dup_pairs(
+    new_df: DataFrame,
+    index_path: str,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_perm: int = _N_PERM_DEFAULT,
+    bands: int = 16,
+    jaccard_threshold: float = 0.7,
+    shingle_k: int = 5,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """(new_id, corpus_id, est_jaccard) pairs between an incoming batch
+    and a persisted MinHash index (build_minhash_index) whose estimated
+    Jaccard clears the threshold. The join is keyed on (band_id,
+    band_hash); see _probe_index for the scale shape."""
+    return _probe_index(
+        "minhash", index_path, id_col,
+        *_minhash_index_rows(new_df, text_col, id_col, n_perm, bands, shingle_k),
+        max_bucket_size, "incremental_near_dup_pairs",
+        F.expr(_EST_JACCARD).alias("est_jaccard"),
+        F.col("est_jaccard") >= jaccard_threshold,
+    )
+
+
+def incremental_dedup(
+    new_df: DataFrame,
+    index_path: str,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n_perm: int = _N_PERM_DEFAULT,
+    bands: int = 16,
+    jaccard_threshold: float = 0.7,
+    shingle_k: int = 5,
+    max_bucket_size: int | None = None,
+) -> DataFrame:
+    """Incremental-batch MinHash dedup with CORPUS PRIORITY
+    (_corpus_priority): a new doc that near-dups an indexed doc is
+    dropped, then the survivors are deduped among themselves
+    (minhash_dedup min-id policy). Returns the accepted rows of new_df —
+    feed them to append_to_minhash_index."""
+    pairs = incremental_near_dup_pairs(
+        new_df, index_path, text_col, id_col, n_perm, bands,
+        jaccard_threshold, shingle_k, max_bucket_size,
+    )
+    return _corpus_priority(new_df, pairs, id_col, lambda fresh: minhash_dedup(
+        fresh, text_col, id_col, n_perm, bands, jaccard_threshold,
+        shingle_k, max_bucket_size,
+    ))
+
 
 def build_simhash_index(
     df: DataFrame | None,
@@ -927,13 +966,11 @@ def build_simhash_index(
     n_blocks: int | None = None,
     sigs: DataFrame | None = None,
 ) -> None:
-    """Persist a SimHash index for CONTINUOUS hamming-distance dedup: the
-    signature table plus the Manku table-key rows (partitioned by tbl — a
-    probe join's tbl equi-condition prunes to one directory per table).
-    The minhash-index pattern (build_minhash_index) transplanted to the
-    simhash semantics: the corpus pays the signature UDF once at build;
-    every incremental batch signatures only ITS OWN documents and probes
-    with a (tbl, tkey) equi-join — per-batch cost is O(batch + matching
+    """Persist a SimHash index (INDEX_LAYOUT: sigs plus Manku table keys
+    partitioned by tbl) for CONTINUOUS hamming-distance dedup, with the
+    same lifecycle as the MinHash index: the corpus pays the signature
+    UDF once at build, and every incremental batch probes with a
+    (tbl, tkey) equi-join — per-batch cost is O(batch + matching
     buckets), never a corpus rescan.
 
     `max_hamming`/`n_blocks` are BAKED INTO the persisted keys: a probe
@@ -942,17 +979,10 @@ def build_simhash_index(
     n_perm/bands for the minhash index. Pass `sigs` (a signature table
     over the same docs, already materialized) to skip the signature
     UDF entirely (df may then be None)."""
-    if sigs is None:
-        sigs = _materialize(simhash_signatures(df, text_col, id_col))
-    sigs.select(id_col, "simhash").write.mode("overwrite").parquet(
-        f"{index_path}/sigs"
-    )
-    (
-        _manku_keyed(sigs, id_col, max_hamming, n_blocks)
-        .select(id_col, "tbl", "tkey")
-        .write.mode("overwrite")
-        .partitionBy("tbl")
-        .parquet(f"{index_path}/tables")
+    _write_index(
+        "simhash", index_path, id_col,
+        *_simhash_index_rows(df, text_col, id_col, max_hamming, n_blocks, sigs),
+        build=True,
     )
 
 
@@ -964,25 +994,12 @@ def append_to_simhash_index(
     max_hamming: int = 3,
     n_blocks: int | None = None,
 ) -> None:
-    """Grow a persisted SimHash index with an ACCEPTED batch. Crash-
-    recovery contract is the minhash one (append_to_minhash_index): table
-    keys are written BEFORE signatures. A crash between the two leaves
-    key rows without signatures; a sig-less doc produces NO pair from
-    incremental_simhash_near_dups (the verify join is inner against
-    sigs), so on replay it is re-accepted and re-appended — its sig rows
-    land exactly once and the duplicated key rows are neutralized by the
-    candidate DISTINCT. Replay idempotency of the accepted SET stays with
-    the caller's epoch-authoritative sink."""
-    sigs = _materialize(simhash_signatures(accepted_df, text_col, id_col))
-    (
-        _manku_keyed(sigs, id_col, max_hamming, n_blocks)
-        .select(id_col, "tbl", "tkey")
-        .write.mode("append")
-        .partitionBy("tbl")
-        .parquet(f"{index_path}/tables")
-    )
-    sigs.select(id_col, "simhash").write.mode("append").parquet(
-        f"{index_path}/sigs"
+    """Grow a persisted SimHash index with an ACCEPTED batch. Table keys
+    land BEFORE signatures (the crash contract in _write_index)."""
+    _write_index(
+        "simhash", index_path, id_col,
+        *_simhash_index_rows(accepted_df, text_col, id_col, max_hamming, n_blocks),
+        build=False,
     )
 
 
@@ -997,40 +1014,16 @@ def incremental_simhash_near_dups(
 ) -> DataFrame:
     """(new_id, corpus_id, hamming) pairs between an incoming batch and a
     persisted SimHash index (build_simhash_index) within `max_hamming`
-    bits. The batch side is signatured and table-keyed fresh; the index
-    side is a parquet scan pruned per table directory. Recall is EXACT
-    for <= max_hamming (the Manku pigeonhole guarantee spans the
-    batch-vs-corpus join the same way it spans the self-join), verified
-    with built-in bit_count against both signature tables. Shuffle volume
-    is O(batch keys + matching index buckets); `max_bucket_size` (logged
-    drops) caps viral index buckets the same way the in-corpus path
-    does."""
-    spark = new_df.sparkSession
-    new_sigs = _materialize(simhash_signatures(new_df, text_col, id_col))
-    new_keyed = _manku_keyed(new_sigs, id_col, max_hamming, n_blocks)
-    idx_keyed = spark.read.parquet(f"{index_path}/tables")
-    if max_bucket_size is not None:
-        idx_keyed = capped_by_bucket(
-            idx_keyed, ["tbl", "tkey"], max_bucket_size,
-            "incremental_simhash_near_dups",
-        )
-    cands = (
-        new_keyed.select(F.col(id_col).alias("new_id"), "tbl", "tkey")
-        .join(
-            idx_keyed.select(F.col(id_col).alias("corpus_id"), "tbl", "tkey"),
-            ["tbl", "tkey"],
-        )
-        .select("new_id", "corpus_id")
-        .distinct()
-    )
-    idx_sigs = spark.read.parquet(f"{index_path}/sigs")
-    sa = new_sigs.select(F.col(id_col).alias("new_id"), F.col("simhash").alias("sim_a"))
-    sb = idx_sigs.select(F.col(id_col).alias("corpus_id"), F.col("simhash").alias("sim_b"))
-    return (
-        cands.join(sa, "new_id").join(sb, "corpus_id")
-        .withColumn("hamming", F.expr("bit_count(sim_a ^ sim_b)"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("new_id", "corpus_id", "hamming")
+    bits. Recall is EXACT for <= max_hamming (the Manku pigeonhole
+    guarantee spans the batch-vs-corpus join the same way it spans the
+    self-join), verified with built-in bit_count against both signature
+    tables; see _probe_index for the scale shape."""
+    return _probe_index(
+        "simhash", index_path, id_col,
+        *_simhash_index_rows(new_df, text_col, id_col, max_hamming, n_blocks),
+        max_bucket_size, "incremental_simhash_near_dups",
+        F.expr("bit_count(sig_a ^ sig_b)").alias("hamming"),
+        F.col("hamming") <= max_hamming,
     )
 
 
@@ -1043,20 +1036,18 @@ def incremental_simhash_dedup(
     n_blocks: int | None = None,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Incremental-batch SimHash dedup with CORPUS PRIORITY (the
-    incremental_dedup policy): a new doc within `max_hamming` bits of an
-    indexed doc is dropped (arrival order wins), then survivors are
-    deduped among themselves (simhash_dedup component-min). Returns the
-    accepted rows of new_df — feed them to append_to_simhash_index."""
-    vs_corpus = incremental_simhash_near_dups(
+    """Incremental-batch SimHash dedup with CORPUS PRIORITY
+    (_corpus_priority): a new doc within `max_hamming` bits of an indexed
+    doc is dropped, then survivors are deduped among themselves
+    (simhash_dedup component-min). Returns the accepted rows of new_df —
+    feed them to append_to_simhash_index."""
+    pairs = incremental_simhash_near_dups(
         new_df, index_path, text_col, id_col, max_hamming, n_blocks,
         max_bucket_size,
     )
-    losers = vs_corpus.select(F.col("new_id").alias(id_col)).distinct()
-    fresh = new_df.join(losers, on=id_col, how="left_anti")
-    return simhash_dedup(
+    return _corpus_priority(new_df, pairs, id_col, lambda fresh: simhash_dedup(
         fresh, text_col, id_col, max_hamming, n_blocks, max_bucket_size
-    )
+    ))
 
 
 # ---------------------------------------------------------------------------
@@ -1274,6 +1265,56 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _duplicated_spans(
+    occ: DataFrame, id_col: str, key_cols: list[str], width: int
+) -> DataFrame:
+    """(id, __spans, n_spans) per document with at least one duplicated
+    window: the shared core of exact_substring_dedup (windows keyed on
+    the gram text) and exact_substring_dedup_chars (keyed on a 128-bit
+    fingerprint). `occ` holds one (id, pos, *key_cols) row per window
+    occurrence; a window covers [pos, pos + width - 1].
+
+    Every occurrence of a key that appears MORE than once is flagged,
+    EXCEPT the globally first occurrence (lexicographic min over
+    struct(id, pos): one copy of every duplicated run survives — the
+    paper's "all but one"). Count and first occurrence are whole-partition
+    window aggregates over ONE exchange of occ: the groupBy + join-back
+    shape computed occ twice (once per consumer) and shuffled the keeper
+    table on top of it. The min is exact for ANY id domain (negative
+    xxhash64 longs, string ids) and any document length, and map-side
+    combinable like min(long). Each document's flagged windows then merge
+    into maximal [s, e] spans (gaps and islands: a window opens a new
+    island when it starts past every earlier window's end); __spans is
+    the sorted span list."""
+    from pyspark.sql import Window
+
+    wf = Window.partitionBy(*key_cols)
+    flagged = (
+        occ.withColumn("__key", F.struct(F.col(id_col), F.col("pos")))
+        .withColumn("__cnt", F.count("*").over(wf))
+        .withColumn("__keep_key", F.min("__key").over(wf))
+        .filter((F.col("__cnt") > 1) & (F.col("__key") != F.col("__keep_key")))
+        .select(id_col, "pos")
+    )
+    w = Window.partitionBy(id_col).orderBy("pos")
+    prev_end = F.max(F.col("pos") + (width - 1)).over(
+        w.rowsBetween(Window.unboundedPreceding, -1)
+    )
+    islands = flagged.withColumn(
+        "__ni", (F.col("pos") > F.coalesce(prev_end, F.lit(-1))).cast("int")
+    ).withColumn(
+        "__island",
+        F.sum("__ni").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+    merged = islands.groupBy(id_col, "__island").agg(
+        F.min("pos").alias("s"), F.max(F.col("pos") + (width - 1)).alias("e")
+    )
+    return merged.groupBy(id_col).agg(
+        F.sort_array(F.collect_list(F.struct("s", "e"))).alias("__spans"),
+        F.count("*").cast("int").alias("n_spans"),
+    )
+
+
 def exact_substring_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -1302,20 +1343,11 @@ def exact_substring_dedup(
     (md5('') when everything was duplicated).
 
     Scale shape: the gram table is O(total tokens) rows shuffled ONCE on
-    the gram key into a count+min aggregate (map-side combined — a viral
-    gram contributes one partial row per partition, never a quadratic
-    join); the flagged set joins back on the gram key; span merging is a
-    per-document window (parallel across docs); the rebuild is a narrow
-    projection with nested array lambdas. First-occurrence choice is an
-    exact lexicographic min over struct(doc_id, pos) — no arithmetic, so
-    it is correct for ANY id domain (negative xxhash64 longs, string ids,
-    ints) and any document length; min(struct) is map-side combinable
-    exactly like min(long), so the single-shuffle scale shape is
-    unchanged."""
+    the gram key (_duplicated_spans: count + first occurrence, then the
+    per-document span merge); the rebuild is a narrow projection with
+    nested array lambdas."""
     if n < 2:
         raise ValueError(f"exact_substring_dedup: n must be >= 2, got {n}")
-    from pyspark.sql import Window
-
     toks_col = "__sd_toks"
     base = df.select(F.col(id_col), F.col(text_col)).withColumn(
         toks_col, ws_token_array(text_col)
@@ -1336,48 +1368,15 @@ def exact_substring_dedup(
             F.col(id_col),
             F.col("pos"),
             F.expr(f"concat_ws(' ', slice({toks_col}, pos + 1, {n}))").alias("gram"),
-            F.struct(F.col(id_col), F.col("pos")).alias("__key"),
         )
     )
-    # ONE pass over occ (see exact_substring_dedup_chars): count +
-    # global-first per gram as whole-partition window aggregates —
-    # the groupBy + join-back shape ran the gram projection twice and
-    # shuffled the keeper table on top of occ (r9)
-    wf = Window.partitionBy("gram")
-    flagged = (
-        occ.withColumn("__cnt", F.count("*").over(wf))
-        .withColumn("__keep_key", F.min("__key").over(wf))
-        .filter((F.col("__cnt") > 1) & (F.col("__key") != F.col("__keep_key")))
-        .select(id_col, "pos")
-    )
-    # gaps-and-islands merge of overlapping [pos, pos+n-1] windows
-    w = Window.partitionBy(id_col).orderBy("pos")
-    prev_end = F.max(F.col("pos") + (n - 1)).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    islands = (
-        flagged.withColumn(
-            "__ni",
-            (F.col("pos") > F.coalesce(prev_end, F.lit(-1))).cast("int"),
-        )
-        .withColumn(
-            "__island",
-            F.sum("__ni").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-    )
-    merged = islands.groupBy(id_col, "__island").agg(
-        F.min("pos").alias("s"), F.max(F.col("pos") + (n - 1)).alias("e")
-    )
-    spans = merged.groupBy(id_col).agg(
-        F.sort_array(F.collect_list(F.struct("s", "e"))).alias("__spans"),
-        F.count("*").cast("int").alias("n_spans"),
-    )
+    spans = _duplicated_spans(occ, id_col, ["gram"], n)
     kept = F.expr(
         f"CASE WHEN __spans IS NULL THEN {toks_col} ELSE "
         f"filter({toks_col}, (t, i) -> "
         f"NOT exists(__spans, sp -> i >= sp.s AND i <= sp.e)) END"
     )
-    out = (
+    return (
         base.join(spans, id_col, "left")
         .withColumn("__kept", kept)
         .select(
@@ -1390,7 +1389,6 @@ def exact_substring_dedup(
                if with_text else [] ),
         )
     )
-    return out
 
 
 def exact_substring_dedup_chars(
@@ -1435,9 +1433,9 @@ def exact_substring_dedup_chars(
     independent xxhash64 seeds — 2^-128 per-pair collision odds;
     16 bytes/position instead of the L-byte gram string, the blowup
     that makes naive L-gram shuffles 50x the corpus), into a map-side-
-    combined count+min aggregate (a viral window contributes one
-    partial row per partition). Span merge is a per-document window
-    function; the rebuild is one codegen aggregate over the span list.
+    combined count+min window (_duplicated_spans, which also merges the
+    spans per document); the rebuild is one codegen aggregate over the
+    span list.
     Total: two shuffles of O(corpus chars) compact rows vs the suffix
     array's O(chars log chars) global sorts — the bounded-shuffle
     distributed formulation the paper's single-node construction lacks.
@@ -1446,8 +1444,6 @@ def exact_substring_dedup_chars(
         raise ValueError(
             f"exact_substring_dedup_chars: min_len must be >= 2, got {min_len}"
         )
-    from pyspark.sql import Window
-
     L = int(min_len)
     base = _materialize(
         df.select(
@@ -1474,39 +1470,9 @@ def exact_substring_dedup_chars(
             F.col("o.pos").alias("pos"),
             F.xxhash64("o.g").alias("h1"),
             F.xxhash64(F.lit(1), "o.g").alias("h2"),
-            F.struct(F.col(id_col), F.col("o.pos").alias("pos")).alias("__key"),
         )
     )
-    # ONE pass: count + global-first per fingerprint as whole-partition
-    # window aggregates over a single exchange of occ — the previous
-    # groupBy(keeper) + join-back shape computed the O(len*L)
-    # fingerprint projection TWICE (once per consumer) and at scale
-    # shuffled both occ and the keeper table; this shuffles occ once
-    # and nothing else (r9)
-    wf = Window.partitionBy("h1", "h2")
-    flagged = (
-        occ.withColumn("__cnt", F.count("*").over(wf))
-        .withColumn("__keep_key", F.min("__key").over(wf))
-        .filter((F.col("__cnt") > 1) & (F.col("__key") != F.col("__keep_key")))
-        .select(id_col, "pos")
-    )
-    w = Window.partitionBy(id_col).orderBy("pos")
-    prev_end = F.max(F.col("pos") + (L - 1)).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    islands = flagged.withColumn(
-        "__ni", (F.col("pos") > F.coalesce(prev_end, F.lit(-1))).cast("int")
-    ).withColumn(
-        "__island",
-        F.sum("__ni").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    merged = islands.groupBy(id_col, "__island").agg(
-        F.min("pos").alias("s"), F.max(F.col("pos") + (L - 1)).alias("e")
-    )
-    spans = merged.groupBy(id_col).agg(
-        F.sort_array(F.collect_list(F.struct("s", "e"))).alias("__spans"),
-        F.count("*").cast("int").alias("n_spans"),
-    )
+    spans = _duplicated_spans(occ, id_col, ["h1", "h2"], L)
     # stitch the un-spanned segments back together in one pass over the
     # sorted span list (st.prev = first char index not yet emitted)
     kept = F.expr(

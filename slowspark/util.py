@@ -165,6 +165,28 @@ def fs_read_text(spark, path: str) -> str:
         stream.close()
 
 
+def fs_listing_stamp(spark, path: str) -> str:
+    """`n:digest` over every file under `path` (a file, a directory or a
+    glob): the count and a digest of each (path, length, mtime) from a
+    Hadoop FS listing. A CLI's resume signature carries it, so pages
+    rewritten at the same path miss the resume instead of being served
+    from the old manifests. Driver-side listing calls only, no Spark
+    job."""
+    import hashlib
+
+    fs, p = _hadoop_fs(spark, path)
+    files = []
+    for st in fs.globStatus(p) or []:
+        it = fs.listFiles(st.getPath(), True)
+        while it.hasNext():
+            f = it.next()
+            files.append(
+                f"{f.getPath().toString()}\t{f.getLen()}\t{f.getModificationTime()}"
+            )
+    digest = hashlib.sha256("\n".join(sorted(files)).encode()).hexdigest()
+    return f"{len(files)}:{digest[:16]}"
+
+
 def capped_by_bucket(
     df: DataFrame,
     keys: list[str],

@@ -332,6 +332,37 @@ def test_job_cli_reads_pages_path(spark, tmp_path):
     assert json.loads(lines[-1])["kind_census"] == expected_kind_counts(n_pages)
 
 
+def test_job_cli_rewritten_pages_miss_the_resume(spark, tmp_path):
+    """The resume signature of `slowspark.job --pages <path>` stamps the
+    files under the path (util.fs_listing_stamp), not just its name:
+    pages rewritten at the same path must be parsed afresh, never served
+    from the first run's manifests. Subprocesses, because main() stops
+    its own SparkSession."""
+    import json
+    import subprocess
+    import sys
+
+    src, wh = str(tmp_path / "pages"), str(tmp_path / "wh")
+
+    def run_job():
+        r = subprocess.run(
+            [sys.executable, "-m", "slowspark.job", "--pages", src,
+             "--warehouse", wh, "--master", "local[2]"],
+            capture_output=True, text=True, timeout=600,
+        )
+        assert r.returncode == 0, r.stderr[-3000:]
+        lines = [
+            ln for ln in r.stdout.replace("\r", "\n").splitlines()
+            if ln.strip().startswith("{")
+        ]
+        return json.loads(lines[-1])["kind_census"]
+
+    gen_pages(spark, 50).write.parquet(src)
+    assert run_job() == expected_kind_counts(50)
+    gen_pages(spark, 100).write.mode("overwrite").parquet(src)
+    assert run_job() == expected_kind_counts(100)
+
+
 def test_manifests_match_their_tables(spark, tmp_path, pages):
     """Each manifest describes its table: the row count and content hash
     run_stage observes on the write equal those of the table read back

@@ -115,40 +115,50 @@ def test_manku_simhash_join_is_key_equijoin(spark):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_incremental_simhash_probe_prunes_index_columns(spark, tmp_path):
-    """The persisted-index probe's scale contract: the candidate join
-    scans the tbl-partitioned key table reading ONLY (doc_id, tkey) —
-    never the 8-byte simhash per key row (20 rows/doc; reading it would
-    inflate the dominant scan by ~50%) — with tbl arriving as a partition
-    column (PartitionFilters, prunable); and the index sigs table is
-    scanned exactly once (the hamming verify), not per candidate join."""
+@pytest.mark.parametrize("method", ["simhash", "minhash"])
+def test_incremental_simhash_probe_prunes_index_columns(spark, tmp_path, method):
+    """The persisted-index probe's scale contract, for both methods: the
+    candidate join scans the key table reading ONLY (doc_id, key) — never
+    the signature per key row (SimHash: 20 key rows/doc, reading the
+    8-byte simhash would inflate the dominant scan by ~50%) — with the
+    part column (tbl / band_id) arriving as a partition column
+    (PartitionFilters, prunable); and the index sigs table is scanned
+    exactly once (the verify), not per candidate join."""
     from slowspark import textops
 
+    build, probe, part, key, sig_type = {
+        "simhash": (textops.build_simhash_index,
+                    textops.incremental_simhash_near_dups,
+                    "tbl", "tkey", "simhash:bigint"),
+        "minhash": (textops.build_minhash_index,
+                    textops.incremental_near_dup_pairs,
+                    "band_id", "band_hash", "signature:array<bigint>"),
+    }[method]
     corpus = spark.createDataFrame(
         [(i, f"w{i} " * 30) for i in range(20)], "doc_id long, text string"
     )
-    idx = str(tmp_path / "shidx")
-    textops.build_simhash_index(corpus, idx)
+    idx = str(tmp_path / "idx")
+    build(corpus, idx)
     new = spark.createDataFrame(
         [(100, "w1 " * 30)], "doc_id long, text string"
     )
-    df = textops.incremental_simhash_near_dups(new, idx)
-    plan = _plan(df)
+    plan = _plan(probe(new, idx))
     assert "Cartesian" not in plan
     # identify the two index scans by ReadSchema (the plan's Location
     # string truncates long paths): the key-table scan reads exactly
-    # (doc_id, tkey) with tbl as a partition filter; the sigs scan reads
-    # (doc_id, simhash). Exactly one of each — no redundant re-read.
+    # (doc_id, key) with the part column as a partition filter; the sigs
+    # scan reads (doc_id, signature). Exactly one of each — no redundant
+    # re-read.
     scans = plan.split("Scan parquet")[1:]
-    tables_scans = [
+    key_scans = [
         s for s in scans
-        if "ReadSchema: struct<doc_id:bigint,tkey:bigint>" in s
+        if f"ReadSchema: struct<doc_id:bigint,{key}:bigint>" in s
     ]
-    assert len(tables_scans) == 1
-    assert "PartitionFilters: [isnotnull(tbl" in tables_scans[0]
+    assert len(key_scans) == 1
+    assert f"PartitionFilters: [isnotnull({part}" in key_scans[0]
     sigs_scans = [
         s for s in scans
-        if "ReadSchema: struct<doc_id:bigint,simhash:bigint>" in s
+        if f"ReadSchema: struct<doc_id:bigint,{sig_type}>" in s
     ]
     assert len(sigs_scans) == 1
     assert len(scans) == 2  # and nothing else scans the index

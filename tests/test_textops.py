@@ -476,6 +476,46 @@ def test_incremental_simhash_index_two_batches_and_replay(spark, tmp_path):
     ]
 
 
+@pytest.mark.parametrize("method", ["minhash", "simhash"])
+def test_index_write_order(spark, tmp_path, monkeypatch, method):
+    """Both index methods write their two tables in the crash-safe
+    orders: a build writes sigs before the key table (the key table's
+    _SUCCESS is what curate_ingest_batch reads as "the index exists"),
+    and an append writes the key table before sigs (a crash between the
+    two leaves key rows without a signature, which produce no pair)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, path, *a, **kw):
+        written.append(os.path.basename(path.rstrip("/")))
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+    key_table, build, append = {
+        "minhash": ("bands", textops.build_minhash_index,
+                    textops.append_to_minhash_index),
+        "simhash": ("tables", textops.build_simhash_index,
+                    textops.append_to_simhash_index),
+    }[method]
+    idx = str(tmp_path / "idx")
+    build(spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog " * 3)],
+        "doc_id long, text string",
+    ), idx)
+    assert written == ["sigs", key_table]
+    written.clear()
+    append(spark.createDataFrame(
+        [(2, "completely different corpus text about tables " * 3)],
+        "doc_id long, text string",
+    ), idx)
+    assert written == [key_table, "sigs"]
+    assert {
+        r["doc_id"] for r in spark.read.parquet(f"{idx}/{key_table}").collect()
+    } == {1, 2}
+
+
 def test_simhash_dedup_end_to_end(spark, docs_with_dupes):
     """simhash_dedup composes signatures -> Manku candidates -> component-
     min survivors: byte-identical copies (hamming 0) must always lose to

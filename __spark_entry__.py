@@ -723,10 +723,8 @@ def _ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from slowspark.similarity import with_cosine
 
     emb = _read(spark, sf_dir, "embeddings")
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    query = [float(x) for x in qrow["embedding"]]
     return (
-        with_cosine(emb, "embedding", query)
+        with_cosine(emb, "embedding", _query_vec_0(spark, sf_dir))
         .select("vec_id", F.round("cosine", 4).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(10)
@@ -2887,18 +2885,14 @@ def _ivf_index_parquet(spark: SparkSession, sf_dir: str) -> str:
     Training is deterministic (hash-seeded sampling + fixed Lloyd rounds),
     so an overwrite is always content-identical. Returns the cells path;
     the centroids sit beside it at ivf_centroids."""
-    from slowspark.similarity import ivf_assign, ivf_train
-    from slowspark.util import local_frame, spread
+    from slowspark.similarity import _write_quantizer, ivf_assign, ivf_train
+    from slowspark.util import spread
 
     def build(_):
         emb = spread(_read(spark, sf_dir, "embeddings"))
         centroids = ivf_train(emb, n_centroids=_IVF_N_CENTROIDS)
-        local_frame(
-            spark,
-            [(i, [float(x) for x in row]) for i, row in enumerate(centroids)],
-            "cell int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            _artifact_path(sf_dir, "ivf_centroids")
+        _write_quantizer(
+            spark, centroids, _artifact_path(sf_dir, "ivf_centroids")
         )
         return ivf_assign(emb, centroids=centroids).select(
             "vec_id", "embedding", "ivf_cell"
@@ -2917,40 +2911,29 @@ def _pq_index_parquet(spark: SparkSession, sf_dir: str) -> str:
     recompute the whole ADC prefilter + exact re-rank from the SAME
     parquet — encode correctness rides inside the hash check via the
     codes the prefilter ranks."""
-    from slowspark.similarity import pq_encode, pq_train
-    from slowspark.util import local_frame, spread
+    from slowspark.similarity import _write_quantizer, pq_encode, pq_train
+    from slowspark.util import spread
 
     def build(path):
         emb = spread(_read(spark, sf_dir, "embeddings"))
         books = pq_train(emb, m=_PQ_M, k=_PQ_K)
         pq_encode(emb, books).write.mode("overwrite").parquet(f"{path}/codes")
-        rows = [
-            (j, c, [float(x) for x in books[j][c]])
-            for j in range(books.shape[0])
-            for c in range(books.shape[1])
-        ]
-        local_frame(
-            spark, rows, "j int, c int, centroid array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
+        _write_quantizer(spark, books, f"{path}/codebooks")
 
     return _artifact(sf_dir, "pq_index", build)
 
 
-def _stored_centroids(spark: SparkSession, sf_dir: str):
-    """The IVF artifact's coarse centroids as an array indexed by cell,
-    or None when the artifact is absent."""
-    import numpy as np
+def _stored_quantizer(spark: SparkSession, sf_dir: str, table: str):
+    """A standalone artifact's quantizer table (`ivf_centroids` or
+    `pq_index/codebooks`) as stored, or None when it is absent."""
+    from pyspark.errors import AnalysisException
+
+    from slowspark.similarity import _read_quantizer
 
     try:
-        cent = spark.read.parquet(
-            _artifact_path(sf_dir, "ivf_centroids")
-        ).collect()
-        out = np.zeros((len(cent), len(cent[0]["centroid"])))
-    except Exception:
+        return _read_quantizer(spark, _artifact_path(sf_dir, table))
+    except AnalysisException:  # PATH_NOT_FOUND
         return None
-    for r in cent:
-        out[r["cell"]] = r["centroid"]
-    return out
 
 
 def _ivfpq_index_parquet(spark: SparkSession, sf_dir: str) -> str:
@@ -2960,28 +2943,18 @@ def _ivfpq_index_parquet(spark: SparkSession, sf_dir: str) -> str:
     tables as parquet so the DuckDB oracle can recompute the ENTIRE query
     — coarse cell ranking, partition-restricted ADC, candidate cutoff,
     exact re-rank — from the same artifacts the Spark path reads."""
-    import numpy as np
-
     from slowspark.similarity import ivfpq_build_index
     from slowspark.util import spread
 
     def build(path):
-        # reuse the standalone artifacts' trained quantizers when present
-        # (same parameters, deterministic trainers -> identical output;
-        # _ensure_oracle_artifacts sequences this after both builders)
-        pre_c, pre_b = _stored_centroids(spark, sf_dir), None
-        if pre_c is not None:
-            try:
-                bk = spark.read.parquet(
-                    f"{_artifact_path(sf_dir, 'pq_index')}/codebooks"
-                ).collect()
-                mm = max(r["j"] for r in bk) + 1
-                kk = max(r["c"] for r in bk) + 1
-                pre_b = np.zeros((mm, kk, len(bk[0]["centroid"])))
-                for r in bk:
-                    pre_b[r["j"]][r["c"]] = r["centroid"]
-            except Exception:
-                pre_c = None  # standalone artifacts absent: train fresh
+        # reuse the standalone artifacts' trained quantizers when both
+        # are present (same parameters, deterministic trainers ->
+        # identical output; _ensure_oracle_artifacts sequences this after
+        # both builders), else train fresh
+        pre_c = _stored_quantizer(spark, sf_dir, "ivf_centroids")
+        pre_b = _stored_quantizer(spark, sf_dir, "pq_index/codebooks")
+        if pre_c is None or pre_b is None:
+            pre_c = pre_b = None
         # the index build itself persists centroids/ and codebooks/ as
         # parquet — exactly the tables the DuckDB oracle reads
         ivfpq_build_index(
@@ -3009,7 +2982,8 @@ def _ivfpq_res_index_parquet(spark: SparkSession, sf_dir: str) -> str:
         ivfpq_build_index(
             spread(_read(spark, sf_dir, "embeddings")), path,
             n_centroids=_IVF_N_CENTROIDS, m=_PQ_M, k=_PQ_K,
-            centroids=_stored_centroids(spark, sf_dir), residual=True,
+            centroids=_stored_quantizer(spark, sf_dir, "ivf_centroids"),
+            residual=True,
         )
 
     return _artifact(sf_dir, "ivfpq_res_index", build)
@@ -3292,23 +3266,14 @@ def _pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     set. DuckDB recomputes BOTH stages from the same codes/codebooks
     parquet, so quantized scoring, candidate cutoff, and re-rank are all
     inside the value hash."""
-    import numpy as np
-
-    from slowspark.similarity import pq_topk_rerank
+    from slowspark.similarity import _read_quantizer, pq_topk_rerank
 
     path = _pq_index_parquet(spark, sf_dir)
-    emb = _read(spark, sf_dir, "embeddings")
-    codes = spark.read.parquet(f"{path}/codes")
-    book_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    m = max(r["j"] for r in book_rows) + 1
-    k = max(r["c"] for r in book_rows) + 1
-    books = np.zeros((m, k, len(book_rows[0]["centroid"])))
-    for r in book_rows:
-        books[r["j"]][r["c"]] = r["centroid"]
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    query = [float(x) for x in qrow["embedding"]]
     return pq_topk_rerank(
-        emb, codes, books, query, k=10, rerank=_PQ_RERANK
+        _read(spark, sf_dir, "embeddings"),
+        spark.read.parquet(f"{path}/codes"),
+        _read_quantizer(spark, f"{path}/codebooks"),
+        _query_vec_0(spark, sf_dir), k=10, rerank=_PQ_RERANK,
     ).select("vec_id", F.round("cosine", 4).alias("cosine"))
 
 
@@ -4088,25 +4053,16 @@ def _ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the best probe_cells cells, exact cosine within. The oracle ranks
     the SAME stored centroids in SQL with the same (cosine desc, cell)
     order — probe choice and probe scan are both inside the hash check."""
-    import numpy as np
-
-    from slowspark.similarity import brute_force_topk
+    from slowspark.similarity import (
+        _normalize_rows, _rank_cells, _read_quantizer, brute_force_topk,
+    )
 
     cells = spark.read.parquet(_ivf_index_parquet(spark, sf_dir))
-    cent = spark.read.parquet(_artifact_path(sf_dir, "ivf_centroids")).collect()
-    qrow = cells.filter(F.col("vec_id") == 0).select("embedding").first()
-    q = np.asarray([float(x) for x in qrow["embedding"]], dtype=np.float64)
-    qn = np.linalg.norm(q) or 1.0
-    scores = {
-        r["cell"]: float(
-            np.dot(r["centroid"], q)
-            / ((np.linalg.norm(r["centroid"]) or 1.0) * qn)
-        )
-        for r in cent
-    }
-    probe = sorted(scores, key=lambda c: (-scores[c], c))[:_IVF_PROBE_CELLS]
+    cmat = _read_quantizer(spark, _artifact_path(sf_dir, "ivf_centroids"))
+    q = _query_vec_0(spark, sf_dir)
+    probe = _rank_cells(_normalize_rows(cmat), q, _IVF_PROBE_CELLS)
     return brute_force_topk(
-        cells.filter(F.col("ivf_cell").isin(probe)), "embedding", q.tolist(), k=10
+        cells.filter(F.col("ivf_cell").isin(probe)), "embedding", q, k=10
     ).select("vec_id", F.round("cosine", 4).alias("cosine"))
 
 

@@ -41,7 +41,7 @@ import sys
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from slowspark.catalog import Catalog
-from slowspark.checkpoint import _hash_sum, run_stage
+from slowspark.checkpoint import _hash_sum, load_manifest, run_stage
 from slowspark.util import fs_listing_stamp, logger
 from slowspark.corpus import (
     hash_sample,
@@ -1535,21 +1535,13 @@ def main(argv: list[str] | None = None) -> int:
         else:
             jsonl_manifest = None
         audit = tables["filter_audit"].collect()[0].asDict()
+        # row counts from the stage manifests (observed on each write),
+        # in pipeline order: no count job
+        cat = Catalog(args.warehouse)
         stages = {
-            name: tables[name].count()
-            for name in ("latest_captured", "delta_ingested",
-                         "url_deduped", "lang_filtered", "filtered",
-                         "badword_filtered", "gopher_filtered",
-                         "domain_filtered", "domain_capped",
-                         "line_deduped", "deduped_exact",
-                         "deduped_near", "semantic_deduped",
-                         "substring_deduped", "substring_char_deduped",
-                         "ppl_filtered",
-                         "quality_filtered", "scrubbed",
-                         "pii_scrubbed", "decontaminated",
-                         "fuzzy_decontaminated", "holdout_val",
-                         "holdout_train", "sampled", "packed")
-            if name in tables
+            name: load_manifest(cat, name, spark)["row_count"]
+            for name in tables
+            if name not in ("filter_audit", "unigram_vocab", "bpe_vocab")
         }
         if args.pack_whole_docs:
             n_seq = tables["packed"].select("shard", "bin_ix").distinct() \

@@ -8,6 +8,14 @@ spherical k-means) with a probe-n-cells query path. 100 TB shape: queries
 are broadcast; the corpus is never shuffled for brute force; LSH/IVF turn
 all-pairs into a bucket-keyed shuffle.
 
+One copy per mechanism: `_lloyd` is the one Lloyd trainer (IVF is one
+spherical subspace, PQ m Euclidean ones) over `_seed_rows` seeds, with
+`_nearest_codes` the one nearest-centroid step the trainer and pq_encode
+share; `_blocked_cosine_pairs` is the one block-keyed cosine pair
+generator (LSH buckets or IVF cells); `_write_quantizer` /
+`_read_quantizer` are the one layout of the centroid and codebook tables;
+`_rank_cells` is the one coarse cell ranking.
+
 Projection stages (LSH sign bits, IVF cell argmax) are Arrow-batched pandas
 UDFs over a worker-cached numpy matrix — NOT literal arrays in the Catalyst
 plan. At production dims (768-4096) a literal-array encoding would put
@@ -169,7 +177,7 @@ def with_lsh_bucket(
 # ---------------------------------------------------------------------------
 
 def _normalize_rows(m: np.ndarray) -> np.ndarray:
-    n = np.linalg.norm(m, axis=1, keepdims=True)
+    n = np.linalg.norm(m, axis=-1, keepdims=True)
     n[n == 0] = 1.0
     return m / n
 
@@ -194,6 +202,114 @@ def _assign_with(corpus: DataFrame, centroids: np.ndarray, vec_col: str,
     return corpus.withColumn(out, assign_udf(F.col(vec_col)))
 
 
+def _nearest_codes(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, m) code per row of `mat` against (m, k, dsub) codebooks: per
+    subspace j the L2-nearest centroid, argmin ||x_j - c||^2 ==
+    argmax (x_j . c - 0.5|c|^2) — one matmul per subspace. The Lloyd
+    trainer assigns and pq_encode encodes with this one step."""
+    bias = 0.5 * (books * books).sum(axis=2)
+    dsub = books.shape[2]
+    return np.stack(
+        [np.argmax(mat[:, j * dsub:(j + 1) * dsub] @ book.T - bias[j], axis=1)
+         for j, book in enumerate(books)],
+        axis=-1,
+    )
+
+
+def _seed_rows(
+    corpus: DataFrame, vec_col: str, id_col: str, n: int, seed: int,
+    label: str, same_width: bool = False,
+) -> np.ndarray:
+    """The Lloyd seeds: the `n` vectors whose xxhash64(id, seed) is lowest
+    (stable, no rand(); the seed participates, so two seeds give two
+    quantizers), as a matrix. Null vectors never qualify; with
+    `same_width` only vectors as wide as the first non-null one do."""
+    ok = F.col(vec_col).isNotNull()
+    if same_width:
+        first = corpus.filter(ok).select(F.size(vec_col).alias("d")).first()
+        ok = ok & (F.size(vec_col) == (first["d"] if first else -1))
+    rows = (
+        corpus.select(id_col, vec_col).filter(ok)
+        .withColumn(
+            "__h", F.xxhash64(F.col(id_col).cast("string"), F.lit(int(seed)))
+        )
+        .orderBy("__h")
+        .limit(n)
+        .collect()
+    )
+    if not rows:
+        raise ValueError(f"{label}: empty corpus")
+    return np.asarray(
+        [[float(x) for x in r[vec_col]] for r in rows], dtype=np.float64
+    )
+
+
+def _lloyd(
+    corpus: DataFrame, vec_col: str, books: np.ndarray, lloyd_iters: int,
+    spherical: bool,
+) -> np.ndarray:
+    """`lloyd_iters` Lloyd rounds over (m, k, dsub) codebooks: IVF is m=1
+    with the centroids renormalized after each round (spherical k-means),
+    PQ is m subspaces of plain Euclidean k-means. ALL m subspaces train in
+    the SAME pass (one Lloyd driver per subspace would cost m * iters
+    corpus passes — measured 4x the whole oracle-artifact step at sf0.1).
+
+    Each round is ONE narrow pass: a per-partition partial (j, cell ->
+    sum_vec, count) via mapInPandas, then the distributed
+    _combine_lloyd_partials — the driver collects <= m*k rows regardless
+    of partition count. Empty cells keep their old centroid."""
+    m, k, dsub = books.shape
+    for _ in range(max(0, lloyd_iters)):
+
+        def partial(batches, cur=books):
+            from pyspark import TaskContext
+
+            pid = TaskContext.get().partitionId()
+            sums = np.zeros((m, k, dsub))
+            counts = np.zeros((m, k), dtype=np.int64)
+            for pdf in batches:
+                mat, valid = _stack_vectors(pdf[vec_col], m * dsub)
+                mat = mat[valid]
+                for j, cells in enumerate(_nearest_codes(mat, cur).T):
+                    np.add.at(sums[j], cells, mat[:, j * dsub:(j + 1) * dsub])
+                    np.add.at(counts[j], cells, 1)
+            jj, cc = np.nonzero(counts)  # sparse partials: skip untouched cells
+            if len(jj) == 0:
+                # empty partition: yield nothing — an empty frame would
+                # type vsum as float64 and fail the Arrow array<double>
+                # cast (hit when partitions outnumber vectors)
+                return
+            yield pd.DataFrame({
+                "pid": np.full(len(jj), pid, dtype=np.int32),
+                "j": jj.astype(np.int32),
+                "cell": cc.astype(np.int32),
+                "vsum": [row.tolist() for row in sums[jj, cc]],
+                "cnt": counts[jj, cc],
+            })
+
+        parts = _combine_lloyd_partials(
+            corpus.select(vec_col)
+            .filter(F.col(vec_col).isNotNull())
+            .mapInPandas(
+                partial,
+                schema="pid int, j int, cell int, vsum array<double>, cnt long",
+            ),
+            ["j", "cell"],
+            dsub,
+        ).collect()
+        sums = np.zeros((m, k, dsub))
+        counts = np.zeros((m, k), dtype=np.int64)
+        for r in parts:
+            sums[r["j"], r["cell"]] += np.asarray(r["vsum"])
+            counts[r["j"], r["cell"]] += r["cnt"]
+        nz = counts > 0
+        books = books.copy()
+        books[nz] = sums[nz] / counts[nz][:, None]
+        if spherical:
+            books = _normalize_rows(books)
+    return books
+
+
 def ivf_train(
     corpus: DataFrame,
     vec_col: str = "embedding",
@@ -201,94 +317,15 @@ def ivf_train(
     n_centroids: int = 16,
     seed: int = 42,
     lloyd_iters: int = 2,
-    normalize: bool = True,
 ) -> np.ndarray:
-    """Deterministic IVF training: seed centroids = hash-sampled corpus rows
-    (ids whose xxhash64 lands lowest — stable, no rand()), then `lloyd_iters`
-    rounds of spherical k-means. Each round is ONE narrow pass: per-partition
-    partial (cell -> sum_vec, count) via mapInPandas, then a DISTRIBUTED
-    groupBy("cell") element-wise array-sum combine — the driver collects
-    exactly <=k centroid rows regardless of partition count (no
-    k x n_partitions driver materialization). Returns the centroid matrix
-    (n_centroids x dim, L2-normalized).
-    """
-    sample = (
-        corpus.select(id_col, vec_col)
-        .filter(F.col(vec_col).isNotNull())
-        # seed participates in the sampling hash — callers varying seed get
-        # genuinely different quantizers (it was silently ignored before)
-        .withColumn(
-            "__h", F.xxhash64(F.col(id_col).cast("string"), F.lit(int(seed)))
-        )
-        .orderBy("__h")
-        .limit(n_centroids)
-        .collect()
+    """Deterministic IVF training: `n_centroids` hash-seeded corpus rows
+    (_seed_rows), then `lloyd_iters` rounds of spherical k-means — the
+    one Lloyd trainer (_lloyd) with a single subspace. Returns the
+    centroid matrix (n_centroids x dim, L2-normalized)."""
+    seeds = _normalize_rows(
+        _seed_rows(corpus, vec_col, id_col, n_centroids, seed, "ivf_train")
     )
-    if not sample:
-        raise ValueError("ivf_train: empty corpus")
-    cmat = np.asarray(
-        [[float(x) for x in r[vec_col]] for r in sample], dtype=np.float64
-    )
-    # normalize=True: spherical k-means (cosine IVF cells — the default).
-    # normalize=False: plain Euclidean k-means with min-||x-c||^2
-    # assignment — the PQ sub-quantizer case, where centroid MAGNITUDE
-    # carries reconstruction information that normalizing would destroy.
-    if normalize:
-        cmat = _normalize_rows(cmat)
-    k, dim = cmat.shape
-
-    for _ in range(max(0, lloyd_iters)):
-        cur = cmat  # rebind for closure
-
-        def partial(batches, cur=cur, k=k, dim=dim, normalize=normalize):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            sums = np.zeros((k, dim))
-            counts = np.zeros(k, dtype=np.int64)
-            # argmin ||x-c||^2 == argmax (x.c - 0.5*|c|^2); the bias term
-            # vanishes for unit centroids, so one formula serves both modes
-            bias = 0.5 * (cur * cur).sum(axis=1)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                m, valid = _stack_vectors(pdf[vec_col], dim)
-                m = m[valid]
-                if len(m) == 0:
-                    continue
-                cells = np.argmax(m @ cur.T - bias, axis=1)
-                np.add.at(sums, cells, m)
-                np.add.at(counts, cells, 1)
-            nz = counts > 0  # sparse partials: skip untouched cells
-            if not nz.any():
-                # empty partition: yield nothing — an empty frame would
-                # type vsum as float64 and fail the Arrow array<double>
-                # cast (hit when partitions outnumber vectors)
-                return
-            yield pd.DataFrame({
-                "pid": np.full(int(nz.sum()), pid, dtype=np.int32),
-                "cell": np.arange(k, dtype=np.int32)[nz],
-                "vsum": [row.tolist() for row in sums[nz]],
-                "cnt": counts[nz],
-            })
-
-        parts = _combine_lloyd_partials(
-            corpus.select(vec_col).mapInPandas(
-                partial, schema="pid int, cell int, vsum array<double>, cnt long"
-            ),
-            ["cell"],
-            dim,
-        ).collect()  # <=k rows, partition-count-invariant
-        sums = np.zeros((k, dim))
-        counts = np.zeros(k, dtype=np.int64)
-        for r in parts:
-            sums[r["cell"]] += np.asarray(r["vsum"])
-            counts[r["cell"]] += r["cnt"]
-        new = cmat.copy()  # empty cells keep their old centroid
-        nz = counts > 0
-        new[nz] = sums[nz] / counts[nz, None]
-        cmat = _normalize_rows(new) if normalize else new
-    return cmat
+    return _lloyd(corpus, vec_col, seeds[None], lloyd_iters, spherical=True)[0]
 
 
 def ivf_assign(
@@ -327,10 +364,7 @@ def ivf_topk(
     if centroids is None:
         centroids = ivf_train(corpus, vec_col, id_col, n_centroids, seed, lloyd_iters)
     cmat = _normalize_rows(np.asarray(centroids, dtype=np.float64))
-    q = np.asarray(query, dtype=np.float64)
-    qn = np.linalg.norm(q) or 1.0
-    order = np.argsort(-(cmat @ (q / qn)))
-    probe = [int(c) for c in order[: max(1, probe_cells)]]
+    probe = _rank_cells(cmat, query, probe_cells)
     assigned = _assign_with(corpus, cmat, vec_col)
     return brute_force_topk(
         assigned.filter(F.col("ivf_cell").isin(probe)), vec_col, query, k, id_col
@@ -338,8 +372,65 @@ def ivf_topk(
 
 
 # ---------------------------------------------------------------------------
-# Embedding near-dup dedup — LSH-bucketed pairs + exact cosine verify
+# Embedding near-dup dedup — block-keyed pairs + exact cosine verify
 # ---------------------------------------------------------------------------
+
+def _blocked_cosine_pairs(
+    corpus: DataFrame, vec_col: str, id_col: str, block_col: str,
+    with_block, cosine_threshold: float, max_block_size: int | None,
+    label: str, dim: int | None = None,
+) -> DataFrame:
+    """(id_a, id_b, cosine) pairs with id_a < id_b that share `block_col`
+    (added by `with_block` to the valid rows) and clear the threshold.
+    The one pair generator of the LSH and the SemDeDup near-dup paths;
+    the shuffle is keyed on the block, so pair fan-out is
+    sum of block_size^2, never corpus^2.
+
+    Scale hardening (same pattern as textops.minhash_verified_pairs):
+      - null / empty (and, when `dim` is given, wrong-dimension) vectors
+        are filtered OUT before blocking — they cannot be near-dups of
+        anything, and mapping them all to block 0 would make that block's
+        self-join quadratic in the null count on a corpus with a
+        malformed-embedding tail;
+      - the blocked table is eagerly materialized before the self-join —
+        both join sides of a lazy plan race to recompute the block-UDF
+        subtree (measured 2-3x cost on the MinHash sibling);
+      - `max_block_size` drops pathological blocks from pair generation
+        with the dropped block/row counts logged under `label` (no
+        silent caps)."""
+    from slowspark.util import capped_by_bucket, materialize
+
+    valid = corpus.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
+    if dim is not None:
+        valid = valid.filter(F.size(vec_col) == dim)
+    b = materialize(
+        with_block(valid).select(
+            F.col(id_col), F.col(vec_col), F.col(block_col),
+            _norm(vec_col).alias("__n"),
+        )
+    )
+    if max_block_size is not None:
+        b = capped_by_bucket(b, [block_col], max_block_size, label)
+    l, r = b.alias("l"), b.alias("r")
+    cos = _dot(f"l.{vec_col}", f"r.{vec_col}") / F.greatest(
+        F.col("l.__n") * F.col("r.__n"), F.lit(1e-12)
+    )
+    return (
+        l.join(
+            r,
+            on=[
+                F.col(f"l.{block_col}") == F.col(f"r.{block_col}"),
+                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
+            ],
+        )
+        .select(
+            F.col(f"l.{id_col}").alias("id_a"),
+            F.col(f"r.{id_col}").alias("id_b"),
+            cos.alias("cosine"),
+        )
+        .filter(F.col("cosine") >= cosine_threshold)
+    )
+
 
 def embedding_near_dup_pairs(
     corpus: DataFrame,
@@ -357,53 +448,13 @@ def embedding_near_dup_pairs(
     bucket share all sign bits, so true near-dups (cosine -> 1) co-bucket
     with high probability; recall can be raised with multiple plane seeds.
     `dim` is optional — the bucket UDF infers it from the data (an empty
-    corpus yields an empty pair set, never a driver error).
-
-    Scale hardening (same pattern as textops.minhash_verified_pairs):
-      - null / empty (and, when `dim` is given, wrong-dimension) vectors
-        are filtered OUT before bucketing — they cannot be near-dups of
-        anything, and mapping them all to bucket 0 would make that bucket's
-        self-join quadratic in the null count on a corpus with a
-        malformed-embedding tail;
-      - the bucketed table is eagerly materialized before the self-join —
-        both join sides of a lazy plan race to recompute the bucket-UDF
-        subtree (measured 2-3x cost on the MinHash sibling);
-      - `max_bucket_size` drops pathological buckets from pair generation
-        with the dropped bucket/row counts logged (no silent caps)."""
-    from slowspark.util import capped_by_bucket, materialize
-
-    valid = corpus.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
-    if dim is not None:
-        valid = valid.filter(F.size(vec_col) == dim)
-    b = materialize(
-        with_lsh_bucket(valid, vec_col, n_planes, dim, seed).select(
-            F.col(id_col), F.col(vec_col), F.col("lsh_bucket"),
-            _norm(vec_col).alias("__n"),
-        )
-    )
-    if max_bucket_size is not None:
-        b = capped_by_bucket(
-            b, ["lsh_bucket"], max_bucket_size, "embedding_near_dup_pairs"
-        )
-    l, r = b.alias("l"), b.alias("r")
-    pairs = l.join(
-        r,
-        on=[
-            F.col("l.lsh_bucket") == F.col("r.lsh_bucket"),
-            F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-        ],
-    )
-    cos = F.expr(
-        f"aggregate(zip_with(l.{vec_col}, r.{vec_col}, "
-        f"(x, y) -> cast(x as double) * cast(y as double)), 0D, (a, v) -> a + v)"
-    ) / F.greatest(F.col("l.__n") * F.col("r.__n"), F.lit(1e-12))
-    return (
-        pairs.select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            cos.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= cosine_threshold)
+    corpus yields an empty pair set, never a driver error). The invalid-
+    vector filter, the materialize and the `max_bucket_size` cap are
+    _blocked_cosine_pairs'."""
+    return _blocked_cosine_pairs(
+        corpus, vec_col, id_col, "lsh_bucket",
+        lambda valid: with_lsh_bucket(valid, vec_col, n_planes, dim, seed),
+        cosine_threshold, max_bucket_size, "embedding_near_dup_pairs", dim,
     )
 
 
@@ -422,72 +473,34 @@ def semantic_near_dup_pairs(
     """SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
     deduplication"): k-means-cluster the embedding space, then generate
-    and exact-verify cosine pairs ONLY within clusters. Same contract as
-    embedding_near_dup_pairs but the blocking key is a learned spherical
-    k-means cell instead of an LSH bucket — the published recipe, and the
-    right one when the corpus has cluster structure (LSH hyperplanes are
-    oblivious to it; centroids concentrate true semantic neighbors).
+    and exact-verify cosine pairs ONLY within clusters. Same pair
+    generator as embedding_near_dup_pairs (_blocked_cosine_pairs) but the
+    blocking key is a learned spherical k-means cell instead of an LSH
+    bucket — the published recipe, and the right one when the corpus has
+    cluster structure (LSH hyperplanes are oblivious to it; centroids
+    concentrate true semantic neighbors). `max_cluster_size` drops
+    degenerate clusters with LOGGED counts.
 
-    Scale shape mirrors the LSH sibling: invalid vectors filtered before
-    assignment, the assigned table materialized before the self-join
-    (UDF-race trap), the join keyed on the cell (pair fan-out is
-    sum of cluster_size^2, never corpus^2), `max_cluster_size` drops
-    degenerate clusters with LOGGED counts. Pass pre-trained `centroids`
-    to share the quantizer with an IVF/IVFPQ index over the same corpus —
-    or pass `assigned` (a table with id, vec, and an ivf_cell column,
-    e.g. an IVF index's cells/ parquet) to skip training AND assignment
-    entirely: the standard composition when the corpus is already stored
-    cell-partitioned for ANN. At 10^12 docs raise n_clusters so cells
-    stay joinable (SemDeDup used ~100k clusters for LAION-scale
-    corpora)."""
-    from slowspark.util import capped_by_bucket, materialize
-
+    The cells are trained on the valid vectors unless given: pass
+    pre-trained `centroids` to share the quantizer with an IVF/IVFPQ
+    index over the same corpus — or pass `assigned` (a table with id,
+    vec, and an ivf_cell column, e.g. an IVF index's cells/ parquet) to
+    skip training AND assignment entirely: the standard composition when
+    the corpus is already stored cell-partitioned for ANN. At 10^12 docs
+    raise n_clusters so cells stay joinable (SemDeDup used ~100k clusters
+    for LAION-scale corpora)."""
     if assigned is not None:
-        assigned = materialize(
-            assigned.filter(
-                F.col(vec_col).isNotNull() & (F.size(vec_col) > 0)
-            ).select(
-                F.col(id_col), F.col(vec_col), F.col("ivf_cell"),
-                _norm(vec_col).alias("__n"),
-            )
-        )
+        corpus, with_cell = assigned, lambda valid: valid
     else:
-        valid = corpus.filter(
-            F.col(vec_col).isNotNull() & (F.size(vec_col) > 0)
-        )
-        if centroids is None:
-            centroids = ivf_train(
+        def with_cell(valid):
+            cmat = centroids if centroids is not None else ivf_train(
                 valid, vec_col, id_col, n_clusters, seed, lloyd_iters
             )
-        assigned = materialize(
-            _assign_with(valid, centroids, vec_col).select(
-                F.col(id_col), F.col(vec_col), F.col("ivf_cell"),
-                _norm(vec_col).alias("__n"),
-            )
-        )
-    if max_cluster_size is not None:
-        assigned = capped_by_bucket(
-            assigned, ["ivf_cell"], max_cluster_size, "semantic_near_dup_pairs"
-        )
-    l, r = assigned.alias("l"), assigned.alias("r")
-    cos = F.expr(
-        f"aggregate(zip_with(l.{vec_col}, r.{vec_col}, "
-        f"(x, y) -> cast(x as double) * cast(y as double)), 0D, (a, v) -> a + v)"
-    ) / F.greatest(F.col("l.__n") * F.col("r.__n"), F.lit(1e-12))
-    return (
-        l.join(
-            r,
-            on=[
-                F.col("l.ivf_cell") == F.col("r.ivf_cell"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            cos.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= cosine_threshold)
+            return _assign_with(valid, cmat, vec_col)
+
+    return _blocked_cosine_pairs(
+        corpus, vec_col, id_col, "ivf_cell", with_cell, cosine_threshold,
+        max_cluster_size, "semantic_near_dup_pairs",
     )
 
 
@@ -505,7 +518,8 @@ def pq_train(
     lloyd_iters: int = 4,
 ) -> np.ndarray:
     """Train PQ sub-codebooks: split the vector into `m` subspaces and run
-    plain (Euclidean, non-spherical) k-means with `k` centroids in each.
+    plain (Euclidean, non-spherical) k-means with `k` centroids in each —
+    the one Lloyd trainer (_lloyd), every subspace in the same pass.
     Returns codebooks of shape (m, k, dim/m).
 
     Why PQ at 10^12 vectors: raw float32 at dim=64 is 256 B/vector ≈
@@ -514,90 +528,17 @@ def pq_train(
     exact vectors stay cold. Defaults (m=16: 4-dim subspaces) are tuned on
     the sf0.01 table: candidate-recall@10 = 1.0 at rerank=100.
 
-    ALL m subspaces train in the SAME distributed pass: one hash-seeded
-    sample job initializes every codebook (sliced from the same k rows),
-    and each Lloyd iteration is ONE mapInPandas over the corpus that
-    assigns/accumulates per subspace inside the worker (m*k tiny partial
-    rows out). The per-subspace formulation (m separate Lloyd drivers)
-    costs m * iters corpus passes — measured 4x the whole oracle-artifact
-    step at sf0.1."""
-    dim = corpus.select(F.size(F.col(vec_col)).alias("d")).first()["d"]
+    One hash-seeded sample of k rows (_seed_rows; vectors as wide as the
+    first non-null one) initializes every codebook, sliced per subspace;
+    a corpus smaller than k cycles its rows to fill k seeds."""
+    init = _seed_rows(
+        corpus, vec_col, id_col, k, seed, "pq_train", same_width=True
+    )
+    dim = init.shape[1]
     if dim % m != 0:
         raise ValueError(f"pq_train: dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    sample = (
-        corpus.select(id_col, vec_col)
-        .filter(F.col(vec_col).isNotNull() & (F.size(vec_col) == dim))
-        .withColumn(
-            "__h", F.xxhash64(F.col(id_col).cast("string"), F.lit(int(seed)))
-        )
-        .orderBy("__h")
-        .limit(k)
-        .collect()
-    )
-    if not sample:
-        raise ValueError("pq_train: empty corpus")
-    init = np.asarray(
-        [[float(x) for x in r[vec_col]] for r in sample], dtype=np.float64
-    )
-    while init.shape[0] < k:  # tiny corpus: cycle rows to fill k seeds
-        init = np.vstack([init, init[: k - init.shape[0]]])
-    books = np.stack([init[:, j * dsub : (j + 1) * dsub] for j in range(m)])
-
-    for _ in range(max(0, lloyd_iters)):
-        cur = books.copy()
-
-        def partial(batches, cur=cur):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            sums = np.zeros((m, k, dsub))
-            counts = np.zeros((m, k), dtype=np.int64)
-            # argmin ||x-c||^2 == argmax (x.c - 0.5|c|^2)
-            bias = 0.5 * (cur * cur).sum(axis=2)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat, valid = _stack_vectors(pdf[vec_col], dim)
-                mat = mat[valid]
-                if len(mat) == 0:
-                    continue
-                for j in range(m):
-                    sub = mat[:, j * dsub : (j + 1) * dsub]
-                    cells = np.argmax(sub @ cur[j].T - bias[j], axis=1)
-                    np.add.at(sums[j], cells, sub)
-                    np.add.at(counts[j], cells, 1)
-            jj, cc = np.meshgrid(np.arange(m), np.arange(k), indexing="ij")
-            nz = (counts > 0).ravel()  # sparse partials: skip untouched cells
-            if not nz.any():
-                return  # empty partition: see ivf_train partial
-            flat = sums.reshape(m * k, dsub)
-            yield pd.DataFrame({
-                "pid": np.full(int(nz.sum()), pid, dtype=np.int32),
-                "j": jj.ravel().astype("int32")[nz],
-                "cell": cc.ravel().astype("int32")[nz],
-                "vsum": [row.tolist() for row in flat[nz]],
-                "cnt": counts.ravel()[nz],
-            })
-
-        parts = _combine_lloyd_partials(
-            corpus.select(vec_col)
-            .filter(F.col(vec_col).isNotNull())
-            .mapInPandas(
-                partial,
-                schema="pid int, j int, cell int, vsum array<double>, cnt long",
-            ),
-            ["j", "cell"],
-            dsub,
-        ).collect()  # <=m*k rows, partition-count-invariant
-        sums = np.zeros((m, k, dsub))
-        counts = np.zeros((m, k), dtype=np.int64)
-        for r in parts:
-            sums[r["j"]][r["cell"]] += np.asarray(r["vsum"])
-            counts[r["j"]][r["cell"]] += r["cnt"]
-        nz = counts > 0  # empty cells keep their old centroid
-        books[nz] = sums[nz] / counts[nz][:, None]
-    return books
+    books = np.stack(np.split(np.resize(init, (k, dim)), m, axis=1))
+    return _lloyd(corpus, vec_col, books, lloyd_iters, spherical=False)
 
 
 def pq_encode(
@@ -607,31 +548,25 @@ def pq_encode(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """(id, pq_codes array<int> length m, norm double): per subspace the
-    code is argmax of (x_sub . c - 0.5|c|^2) over the k centroids — the
-    same objective the trainer assigns with — plus the exact vector L2
-    norm captured at encode time (cosine ADC needs it; it is the one
-    scalar that cannot be reconstructed from codes). Arrow-batched numpy
-    over worker-broadcast codebooks: k*m dot products per row, plan size
-    O(1) in dim (the codebook travels in the closure once per worker,
-    like the LSH hyperplanes)."""
-    mq, kq, dsub = codebooks.shape
-    dim = mq * dsub
+    code is the nearest centroid (_nearest_codes, the step the trainer
+    assigns with), plus the exact vector L2 norm captured at encode time
+    (cosine ADC needs it; it is the one scalar that cannot be
+    reconstructed from codes). Arrow-batched numpy over worker-broadcast
+    codebooks: k*m dot products per row, plan size O(1) in dim (the
+    codebook travels in the closure once per worker, like the LSH
+    hyperplanes)."""
     books = codebooks.astype(np.float64)
-    bias = 0.5 * (books * books).sum(axis=2)  # (m, k)
+    dim = books.shape[0] * books.shape[2]
 
     def fn(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             mat, valid = _stack_vectors(pdf[vec_col], dim)
-            ids = pdf[id_col].to_numpy()[valid]
             mat = mat[valid]
-            codes = np.empty((len(mat), mq), dtype=np.int32)
-            for j in range(mq):
-                sub = mat[:, j * dsub : (j + 1) * dsub]
-                codes[:, j] = np.argmax(sub @ books[j].T - bias[j], axis=1)
+            codes = _nearest_codes(mat, books).astype(np.int32)
             yield pd.DataFrame({
-                "__id": ids.astype("int64"),
+                "__id": pdf[id_col].to_numpy()[valid].astype("int64"),
                 "pq_codes": [row.tolist() for row in codes],
                 "norm": np.linalg.norm(mat, axis=1),
             })
@@ -770,7 +705,7 @@ def ivfpq_build_index(
     deterministic, so the composed index is identical either way)."""
     import json
 
-    from slowspark.util import fs_write_text_atomic, local_frame, materialize
+    from slowspark.util import fs_write_text_atomic, materialize
 
     if centroids is None:
         centroids = ivf_train(
@@ -821,20 +756,8 @@ def ivfpq_build_index(
         .parquet(f"{index_path}/cells")
     )
     spark = corpus.sparkSession
-    local_frame(
-        spark,
-        [(i, [float(x) for x in row]) for i, row in enumerate(centroids)],
-        "cell int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{index_path}/centroids")
-    local_frame(
-        spark,
-        [
-            (j, c, [float(x) for x in books[j][c]])
-            for j in range(books.shape[0])
-            for c in range(books.shape[1])
-        ],
-        "j int, c int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{index_path}/codebooks")
+    _write_quantizer(spark, centroids, f"{index_path}/centroids")
+    _write_quantizer(spark, books, f"{index_path}/codebooks")
     meta = {
         "vec_col": vec_col,
         "id_col": id_col,
@@ -872,32 +795,58 @@ def _with_residual(
     return assigned.withColumn(out, res_udf(F.col(vec_col), F.col("ivf_cell")))
 
 
-def _ivfpq_meta(spark, index_path: str):
-    """(centroids, codebooks, vec_col, id_col, residual) from a persisted
-    IVF-PQ index: scalars from meta.json, quantizer matrices from their
-    parquet tables. The driver read goes through Arrow (toPandas +
+# The quantizer-table layout, one writer and one reader for both tables:
+# centroids (n_cells, dim) as (cell int, centroid array<double>), PQ
+# codebooks (m, k, dsub) as (j int, c int, centroid array<double>).
+_QUANTIZER_SCHEMA = {
+    2: "cell int, centroid array<double>",
+    3: "j int, c int, centroid array<double>",
+}
+
+
+def _write_quantizer(spark, mat: np.ndarray, path: str) -> None:
+    """Persist a centroid matrix or PQ codebooks (by `mat.ndim`) as one
+    parquet file of _QUANTIZER_SCHEMA rows, one row per centroid."""
+    from slowspark.util import local_frame
+
+    local_frame(
+        spark,
+        [
+            (*(int(i) for i in ix), [float(x) for x in mat[ix]])
+            for ix in np.ndindex(mat.shape[:-1])
+        ],
+        _QUANTIZER_SCHEMA[mat.ndim],
+    ).coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def _read_quantizer(spark, path: str) -> np.ndarray:
+    """The matrix _write_quantizer stored at `path`, as stored (callers
+    normalize). The driver read goes through Arrow (toPandas +
     np.vstack), NOT collect(): at production shape (10^5-10^6 centroids
     x dim 768) Row objects of array<double> inflate ~10x over the Arrow
     buffers — Arrow keeps the load one bounded columnar read."""
+    pdf = spark.read.parquet(path).toPandas()
+    ix = tuple(pdf[c].to_numpy(dtype=np.int64) for c in pdf.columns[:-1])
+    out = np.zeros(
+        tuple(int(i.max()) + 1 for i in ix) + (len(pdf["centroid"].iloc[0]),)
+    )
+    out[ix] = np.vstack(pdf["centroid"].to_numpy())
+    return out
+
+
+def _ivfpq_meta(spark, index_path: str):
+    """(centroids, codebooks, vec_col, id_col, residual) from a persisted
+    IVF-PQ index: scalars from meta.json, quantizer matrices from their
+    parquet tables (_read_quantizer); the centroids come back
+    L2-normalized."""
     import json
 
     from slowspark.util import fs_read_text
 
     meta = json.loads(fs_read_text(spark, f"{index_path}/meta.json"))
-    cent = spark.read.parquet(f"{index_path}/centroids").toPandas()
-    dim = len(cent["centroid"].iloc[0])
-    cmat = np.zeros((meta["n_centroids"], dim))
-    cmat[cent["cell"].to_numpy(dtype=np.int64)] = np.vstack(
-        cent["centroid"].to_numpy()
-    )
-    bk = spark.read.parquet(f"{index_path}/codebooks").toPandas()
-    books = np.zeros((meta["m"], meta["k"], len(bk["centroid"].iloc[0])))
-    books[
-        bk["j"].to_numpy(dtype=np.int64), bk["c"].to_numpy(dtype=np.int64)
-    ] = np.vstack(bk["centroid"].to_numpy())
     return (
-        _normalize_rows(cmat),
-        books,
+        _normalize_rows(_read_quantizer(spark, f"{index_path}/centroids")),
+        _read_quantizer(spark, f"{index_path}/codebooks"),
         meta["vec_col"],
         meta["id_col"],
         bool(meta.get("residual", False)),
@@ -912,8 +861,10 @@ def _cell_bias(cmat: np.ndarray, query: list[float]) -> list[float]:
 
 
 def _rank_cells(cmat: np.ndarray, query: list[float], probe_cells: int) -> list[int]:
-    """Driver-side coarse ranking: cosine of the query against the (tiny)
-    centroid matrix, deterministic (score desc, cell asc) tie-break."""
+    """Coarse ranking: the `probe_cells` best cells by cosine of the query
+    against the (tiny, L2-normalized) centroid matrix, deterministic
+    (score desc, cell asc) tie-break. The one ranking of ivf_topk,
+    ivfpq_topk and ivfpq_topk_batch's per-query probe."""
     q = np.asarray(query, dtype=np.float64)
     qn = np.linalg.norm(q) or 1.0
     scores = cmat @ (q / qn)

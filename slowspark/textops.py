@@ -823,12 +823,18 @@ def _probe_index(
     (an aliased expression over sig_a/sig_b) scores the pair. Shuffle
     volume is O(batch keys + matching index buckets); `max_bucket_size`
     caps viral index buckets with logged drops, as the in-corpus path
-    does."""
+    does. The cap sees only the buckets the batch touches (a semi-join
+    on the batch's keys keeps those buckets whole), so a capped probe
+    stays O(batch + matching buckets), not O(index)."""
     spark = new_sigs.sparkSession
     key_table, part, key, sig = INDEX_LAYOUT[method]
     idx_keys = spark.read.parquet(f"{index_path}/{key_table}")
     if max_bucket_size is not None:
-        idx_keys = capped_by_bucket(idx_keys, [part, key], max_bucket_size, label)
+        touched = new_keys.select(part, key).distinct()
+        idx_keys = capped_by_bucket(
+            idx_keys.join(touched, [part, key], "left_semi"),
+            [part, key], max_bucket_size, label,
+        )
     cands = (
         new_keys.select(F.col(id_col).alias("new_id"), part, key)
         .join(

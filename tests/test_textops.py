@@ -516,6 +516,61 @@ def test_index_write_order(spark, tmp_path, monkeypatch, method):
     } == {1, 2}
 
 
+
+@pytest.mark.parametrize("method", ["minhash", "simhash"])
+def test_capped_probe_caps_only_the_batch_buckets(
+    spark, tmp_path, monkeypatch, caplog, method
+):
+    """A capped incremental probe caps the index buckets the batch
+    touches, not the whole key table: the viral copy's pairs are still
+    dropped and the drop logged, and capped_by_bucket receives exactly the
+    index key rows that share a (part, key) with the batch — an index
+    that grows no longer grows the cost of probing one small batch."""
+    import logging
+
+    key_table, part, key, build, probe = {
+        "minhash": ("bands", "band_id", "band_hash",
+                    textops.build_minhash_index,
+                    textops.incremental_near_dup_pairs),
+        "simhash": ("tables", "tbl", "tkey", textops.build_simhash_index,
+                    textops.incremental_simhash_near_dups),
+    }[method]
+    viral = "the quick brown fox jumps over the lazy dog every day " * 6
+    rows = [(i, viral) for i in range(30)] + [
+        (100 + i, f"distinct page {i} on topic t{i * 7} with words "
+                  f"a{i} b{i} c{i} d{i} e{i} " * 4)
+        for i in range(20)
+    ]
+    idx = str(tmp_path / "idx")
+    build(spark.createDataFrame(rows, "doc_id long, text string"), idx)
+    batch = spark.createDataFrame(
+        [(500, viral),
+         (501, "a fresh document about streaming watermarks and joins " * 6)],
+        "doc_id long, text string",
+    )
+    # the batch's own keys, through the same key builder as the index
+    batch_idx = str(tmp_path / "batch_idx")
+    build(batch, batch_idx)
+    batch_keys = spark.read.parquet(f"{batch_idx}/{key_table}").select(part, key)
+    idx_keys = spark.read.parquet(f"{idx}/{key_table}")
+    want_rows = idx_keys.join(batch_keys.distinct(), [part, key]).count()
+    assert 0 < want_rows < idx_keys.count()
+
+    seen = []
+    real_cap = textops.capped_by_bucket
+
+    def counting_cap(df, *a, **kw):
+        seen.append(df.count())
+        return real_cap(df, *a, **kw)
+
+    monkeypatch.setattr(textops, "capped_by_bucket", counting_cap)
+    with caplog.at_level(logging.WARNING, logger="slowspark"):
+        pairs = probe(batch, idx, max_bucket_size=10).collect()
+    assert not [r for r in pairs if r["new_id"] == 500]
+    assert any("max_bucket_size=10 dropped" in r.message for r in caplog.records)
+    assert seen == [want_rows]
+
+
 def test_simhash_dedup_end_to_end(spark, docs_with_dupes):
     """simhash_dedup composes signatures -> Manku candidates -> component-
     min survivors: byte-identical copies (hamming 0) must always lose to

@@ -830,39 +830,26 @@ def _admin_histogram_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _object_usage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-table usage rollup over the extracted `objects` arrays (SURVEY
-    §2.1 #18/#19 full_object_name) — hash-checks the objects extraction
-    itself through the parse, via explode + concat_ws."""
+    §2.1 #18/#19 full_object_name) through aggregate.object_usage —
+    hash-checks the objects extraction itself through the parse."""
+    from slowspark.aggregate import object_usage
+
     e = spark.read.parquet(_entries_parquet(spark, sf_dir))
-    return (
-        e.filter(F.col("entry_kind") == "SqlStatement")
-        .select("query_time", F.explode("objects").alias("obj"))
-        .select(
-            F.concat_ws(".", F.col("obj.schema_name"), F.col("obj.object_name"))
-            .alias("full_object_name"),
-            "query_time",
-        )
-        .groupBy("full_object_name")
-        .agg(
-            F.count("*").alias("n_refs"),
-            F.round(F.sum("query_time"), 4).alias("sum_query_time"),
-        )
+    return object_usage(e).select(
+        "full_object_name", "n_refs",
+        F.round("sum_query_time", 4).alias("sum_query_time"),
     )
 
 
 def _topk_slowest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 slowest calls per fingerprint (window rank over the parsed
+    """Top-3 slowest calls per fingerprint through
+    aggregate.top_k_slowest_per_fingerprint (window rank over the parsed
     entries; deterministic entry_id tie-break)."""
-    from pyspark.sql import Window
+    from slowspark.aggregate import top_k_slowest_per_fingerprint
 
     e = spark.read.parquet(_entries_parquet(spark, sf_dir))
-    w = Window.partitionBy("fingerprint").orderBy(
-        F.desc("query_time"), F.asc("entry_id")
-    )
-    return (
-        e.filter(F.col("entry_kind") == "SqlStatement")
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("fingerprint", "entry_id", "query_time", "rnk")
+    return top_k_slowest_per_fingerprint(e, 3).select(
+        "fingerprint", "entry_id", "query_time", F.col("rank").alias("rnk")
     )
 
 
@@ -2594,8 +2581,9 @@ def _qualityclf_parquet(spark: SparkSession, sf_dir: str) -> None:
     inside the value hash."""
     from pyspark.sql import functions as F
 
-    from slowspark.qualityclf import hashed_text_features, train_logreg
-    from slowspark.util import local_frame
+    from slowspark.qualityclf import (
+        hashed_text_features, stack_coeffs, train_logreg,
+    )
 
     def build(cpath):
         d = _read(spark, sf_dir, "documents").withColumn(
@@ -2616,11 +2604,9 @@ def _qualityclf_parquet(spark: SparkSession, sf_dir: str) -> None:
         coeffs, intercept, _ = train_logreg(
             train_feats, labels, n_buckets=_QCLF_BUCKETS, epochs=25, lr=6.0
         )
-        coeffs.unionByName(
-            local_frame(
-                spark, [(-1, float(intercept))], "bucket int, weight double"
-            )
-        ).coalesce(1).write.mode("overwrite").parquet(cpath)
+        stack_coeffs(coeffs, intercept).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(cpath)
         feats.unpersist()
 
     _artifact(sf_dir, "qualityclf_coeffs", build)
@@ -3554,15 +3540,14 @@ def _quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     target (trained on even ids only — odd rows show held-out
     generalization). The oracle recomputes the entire scoring pass in
     SQL from the same parquets."""
-    from slowspark.qualityclf import score_documents
+    from slowspark.qualityclf import score_documents, split_coeffs
 
     _qualityclf_parquet(spark, sf_dir)
     feats = spark.read.parquet(_artifact_path(sf_dir, "qualityclf_features"))
-    co = spark.read.parquet(_artifact_path(sf_dir, "qualityclf_coeffs"))
-    intercept = co.filter(F.col("bucket") == -1).collect()[0]["weight"]
-    scores = score_documents(
-        feats, co.filter(F.col("bucket") >= 0), float(intercept)
+    weights, intercept = split_coeffs(
+        spark.read.parquet(_artifact_path(sf_dir, "qualityclf_coeffs"))
     )
+    scores = score_documents(feats, weights, intercept)
     return scores.select(
         F.col("id").alias("doc_id"),
         F.round("score", 6).alias("score"),

@@ -105,14 +105,13 @@ def top_k_slowest_per_fingerprint(entries: DataFrame, k: int = 3) -> DataFrame:
 
 def object_usage(entries: DataFrame) -> DataFrame:
     """Explode referenced objects -> per-table usage rollup (the reference's
-    objects() accessor, src/types.rs:117-138, turned relational)."""
+    objects() accessor, src/types.rs:117-138, turned relational). A
+    statement that references no object (`SET NAMES utf8mb4;`)
+    contributes no row."""
     return (
         entries
         .filter(F.col("entry_kind") == "SqlStatement")
-        .select(
-            "fingerprint", "query_time",
-            F.explode_outer("objects").alias("obj"),
-        )
+        .select("query_time", F.explode("objects").alias("obj"))
         .select(
             F.concat_ws(
                 ".", F.col("obj.schema_name"), F.col("obj.object_name")

@@ -759,19 +759,9 @@ def mixture_rates(
     total_p = float(sum(target_props.values()))
     props = {s: float(p) / total_p for s, p in target_props.items()}
 
-    counts = {
-        r["s"]: r["t"]
-        for r in df.filter(
-            F.col(stratum_col).isin(list(props))
-        )
-        .groupBy(F.col(stratum_col).alias("s"))
-        .agg(
-            F.sum(
-                F.size(F.expr(rf"regexp_extract_all({text_col}, '\\S+', 0)"))
-            ).alias("t")
-        )
-        .collect()
-    }
+    counts = _stratum_token_counts(
+        df.filter(F.col(stratum_col).isin(list(props))), stratum_col, text_col
+    )
     missing = sorted(set(props) - set(counts))
     if missing:
         raise ValueError(
@@ -779,9 +769,9 @@ def mixture_rates(
             f"— the mixture cannot deliver their share (upsample/repeat is "
             f"a different operator)"
         )
-    # rows whose text is all NULL aggregate to a NULL token sum; rows of
-    # empty/whitespace text to 0 — both are "cannot deliver any tokens"
-    # and get the same loud error as a missing stratum (a raw
+    # a stratum whose text is all NULL or empty/whitespace counts 0
+    # tokens — "cannot deliver any tokens" gets the same loud error as a
+    # missing stratum (a raw
     # ZeroDivisionError here would violate the fail-loudly convention)
     empty = sorted(s for s in props if not counts[s])
     if empty:

@@ -34,6 +34,7 @@ be preempted; resume must not recompute the signature UDFs.
 from __future__ import annotations
 
 import argparse
+import inspect
 import json
 import os
 import sys
@@ -67,6 +68,20 @@ def _content_sig(df: DataFrame, *cols: Column) -> str:
         F.coalesce(_hash_sum(list(cols)), F.lit(0)).alias("h"),
     ).first()
     return f"{r['n']}:{r['h']}"
+
+
+def _kept_text(df: DataFrame, kept: DataFrame) -> DataFrame:
+    """`df` with `text` replaced by the `kept_text` of `kept` (doc_id,
+    kept_text): the rewrite of every text-cutting stage. A doc left
+    with no text is dropped — the count delta is the stage's audit
+    trail."""
+    return (
+        df.drop("text")
+        .join(kept.select("doc_id", "kept_text"), "doc_id")
+        .filter(F.col("kept_text") != "")
+        .withColumnRenamed("kept_text", "text")
+        .select(*df.columns)
+    )
 
 
 def run_curation(
@@ -133,6 +148,11 @@ def run_curation(
     rule at pipeline granularity: every document lost between stages is
     attributable to a stage and, for the filter stage, to a rule).
 
+    Every option is checked before the first Spark job: an invalid
+    combination, or a column an enabled stage needs that `docs` lacks,
+    raises ValueError before anything is hashed or written (every stage
+    before `sampled` keeps docs' columns).
+
     Optional stages, each participating in the resume signature:
       - `langs`: keep only documents whose lang column is in the list,
         BEFORE the quality filter — the C4/Gopher rules are tuned for
@@ -187,12 +207,12 @@ def run_curation(
         docs it has vectors for — the count delta is still attributable
         to exactly this stage). Pass `semantic_cells_df` instead (doc_id,
         embedding, ivf_cell — e.g. an IVF/IVFPQ index's cell table over
-        the same corpus) to skip k-means training AND assignment: the
-        standard composition when embeddings are already stored
-        cell-partitioned for ANN. The embeddings CONTENT (count +
-        xxhash64 sum) participates in the resume signature, like the
-        eval set — swapping the embedding table invalidates every
-        downstream manifest.
+        the same corpus; mutually exclusive with `embeddings_df`) to
+        skip k-means training AND assignment: the standard composition
+        when embeddings are already stored cell-partitioned for ANN.
+        The embeddings CONTENT (count + xxhash64 sum) participates in
+        the resume signature, like the eval set — swapping the embedding
+        table invalidates every downstream manifest.
       - `mixture` (+ optional `target_tokens`): replace flat/per-stratum
         sampling with domain-mix TOKEN budgeting (corpus.mixture_sample)
         — per-stratum rates derived from the scrubbed corpus's measured
@@ -243,7 +263,8 @@ def run_curation(
         model-based quality filter — score every doc with a PRETRAINED
         linear classifier (qualityclf.score_documents; coefficient table
         (bucket, weight) with the intercept as the bucket = -1 row, the
-        _qualityclf_parquet layout) and keep score >= threshold.
+        qualityclf.stack_coeffs layout; a table without that row scores
+        with intercept 0.0) and keep score >= threshold.
         `quality_n_buckets` must match the trainer's feature hashing.
         The coefficients' CONTENT is hashed into the resume signature —
         retraining the model invalidates downstream manifests even when
@@ -339,18 +360,14 @@ def run_curation(
         with the same model would double-count it). Docs the feature
         pass cannot score (zero tokens) weigh sigmoid(intercept).
         Mutually exclusive with the other sampling policies."""
-    if mixture and sample_rates:
+    if ppl_scorer not in ("unigram", "bigram", "kneser_ney"):
         raise ValueError(
-            "run_curation: mixture and sample_rates are mutually exclusive"
+            f"run_curation: ppl_scorer must be 'unigram', 'bigram', or"
+            f" 'kneser_ney', got {ppl_scorer!r}"
         )
     if (dsir_target_df is None) != (dsir_k is None):
         raise ValueError(
             "run_curation: dsir_target_df and dsir_k go together"
-        )
-    if dsir_target_df is not None and (mixture or sample_rates):
-        raise ValueError(
-            "run_curation: dsir_target_df is mutually exclusive with "
-            "mixture and sample_rates (one sampling policy per run)"
         )
     n_policies = sum(
         x is not None and x is not False and x != {}
@@ -386,6 +403,50 @@ def run_curation(
     if fuzzy_decontaminate_threshold is not None and eval_df is None:
         raise ValueError(
             "run_curation: fuzzy_decontaminate_threshold requires eval_df"
+        )
+    if embeddings_df is not None and semantic_cells_df is not None:
+        raise ValueError(
+            "run_curation: embeddings_df and semantic_cells_df are "
+            "mutually exclusive"
+        )
+    if bpe_byte_level and bpe_merges_n is None:
+        raise ValueError(
+            "run_curation: bpe_byte_level requires bpe_merges_n"
+        )
+    if unigram_vocab is not None and bpe_merges_n is not None:
+        raise ValueError(
+            "run_curation: unigram_vocab and bpe_merges_n are mutually "
+            "exclusive — one tokenizer decides the packing budget"
+        )
+    # every stage before `sampled` keeps docs.columns (a select of them,
+    # or a semi/anti join), so the column checks run here, before any job
+    missing = [c for c in ("url", "warc_ts") if c not in docs.columns]
+    if latest_capture and missing:
+        raise ValueError(
+            f"run_curation: latest_capture=True requires url and "
+            f"warc_ts columns (missing {missing})"
+        )
+    if delta_old_df is not None and "url" not in docs.columns:
+        raise ValueError(
+            "run_curation: delta_old_df requires a 'url' column"
+        )
+    if url_dedup and "url" not in docs.columns:
+        raise ValueError(
+            "run_curation: url_dedup=True requires a 'url' column"
+        )
+    for knob, flag in (
+        (domain_quality_threshold, "--domain-quality-threshold"),
+        (max_docs_per_domain, "--max-docs-per-domain"),
+    ):
+        if knob is not None and domain_col not in docs.columns:
+            raise ValueError(
+                f"{flag} needs a '{domain_col}' column "
+                f"(have: {docs.columns}); pass --domain-col"
+            )
+    if holdout_frac is not None and holdout_group not in docs.columns:
+        raise ValueError(
+            f"run_curation: holdout_group column {holdout_group!r} "
+            f"not in the corpus (have {docs.columns})"
         )
     cat = Catalog(warehouse)
     if eval_df is not None:
@@ -429,11 +490,6 @@ def run_curation(
         )
     else:
         qc_sig = "0"
-    if ppl_scorer not in ("unigram", "bigram", "kneser_ney"):
-        raise ValueError(
-            f"run_curation: ppl_scorer must be 'unigram', 'bigram', or"
-            f" 'kneser_ney', got {ppl_scorer!r}"
-        )
     ppl_model_sig = (
         _content_sig(ppl_model_df, F.col("text"))
         if ppl_model_df is not None else "self"
@@ -484,13 +540,20 @@ def run_curation(
     )
     out: dict[str, DataFrame] = {}
 
+    def _quality_scores(df: DataFrame) -> tuple[DataFrame, float]:
+        """(doc_id, score) of the pretrained classifier over `df`'s docs
+        with at least one token, and the classifier's intercept."""
+        from slowspark.qualityclf import (
+            hashed_text_features, score_documents, split_coeffs,
+        )
+
+        weights, b = split_coeffs(quality_coeffs_df)
+        scores = score_documents(
+            hashed_text_features(df, n_buckets=quality_n_buckets), weights, b
+        )
+        return scores.withColumnRenamed("id", "doc_id"), b
+
     if latest_capture:
-        missing = [c for c in ("url", "warc_ts") if c not in docs.columns]
-        if missing:
-            raise ValueError(
-                f"run_curation: latest_capture=True requires url and "
-                f"warc_ts columns (missing {missing})"
-            )
         from slowspark.weburl import latest_capture as _lc_fn
 
         lc_cols = docs.columns
@@ -502,10 +565,6 @@ def run_curation(
         out["latest_captured"] = docs
 
     if delta_old_df is not None:
-        if "url" not in docs.columns:
-            raise ValueError(
-                "run_curation: delta_old_df requires a 'url' column"
-            )
         from slowspark.weburl import keep_new_or_changed
 
         def _delta() -> DataFrame:
@@ -515,10 +574,6 @@ def run_curation(
         out["delta_ingested"] = docs
 
     if url_dedup:
-        if "url" not in docs.columns:
-            raise ValueError(
-                "run_curation: url_dedup=True requires a 'url' column"
-            )
         from slowspark.weburl import url_dedup as _url_dedup_fn
 
         cols = docs.columns
@@ -590,11 +645,6 @@ def run_curation(
         # occasional fluent page survives per-doc rules; its domain mean
         # does not. Runs after the per-doc filter so the mean is over
         # rule-surviving docs.
-        if domain_col not in filtered.columns:
-            raise ValueError(
-                f"--domain-quality-threshold needs a '{domain_col}' column "
-                f"(have: {filtered.columns}); pass --domain-col"
-            )
         from slowspark.corpus import domain_quality_filter
 
         def _domq() -> DataFrame:
@@ -619,11 +669,6 @@ def run_curation(
         # run/engine; domains under the cap are untouched. Runs after
         # the per-doc/domain quality gates, before dedup (the cap is an
         # ingest-side volume guard, not a dedup policy).
-        if domain_col not in filtered.columns:
-            raise ValueError(
-                f"--max-docs-per-domain needs a '{domain_col}' column "
-                f"(have: {filtered.columns}); pass --domain-col"
-            )
         from slowspark.corpus import exact_k_sample
 
         def _domcap() -> DataFrame:
@@ -656,19 +701,12 @@ def run_curation(
     if line_dedup_min_df is not None:
         from slowspark.textops import line_boilerplate_dedup
 
-        def _linededup() -> DataFrame:
-            ld = line_boilerplate_dedup(
+        filtered = run_stage(
+            spark, cat, "line_deduped", sig,
+            lambda: _kept_text(filtered, line_boilerplate_dedup(
                 filtered, min_df=line_dedup_min_df, with_text=True
-            )
-            return (
-                filtered.drop("text")
-                .join(ld.select("doc_id", "kept_text"), "doc_id")
-                .filter(F.col("kept_text") != "")
-                .withColumnRenamed("kept_text", "text")
-                .select(*filtered.columns)
-            )
-
-        filtered = run_stage(spark, cat, "line_deduped", sig, _linededup)
+            )),
+        )
         out["line_deduped"] = filtered
 
     deduped_exact = run_stage(
@@ -707,38 +745,22 @@ def run_curation(
     if substring_dedup_n is not None:
         from slowspark.textops import exact_substring_dedup
 
-        def _substr() -> DataFrame:
-            sd = exact_substring_dedup(
+        deduped = run_stage(
+            spark, cat, "substring_deduped", sig,
+            lambda: _kept_text(deduped, exact_substring_dedup(
                 deduped, n=substring_dedup_n, with_text=True
-            )
-            return (
-                deduped.drop("text")
-                .join(sd.select("doc_id", "kept_text"), "doc_id")
-                .filter(F.col("kept_text") != "")
-                .withColumnRenamed("kept_text", "text")
-                .select(*deduped.columns)
-            )
-
-        deduped = run_stage(spark, cat, "substring_deduped", sig, _substr)
+            )),
+        )
         out["substring_deduped"] = deduped
 
     if substring_dedup_chars is not None:
         from slowspark.textops import exact_substring_dedup_chars
 
-        def _substr_chars() -> DataFrame:
-            sd = exact_substring_dedup_chars(
-                deduped, min_len=substring_dedup_chars, with_text=True
-            )
-            return (
-                deduped.drop("text")
-                .join(sd.select("doc_id", "kept_text"), "doc_id")
-                .filter(F.col("kept_text") != "")
-                .withColumnRenamed("kept_text", "text")
-                .select(*deduped.columns)
-            )
-
         deduped = run_stage(
-            spark, cat, "substring_char_deduped", sig, _substr_chars
+            spark, cat, "substring_char_deduped", sig,
+            lambda: _kept_text(deduped, exact_substring_dedup_chars(
+                deduped, min_len=substring_dedup_chars, with_text=True
+            )),
         )
         out["substring_char_deduped"] = deduped
 
@@ -774,44 +796,28 @@ def run_curation(
         out["ppl_filtered"] = deduped
 
     if quality_coeffs_df is not None and quality_sample_k is None:
-        from slowspark.qualityclf import hashed_text_features, score_documents
-
         def _qclf() -> DataFrame:
-            feats = hashed_text_features(deduped, n_buckets=quality_n_buckets)
-            intercept = quality_coeffs_df.filter(
-                F.col("bucket") == -1
-            ).collect()
-            b = float(intercept[0]["weight"]) if intercept else 0.0
-            scores = score_documents(
-                feats, quality_coeffs_df.filter(F.col("bucket") >= 0), b
-            )
+            scores, _ = _quality_scores(deduped)
             keep_ids = scores.filter(
                 F.col("score") >= float(quality_threshold)
-            ).select(F.col("id").alias("doc_id"))
+            ).select("doc_id")
             return deduped.join(keep_ids, "doc_id", "left_semi")
 
         deduped = run_stage(spark, cat, "quality_filtered", sig, _qclf)
         out["quality_filtered"] = deduped
 
-    def _scrub() -> DataFrame:
-        scrubbed = passage_dedup(
+    # rewrite text to the boilerplate-free reassembly; a doc whose every
+    # passage was boilerplate is dropped (nothing left to train on) — the
+    # count delta vs deduped_near is the audit trail
+    scrubbed = run_stage(
+        spark, cat, "scrubbed", sig,
+        lambda: _kept_text(deduped, passage_dedup(
             deduped,
             passage_words=passage_words,
             max_docs_per_passage=max_docs_per_passage,
             with_text=True,
-        )
-        # rewrite text to the boilerplate-free reassembly; a doc whose
-        # every passage was boilerplate is dropped (nothing left to train
-        # on) — the count delta vs deduped_near is the audit trail
-        return (
-            deduped.drop("text")
-            .join(scrubbed.select("doc_id", "kept_text"), "doc_id")
-            .filter(F.col("kept_text") != "")
-            .withColumnRenamed("kept_text", "text")
-            .select(*deduped.columns)
-        )
-
-    scrubbed = run_stage(spark, cat, "scrubbed", sig, _scrub)
+        )),
+    )
     out["scrubbed"] = scrubbed
 
     if scrub_pii:
@@ -863,12 +869,6 @@ def run_curation(
     if holdout_frac is not None:
         from slowspark.corpus import holdout_split
 
-        if holdout_group not in scrubbed.columns:
-            raise ValueError(
-                f"run_curation: holdout_group column {holdout_group!r} "
-                f"not in the corpus (have {scrubbed.columns})"
-            )
-
         def _holdout(side: str):
             def _f() -> DataFrame:
                 return holdout_split(
@@ -886,42 +886,21 @@ def run_curation(
         out["holdout_train"] = scrubbed
 
     if quality_sample_k is not None:
-        import math
-
         from slowspark.corpus import weighted_sample_k
-        from slowspark.qualityclf import (
-            hashed_text_features,
-            score_documents,
-        )
+        from slowspark.qualityclf import sigmoid
 
-        qs_cols = scrubbed.columns
-
-        def _qsample() -> DataFrame:
-            feats = hashed_text_features(
-                scrubbed, n_buckets=quality_n_buckets
-            )
-            icpt = quality_coeffs_df.filter(F.col("bucket") == -1).collect()
-            b = float(icpt[0]["weight"]) if icpt else 0.0
-            scores = score_documents(
-                feats, quality_coeffs_df.filter(F.col("bucket") >= 0), b
-            ).withColumnRenamed("id", "doc_id")
+        def sample() -> DataFrame:
+            scores, b = _quality_scores(scrubbed)
             wdf = scrubbed.join(scores, "doc_id", "left").withColumn(
-                "__qw",
-                F.coalesce(
-                    F.col("score"), F.lit(1.0 / (1.0 + math.exp(-b)))
-                ),
+                "__qw", F.coalesce(F.col("score"), F.lit(sigmoid(b)))
             )
             return weighted_sample_k(
                 wdf, "__qw", int(quality_sample_k), seed=sample_salt
-            ).select(*qs_cols)
-
-        sampled = run_stage(spark, cat, "sampled", sig, _qsample)
+            ).select(*scrubbed.columns)
     elif dsir_target_df is not None:
         from slowspark.dsir import dsir_topk
 
-        cols = scrubbed.columns
-
-        def _dsir() -> DataFrame:
+        def sample() -> DataFrame:
             picked = dsir_topk(
                 scrubbed, dsir_target_df, k=int(dsir_k),
                 n_buckets=dsir_buckets, alpha=dsir_alpha,
@@ -930,92 +909,73 @@ def run_curation(
             ).select("doc_id")
             # inner join back: keep the scrubbed schema (the dsir score
             # columns stay in the dsir stage, not the training corpus)
-            return scrubbed.join(picked, "doc_id").select(*cols)
-
-        sampled = run_stage(spark, cat, "sampled", sig, _dsir)
-    elif mixture_temperature is not None:
-        from slowspark.corpus import mixture_sample, temperature_mixture_props
-
-        def _tempmix() -> DataFrame:
-            props = temperature_mixture_props(scrubbed, mixture_temperature)
-            return mixture_sample(
-                scrubbed, props, target_tokens=target_tokens,
-                salt=sample_salt,
-            )
-
-        sampled = run_stage(spark, cat, "sampled", sig, _tempmix)
+            return scrubbed.join(picked, "doc_id").select(*scrubbed.columns)
     elif unimax_budget is not None:
         from slowspark.corpus import unimax_sample
 
-        sampled = run_stage(
-            spark, cat, "sampled", sig,
-            lambda: unimax_sample(
+        def sample() -> DataFrame:
+            return unimax_sample(
                 scrubbed, unimax_budget, unimax_epochs, salt=sample_salt
-            ),
-        )
-    elif mixture and mixture_upsample:
+            )
+    elif mixture_upsample:
         from slowspark.corpus import mixture_rates, repeat_sample
 
-        def _upsampled() -> DataFrame:
+        def sample() -> DataFrame:
             rates, _t = mixture_rates(
                 scrubbed, dict(mixture), target_tokens=target_tokens,
                 allow_upsample=True,
             )
             return repeat_sample(scrubbed, rates, salt=sample_salt)
+    elif mixture or mixture_temperature is not None:
+        from slowspark.corpus import mixture_sample, temperature_mixture_props
 
-        sampled = run_stage(spark, cat, "sampled", sig, _upsampled)
-    elif mixture:
-        from slowspark.corpus import mixture_sample
-
-        sampled = run_stage(
-            spark, cat, "sampled", sig,
-            lambda: mixture_sample(
-                scrubbed, dict(mixture), target_tokens=target_tokens,
+        def sample() -> DataFrame:
+            props = (
+                dict(mixture) if mixture
+                else temperature_mixture_props(scrubbed, mixture_temperature)
+            )
+            return mixture_sample(
+                scrubbed, props, target_tokens=target_tokens,
                 salt=sample_salt,
-            ),
-        )
+            )
     else:
-        sampled = run_stage(
-            spark, cat, "sampled", sig,
-            lambda: hash_sample(
+        def sample() -> DataFrame:
+            return hash_sample(
                 scrubbed, rates=dict(sample_rates or {}),
                 default_rate=sample_rate, salt=sample_salt,
-            ),
-        )
+            )
+    sampled = run_stage(spark, cat, "sampled", sig, sample)
     out["sampled"] = sampled
 
+    def _subword_counts(tokenizer: str, segment) -> DataFrame:
+        """`sampled` plus `<tokenizer>_n_tokens`: one `segment` count per
+        distinct doc (upsample repeats join by doc_id), persisted as the
+        `<tokenizer>_counts` stage. LEFT join + zero-fill (ADVICE r8): a
+        doc whose text yields no tokens gets no segmenter row; an inner
+        join would silently drop it before packing (no-silent-drops
+        rule)."""
+        col = f"{tokenizer}_n_tokens"
+        counts = run_stage(
+            spark, cat, f"{tokenizer}_counts", sig,
+            lambda: segment(
+                sampled.select("doc_id", "text").dropDuplicates(["doc_id"])
+            ).select("doc_id", F.col("n_tokens").alias(col)),
+        )
+        return sampled.join(counts, "doc_id", "left").withColumn(
+            col, F.coalesce(col, F.lit(0))
+        )
+
     pack_tokens_col = None
-    if bpe_byte_level and bpe_merges_n is None:
-        raise ValueError(
-            "run_curation: bpe_byte_level requires bpe_merges_n"
-        )
-    if unigram_vocab is not None and bpe_merges_n is not None:
-        raise ValueError(
-            "run_curation: unigram_vocab and bpe_merges_n are mutually "
-            "exclusive — one tokenizer decides the packing budget"
-        )
     if unigram_vocab is not None:
         from slowspark.unigramlm import unigram_segment, unigram_train
 
-        def _uni_vocab() -> DataFrame:
-            return unigram_train(sampled, vocab_size=unigram_vocab)
-
-        uni_model = run_stage(spark, cat, "unigram_vocab", sig, _uni_vocab)
+        uni_model = run_stage(
+            spark, cat, "unigram_vocab", sig,
+            lambda: unigram_train(sampled, vocab_size=unigram_vocab),
+        )
         out["unigram_vocab"] = uni_model
-
-        def _uni_counts() -> DataFrame:
-            return unigram_segment(
-                sampled.select("doc_id", "text").dropDuplicates(["doc_id"]),
-                uni_model,
-            ).select("doc_id", F.col("n_tokens").alias("unigram_n_tokens"))
-
-        ucounts = run_stage(spark, cat, "unigram_counts", sig, _uni_counts)
-        # LEFT join + zero-fill (ADVICE r8): a doc whose text yields no
-        # whitespace tokens gets no segmenter row; an inner join would
-        # silently drop it before packing (no-silent-drops rule)
-        sampled = sampled.join(ucounts, "doc_id", "left").withColumn(
-            "unigram_n_tokens",
-            F.coalesce("unigram_n_tokens", F.lit(0)),
+        sampled = _subword_counts(
+            "unigram", lambda d: unigram_segment(d, uni_model)
         )
         pack_tokens_col = "unigram_n_tokens"
     if bpe_merges_n is not None:
@@ -1033,26 +993,15 @@ def run_curation(
             {"left": r["lhs"], "right": r["rhs"], "merged": r["merged"]}
             for r in vocab.orderBy("merge_ix").collect()
         ]
-
-        def _counts() -> DataFrame:
-            # one count per distinct doc; upsample repeats join by doc_id
-            return bpe_segment(
-                sampled.select("doc_id", "text").dropDuplicates(["doc_id"]),
-                merges, byte_level=bpe_byte_level, counts_only=True,
-            ).select("doc_id", F.col("n_tokens").alias("bpe_n_tokens"))
-
-        counts = run_stage(spark, cat, "bpe_counts", sig, _counts)
-        # LEFT join + zero-fill (ADVICE r8, same latent gap as the
-        # unigram branch): zero-token docs must survive to packing
-        sampled = sampled.join(counts, "doc_id", "left").withColumn(
-            "bpe_n_tokens", F.coalesce("bpe_n_tokens", F.lit(0))
-        )
+        sampled = _subword_counts("bpe", lambda d: bpe_segment(
+            d, merges, byte_level=bpe_byte_level, counts_only=True
+        ))
         pack_tokens_col = "bpe_n_tokens"
 
     if mixture_upsample or unimax_budget is not None:
         # repeated copies are distinct documents to the packer: key the
         # global concat order on (doc_id, repeat_ix), then flatten back
-        def _packed() -> DataFrame:
+        def pack() -> DataFrame:
             # NOT named __pid: pack_sequences uses that internally for
             # its range-partition id and would overwrite the struct
             p = pack_sequences(
@@ -1068,29 +1017,45 @@ def run_curation(
                 F.col("__packkey.repeat_ix").alias("repeat_ix"),
                 "n_tokens", "seq_id", "seq_offset",
             )
-
-        out["packed"] = run_stage(spark, cat, "packed", sig, _packed)
-    elif pack_whole_docs:
+    else:
         from slowspark.corpus import pack_bins
 
-        out["packed"] = run_stage(
-            spark, cat, "packed", sig,
-            lambda: pack_bins(
+        packer = pack_bins if pack_whole_docs else pack_sequences
+
+        def pack() -> DataFrame:
+            return packer(
                 sampled, seq_len=seq_len, n_tokens_col=pack_tokens_col
-            ),
-        )
-    else:
-        out["packed"] = run_stage(
-            spark, cat, "packed", sig,
-            lambda: pack_sequences(
-                sampled, seq_len=seq_len, n_tokens_col=pack_tokens_col
-            ),
-        )
+            )
+    out["packed"] = run_stage(spark, cat, "packed", sig, pack)
     return out
 
 
+def _rates(spec: str) -> dict[str, float]:
+    return {
+        k: float(v) for k, v in (kv.split("=", 1) for kv in spec.split(","))
+    }
+
+
+# run_curation parameters the CLI takes as one comma-separated string
+_COMMA_PARAMS = {
+    "sample_rates": _rates,
+    "mixture": _rates,
+    "langs": lambda s: s.split(","),
+    "badwords": lambda s: s.split(","),
+    "ppl_keep_buckets": lambda s: [int(b) for b in s.split(",")],
+}
+# run_curation parameters the CLI takes as a parquet path
+_PARQUET_PARAMS = (
+    "eval_df", "embeddings_df", "semantic_cells_df", "ppl_model_df",
+    "quality_coeffs_df", "dsir_target_df", "delta_old_df",
+)
+
+
 def main(argv: list[str] | None = None) -> int:
-    p = argparse.ArgumentParser()
+    # a knob flag's dest is its run_curation parameter and it has no
+    # default: only the flags given are forwarded, so run_curation's
+    # defaults are the only ones
+    p = argparse.ArgumentParser(argument_default=argparse.SUPPRESS)
     p.add_argument("--input", required=True,
                    help="documents parquet path (or WARC glob with "
                    "--input-format warc)")
@@ -1105,103 +1070,106 @@ def main(argv: list[str] | None = None) -> int:
                    "text; lang detected when absent)")
     p.add_argument("--warehouse", required=True)
     p.add_argument("--master", default=None)
-    p.add_argument("--min-words", type=int, default=20)
-    p.add_argument("--passage-words", type=int, default=20)
-    p.add_argument("--max-docs-per-passage", type=int, default=2)
-    p.add_argument("--sample-rate", type=float, default=1.0)
-    p.add_argument("--sample-rates", default=None,
+    p.add_argument("--min-words", type=int)
+    p.add_argument("--passage-words", type=int)
+    p.add_argument("--max-docs-per-passage", type=int)
+    p.add_argument("--sample-rate", type=float)
+    p.add_argument("--sample-rates",
                    help="per-stratum rates as lang=rate[,lang=rate...], "
                    "e.g. 'en=0.5,zh=1.0'; --sample-rate stays the default "
                    "for unlisted strata")
-    p.add_argument("--sample-salt", default="")
-    p.add_argument("--seq-len", type=int, default=4096)
-    p.add_argument("--eval-set", default=None,
+    p.add_argument("--sample-salt")
+    p.add_argument("--seq-len", type=int)
+    p.add_argument("--eval-set", dest="eval_df", metavar="EVAL_SET",
                    help="eval/benchmark parquet with a text column: enables "
                    "the n-gram decontamination stage")
-    p.add_argument("--decontaminate-ngram", type=int, default=13)
+    p.add_argument("--decontaminate-ngram", type=int)
     p.add_argument("--fuzzy-decontaminate-threshold", type=float,
-                   default=None,
                    help="word-n-gram Jaccard threshold for FUZZY "
                    "decontamination against --eval-set (catches "
                    "paraphrased eval copies exact n-gram overlap misses); "
                    "runs after the exact stage")
-    p.add_argument("--fuzzy-decontaminate-ngram", type=int, default=3)
-    p.add_argument("--langs", default=None,
+    p.add_argument("--fuzzy-decontaminate-ngram", type=int)
+    p.add_argument("--langs",
                    help="comma-separated language allowlist (lang column); "
                    "filters BEFORE the quality rules")
     p.add_argument("--scrub-pii", action="store_true",
                    help="mask emails/IPs/phone numbers after passage scrub")
-    p.add_argument("--substring-dedup-n", type=int, default=None,
+    p.add_argument("--substring-dedup-n", type=int,
                    help="exact substring dedup window (tokens): duplicated "
                    ">= n-token runs are cut, first occurrence kept")
-    p.add_argument("--substring-dedup-chars", type=int, default=None,
+    p.add_argument("--substring-dedup-chars", type=int,
                    help="suffix-array-grade exact substring dedup (CHARS): "
                    "duplicated >= L-char spans are cut exactly, first "
                    "occurrence kept")
-    p.add_argument("--semantic-dedup-embeddings", default=None,
+    p.add_argument("--semantic-dedup-embeddings", dest="embeddings_df",
+                   metavar="SEMANTIC_DEDUP_EMBEDDINGS",
                    help="sidecar parquet (doc_id, embedding array): enables "
                    "the SemDeDup semantic-dedup stage after near-dup")
-    p.add_argument("--semantic-dedup-cells", default=None,
+    p.add_argument("--semantic-dedup-cells", dest="semantic_cells_df",
+                   metavar="SEMANTIC_DEDUP_CELLS",
                    help="pre-assigned cell parquet (doc_id, embedding, "
                    "ivf_cell — e.g. an IVF index's cell table): enables the "
                    "semantic-dedup stage WITHOUT k-means training/assignment")
-    p.add_argument("--semantic-n-clusters", type=int, default=16)
-    p.add_argument("--semantic-threshold", type=float, default=0.95)
-    p.add_argument("--mixture", default=None,
+    p.add_argument("--semantic-n-clusters", type=int)
+    p.add_argument("--semantic-threshold", type=float)
+    p.add_argument("--mixture",
                    help="domain-mix token budgeting as lang=prop[,...] "
                    "(e.g. 'en=0.6,de=0.4'): per-stratum rates derived from "
                    "measured token counts; unlisted strata dropped; "
                    "mutually exclusive with --sample-rates")
-    p.add_argument("--target-tokens", type=int, default=None,
+    p.add_argument("--target-tokens", type=int,
                    help="explicit mixture token budget (default: largest "
                    "achievable; infeasible budgets fail loudly)")
     p.add_argument("--url-dedup", action="store_true",
                    help="URL-canonical dedup as the first stage "
                    "(requires a url column)")
-    p.add_argument("--badwords", default=None,
+    p.add_argument("--badwords",
                    help="comma-separated word blocklist (C4 style, "
                    "whole-token matching): any hit drops the doc")
     p.add_argument("--gopher-repetition", action="store_true",
                    help="apply the full Gopher Table A1 within-document "
                    "repetition rules after the quality filter")
-    p.add_argument("--domain-quality-threshold", type=float, default=None,
+    p.add_argument("--domain-quality-threshold", type=float,
                    help="drop WHOLE domains whose mean heuristic quality "
                         "is below this (RefinedWeb site-level gating); "
                         "needs the --domain-col column")
-    p.add_argument("--domain-col", default="source",
+    p.add_argument("--domain-col",
                    help="domain/site column for --domain-quality-threshold "
                         "(default: source)")
-    p.add_argument("--max-docs-per-domain", type=int, default=None,
+    p.add_argument("--max-docs-per-domain", type=int,
                    help="C4-style per-domain volume cap: keep at most N "
                         "docs per --domain-col value (deterministic "
                         "md5-rank keeper; capped domains are logged)")
-    p.add_argument("--line-dedup-min-df", type=int, default=None,
+    p.add_argument("--line-dedup-min-df", type=int,
                    help="RefinedWeb line-wise boilerplate removal before "
                    "exact dedup: lines recurring across >= N docs are cut")
-    p.add_argument("--ppl-keep-buckets", default=None,
+    p.add_argument("--ppl-keep-buckets",
                    help="CCNet perplexity filter after dedup: keep only "
                    "these buckets, e.g. '0,1' (0 = most stereotypical)")
-    p.add_argument("--ppl-n-buckets", type=int, default=3)
-    p.add_argument("--ppl-scorer", default="unigram",
+    p.add_argument("--ppl-n-buckets", type=int)
+    p.add_argument("--ppl-scorer",
                    choices=("unigram", "bigram", "kneser_ney"),
                    help="LM behind the perplexity filter: corpus-unigram, "
                    "Stupid Backoff bigram, or interpolated Kneser-Ney "
                    "bigram")
-    p.add_argument("--ppl-model", default=None,
+    p.add_argument("--ppl-model", dest="ppl_model_df", metavar="PPL_MODEL",
                    help="reference-corpus parquet for the bigram scorer "
                    "(CCNet shape: train on trusted text, score the "
                    "crawl); default scores against the corpus itself")
-    p.add_argument("--quality-classifier-coeffs", default=None,
+    p.add_argument("--quality-classifier-coeffs", dest="quality_coeffs_df",
+                   metavar="QUALITY_CLASSIFIER_COEFFS",
                    help="coefficient parquet (bucket, weight; intercept at "
                    "bucket=-1) from qualityclf.train_logreg: score every "
                    "doc after dedup and keep score >= threshold")
-    p.add_argument("--quality-threshold", type=float, default=0.5)
-    p.add_argument("--bpe-merges", type=int, default=None,
+    p.add_argument("--quality-threshold", type=float)
+    p.add_argument("--bpe-merges", dest="bpe_merges_n",
+                   metavar="BPE_MERGES", type=int,
                    help="learn a BPE vocab of N merges on the sampled "
                    "corpus (persisted as the bpe_vocab stage) and pack "
                    "in tokenizer subword counts instead of whitespace "
                    "tokens")
-    p.add_argument("--unigram-vocab", type=int, default=None,
+    p.add_argument("--unigram-vocab", type=int,
                    help="train a Unigram-LM tokenizer of this vocab size "
                         "on the sampled corpus (unigram_vocab stage) and "
                         "pack in its subword counts; mutually exclusive "
@@ -1210,14 +1178,15 @@ def main(argv: list[str] | None = None) -> int:
                    help="with --bpe-merges: train/segment BYTE-level "
                    "BPE over GPT-2 pre-tokens (case/space-preserving, "
                    "no OOV) instead of char-level over \\S+ words")
-    p.add_argument("--quality-classifier-buckets", type=int,
-                   default=1 << 15,
+    p.add_argument("--quality-classifier-buckets", dest="quality_n_buckets",
+                   metavar="QUALITY_CLASSIFIER_BUCKETS", type=int,
                    help="feature-hash bucket count; must match training")
     p.add_argument("--mixture-upsample", action="store_true",
                    help="repetition regime for --mixture: scarce strata "
                    "repeat (per-row repeat_ix; packing keys on doc_id + "
                    "repeat_ix); default budget = the corpus's token mass")
-    p.add_argument("--dsir-target", default=None,
+    p.add_argument("--dsir-target", dest="dsir_target_df",
+                   metavar="DSIR_TARGET",
                    help="target-corpus parquet (text column): DSIR "
                    "importance resampling as the sampling stage — keep "
                    "the --dsir-k docs most target-like by hashed-n-gram "
@@ -1225,49 +1194,49 @@ def main(argv: list[str] | None = None) -> int:
                    "--sample-salt); target content joins the resume "
                    "signature; mutually exclusive with --mixture and "
                    "--sample-rates")
-    p.add_argument("--dsir-k", type=int, default=None,
+    p.add_argument("--dsir-k", type=int,
                    help="number of documents DSIR keeps (required with "
                    "--dsir-target)")
-    p.add_argument("--dsir-buckets", type=int, default=10_000,
+    p.add_argument("--dsir-buckets", type=int,
                    help="hashed n-gram bucket count for the DSIR model")
-    p.add_argument("--dsir-alpha", type=float, default=1.0,
+    p.add_argument("--dsir-alpha", type=float,
                    help="additive smoothing for the DSIR bucket models; "
                    "keep alpha*buckets well under the target's gram "
                    "count or the ratio degenerates (dsir docstring)")
     p.add_argument("--dsir-length-normalize", action="store_true",
                    help="score by mean per-gram log ratio instead of the "
                    "paper's raw sum — for unchunked mixed-length corpora")
-    p.add_argument("--mixture-temperature", type=float, default=None,
+    p.add_argument("--mixture-temperature", type=float,
                    help="temperature-scaled domain mixing: proportions ~ "
                    "(token share)^(1/T), then the mixture sampler; "
                    "composes with --target-tokens; mutually exclusive "
                    "with the other sampling policies")
-    p.add_argument("--unimax-budget", type=int, default=None,
+    p.add_argument("--unimax-budget", type=int,
                    help="UniMax water-filled token budget: as uniform as "
                    "possible subject to --unimax-epochs per stratum; "
                    "output carries repeat_ix; mutually exclusive with "
                    "the other sampling policies")
-    p.add_argument("--unimax-epochs", type=float, default=1.0,
+    p.add_argument("--unimax-epochs", type=float,
                    help="per-stratum epoch cap for --unimax-budget")
     p.add_argument("--latest-capture", action="store_true",
                    help="consolidate a multi-capture input to the newest "
                    "capture per URL (weburl.latest_capture) as the very "
                    "first stage; requires url + warc_ts columns")
-    p.add_argument("--delta-old", default=None, metavar="PARQUET",
+    p.add_argument("--delta-old", dest="delta_old_df", metavar="PARQUET",
                    help="previous snapshot (url + fingerprint, md5(text) "
                    "contract, or url + text): keep only NEW or CHANGED "
                    "URLs (weburl.keep_new_or_changed) — incremental "
                    "recrawl ingest; snapshot content in the resume "
                    "signature")
-    p.add_argument("--holdout-frac", type=float, default=None,
+    p.add_argument("--holdout-frac", type=float,
                    help="carve a leakage-safe validation set before the "
                    "sampling slot: this fraction of GROUPS (by hash "
                    "mass) goes to a holdout_val table; sampling/packing "
                    "see only the train side (corpus.holdout_split)")
-    p.add_argument("--holdout-group", default="source",
+    p.add_argument("--holdout-group",
                    help="group column for the holdout assignment — all "
                    "docs of a group land on one side (default: source)")
-    p.add_argument("--main-content", action="store_true",
+    p.add_argument("--main-content", action="store_true", default=False,
                    help="with --input-format warc: extract the MAIN "
                         "content of each page (textops."
                         "main_content_blocks block-level link-density "
@@ -1278,11 +1247,11 @@ def main(argv: list[str] | None = None) -> int:
                    help="after packing, export the sampled corpus as N "
                    "deterministic WARC files under <warehouse>/warc_export "
                    "(sources.write_warc; crawl-tool interchange)")
-    p.add_argument("--respect-noindex", action="store_true",
+    p.add_argument("--respect-noindex", action="store_true", default=False,
                    help="WARC input only: drop pages carrying a meta "
                    "robots noindex directive at the ingest boundary "
                    "(weburl.NOINDEX_RE) — the publisher opt-out")
-    p.add_argument("--quality-sample-k", type=int, default=None,
+    p.add_argument("--quality-sample-k", type=int,
                    help="soft quality selection as the sampling policy "
                    "(requires --quality-classifier-coeffs): classifier "
                    "sigmoid score becomes the sampling weight; keep K "
@@ -1300,22 +1269,24 @@ def main(argv: list[str] | None = None) -> int:
                    "<warehouse>/jsonl_export (sources.write_jsonl; "
                    "dataset-release interchange, byte-identical reruns)")
     args = p.parse_args(argv)
-    if (args.dsir_target is None) != (args.dsir_k is None):
+    params = inspect.signature(run_curation).parameters
+    knobs = {
+        name for name, prm in params.items()
+        if prm.default is not inspect.Parameter.empty
+    }
+    kw = {k: v for k, v in vars(args).items() if k in knobs}
+    if (kw.get("dsir_target_df") is None) != (kw.get("dsir_k") is None):
         p.error("--dsir-target and --dsir-k go together")
-    if args.dsir_target and (args.mixture or args.sample_rates):
-        p.error("--dsir-target is mutually exclusive with --mixture "
-                "and --sample-rates")
-    n_pol = sum(bool(x) for x in (
-        args.sample_rates, args.mixture, args.dsir_target,
-        args.mixture_temperature, args.unimax_budget,
-        args.quality_sample_k,
+    n_pol = sum(bool(kw.get(k)) for k in (
+        "sample_rates", "mixture", "dsir_target_df",
+        "mixture_temperature", "unimax_budget", "quality_sample_k",
     ))
     if n_pol > 1:
         p.error("--sample-rates/--mixture/--dsir-target/"
                 "--mixture-temperature/--unimax-budget/"
                 "--quality-sample-k are mutually "
                 "exclusive (one sampling policy per run)")
-    if args.quality_sample_k and not args.quality_classifier_coeffs:
+    if kw.get("quality_sample_k") and not kw.get("quality_coeffs_df"):
         p.error("--quality-sample-k requires --quality-classifier-coeffs")
     if args.main_content and args.input_format != "warc":
         p.error("--main-content applies to --input-format warc only "
@@ -1323,29 +1294,22 @@ def main(argv: list[str] | None = None) -> int:
     if args.respect_noindex and args.input_format != "warc":
         p.error("--respect-noindex applies to --input-format warc only "
                 "(parquet/jsonl corpora carry no html)")
-    if args.unimax_epochs != 1.0 and not args.unimax_budget:
+    if (kw.get("unimax_epochs") not in (None, 1.0)
+            and not kw.get("unimax_budget")):
         p.error("--unimax-epochs requires --unimax-budget")
-    if args.semantic_dedup_embeddings and args.semantic_dedup_cells:
-        p.error("--semantic-dedup-embeddings and --semantic-dedup-cells "
-                "are mutually exclusive")
-    if args.mixture and args.sample_rates:
-        p.error("--mixture and --sample-rates are mutually exclusive")
-    if args.mixture_upsample and not args.mixture:
+    if kw.get("mixture_upsample") and not kw.get("mixture"):
         p.error("--mixture-upsample requires --mixture")
-    if args.fuzzy_decontaminate_threshold is not None and not args.eval_set:
+    if (kw.get("fuzzy_decontaminate_threshold") is not None
+            and not kw.get("eval_df")):
         p.error("--fuzzy-decontaminate-threshold requires --eval-set")
-    sample_rates = None
-    if args.sample_rates:
-        sample_rates = {
-            k: float(v)
-            for k, v in (kv.split("=", 1) for kv in args.sample_rates.split(","))
-        }
+    for k, parse in _COMMA_PARAMS.items():
+        if k in kw:
+            kw[k] = parse(kw[k]) if kw[k] else None
 
     spark = get_spark("slowspark-curate", master=args.master)
     try:
         if args.input_format == "warc":
             from slowspark.sources import read_warc
-            from slowspark.textops import language_id
 
             recs = read_warc(spark, args.input).filter(
                 F.col("warc_type") == "response"
@@ -1368,21 +1332,19 @@ def main(argv: list[str] | None = None) -> int:
                 text_expr = F.col("main_text")
             else:
                 text_expr = F.decode("payload", "UTF-8")
-            docs = language_id(
-                recs.select(
-                    # doc_id is per CAPTURE, not per URL: multi-snapshot
-                    # crawls normally carry several responses for the same
-                    # URL, and a url-only hash would silently collide the
-                    # md5(doc_id) samplers and (doc_id, repeat_ix) packing
-                    # keys downstream (ADVICE r7)
-                    F.xxhash64("url", F.col("warc_ts").cast("string"))
-                    .alias("doc_id"),
-                    "url",
-                    F.col("warc_ts"),
-                    text_expr.alias("text"),
-                )
-            ).withColumnRenamed("lang_pred", "lang").drop("lang_score")
-            if not args.latest_capture:
+            docs = recs.select(
+                # doc_id is per CAPTURE, not per URL: multi-snapshot
+                # crawls normally carry several responses for the same
+                # URL, and a url-only hash would silently collide the
+                # md5(doc_id) samplers and (doc_id, repeat_ix) packing
+                # keys downstream (ADVICE r7)
+                F.xxhash64("url", F.col("warc_ts").cast("string"))
+                .alias("doc_id"),
+                "url",
+                F.col("warc_ts"),
+                text_expr.alias("text"),
+            )
+            if not kw.get("latest_capture"):
                 # same url AND same warc_ts is genuinely ambiguous input —
                 # fail loudly with the flag that consolidates captures
                 dup = (
@@ -1402,102 +1364,26 @@ def main(argv: list[str] | None = None) -> int:
             docs = read_jsonl(
                 spark, args.input, required_cols=("doc_id", "text")
             )
-            if "lang" not in docs.columns:
-                from slowspark.textops import language_id
-
-                docs = language_id(docs).withColumnRenamed(
-                    "lang_pred", "lang"
-                ).drop("lang_score")
         else:
             docs = spark.read.parquet(args.input)
-        eval_df = spark.read.parquet(args.eval_set) if args.eval_set else None
-        emb_df = (
-            spark.read.parquet(args.semantic_dedup_embeddings)
-            if args.semantic_dedup_embeddings else None
-        )
-        cells_df = (
-            spark.read.parquet(args.semantic_dedup_cells)
-            if args.semantic_dedup_cells else None
-        )
-        qc_df = (
-            spark.read.parquet(args.quality_classifier_coeffs)
-            if args.quality_classifier_coeffs else None
-        )
+        if args.input_format != "parquet" and "lang" not in docs.columns:
+            from slowspark.textops import language_id
+
+            docs = language_id(docs).withColumnRenamed(
+                "lang_pred", "lang"
+            ).drop("lang_score")
+        for k in _PARQUET_PARAMS:
+            if k in kw:
+                kw[k] = spark.read.parquet(kw[k]) if kw[k] else None
         tables = run_curation(
             spark, docs, args.warehouse,
             f"path:{args.input}:{args.input_format}"
             f":files={fs_listing_stamp(spark, args.input)}"
             f":ni={int(args.respect_noindex)}"
             f":mc={int(args.main_content)}",
-            min_words=args.min_words,
-            passage_words=args.passage_words,
-            max_docs_per_passage=args.max_docs_per_passage,
-            sample_rate=args.sample_rate,
-            sample_rates=sample_rates,
-            sample_salt=args.sample_salt,
-            seq_len=args.seq_len,
-            eval_df=eval_df,
-            decontaminate_ngram=args.decontaminate_ngram,
-            fuzzy_decontaminate_threshold=args.fuzzy_decontaminate_threshold,
-            fuzzy_decontaminate_ngram=args.fuzzy_decontaminate_ngram,
-            langs=args.langs.split(",") if args.langs else None,
-            scrub_pii=args.scrub_pii,
-            substring_dedup_n=args.substring_dedup_n,
-            substring_dedup_chars=args.substring_dedup_chars,
-            embeddings_df=emb_df,
-            semantic_cells_df=cells_df,
-            semantic_n_clusters=args.semantic_n_clusters,
-            semantic_threshold=args.semantic_threshold,
-            mixture={
-                k: float(v)
-                for k, v in (kv.split("=", 1)
-                             for kv in args.mixture.split(","))
-            } if args.mixture else None,
-            target_tokens=args.target_tokens,
-            mixture_upsample=args.mixture_upsample,
-            url_dedup=args.url_dedup,
-            badwords=args.badwords.split(",") if args.badwords else None,
-            gopher_repetition=args.gopher_repetition,
-            line_dedup_min_df=args.line_dedup_min_df,
-            domain_quality_threshold=args.domain_quality_threshold,
-            domain_col=args.domain_col,
-            max_docs_per_domain=args.max_docs_per_domain,
-            ppl_keep_buckets=(
-                [int(b) for b in args.ppl_keep_buckets.split(",")]
-                if args.ppl_keep_buckets else None
-            ),
-            ppl_n_buckets=args.ppl_n_buckets,
-            ppl_scorer=args.ppl_scorer,
-            ppl_model_df=(
-                spark.read.parquet(args.ppl_model) if args.ppl_model else None
-            ),
-            quality_coeffs_df=qc_df,
-            quality_threshold=args.quality_threshold,
-            quality_n_buckets=args.quality_classifier_buckets,
-            bpe_merges_n=args.bpe_merges,
-            bpe_byte_level=args.bpe_byte_level,
-            unigram_vocab=args.unigram_vocab,
-            dsir_target_df=(
-                spark.read.parquet(args.dsir_target)
-                if args.dsir_target else None
-            ),
-            dsir_k=args.dsir_k,
-            dsir_buckets=args.dsir_buckets,
-            dsir_alpha=args.dsir_alpha,
-            dsir_length_normalize=args.dsir_length_normalize,
-            mixture_temperature=args.mixture_temperature,
-            unimax_budget=args.unimax_budget,
-            unimax_epochs=args.unimax_epochs,
-            holdout_frac=args.holdout_frac,
-            holdout_group=args.holdout_group,
-            latest_capture=args.latest_capture,
-            delta_old_df=(
-                spark.read.parquet(args.delta_old)
-                if args.delta_old else None
-            ),
-            pack_whole_docs=args.pack_whole_docs,
-            quality_sample_k=args.quality_sample_k,
+            **kw,
         )
+        exports = {}
         if args.export_warc:
             from slowspark.sources import write_warc
 
@@ -1508,7 +1394,7 @@ def main(argv: list[str] | None = None) -> int:
                     F.concat(F.lit("urn:slowspark:doc:"),
                              F.col("doc_id").cast("string")),
                 )
-            warc_manifest = write_warc(
+            exports["warc_export"] = write_warc(
                 sampled.select(
                     "url", F.encode("text", "UTF-8").alias("payload"),
                     *(c for c in ("lang", "doc_id") if c in sampled.columns),
@@ -1519,21 +1405,17 @@ def main(argv: list[str] | None = None) -> int:
                     c for c in ("lang", "doc_id") if c in sampled.columns
                 ),
             )
-        else:
-            warc_manifest = None
         if args.export_jsonl:
             from slowspark.sources import write_jsonl
 
             sampled = tables["sampled"]
-            jsonl_manifest = write_jsonl(
+            exports["jsonl_export"] = write_jsonl(
                 sampled.select(*(
                     c for c, t in sampled.dtypes if t != "binary"
                 )),
                 os.path.join(args.warehouse, "jsonl_export"),
                 n_files=args.export_jsonl,
             )
-        else:
-            jsonl_manifest = None
         audit = tables["filter_audit"].collect()[0].asDict()
         # row counts from the stage manifests (observed on each write),
         # in pipeline order: no count job
@@ -1543,7 +1425,7 @@ def main(argv: list[str] | None = None) -> int:
             for name in tables
             if name not in ("filter_audit", "unigram_vocab", "bpe_vocab")
         }
-        if args.pack_whole_docs:
+        if kw.get("pack_whole_docs"):
             n_seq = tables["packed"].select("shard", "bin_ix").distinct() \
                 .count()
         else:
@@ -1555,17 +1437,11 @@ def main(argv: list[str] | None = None) -> int:
             "stage_rows": stages,
             "n_sequences": int(n_seq or 0),
         }
-        if warc_manifest is not None:
-            summary["warc_export"] = {
-                "n_files": len(warc_manifest),
-                "n_records": sum(m["n_records"] for m in warc_manifest),
-                "n_bytes": sum(m["n_bytes"] for m in warc_manifest),
-            }
-        if jsonl_manifest is not None:
-            summary["jsonl_export"] = {
-                "n_files": len(jsonl_manifest),
-                "n_records": sum(m["n_records"] for m in jsonl_manifest),
-                "n_bytes": sum(m["n_bytes"] for m in jsonl_manifest),
+        for name, manifest in exports.items():
+            summary[name] = {
+                "n_files": len(manifest),
+                "n_records": sum(m["n_records"] for m in manifest),
+                "n_bytes": sum(m["n_bytes"] for m in manifest),
             }
         print(json.dumps(summary))
         return 0

@@ -206,6 +206,28 @@ def train_logreg(
     return coeffs, b, history
 
 
+def stack_coeffs(coeffs: DataFrame, intercept: float) -> DataFrame:
+    """The stored coefficient-table layout: `coeffs` (bucket, weight)
+    with the intercept stacked on as the bucket = -1 row."""
+    return coeffs.unionByName(
+        local_frame(
+            coeffs.sparkSession, [(-1, float(intercept))],
+            "bucket int, weight double",
+        )
+    )
+
+
+def split_coeffs(stacked: DataFrame) -> tuple[DataFrame, float]:
+    """(weights, intercept) of a stack_coeffs table: the bucket >= 0
+    rows, and the bucket = -1 weight (0.0 for a table without that
+    row). Collects the one intercept row."""
+    icpt = stacked.filter(F.col("bucket") == -1).collect()
+    return (
+        stacked.filter(F.col("bucket") >= 0),
+        float(icpt[0]["weight"]) if icpt else 0.0,
+    )
+
+
 def score_documents(
     features: DataFrame,
     coeffs: DataFrame,
@@ -323,7 +345,7 @@ def train_langid(
     one train_logreg run per language (label = lang == L), stacked into
     a single coefficient table (lang, bucket, weight) with each
     language's intercept at bucket = -1 — the multi-class extension of
-    the _qualityclf_parquet layout. `langs` defaults to the distinct
+    the stack_coeffs layout. `langs` defaults to the distinct
     labels, sorted (deterministic class order).
 
     At 100 TB this trains on a bounded LABELED sample (a few 10^5 docs
@@ -338,7 +360,6 @@ def train_langid(
         )
     if len(langs) < 2:
         raise ValueError(f"train_langid: need >= 2 languages, got {langs}")
-    spark = df.sparkSession
     feats = hashed_char_ngram_features(
         df, text_col, id_col, n=n, n_buckets=n_buckets
     ).persist()
@@ -353,11 +374,9 @@ def train_langid(
             feats, labels, n_buckets=n_buckets,
             epochs=epochs, lr=lr, reg=reg,
         )
-        part = coeffs.unionByName(
-            local_frame(
-                spark, [(-1, float(intercept))], "bucket int, weight double"
-            )
-        ).select(F.lit(lang).alias("lang"), "bucket", "weight")
+        part = stack_coeffs(coeffs, intercept).select(
+            F.lit(lang).alias("lang"), "bucket", "weight"
+        )
         out = part if out is None else out.unionByName(part)
     result = out.localCheckpoint()
     feats.unpersist()

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from slowspark.parse import parse_pages
-from slowspark.route import SINK_NAMES
+from slowspark.route import route
 from slowspark.schema import PAGES_SCHEMA
 
 
@@ -213,11 +213,9 @@ def start_fanout_sink(entries_stream: DataFrame, base_path: str, checkpoint: str
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.persist()
         try:
-            for kind, sink in SINK_NAMES.items():
-                (
-                    batch_df.filter(F.col("entry_kind") == kind)
-                    .write.mode("overwrite")
-                    .parquet(f"{base_path}/{sink}/epoch={epoch_id}")
+            for sink, rows in route(batch_df).items():
+                rows.write.mode("overwrite").parquet(
+                    f"{base_path}/{sink}/epoch={epoch_id}"
                 )
         finally:
             batch_df.unpersist()

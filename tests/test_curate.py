@@ -1795,3 +1795,50 @@ def test_curation_domain_cap_stage(spark, tmp_path):
             spark, docs.drop("source"), str(tmp_path / "wh3"),
             "test:domcap3", min_words=5, seq_len=32, max_docs_per_domain=4,
         )
+
+
+def _eval_trigram(docs):
+    return {"eval_df": docs.select("text"), "ppl_scorer": "trigram"}
+
+
+def _embeddings_and_cells(docs):
+    emb = docs.select("doc_id", F.array(F.lit(1.0)).alias("embedding"))
+    return {
+        "embeddings_df": emb,
+        "semantic_cells_df": emb.withColumn("ivf_cell", F.lit(0)),
+    }
+
+
+@pytest.mark.parametrize("opts, match", [
+    ({"bpe_byte_level": True}, "requires bpe_merges_n"),
+    ({"unigram_vocab": 24, "bpe_merges_n": 8}, "mutually exclusive"),
+    ({"holdout_frac": 0.3}, "holdout_group"),
+    ({"domain_quality_threshold": 0.5}, "--domain-col"),
+    ({"max_docs_per_domain": 2}, "--domain-col"),
+    (_eval_trigram, "ppl_scorer must be"),
+    (_embeddings_and_cells, "mutually exclusive"),
+], ids=[
+    "byte_level_without_merges", "unigram_with_bpe", "holdout_no_source",
+    "domain_quality_no_source", "domain_cap_no_source", "eval_bad_scorer",
+    "embeddings_with_cells",
+])
+def test_misconfigured_run_starts_no_job(spark, tmp_path, opts, match):
+    """Every option is checked before the first Spark job: a misconfigured
+    run raises its ValueError without hashing a side input or writing a
+    stage (the corpus has no `source` column)."""
+    docs = _corpus(spark)
+    kwargs = opts(docs) if callable(opts) else opts
+    wh = tmp_path / "wh"
+    sc = spark.sparkContext
+    group = f"misconfigured:{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=match):
+            run_curation(
+                spark, docs, str(wh), "test:misconfigured",
+                min_words=10, seq_len=32, **kwargs,
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert not (wh / "_manifests").exists()

@@ -218,8 +218,19 @@ def test_sink_rollup_and_windows(entries):
 
 def test_object_usage(entries):
     usage = agg.object_usage(entries)
-    names = {r["full_object_name"] for r in usage.collect()}
+    rows = usage.collect()
+    names = {r["full_object_name"] for r in rows}
     assert "products" in names and "orders" in names
+    # a statement that references no object (SET NAMES ...) adds no row:
+    # one ref per exploded object, as the DuckDB oracles' unnest counts
+    assert "" not in names
+    n_objects = (
+        entries.filter(
+            (F.col("entry_kind") == "SqlStatement")
+            & F.col("objects").isNotNull()
+        ).agg(F.sum(F.size("objects"))).collect()[0][0]
+    )
+    assert sum(r["n_refs"] for r in rows) == n_objects
 
 
 def test_metrics_tables(entries):

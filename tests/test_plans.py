@@ -664,7 +664,6 @@ _REACH_KEEP = {
     "grammar.mask_fingerprint": "tests build expected fingerprints with it",
     "parse.split_errors": "tests split parse errors from entries with it",
     "qualityclf.classifier_accuracy": "tests score the trained classifier",
-    "qualityclf.sigmoid": "tests build expected scores with it",
     "similarity.ivf_topk": "the exact reference for ivfpq_topk's tests",
     "similarity.sq_query_code": "tests build expected SQ8 codes with it",
     "skew.salted_repartition": "BASELINE north_star names it",

@@ -641,7 +641,7 @@ def _term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _normalize_unicode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode NFC normalization (textops.normalize_text, pandas UDF over
+    """Unicode NFC normalization (textops.normalize_text, Arrow UDF over
     unicodedata) on text with deterministically injected combining-mark
     sequences; oracle = DuckDB's utf8proc nfc_normalize over the same
     construction — two independent UAX#15 implementations must agree on
@@ -797,7 +797,7 @@ def _entries_parquet(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _kind_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's entry-kind census (M1 query): scan -> mapInPandas
+    """The reference's entry-kind census (M1 query): scan -> mapInArrow
     parse -> groupBy count, via the LIBRARY operator (the contract must
     exercise slowspark.aggregate, not a private re-implementation).
     Hash-checked via the materialized entries parquet; also pinned against

@@ -107,28 +107,28 @@ def _byte_map_words(words: DataFrame, in_col: str, out_col: str,
     byte-level path — O(distinct pre-tokens), never O(corpus); the
     mapping is injective (UTF-8 is, and the byte map is a bijection),
     so counts need no re-aggregation."""
-    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    from slowspark.util import arrow_batch
 
     keep = keep or []
-    schema = ", ".join(
+    schema = StructType.fromDDL(", ".join(
         [f"{out_col} string"]
         + [f"{c} {t}" for c, t in keep]
-    )
+    ))
 
     def mapper(batches):
         b2u = bytes_to_unicode()
-        for pdf in batches:
-            out = {
-                out_col: [
-                    "".join(b2u[b] for b in w.encode("utf-8"))
-                    for w in pdf[in_col]
-                ]
-            }
-            for c, _ in keep:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
+        for batch in batches:
+            mapped = [
+                "".join(b2u[b] for b in w.encode("utf-8"))
+                for w in batch.column(in_col).to_pylist()
+            ]
+            yield arrow_batch(
+                schema, [mapped] + [batch.column(c) for c, _ in keep]
+            )
 
-    return words.mapInPandas(mapper, schema=schema)
+    return words.mapInArrow(mapper, schema=schema)
 
 
 def pretoken_frequencies(
@@ -368,7 +368,7 @@ def bpe_segment(
         raise ValueError(
             f"bpe_segment: {len(merges)} merges exceeds max_expr_merges="
             f"{max_expr_merges} for the replace-chain expression path — "
-            "use bpe_segment_udf (broadcast merge-rank pandas UDF; "
+            "use bpe_segment_udf (broadcast merge-rank Arrow UDF; "
             "token-identical, built for production vocabularies)"
         )
     from slowspark.textops import ws_token_array
@@ -476,7 +476,7 @@ def bpe_segment_udf(
     """Production-vocabulary segmentation: same contract and output as
     bpe_segment, any number of merges (counts_only likewise). The merge table travels ONCE per
     executor as a Spark broadcast of the {(left, right): rank} dict; an
-    Arrow-batched pandas UDF segments each DISTINCT word once with the
+    Arrow-batched UDF (mapInArrow) segments each DISTINCT word once with the
     greedy lowest-rank loop (see _merge_word for the equivalence
     argument vs the in-order replace chain), and the per-word result
     joins back to the exploded occurrences.
@@ -489,10 +489,10 @@ def bpe_segment_udf(
     strings regardless of vocabulary size, vs the replace chain's
     O(len * n_merges) — at 32k merges the UDF path is ~3 orders of
     magnitude less string scanning."""
-    import pandas as pd
     from pyspark.sql import types as T
 
     from slowspark.textops import ws_token_array
+    from slowspark.util import arrow_batch
 
     ranks = {(m["left"], m["right"]): m["merge_ix"] for m in merges}
     sc = df.sparkSession.sparkContext
@@ -501,17 +501,14 @@ def bpe_segment_udf(
     def seg_fn(batches):
         r = bc_ranks.value
         b2u = bytes_to_unicode() if byte_level else None
-        for pdf in batches:
+        for batch in batches:
+            words = batch.column(0).to_pylist()
             ws = (
-                ["".join(b2u[b] for b in w.encode("utf-8"))
-                 for w in pdf["word"]]
-                if byte_level else pdf["word"]
+                ["".join(b2u[b] for b in w.encode("utf-8")) for w in words]
+                if byte_level else words
             )
-            yield pd.DataFrame(
-                {
-                    "word": pdf["word"],
-                    "sym": [_merge_word(w, r) for w in ws],
-                }
+            yield arrow_batch(
+                seg_schema, [batch.column(0), [_merge_word(w, r) for w in ws]]
             )
 
     # no sentinel filter: bpe_segment doesn't filter either, and the two
@@ -537,7 +534,7 @@ def bpe_segment_udf(
     segmented = (
         occurrences.select("word")
         .distinct()
-        .mapInPandas(seg_fn, schema=seg_schema)
+        .mapInArrow(seg_fn, schema=seg_schema)
     )
     toks = occurrences.join(segmented, "word").select("id", "pos", "sym")
     return (_count_tokens if counts_only else _reassemble)(toks, id_col)

@@ -1223,12 +1223,15 @@ def pack_bins(
     and the same md5 assignment reproduces the same bins across runs,
     stage retries, and engines.
 
-    Scale shape: one shuffle (groupBy shard), one applyInPandas pass
+    Scale shape: one shuffle (groupBy shard), one applyInArrow pass
     per shard doing the O(rows/shard) fold over narrow (id, tokens)
     rows — text never enters the shuffle; no window over the corpus,
     no driver state. Output row count == input row count (no silent
     drops)."""
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
+
+    from slowspark.util import arrow_batch
 
     if seq_len < 1:
         raise ValueError(f"pack_bins: seq_len must be >= 1, got {seq_len}")
@@ -1247,12 +1250,16 @@ def pack_bins(
         _md5_bucket(id_col, salt, n_shards).alias("shard"),
     )
 
-    def pack_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("id", kind="mergesort").reset_index(drop=True)
+    schema = StructType.fromDDL(
+        "id long, shard long, n_tokens long, bin_ix long,"
+        " bin_offset long, truncated boolean"
+    )
+
+    def pack_shard(key, table):
+        table = table.sort_by("id")
         bins, offs, trunc = [], [], []
         bin_ix, fill = -1, seq_len  # force a new bin for the first doc
-        for t in pdf["n_tokens"]:
-            t = int(t)
+        for t in table.column("n_tokens").to_pylist():
             if t > seq_len:
                 bin_ix += 1
                 bins.append(bin_ix)
@@ -1272,19 +1279,15 @@ def pack_bins(
                 offs.append(0)
                 trunc.append(False)
                 fill = t
-        out = pdf[["id", "shard", "n_tokens"]].copy()
-        out["bin_ix"] = bins
-        out["bin_offset"] = offs
-        out["truncated"] = trunc
-        return out
+        packed = arrow_batch(schema, [
+            table.column("id"), table.column("shard"),
+            table.column("n_tokens"), bins, offs, trunc,
+        ])
+        return pa.Table.from_batches([packed])
 
     return (
         keyed.groupBy("shard")
-        .applyInPandas(
-            pack_shard,
-            schema="id long, shard long, n_tokens long, bin_ix long,"
-                   " bin_offset long, truncated boolean",
-        )
+        .applyInArrow(pack_shard, schema=schema)
         .withColumnRenamed("id", id_col)
     )
 

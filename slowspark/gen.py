@@ -20,9 +20,6 @@ from __future__ import annotations
 
 import hashlib
 from datetime import datetime, timedelta, timezone
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -203,21 +200,24 @@ def expected_kind_counts(n_pages: int) -> dict[str, int]:
 
 
 def gen_pages(spark: SparkSession, n_pages: int, partitions: int | None = None) -> DataFrame:
-    """Distributed deterministic generation: spark.range -> mapInPandas.
+    """Distributed deterministic generation: spark.range -> mapInArrow.
     No driver-side loop, no collect — scales to any n_pages."""
     from slowspark.schema import PAGES_SCHEMA
+    from slowspark.util import arrow_batch
 
     if partitions is None:
         partitions = max(1, min(256, n_pages // 2000 or 1))
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [render_page(int(d)) for d in pdf["id"]]
-            yield pd.DataFrame(rows, columns=[f.name for f in PAGES_SCHEMA.fields])
+    def fn(batches):
+        for batch in batches:
+            rows = [render_page(d) for d in batch.column("id").to_pylist()]
+            yield arrow_batch(
+                PAGES_SCHEMA, [[r[c] for r in rows] for c in PAGES_SCHEMA.names]
+            )
 
     return (
         spark.range(0, n_pages, numPartitions=partitions)
-        .mapInPandas(fn, schema=PAGES_SCHEMA)
+        .mapInArrow(fn, schema=PAGES_SCHEMA)
     )
 
 

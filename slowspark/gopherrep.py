@@ -10,7 +10,7 @@ uses THIRTEEN within-document repetition measures:
 
 All thirteen are per-document computations over one document's own
 lines/tokens — no cross-document state — so the Spark shape is a single
-narrow Arrow-batched mapInPandas pass: no shuffle, no explode (a
+narrow Arrow-batched mapInArrow pass: no shuffle, no explode (a
 relational formulation would shuffle O(6 x tokens) gram rows per doc —
 a 6x corpus inflation at 100 TB for a value each doc can compute from
 itself), no driver state. Python-per-document is the sanctioned slow
@@ -52,8 +52,9 @@ import re
 from collections import Counter
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from slowspark.util import arrow_batch
 
 _PARA_RE = re.compile(r"\n{2,}")
 # Java \s (what textops.ws_token_array splits on): ASCII whitespace ONLY.
@@ -160,8 +161,9 @@ def gopher_repetition_stats(
     query rounds to 6, where IEEE division of identical integers makes
     both engines round identically).
 
-    Scale shape: one narrow mapInPandas over (id, text) — no shuffle, no
-    gram explode; the id column keeps its source type."""
+    Scale shape: one narrow mapInArrow over (id, text) — no shuffle, no
+    gram explode; the id column passes through as its source Arrow
+    array."""
     id_field = df.schema[id_col]
     out_schema = T.StructType(
         [T.StructField("__id", id_field.dataType, id_field.nullable)]
@@ -175,20 +177,14 @@ def gopher_repetition_stats(
     )
 
     def fn(batches):
-        for pdf in batches:
-            stats = [_gopher_doc(t or "") for t in pdf[text_col]]
+        for batch in batches:
+            stats = [_gopher_doc(t or "") for t in batch.column(1).to_pylist()]
             cols = list(zip(*stats)) if stats else [[] for _ in _STAT_COLS]
-            data = {"__id": pdf[id_col]}
-            for name, vals in zip(_STAT_COLS, cols):
-                data[name] = pd.Series(
-                    vals,
-                    dtype="int32" if name in ("n_lines", "n_paras") else "float64",
-                )
-            yield pd.DataFrame(data)
+            yield arrow_batch(out_schema, [batch.column(0), *cols])
 
     return (
         df.select(id_col, text_col)
-        .mapInPandas(fn, schema=out_schema)
+        .mapInArrow(fn, schema=out_schema)
         .withColumnRenamed("__id", id_col)
     )
 

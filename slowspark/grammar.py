@@ -5,7 +5,7 @@ reference (soulstompp/mysql-slowlog-parser, read-only at /root/reference) as
 compiled regexes + two small character scanners. It has ZERO Spark imports so
 the 16 reference unit vectors (reference src/parser.rs:583-926) can be pinned
 against it directly; the Spark stage (slowspark/parse.py) applies
-``parse_entries`` inside an Arrow-batched ``mapInPandas``.
+``parse_entries`` inside an Arrow-batched ``mapInArrow``.
 
 All regexes are compiled once at module import time, i.e. once per Python
 worker process — "compiling the reference's header regexes once per

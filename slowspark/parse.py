@@ -1,4 +1,4 @@
-"""The vectorized parse stage: pages -> entries via Arrow-batched mapInPandas.
+"""The vectorized parse stage: pages -> entries via Arrow-batched mapInArrow.
 
 This is the Spark re-expression of the reference's streaming decoder
 (EntryCodec, /root/reference/src/codec.rs:255-352). The reference's framing
@@ -14,66 +14,58 @@ Scale notes (100 TB / 10^12 pages):
     JVM-side DataFrame ops under whole-stage codegen
   - regexes compile at slowspark.grammar import time = once per Python
     worker process ("once per partition", BASELINE.json north_star)
-  - no shuffle: mapInPandas is a narrow transformation; input splits come
+  - no shuffle: mapInArrow is a narrow transformation; input splits come
     straight from the Parquet/Iceberg scan (spark.sql.files.maxPartitionBytes
     controls split size; pages are ~KB so default 128 MiB splits are fine)
+  - Arrow in, Arrow out: the worker reads the page text with to_pylist(),
+    takes url/lang/warc_ts from the input batch by page index, and builds
+    the entry columns with util.arrow_batch; no pandas frame is built, so
+    no dtype repair is needed (a null stat stays a null long)
   - column pruning: only url/text/lang/warc_ts are read from the scan —
     html (the big binary column) is never touched unless asked for
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from slowspark import grammar
 from slowspark.schema import ENTRY_SCHEMA
+from slowspark.util import arrow_batch
 
 _OUT_COLS = [f.name for f in ENTRY_SCHEMA.fields if f.name != "entry_id"]
-
-_INT_DTYPES = (
-    # nullable integer dtypes so error rows (None stats) survive the Arrow
-    # conversion to LongType instead of degrading to float64+NaN
-    ("entry_index", "Int32"),
-    ("thread_id", "Int64"),
-    ("rows_sent", "Int64"),
-    ("rows_examined", "Int64"),
-    ("set_timestamp", "Int64"),
-)
+_PAGE_COLS = ("url", "lang", "warc_ts")
 
 
-def _entries_for_batch(
-    pdf: pd.DataFrame, context_mapper, out_cols, fields=None
-) -> pd.DataFrame:
-    rows: list[dict] = []
-    want_time = "log_time" in out_cols
-    has_lang = "lang" in pdf.columns
-    has_ts = "warc_ts" in pdf.columns
-    urls = pdf["url"].tolist()
-    texts = pdf["text"].tolist()
-    langs = pdf["lang"].tolist() if has_lang else [None] * len(urls)
-    tss = pdf["warc_ts"].tolist() if has_ts else [None] * len(urls)
-    for url, text, lang, warc_ts in zip(urls, texts, langs, tss):
+def _entries_for_batch(batch, context_mapper, schema: StructType, fields=None):
+    """One page batch -> one entry batch. The page columns come from the
+    input batch by each entry's page index; log_time is the grammar's UTC
+    microsecond count."""
+    page_ix: list[int] = []
+    entries: list[dict] = []
+    for i, text in enumerate(batch.column("text").to_pylist()):
         if text is None:
             continue
         for e in grammar.parse_entries(text, context_mapper, fields):
-            us = e.pop("log_time_us")
-            if want_time:
-                e["log_time"] = (
-                    pd.Timestamp(us, unit="us") if us is not None else pd.NaT
-                )
-            e["url"] = url
-            e["lang"] = lang
-            e["warc_ts"] = warc_ts
-            rows.append(e)
-    out = pd.DataFrame(rows, columns=out_cols)
-    for col, dt in _INT_DTYPES:
-        if col in out_cols:
-            out[col] = out[col].astype(dt)
-    return out
+            page_ix.append(i)
+            entries.append(e)
+    names = batch.schema.names
+    take = pa.array(page_ix, type=pa.int32())
+    cols = []
+    for c in schema.names:
+        if c in _PAGE_COLS:
+            cols.append(
+                batch.column(c).take(take) if c in names
+                else [None] * len(entries)
+            )
+        else:
+            key = "log_time_us" if c == "log_time" else c
+            cols.append([e.get(key) for e in entries])
+    return arrow_batch(schema, cols)
 
 
 def parse_pages(
@@ -128,15 +120,16 @@ def parse_pages(
     # full column set this is a no-op (fields=None = compute everything)
     prune = None if columns is None else frozenset(out_cols)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _entries_for_batch(pdf, mapper, out_cols, prune)
-
     by_name = {f.name: f for f in ENTRY_SCHEMA.fields}
-    schema_no_id = ",".join(
+    schema_no_id = StructType.fromDDL(",".join(
         f"`{c}` {by_name[c].dataType.simpleString()}" for c in out_cols
-    )
-    out = pages.select(*in_cols).mapInPandas(fn, schema=schema_no_id)
+    ))
+
+    def fn(batches):
+        for batch in batches:
+            yield _entries_for_batch(batch, mapper, schema_no_id, prune)
+
+    out = pages.select(*in_cols).mapInArrow(fn, schema=schema_no_id)
     if masking == "placeholder" and "statement" in out_cols:
         out = mask_statements(out)
         if forced_cols:

@@ -14,8 +14,8 @@ keep the high-scoring tail. At 100 TB the split of work is:
 
 Why not pyspark.ml's LogisticRegression: its Vector columns can only be
 assembled from per-doc sparse features through a row-at-a-time Python
-UDF (VectorUDT is not Arrow-representable, so mapInPandas can't emit
-it) or through HashingTF's non-reproducible-in-SQL MurmurHash3.
+UDF (VectorUDT is not Arrow-representable, so no Arrow-batched UDF can
+emit it) or through HashingTF's non-reproducible-in-SQL MurmurHash3.
 Full-batch gradient descent over the exploded (id, bucket, tf) feature
 table IS the same computation MLlib runs inside treeAggregate, and here
 it stays in whole-stage-codegen built-ins: each epoch is one broadcast

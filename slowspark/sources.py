@@ -17,9 +17,10 @@ tokio's FramedRead (/root/reference/src/lib.rs:14-36). The Spark equivalents:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from slowspark.schema import PAGES_SCHEMA
+from slowspark.util import arrow_batch
 
 
 def read_pages(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
@@ -28,10 +29,36 @@ def read_pages(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFram
     return spark.read.schema(PAGES_SCHEMA).format(fmt).load(path)
 
 
-_WARC_SCHEMA = (
-    "warc_path string, record_ix int, warc_type string, url string, "
-    "warc_ts timestamp, headers map<string,string>, payload binary"
+_WARC_SCHEMA = T.StructType(
+    [
+        T.StructField("warc_path", T.StringType()),
+        T.StructField("record_ix", T.IntegerType()),
+        T.StructField("warc_type", T.StringType()),
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_ts", T.TimestampType()),
+        T.StructField("headers", T.MapType(T.StringType(), T.StringType())),
+        T.StructField("payload", T.BinaryType()),
+    ]
 )
+
+
+# write_warc's CC-CDX-style record index (one parquet file per WARC file)
+_INDEX_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("warc_path", T.StringType()),
+        T.StructField("record_ix", T.IntegerType()),
+        T.StructField("offset", T.LongType()),
+        T.StructField("length", T.LongType()),
+    ]
+)
+
+
+def _warc_batch(rows: list):
+    """read_warc-schema record tuples -> one Arrow batch."""
+    return arrow_batch(
+        _WARC_SCHEMA, [[r[i] for r in rows] for i in range(len(_WARC_SCHEMA))]
+    )
 
 
 def _parse_warc_blob(blob: bytes, path: str):
@@ -110,36 +137,25 @@ def read_warc(spark: SparkSession, path_glob: str) -> DataFrame:
     parallelism — exactly how CC ships (thousands of ~1 GB segment
     files fan out across executors; a file must fit worker memory,
     which CC's 1 GB segmenting guarantees). The parse itself is one
-    mapInPandas, no shuffle; downstream projections prune the payload
+    mapInArrow, no shuffle; downstream projections prune the payload
     column unless asked for."""
     import gzip
 
-    import pandas as pd
-
     def parse_fn(batches):
-        for pdf in batches:
-            out = {
-                "warc_path": [], "record_ix": [], "warc_type": [],
-                "url": [], "warc_ts": [], "headers": [], "payload": [],
-            }
-            for path, content in zip(pdf["path"], pdf["content"]):
-                blob = bytes(content)
+        for batch in batches:
+            rows = []
+            for path, blob in zip(
+                batch.column(0).to_pylist(), batch.column(1).to_pylist()
+            ):
                 if path.endswith(".gz"):
                     blob = gzip.decompress(blob)
-                for ix, wt, url, ts, hdrs, payload in _parse_warc_blob(
-                    blob, path
-                ):
-                    out["warc_path"].append(path)
-                    out["record_ix"].append(ix)
-                    out["warc_type"].append(wt)
-                    out["url"].append(url)
-                    out["warc_ts"].append(ts)
-                    out["headers"].append(hdrs)
-                    out["payload"].append(payload)
-            yield pd.DataFrame(out)
+                rows.extend(
+                    (path, *rec) for rec in _parse_warc_blob(blob, path)
+                )
+            yield _warc_batch(rows)
 
     raw = spark.read.format("binaryFile").load(path_glob)
-    return raw.select("path", "content").mapInPandas(
+    return raw.select("path", "content").mapInArrow(
         parse_fn, schema=_WARC_SCHEMA
     )
 
@@ -174,7 +190,7 @@ def write_warc(
     (pyarrow, deterministic name) in the same pass: no extra job, no
     driver collect.
 
-    Scale shape: one shuffle (groupBy file bucket), one applyInPandas
+    Scale shape: one shuffle (groupBy file bucket), one applyInArrow
     writer per file, driver collects only the n_files-row manifest
     (returned). Executors write with plain open(), so `path` must be a
     filesystem mount (file://, NFS, FUSE); for object storage write to
@@ -183,8 +199,6 @@ def write_warc(
     import gzip
     import hashlib
     import os
-
-    import pandas as pd
 
     if n_files < 1:
         raise ValueError(f"write_warc: n_files must be >= 1, got {n_files}")
@@ -206,19 +220,20 @@ def write_warc(
     cols = [url_col, payload_col] + list(header_cols)
     if ts_col:
         cols.append(ts_col)
+    manifest = _manifest_schema("warc_path")
 
-    def write_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ix = int(key[0])
-        pdf = pdf.sort_values(url_col, kind="mergesort")
+    def write_group(key, table):
+        ix = key[0].as_py()
+        rows = _export_rows(table.sort_by(url_col))
         fpath = os.path.join(path, f"part-{ix:05d}{ext}")
         chunks = []
         idx_rows = []
         running = 0
-        for _, row in pdf.iterrows():
-            payload = bytes(row[payload_col])
+        for row in rows:
+            payload = row[payload_col]
             url = str(row[url_col])
             ts = (
-                pd.Timestamp(row[ts_col]).strftime("%Y-%m-%dT%H:%M:%SZ")
+                row[ts_col].strftime("%Y-%m-%dT%H:%M:%SZ")
                 if ts_col else "1970-01-01T00:00:00Z"
             )
             rid = hashlib.md5(url.encode()).hexdigest()
@@ -231,8 +246,12 @@ def write_warc(
                 "Content-Type: application/octet-stream",
                 f"Content-Length: {len(payload)}",
             ]
-            for hc in header_cols:
-                hdrs.append(f"X-Slowspark-{hc}: {row[hc]}")
+            # a null leaves its header out: read_warc reads an absent
+            # header back as null
+            hdrs.extend(
+                f"X-Slowspark-{hc}: {row[hc]}" for hc in header_cols
+                if row[hc] is not None
+            )
             rec = (
                 "\r\n".join(hdrs).encode() + b"\r\n\r\n"
                 + payload + b"\r\n\r\n"
@@ -255,42 +274,21 @@ def write_warc(
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            table = pa.table(
-                {
-                    "url": [r[0] for r in idx_rows],
-                    "warc_path": [r[1] for r in idx_rows],
-                    "record_ix": pa.array(
-                        [r[2] for r in idx_rows], type=pa.int32()
-                    ),
-                    "offset": pa.array(
-                        [r[3] for r in idx_rows], type=pa.int64()
-                    ),
-                    "length": pa.array(
-                        [r[4] for r in idx_rows], type=pa.int64()
-                    ),
-                }
-            )
+            index = arrow_batch(_INDEX_SCHEMA, list(zip(*idx_rows)))
             ipath = os.path.join(index_path, f"part-{ix:05d}.parquet")
             itmp = ipath + ".tmp"
-            pq.write_table(table, itmp)
+            pq.write_table(pa.Table.from_batches([index]), itmp)
             os.replace(itmp, ipath)
-        return pd.DataFrame(
-            {"file_ix": [ix], "warc_path": [fpath],
-             "n_records": [len(pdf)], "n_bytes": [len(blob)]}
-        )
+        return _manifest_row(manifest, ix, fpath, len(rows), len(blob))
 
-    manifest = (
+    written = (
         df.select(*cols)
         .withColumn("__f", F.pmod(F.xxhash64(url_col), F.lit(n_files)))
         .groupBy("__f")
-        .applyInPandas(
-            write_group,
-            schema="file_ix int, warc_path string, n_records long,"
-                   " n_bytes long",
-        )
+        .applyInArrow(write_group, schema=manifest)
         .collect()
     )
-    return [r.asDict() for r in manifest]
+    return [r.asDict() for r in written]
 
 
 def read_warc_selective(
@@ -325,8 +323,6 @@ def read_warc_selective(
     between a range request and a 1 GB segment download per record."""
     import gzip
 
-    import pandas as pd
-
     from slowspark.util import local_frame
 
     idx = (
@@ -345,14 +341,10 @@ def read_warc_selective(
     def fetch_fn(batches):
         handles: dict = {}
         try:
-            for pdf in batches:
-                out = {
-                    "warc_path": [], "record_ix": [], "warc_type": [],
-                    "url": [], "warc_ts": [], "headers": [], "payload": [],
-                }
+            for batch in batches:
+                rows = []
                 for url, path, rix, off, length in zip(
-                    pdf["url"], pdf["warc_path"], pdf["record_ix"],
-                    pdf["offset"], pdf["length"],
+                    *(c.to_pylist() for c in batch.columns)
                 ):
                     fh = handles.get(path)
                     if fh is None:
@@ -389,19 +381,13 @@ def read_warc_selective(
                             f"{url!r} at offset {off} but the record is "
                             f"{rurl!r} — stale index"
                         )
-                    out["warc_path"].append(path)
-                    out["record_ix"].append(int(rix))
-                    out["warc_type"].append(wt)
-                    out["url"].append(url)
-                    out["warc_ts"].append(ts)
-                    out["headers"].append(hdrs)
-                    out["payload"].append(payload)
-                yield pd.DataFrame(out)
+                    rows.append((path, rix, wt, url, ts, hdrs, payload))
+                yield _warc_batch(rows)
         finally:
             for fh in handles.values():
                 fh.close()
 
-    return sel.mapInPandas(fetch_fn, schema=_WARC_SCHEMA)
+    return sel.mapInArrow(fetch_fn, schema=_WARC_SCHEMA)
 
 
 def read_jsonl(
@@ -449,15 +435,14 @@ def write_jsonl(
     too). Binary columns are refused loudly (base64-smuggling bytes
     into a text interchange is a decision the caller must make).
 
-    Scale shape: one shuffle (groupBy file bucket), one applyInPandas
+    Scale shape: one shuffle (groupBy file bucket), one applyInArrow
     writer per file, driver collects only the n_files-row manifest
     (returned). Same file://-scope caveat as write_warc (RUNBOOK)."""
     import gzip
     import json
     import os
     import glob as _glob
-
-    import pandas as pd
+    from datetime import datetime
 
     if n_files < 1:
         raise ValueError(f"write_jsonl: n_files must be >= 1, got {n_files}")
@@ -473,39 +458,25 @@ def write_jsonl(
         os.path.join(path, "part-*.jsonl.gz")
     ):
         os.remove(stale)
+    data_cols = list(df.columns)
+    manifest = _manifest_schema("jsonl_path")
 
-    def _py(v):
-        # numpy scalars/arrays and pandas timestamps -> plain JSON types
-        if hasattr(v, "item"):
-            return v.item()
-        if isinstance(v, pd.Timestamp):
-            return v.isoformat()
-        if isinstance(v, (list, tuple)) or hasattr(v, "tolist"):
-            return [_py(x) for x in (v.tolist() if hasattr(v, "tolist") else v)]
-        return v
-
-    data_cols = [c for c in df.columns]
-    # Arrow->pandas promotes nullable Spark ints to float64 (1 -> 1.0) and
-    # null timestamps to NaT; both break the lossless FAILFAST round-trip
-    # (floats fail the declared int schema, NaN/NaT are not JSON). Restore
-    # integer dtype via pandas nullable Int64 and null out every NA before
-    # serializing (ADVICE r7).
-    int_cols = [c for c, t in df.dtypes
-                if t in ("tinyint", "smallint", "int", "bigint")]
-
-    def write_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ix = int(key[0])
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        for c in int_cols:
-            pdf[c] = pdf[c].astype("Int64")
-        pdf = pdf.astype(object).where(pdf.notna(), None)
+    def write_group(key, table):
+        ix = key[0].as_py()
+        rows = _export_rows(table.sort_by(id_col))
         fpath = os.path.join(path, f"part-{ix:05d}{ext}")
         lines = []
-        for _, row in pdf.iterrows():
-            obj = {c: _py(row[c]) for c in data_cols}
+        for row in rows:
+            # JSON has no NaN: a NaN double is written as null (and a
+            # timestamp as its naive ISO text, by `default`)
+            obj = {
+                c: None if isinstance(row[c], float) and row[c] != row[c]
+                else row[c]
+                for c in data_cols
+            }
             lines.append(
                 json.dumps(obj, sort_keys=True, ensure_ascii=False,
-                           separators=(",", ":"))
+                           separators=(",", ":"), default=datetime.isoformat)
             )
         blob = ("\n".join(lines) + "\n").encode("utf-8")
         if compress:
@@ -514,22 +485,66 @@ def write_jsonl(
         with open(tmp, "wb") as f:
             f.write(blob)
         os.replace(tmp, fpath)
-        return pd.DataFrame(
-            {"file_ix": [ix], "jsonl_path": [fpath],
-             "n_records": [len(pdf)], "n_bytes": [len(blob)]}
-        )
+        return _manifest_row(manifest, ix, fpath, len(rows), len(blob))
 
-    manifest = (
+    written = (
         df.withColumn("__f", F.pmod(F.xxhash64(id_col), F.lit(n_files)))
         .groupBy("__f")
-        .applyInPandas(
-            write_group,
-            schema="file_ix int, jsonl_path string, n_records long,"
-                   " n_bytes long",
-        )
+        .applyInArrow(write_group, schema=manifest)
         .collect()
     )
-    return [r.asDict() for r in manifest]
+    return [r.asDict() for r in written]
+
+
+def _manifest_schema(path_col: str) -> T.StructType:
+    """The per-file manifest write_warc and write_jsonl return."""
+    return T.StructType(
+        [
+            T.StructField("file_ix", T.IntegerType()),
+            T.StructField(path_col, T.StringType()),
+            T.StructField("n_records", T.LongType()),
+            T.StructField("n_bytes", T.LongType()),
+        ]
+    )
+
+
+def _manifest_row(schema: T.StructType, *values):
+    """One written file's manifest row, as an applyInArrow result."""
+    import pyarrow as pa
+
+    return pa.Table.from_batches([arrow_batch(schema, [[v] for v in values])])
+
+
+def _export_rows(table) -> list[dict]:
+    """An export group's rows as dicts of the values Spark shows for
+    them: maps as dicts, timestamps as naive datetimes (the session wall
+    clock). Every other value is to_pylist's own."""
+    import pyarrow as pa
+
+    cols = {}
+    for f in table.schema:
+        vals = table.column(f.name).to_pylist()
+        if pa.types.is_nested(f.type) or pa.types.is_timestamp(f.type):
+            vals = [_plain(v, f.type) for v in vals]
+        cols[f.name] = vals
+    return [dict(zip(cols, vals)) for vals in zip(*cols.values())]
+
+
+def _plain(v, t):
+    """One to_pylist value of Arrow type `t`, as _export_rows describes."""
+    import pyarrow as pa
+
+    if v is None:
+        return None
+    if pa.types.is_timestamp(t):
+        return v.replace(tzinfo=None)
+    if pa.types.is_map(t):
+        return {k: _plain(x, t.item_type) for k, x in v}
+    if pa.types.is_struct(t):
+        return {f.name: _plain(v[f.name], f.type) for f in t}
+    if pa.types.is_list(t):
+        return [_plain(x, t.value_type) for x in v]
+    return v
 
 
 def read_slow_logs(spark: SparkSession, path_glob: str) -> DataFrame:

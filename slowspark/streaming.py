@@ -6,7 +6,7 @@ The reference is a streaming decoder (tokio FramedRead,
 (src/codec.rs:284-311) existed because an entry could span read buffers. In
 the page model an entry never spans rows, so micro-batch boundaries align
 with rows and NO cross-batch parser state is needed — no
-flatMapGroupsWithState, just a stateless mapInPandas per micro-batch plus
+flatMapGroupsWithState, just a stateless mapInArrow per micro-batch plus
 watermarked windowed aggregation for late pages.
 """
 
@@ -29,7 +29,8 @@ def read_page_stream(spark: SparkSession, path: str, max_files: int = 16) -> Dat
 
 
 def parse_stream(pages_stream: DataFrame) -> DataFrame:
-    """mapInPandas works unchanged on a streaming DataFrame."""
+    """parse_pages' mapInArrow runs unchanged on a streaming DataFrame
+    (checked on a rate-source -> memory-sink stream)."""
     return parse_pages(pages_stream)
 
 

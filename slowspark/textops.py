@@ -10,8 +10,8 @@ scoring, token counting, and document fingerprinting. All shaped for scale:
   - exact/quality/token/langid/scrub/extract stages are pure JVM built-ins
     (whole-stage codegen, no Python);
   - MinHash/SimHash signatures and unicode normalization are Arrow-batched
-    pandas UDFs (the sanctioned slow path — vectorized or memoized per
-    worker, no per-row Python round trips);
+    UDFs (mapInArrow / arrow_udf: the sanctioned slow path — vectorized or
+    memoized per worker, no per-row Python round trips);
   - candidate generation is a band-bucket groupBy (shuffle keyed on
     (band, hash), never an all-pairs cross join) — the standard
     MinHash-LSH banding construction (Broder 1997; Leskovec et al., Mining
@@ -24,11 +24,12 @@ from __future__ import annotations
 from itertools import combinations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from slowspark.util import (
+    arrow_batch,
     capped_by_bucket,
     local_frame,
     materialize as _materialize,
@@ -105,7 +106,8 @@ def minhash_signatures(
     seed: int = 42,
 ) -> DataFrame:
     """doc_id -> minhash signature (array<long>, length n_perm). Arrow-batched
-    pandas UDF; a, b parameters are computed once per worker from the seed."""
+    UDF (mapInArrow); a, b parameters are computed once per worker from the
+    seed."""
     a_b = (n_perm, seed, shingle_k)
 
     out_schema = T.StructType([
@@ -116,18 +118,18 @@ def minhash_signatures(
     def fn(batches):
         n_p, sd, k = a_b
         a, b = _perm_params(n_p, sd)
-        for pdf in batches:
+        for batch in batches:
             sigs = []
-            for text in pdf[text_col]:
+            for text in batch.column(1).to_pylist():
                 sh = _shingle_hashes(text or "", k)
                 # (a * x + b) mod p, min over shingles, vectorized
                 vals = (np.outer(sh, a) + b) % np.uint64(_MERSENNE)
                 sigs.append(vals.min(axis=0).astype(np.int64).tolist())
-            yield pd.DataFrame({"__id": pdf[id_col].astype("int64"), "signature": sigs})
+            yield arrow_batch(out_schema, [batch.column(0), sigs])
 
     return (
         df.select(id_col, text_col)
-        .mapInPandas(fn, schema=out_schema)
+        .mapInArrow(fn, schema=out_schema)
         .withColumnRenamed("__id", id_col)
     )
 
@@ -559,7 +561,7 @@ def simhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """64-bit SimHash (Charikar 2002) over whitespace tokens; numpy-
-    vectorized pandas UDF with a per-worker unique-token hash memo. Near-
+    vectorized Arrow UDF with a per-worker unique-token hash memo. Near-
     dups differ in few bits -> multi-table lookup (simhash_candidates)."""
     out_schema = T.StructType([
         T.StructField("__id", T.LongType(), False),
@@ -568,9 +570,9 @@ def simhash_signatures(
 
     def fn(batches):
         bit_weights = (np.uint64(1) << np.arange(64, dtype=np.uint64))
-        for pdf in batches:
+        for batch in batches:
             out = []
-            for text in pdf[text_col]:
+            for text in batch.column(1).to_pylist():
                 toks = (text or "").split()
                 if not toks:
                     out.append(0)
@@ -580,11 +582,11 @@ def simhash_signatures(
                 v = bits.sum(axis=0, dtype=np.int64) * 2 - len(hs)
                 sig = np.uint64(np.sum(bit_weights[v > 0], dtype=np.uint64))
                 out.append(int(np.int64(sig)))
-            yield pd.DataFrame({"__id": pdf[id_col].astype("int64"), "simhash": out})
+            yield arrow_batch(out_schema, [batch.column(0), out])
 
     return (
         df.select(id_col, text_col)
-        .mapInPandas(fn, schema=out_schema)
+        .mapInArrow(fn, schema=out_schema)
         .withColumnRenamed("__id", id_col)
     )
 
@@ -1734,7 +1736,7 @@ def normalize_text(
     web-text pipeline (crawled pages mix precomposed and combining-mark
     encodings of the same glyphs, which breaks exact dedup and tokenizer
     merges). Spark SQL has no normalization built-in, so this is an
-    Arrow-batched pandas UDF over Python's unicodedata (UAX#15) — a pure
+    Arrow-batched scalar UDF over Python's unicodedata (UAX#15) — a pure
     per-row string map, narrow, no shuffle. ASCII-only batches short-circuit
     via str.isascii() (NFC is the identity on ASCII)."""
     import unicodedata
@@ -1742,11 +1744,15 @@ def normalize_text(
     if form not in ("NFC", "NFD", "NFKC", "NFKD"):
         raise ValueError(f"unknown normalization form {form!r}")
 
-    @F.pandas_udf("string")
-    def norm_udf(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda t: None if t is None
-            else (t if t.isascii() else unicodedata.normalize(form, t))
+    @F.arrow_udf("string")
+    def norm_udf(s: pa.Array) -> pa.Array:
+        return pa.array(
+            [
+                None if t is None
+                else (t if t.isascii() else unicodedata.normalize(form, t))
+                for t in s.to_pylist()
+            ],
+            type=pa.string(),
         )
 
     return df.withColumn(out, norm_udf(F.col(text_col)))
@@ -2904,7 +2910,7 @@ def multi_pattern_counts(
 
     Scale shape: the automaton builds ONCE on the driver (O(sum of
     pattern lengths)) and travels as a broadcast; the scan is an
-    Arrow-batched mapInPandas over documents — O(len) Python per doc,
+    Arrow-batched mapInArrow over documents — O(len) Python per doc,
     the sanctioned UDF shape for logic no built-in expresses. Output
     is corpus-sparse (only matched pairs emit). The DuckDB oracle
     brute-forces every (position, pattern) pair — O(len * n_patterns)
@@ -2916,8 +2922,6 @@ def multi_pattern_counts(
         raise ValueError("multi_pattern_counts: duplicate patterns")
     if any(not p for p in patterns):
         raise ValueError("multi_pattern_counts: empty pattern")
-    import pandas as pd
-
     pats = [p.lower() for p in patterns] if lowercase else list(patterns)
     if len(set(pats)) != len(pats):
         raise ValueError(
@@ -2942,14 +2946,16 @@ def multi_pattern_counts(
         lut_size = int(alpha_cps.max()) + 2
         lut = np.full(lut_size, a_cls, dtype=np.int32)
         lut[alpha_cps] = np.arange(alpha_cps.size, dtype=np.int32)
-        for pdf in batches:
+        for batch in batches:
             # text -> char classes for the WHOLE batch in four C calls:
             # one join+lower+utf-32 encode of the concatenated texts,
             # one searchsorted over the pattern alphabet, one compare,
             # one select (per-doc numpy-call overhead dominated the
             # kernel before this)
             ids, parts = [], []
-            for rid, text in zip(pdf["__id"], pdf["__t"]):
+            for rid, text in zip(
+                batch.column(0).to_pylist(), batch.column(1).to_pylist()
+            ):
                 if text is None:
                     continue
                 ids.append(rid)
@@ -3003,26 +3009,18 @@ def multi_pattern_counts(
                 np.concatenate(out_cnt) if out_cnt
                 else np.empty(0, np.int64)
             )
-            yield pd.DataFrame(
-                {
-                    "__id": pd.Series(out_ids, dtype=pdf["__id"].dtype),
-                    "__ix": pat_arr.astype(np.int32),
-                    "n_matches": cnt_arr.astype(np.int64),
-                }
-            )
+            yield arrow_batch(scan_schema, [out_ids, pat_arr, cnt_arr])
 
+    scan_schema = T.StructType(
+        [
+            T.StructField("__id", df.schema[id_col].dataType),
+            T.StructField("__ix", T.IntegerType()),
+            T.StructField("n_matches", T.LongType()),
+        ]
+    )
     scanned = df.select(
         F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
-    ).mapInPandas(
-        scan_fn,
-        T.StructType(
-            [
-                T.StructField("__id", df.schema[id_col].dataType),
-                T.StructField("__ix", T.IntegerType()),
-                T.StructField("n_matches", T.LongType()),
-            ]
-        ),
-    )
+    ).mapInArrow(scan_fn, scan_schema)
     pat_df = local_frame(
         df.sparkSession, enumerate(pats), "__ix int, pattern string"
     )

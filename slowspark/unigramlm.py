@@ -123,21 +123,18 @@ def _viterbi_counts(
     distinct-word table, Viterbi per word in an Arrow-batched UDF with
     the model dict broadcast once per executor, weighted by word
     frequency. Python work is O(distinct words x len x max_piece_len)."""
-    import pandas as pd
+    from slowspark.util import arrow_batch
 
     sc = words.sparkSession.sparkContext
     bc = sc.broadcast((logp, max_piece_len))
 
     def seg_fn(batches):
         lp, mpl = bc.value
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "word": pdf["word"],
-                    "count": pdf["count"],
-                    "pieces": [viterbi_pieces(w, lp, mpl)
-                               for w in pdf["word"]],
-                }
+        for batch in batches:
+            pieces = [viterbi_pieces(w, lp, mpl)
+                      for w in batch.column(0).to_pylist()]
+            yield arrow_batch(
+                schema, [batch.column(0), batch.column(1), pieces]
             )
 
     schema = T.StructType(
@@ -147,7 +144,7 @@ def _viterbi_counts(
             T.StructField("pieces", T.ArrayType(T.StringType())),
         ]
     )
-    seg = words.select("word", "count").mapInPandas(seg_fn, schema)
+    seg = words.select("word", "count").mapInArrow(seg_fn, schema)
     return (
         seg.select("count", F.explode("pieces").alias("piece"))
         .groupBy("piece")
@@ -257,9 +254,8 @@ def unigram_segment(
     shape as bpe_segment's). The Viterbi UDF runs over DISTINCT words
     only; occurrences join back by word — O(distinct) Python, one
     occurrence-side shuffle."""
-    import pandas as pd
-
     from slowspark.textops import ws_token_array
+    from slowspark.util import arrow_batch
 
     logp = {
         r["piece"]: r["logp"] for r in model.select("piece", "logp").collect()
@@ -267,29 +263,26 @@ def unigram_segment(
     sc = df.sparkSession.sparkContext
     bc = sc.broadcast((logp, max_piece_len))
 
+    schema = T.StructType(
+        [
+            T.StructField("word", T.StringType()),
+            T.StructField("n_pieces", T.LongType()),
+        ]
+    )
+
     def seg_fn(batches):
         lp, mpl = bc.value
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "word": pdf["word"],
-                    "n_pieces": [len(viterbi_pieces(w, lp, mpl))
-                                 for w in pdf["word"]],
-                }
-            )
+        for batch in batches:
+            n_pieces = [len(viterbi_pieces(w, lp, mpl))
+                        for w in batch.column(0).to_pylist()]
+            yield arrow_batch(schema, [batch.column(0), n_pieces])
 
     occurrences = df.select(
         F.col(id_col).alias("id"),
         F.explode(ws_token_array(text_col)).alias("word"),
     )
-    per_word = occurrences.select("word").distinct().mapInPandas(
-        seg_fn,
-        T.StructType(
-            [
-                T.StructField("word", T.StringType()),
-                T.StructField("n_pieces", T.LongType()),
-            ]
-        ),
+    per_word = occurrences.select("word").distinct().mapInArrow(
+        seg_fn, schema
     )
     return (
         occurrences.join(per_word, "word")

@@ -2,8 +2,10 @@
 materialization and bucket capping.
 
 Every DataFrame built from driver-side rows goes through local_frame, so
-it plans as a LocalRelation. The other helpers exist because three
-patterns recur across the dedup/similarity family:
+it plans as a LocalRelation, and every Arrow batch a Python stage hands
+the JVM (local_frame's included) is built by arrow_batch. The other
+helpers exist because three patterns recur across the dedup/similarity
+family:
 
   - a Python/UDF-heavy stage over a scan with fewer splits than cores
     (a one-file input) must spread its input first, or it runs as one
@@ -25,32 +27,52 @@ from pyspark.sql.types import StructType
 logger = logging.getLogger("slowspark")
 
 
+def arrow_batch(schema: StructType, columns):
+    """One Arrow RecordBatch of `columns` (one per `schema` field, in field
+    order) typed by the Spark `schema`: the one way slowspark turns Python
+    values into what the JVM reads, for local_frame on the driver and for
+    every mapInArrow/applyInArrow stage in the Python workers.
+
+    A column is either a sequence of Python values, built into an array of
+    the field's Arrow type, or an Arrow array (a column taken from the
+    input batch), cast to that type. The arrays are built from the values,
+    not through pandas, so a null in an integer column stays null instead
+    of becoming NaN, and an int stays an int. A naive datetime in a
+    timestamp column is read as UTC, which is its instant under
+    session.get_spark's UTC session time zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    arrays = []
+    for c, f in zip(columns, arrow, strict=True):
+        if isinstance(c, pa.ChunkedArray):
+            c = c.combine_chunks()
+        arrays.append(
+            c.cast(f.type) if isinstance(c, pa.Array)
+            else pa.array(c, type=f.type)
+        )
+    return pa.RecordBatch.from_arrays(arrays, schema=arrow)
+
+
 def local_frame(spark, rows, schema: StructType | str) -> DataFrame:
     """A DataFrame of driver-side `rows` (tuples or Rows, in schema column
     order) under `schema` (a StructType or a DDL string), planned as a
     LocalRelation.
 
-    The rows go to the JVM as one Arrow table with one typed array per
-    column, so no action over the frame starts a Python worker;
-    createDataFrame(list) would plan a Python-RDD scan whose every action
-    forks one to unpickle the rows. The arrays are built from the Python
-    values, not through pandas, so a null in an integer column stays null
-    instead of becoming NaN. Zero rows give an empty typed frame."""
+    The rows go to the JVM as one Arrow table (arrow_batch), so no action
+    over the frame starts a Python worker; createDataFrame(list) would
+    plan a Python-RDD scan whose every action forks one to unpickle the
+    rows. Zero rows give an empty typed frame."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    arrow = to_arrow_schema(schema)
     rows = list(rows)
-    table = pa.Table.from_arrays(
-        [
-            pa.array([r[i] for r in rows], type=f.type)
-            for i, f in enumerate(arrow)
-        ],
-        schema=arrow,
+    batch = arrow_batch(
+        schema, [[r[i] for r in rows] for i in range(len(schema.fields))]
     )
-    return spark.createDataFrame(table, schema)
+    return spark.createDataFrame(pa.Table.from_batches([batch]), schema)
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -91,6 +91,6 @@ def test_id_type_preserved_and_no_shuffle(spark):
     )
     out = gopherrep.gopher_repetition_stats(df)
     assert dict(out.dtypes)["doc_id"] == "string"
-    # narrow plan: a single mapInPandas over the scan, no Exchange
+    # narrow plan: a single mapInArrow over the scan, no Exchange
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan

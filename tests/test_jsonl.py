@@ -89,6 +89,49 @@ def test_jsonl_null_round_trip_keeps_int_types(spark, tmp_path):
     assert got["b"]["n"] is None and got["b"]["x"] is None
 
 
+def _lines(out):
+    """{doc_id: raw JSON line} of a one-file uncompressed export."""
+    import json
+
+    (f,) = glob.glob(os.path.join(out, "part-*.jsonl"))
+    return {json.loads(ln)["doc_id"]: ln for ln in open(f).read().splitlines()}
+
+
+def test_jsonl_array_column_is_a_json_array(spark, tmp_path):
+    """An array<string> column is written as a JSON array at every
+    length, a one-element array included."""
+    df = spark.createDataFrame(
+        [(1, ["a"]), (2, ["a", "b"]), (3, []), (4, None)],
+        "doc_id long, tags array<string>",
+    )
+    out = str(tmp_path / "arr")
+    write_jsonl(df, out, n_files=1, compress=False)
+    assert _lines(out) == {
+        1: '{"doc_id":1,"tags":["a"]}',
+        2: '{"doc_id":2,"tags":["a","b"]}',
+        3: '{"doc_id":3,"tags":[]}',
+        4: '{"doc_id":4,"tags":null}',
+    }
+    back = read_jsonl(spark, out, schema="doc_id long, tags array<string>")
+    assert sorted(map(tuple, back.collect())) == sorted(
+        map(tuple, df.collect())
+    )
+
+
+def test_jsonl_struct_int_field_beside_a_null_struct(spark, tmp_path):
+    """A struct's int field stays an int when another row of the same
+    file has a null struct."""
+    df = spark.createDataFrame(
+        [(1, ("p", 2)), (2, None)], "doc_id long, s struct<a:string,b:int>"
+    )
+    out = str(tmp_path / "st")
+    write_jsonl(df, out, n_files=1, compress=False)
+    assert _lines(out) == {
+        1: '{"doc_id":1,"s":{"a":"p","b":2}}',
+        2: '{"doc_id":2,"s":null}',
+    }
+
+
 def test_jsonl_stale_parts_cleared_and_uncompressed(spark, tmp_path):
     out = str(tmp_path / "ds")
     write_jsonl(_docs(spark), out, n_files=6)

@@ -12,6 +12,10 @@ from pyspark.sql import functions as F
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 
 
+# plan nodes of a Python stage; a "no Python stage" plan has none of them
+_PYTHON_NODES = ("MapInPandas", "MapInArrow", "BatchEvalPython")
+
+
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -52,9 +56,9 @@ def test_parse_census_has_no_shuffle_before_python_stage(spark):
     plan = _plan(df)
     assert plan.count("Exchange") == 1
     # physical plans print root-first, so the one Exchange (the census agg)
-    # must appear ABOVE the MapInPandas parse operator — i.e. nothing
+    # must appear ABOVE the MapInArrow parse operator — i.e. nothing
     # shuffles between the scan and the Python stage
-    assert plan.index("Exchange") < plan.index("MapInPandas")
+    assert plan.index("Exchange") < plan.index("MapInArrow")
 
 
 def test_session_windows_single_shuffle(spark):
@@ -165,7 +169,7 @@ def test_incremental_simhash_probe_prunes_index_columns(spark, tmp_path, method)
 
 
 def test_gopher_repetition_single_python_stage_no_shuffle(spark):
-    """gopherrep: all 13 signals in one narrow mapInPandas pass — the plan
+    """gopherrep: all 13 signals in one narrow mapInArrow pass — the plan
     must contain exactly one Python stage and ZERO exchanges (a gram
     explode/shuffle formulation would move O(6x tokens) rows per doc)."""
     from slowspark.gopherrep import gopher_repetition_flags
@@ -173,7 +177,7 @@ def test_gopher_repetition_single_python_stage_no_shuffle(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = _plan(gopher_repetition_flags(docs))
     assert "Exchange" not in plan
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
 
 
 def test_qualityclf_scoring_broadcast_join_single_exchange(spark):
@@ -203,7 +207,7 @@ def test_qualityclf_features_pushdown_and_two_narrow_shuffles(spark):
     plan = _plan(hashed_text_features(docs))
     assert "partial_count" in plan or "partial_sum" in plan
     assert plan.count("Exchange hashpartitioning") <= 2
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not any(n in plan for n in _PYTHON_NODES)
 
 
 def test_bloom_probe_broadcasts_blocks(spark):
@@ -232,7 +236,7 @@ def test_bpe_pair_counts_stay_jvm_side(spark):
         [("\x1fa\x1f\x1fb\x1f", 3)], "s string, count long"
     ).withColumnRenamed("count", "cnt")
     plan = _plan(bpemod._pair_counts(words.withColumnRenamed("cnt", "count")))
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not any(n in plan for n in _PYTHON_NODES)
     assert "partial_sum" in plan
 
 
@@ -246,7 +250,7 @@ def test_substring_dedup_chars_exchange_carries_hashes_not_grams(spark):
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = _plan(exact_substring_dedup_chars(docs, min_len=40))
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not any(n in plan for n in _PYTHON_NODES)
     assert "partial_min" in plan and "partial_count" in plan
     for line in plan.splitlines():
         if "Exchange hashpartitioning" in line:
@@ -265,7 +269,7 @@ def test_sequence_spans_no_shuffle_after_pack(spark):
     )
     plan = _plan(sequence_spans(packed, 16))
     assert "Exchange" not in plan
-    assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
+    assert not any(n in plan for n in _PYTHON_NODES)
 
 
 def test_cms_build_partial_aggregates(spark):
@@ -281,7 +285,7 @@ def test_cms_build_partial_aggregates(spark):
 
 def test_bpe_segment_udf_python_runs_over_distinct_words(spark):
     """The production segmenter's scale contract: the Python stage
-    (mapInPandas) must sit downstream of the DISTINCT-word aggregate —
+    (mapInArrow) must sit downstream of the DISTINCT-word aggregate —
     O(distinct words) Python work — never over the exploded occurrence
     table (O(word occurrences), 4+ orders of magnitude more rows at web
     scale); the occurrence side rejoins the segmented words by key."""
@@ -294,10 +298,10 @@ def test_bpe_segment_udf_python_runs_over_distinct_words(spark):
     merges = bpe_learn(df, n_merges=4)
     plan = _plan(bpe_segment_udf(df, merges))
     # exactly one Python stage
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     # the Python stage's subtree contains the distinct aggregate
     # (HashAggregate on word), i.e. Python consumes the deduped words
-    python_subtree = plan.split("MapInPandas")[1]
+    python_subtree = plan.split("MapInArrow")[1]
     assert "HashAggregate" in python_subtree
     # and the occurrences come back via a key join, not a re-parse
     assert "Join" in plan
@@ -317,13 +321,13 @@ def test_bpe_byte_level_python_stays_distinct_bounded(spark):
         "doc_id long, text string",
     )
     tplan = _plan(pretoken_frequencies(df))
-    assert tplan.count("MapInPandas") == 1
+    assert tplan.count("MapInArrow") == 1
     # byte map AFTER the count aggregate: its subtree holds the groupBy
-    assert "HashAggregate" in tplan.split("MapInPandas")[1]
+    assert "HashAggregate" in tplan.split("MapInArrow")[1]
     merges = bpe_learn(df, n_merges=4, byte_level=True)
     plan = _plan(bpe_segment_udf(df, merges, byte_level=True))
-    assert plan.count("MapInPandas") == 1
-    assert "HashAggregate" in plan.split("MapInPandas")[1]
+    assert plan.count("MapInArrow") == 1
+    assert "HashAggregate" in plan.split("MapInArrow")[1]
     assert "Join" in plan
 
 
@@ -652,6 +656,71 @@ def test_no_direct_create_dataframe():
             ):
                 hits.append(f"{os.path.relpath(path, here)}:{node.lineno}")
     assert not hits, f"createDataFrame outside util.local_frame: {hits}"
+
+
+# The pandas UDF sites that stay, by "module.def", each with its reason.
+# Every other Python stage is mapInArrow/applyInArrow (or arrow_udf) and
+# builds its output with util.arrow_batch.
+_PANDAS_KEEP = {
+    "similarity.with_lsh_bucket":
+        "numpy hyperplane matmul over a stacked vector Series",
+    "similarity._assign_with":
+        "numpy argmax-cosine matmul over a stacked vector Series",
+    "similarity._with_residual":
+        "numpy vector-minus-centroid over stacked vector Series",
+    "similarity._lloyd": "numpy Lloyd partial sums per Arrow batch",
+    "similarity.pq_encode": "numpy nearest-codeword encode per Arrow batch",
+    "similarity.ivfpq_topk_batch":
+        "numpy batch-query gemv and ADC lookup-table stages",
+    "streaming.sessionize_stream":
+        "applyInPandasWithState has no Arrow twin",
+}
+_PANDAS_APIS = {
+    "mapInPandas", "applyInPandas", "applyInPandasWithState", "pandas_udf",
+}
+
+
+def test_no_pandas_udf_outside_the_keep_list():
+    """Every mapInPandas, applyInPandas(WithState) or pandas_udf in the
+    library or the driver contract sits in a def on _PANDAS_KEEP, and
+    every _PANDAS_KEEP entry still has one; a module with no kept site
+    does not import pandas."""
+    import ast
+    import glob
+
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = sorted(glob.glob(os.path.join(here, "slowspark", "*.py")))
+    files.append(os.path.join(here, "__spark_entry__.py"))
+    hits, seen, pandas_imports = [], set(), []
+    for path in files:
+        mod = os.path.basename(path)[: -len(".py")]
+        tree = ast.parse(open(path).read(), path)
+        for top in tree.body:
+            for node in ast.walk(top):
+                name = (
+                    node.attr if isinstance(node, ast.Attribute)
+                    else node.id if isinstance(node, ast.Name) else None
+                )
+                if name in _PANDAS_APIS:
+                    key = f"{mod}.{getattr(top, 'name', '<module>')}"
+                    if key in _PANDAS_KEEP:
+                        seen.add(key)
+                    else:
+                        hits.append(f"{key} ({name}, line {node.lineno})")
+                if (
+                    isinstance(node, ast.Import)
+                    and any(a.name == "pandas" for a in node.names)
+                ) or (
+                    isinstance(node, ast.ImportFrom) and node.module == "pandas"
+                ):
+                    pandas_imports.append(f"{mod}:{node.lineno}")
+    kept_mods = {k.split(".")[0] for k in _PANDAS_KEEP}
+    assert not hits, f"pandas UDFs outside _PANDAS_KEEP: {hits}"
+    assert seen == set(_PANDAS_KEEP), (
+        f"stale _PANDAS_KEEP entries: {sorted(set(_PANDAS_KEEP) - seen)}"
+    )
+    stray = [m for m in pandas_imports if m.split(":")[0] not in kept_mods]
+    assert not stray, f"pandas imported outside the kept modules: {stray}"
 
 
 # Unreached library defs that stay, each with the reason it stays.

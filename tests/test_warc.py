@@ -74,6 +74,31 @@ def test_warc_uncompressed_and_validation(spark, tmp_path):
         write_warc(docs, out, n_files=0)
 
 
+def test_warc_header_ints_and_nulls(spark, tmp_path):
+    """A nullable int header column renders as an int, and a null value
+    (int or string) leaves its header out, the form read_warc reads back
+    as null."""
+    docs = spark.createDataFrame(
+        [("https://example.org/a", b"x", 5, "v"),
+         ("https://example.org/b", b"y", None, None)],
+        "url string, payload binary, n int, s string",
+    )
+    out = str(tmp_path / "hdr")
+    write_warc(docs, out, n_files=1, header_cols=("n", "s"), compress=False)
+    (f,) = glob.glob(out + "/*.warc")
+    blob = open(f, "rb").read().decode()
+    assert blob.count("X-Slowspark-n: ") == 1
+    assert "X-Slowspark-n: 5\r\n" in blob
+    assert blob.count("X-Slowspark-s: ") == 1
+    assert "X-Slowspark-s: v\r\n" in blob
+    assert "nan" not in blob and "None" not in blob and "5.0" not in blob
+    back = {r["url"]: r["headers"] for r in read_warc(spark, f).collect()}
+    assert back["https://example.org/a"]["X-Slowspark-n"] == "5"
+    assert back["https://example.org/a"]["X-Slowspark-s"] == "v"
+    assert back["https://example.org/b"].get("X-Slowspark-n") is None
+    assert back["https://example.org/b"].get("X-Slowspark-s") is None
+
+
 def test_warc_reader_accepts_lowercase_headers(spark, tmp_path):
     """ISO 28500 field names are case-insensitive — a spec-valid
     third-party WARC with 'content-length:' / 'warc-type:' must parse

@@ -5418,19 +5418,17 @@ def _unigram_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     model — the segmenter is inside the value hash; the trainer is
     pinned by the pure-Python mirror differential in
     tests/test_unigramlm.py."""
-    from slowspark.unigramlm import unigram_segment_counts, unigram_train
+    from slowspark.unigramlm import _word_table, unigram_train
+    from slowspark.unigramlm import unigram_segment_counts
 
     d = _read(spark, sf_dir, "documents")
     # vocab smaller than the corpus vocabulary: words MUST fragment, so
     # the multi-piece DP (not the trivial whole-word path) is what the
-    # hash pins
-    from slowspark.bpe import word_frequencies
-    from slowspark.util import materialize, spread
-
+    # hash pins.
     # ONE tokenize + distinct-word pass shared by the trainer's two EM
     # rounds AND the final segmentation (r9: train and segment_counts
     # each built their own)
-    words = spread(materialize(word_frequencies(d)))
+    words = _word_table(d, "text")
     model = unigram_train(
         d, vocab_size=12, n_rounds=2, max_piece_len=4, seed_size=800,
         words=words,

@@ -7,7 +7,7 @@ the DISTINCT-WORD frequency table once (10^7-ish rows at web scale, vs
 round is: adjacent-pair counts from the current symbol strings (explode
 + one map-side-combined weighted count), a 1-row argmax collect
 (count desc, pair asc — deterministic), and applying the merge as ONE
-string replace() over the word table. No UDF anywhere.
+string replace() over the word table. No UDF in the merge loop.
 
 Symbol-state representation: a word's symbols are kept as a single
 string with every symbol wrapped in sentinel \\x1f characters —
@@ -27,6 +27,13 @@ columns would blow plan depth, so rounds localCheckpoint (lineage
 truncation; on a cluster, checkpoint to the reliable store instead —
 the table is tiny relative to the corpus either way).
 
+Segmentation shares its machinery with unigramlm: every segmenter
+explodes the corpus once into the occurrence table (_occurrences), runs
+its Python work in the one distinct-word stage (_segment_words: the
+model broadcast once, one mapInArrow over the DISTINCT words), joins the
+per-word result back and reduces per document (_reassemble, or the
+counts-only _count_tokens).
+
 No reference analog (/root/reference is a slow-log parser, src/*.rs).
 """
 
@@ -34,9 +41,17 @@ from __future__ import annotations
 
 from functools import lru_cache
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 SENT = "\x1f"
+
+# bpe_segment replays a merge table of up to this many merges as one
+# replace() chain (the plan the DuckDB oracle replays); past it the chain
+# degrades Catalyst, and it segments through bpe_segment_udf instead
+_EXPR_MERGES = 256
+
+_SYM = T.StructField("sym", T.ArrayType(T.StringType()))
+_MAPPED = T.StructField("mapped", T.StringType())
 
 # GPT-2's pre-tokenization regex (Radford et al. 2019; the public
 # encoder.py pattern), in Java regex form: contractions, optional-space
@@ -100,35 +115,58 @@ def gpt2_pretoken_array(text_col: str):
     )
 
 
-def _byte_map_words(words: DataFrame, in_col: str, out_col: str,
-                    keep: list | None = None) -> DataFrame:
-    """Map a DISTINCT-word table's strings through bytes_to_unicode
-    (UTF-8 encode, per-byte remap). The one Python stage of the
-    byte-level path — O(distinct pre-tokens), never O(corpus); the
-    mapping is injective (UTF-8 is, and the byte map is a bijection),
-    so counts need no re-aggregation."""
-    from pyspark.sql.types import StructType
+def _byte_map(word: str) -> str:
+    """`word`'s UTF-8 bytes through bytes_to_unicode: the string the
+    byte-level trainer learns on and both byte-level segmenters merge.
+    Injective (UTF-8 is, and the byte map is a bijection), so counts
+    keyed by the raw word need no re-aggregation."""
+    b2u = bytes_to_unicode()
+    return "".join(b2u[b] for b in word.encode("utf-8"))
 
+
+def _segment_words(
+    words: DataFrame, model, segment, out: T.StructField = _SYM
+) -> DataFrame:
+    """`words` plus the column `out` = segment(word, model) per row, the
+    word being the first column: the one Python stage of the tokenizer
+    family (the byte map, the BPE merge-rank loop, the unigram Viterbi).
+    Callers pass a DISTINCT-word table, so the Python work is
+    O(distinct words) — 10^7-ish at web scale — never O(word
+    occurrences); `model` travels once per executor as a Spark
+    broadcast. Every output field is nullable."""
     from slowspark.util import arrow_batch
 
-    keep = keep or []
-    schema = StructType.fromDDL(", ".join(
-        [f"{out_col} string"]
-        + [f"{c} {t}" for c, t in keep]
-    ))
+    bc = words.sparkSession.sparkContext.broadcast(model)
+    schema = T.StructType(
+        [T.StructField(f.name, f.dataType) for f in words.schema] + [out]
+    )
 
-    def mapper(batches):
-        b2u = bytes_to_unicode()
+    def seg_fn(batches):
+        m = bc.value
         for batch in batches:
-            mapped = [
-                "".join(b2u[b] for b in w.encode("utf-8"))
-                for w in batch.column(in_col).to_pylist()
-            ]
-            yield arrow_batch(
-                schema, [mapped] + [batch.column(c) for c, _ in keep]
-            )
+            col = [segment(w, m) for w in batch.column(0).to_pylist()]
+            yield arrow_batch(schema, batch.columns + [col])
 
-    return words.mapInArrow(mapper, schema=schema)
+    return words.mapInArrow(seg_fn, schema)
+
+
+def _occurrences(
+    df: DataFrame, text_col: str, id_col: str, byte_level: bool
+) -> DataFrame:
+    """(id, pos, word), one row per word occurrence: GPT-2 pre-tokens
+    when byte_level, else lowered whitespace tokens. No sentinel filter:
+    words containing \\x1f (absent from real text; word_frequencies
+    never learns from them) have undefined segmentation on every
+    path."""
+    from slowspark.textops import ws_token_array
+
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.posexplode(
+            gpt2_pretoken_array(text_col) if byte_level
+            else ws_token_array(text_col)
+        ).alias("pos", "word"),
+    )
 
 
 def pretoken_frequencies(
@@ -145,7 +183,9 @@ def pretoken_frequencies(
         .groupBy("pt")
         .agg(F.count("*").alias("count"))
     )
-    return _byte_map_words(counts, "pt", "word", keep=[("count", "long")])
+    return _segment_words(
+        counts, None, lambda w, _: _byte_map(w), _MAPPED
+    ).select(F.col("mapped").alias("word"), "count")
 
 
 def word_frequencies(
@@ -174,20 +214,32 @@ def _encode(col):
     )
 
 
-def _symbols(col):
-    """sentinel state string -> array of symbols."""
-    return F.split(F.expr(f"trim(BOTH '{SENT}' FROM {col})"), SENT + SENT)
+def _merge_chain(state, merges: list[dict]):
+    """Apply `merges` in order to a sentinel state column: one replace()
+    per merge, the trainer's round update and bpe_segment's inference
+    rule."""
+    for m in merges:
+        state = F.replace(
+            state,
+            F.lit(f"{SENT}{m['left']}{SENT}{SENT}{m['right']}{SENT}"),
+            F.lit(f"{SENT}{m['merged']}{SENT}"),
+        )
+    return state
+
+
+def _symbols(state):
+    """sentinel state column -> array of symbols."""
+    return F.split(F.btrim(state, F.lit(SENT)), SENT + SENT)
 
 
 def _pair_counts(words: DataFrame) -> DataFrame:
     """(a, b, c): adjacent-symbol pair counts weighted by word count."""
-    syms = _symbols("s")
     pairs = F.expr(
         "transform(slice(sym, 1, greatest(size(sym) - 1, 0)),"
         " (t, i) -> struct(t as a, sym[i + 1] as b))"
     )
     return (
-        words.select("count", syms.alias("sym"))
+        words.select("count", _symbols(F.col("s")).alias("sym"))
         .select("count", F.explode(pairs).alias("p"))
         .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .agg(F.sum("count").alias("c"))
@@ -270,33 +322,27 @@ def bpe_learn(
         # greedy symbol-disjoint selection: candidate rejected if either
         # symbol already participates in an accepted pair this pass
         used: set[str] = set()
-        accepted: list = []
+        accepted: list[dict] = []
         for row in top:
             if len(accepted) == k:
                 break
             if row["a"] in used or row["b"] in used:
                 continue
             used.update((row["a"], row["b"]))
-            accepted.append(row)
-        state = F.col("s")
-        for row in accepted:
-            a, b = row["a"], row["b"]
-            merges.append(
+            accepted.append(
                 {
-                    "merge_ix": len(merges),
-                    "left": a,
-                    "right": b,
-                    "merged": a + b,
+                    "merge_ix": len(merges) + len(accepted),
+                    "left": row["a"],
+                    "right": row["b"],
+                    "merged": row["a"] + row["b"],
                     "pair_count": int(row["c"]),
                 }
             )
-            state = F.replace(
-                state,
-                F.lit(f"{SENT}{a}{SENT}{SENT}{b}{SENT}"),
-                F.lit(f"{SENT}{a}{b}{SENT}"),
-            )
+        merges.extend(accepted)
         prev = words
-        words = words.withColumn("s", state).localCheckpoint()
+        words = words.withColumn(
+            "s", _merge_chain(F.col("s"), accepted)
+        ).localCheckpoint()
         prev.unpersist()
         # the first candidate is always accepted, so every pass makes
         # progress and the loop terminates
@@ -342,71 +388,47 @@ def bpe_segment(
     merges: list[dict],
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_expr_merges: int = 256,
     byte_level: bool = False,
     counts_only: bool = False,
 ) -> DataFrame:
     """Apply a learned merge table: (id, tokens array<string>, n_tokens)
     where each word is segmented by replaying the merges IN ORDER — the
-    exact BPE inference rule. Pure string ops: the per-word symbol state
-    goes through the same sentinel replace() chain the trainer used, so
-    segment(learn(corpus)) is internally consistent by construction.
-    With counts_only=True, returns just (id, n_tokens) via a map-side-
-    combined sum — identical counts, no token-array assembly shuffle
-    (use for packing/fertility callers that never read the tokens).
+    exact BPE inference rule. With counts_only=True, returns just
+    (id, n_tokens) via a map-side-combined sum — identical counts, no
+    token-array assembly shuffle (use for packing/fertility callers
+    that never read the tokens).
 
-    Scale: one explode to words, |merges| chained replace() expressions
-    (a single codegen'd projection — no per-merge pass), one groupBy(id)
-    reassembly. The chain is the right plan up to a few hundred merges;
-    beyond that expression-tree size degrades Catalyst (a 32k-deep
+    The path follows the size of the merge table. Up to 256 merges the
+    per-word symbol state goes through the same sentinel replace() chain
+    the trainer used — one explode to words, one codegen'd projection,
+    one groupBy(id) reassembly — so segment(learn(corpus)) is internally
+    consistent by construction, and it is the plan the DuckDB oracle
+    replays. Past 256 the expression tree degrades Catalyst (a 32k-deep
     replace chain is a 32k-node projection to analyze, codegen falls
-    back to interpreted, and every WORD OCCURRENCE pays all 32k scans).
-    `max_expr_merges` (default 256) rejects larger tables and points to
-    bpe_segment_udf — the broadcast merge-rank production path, pinned
-    token-identical by tests/test_bpe.py differentials."""
-    if len(merges) > max_expr_merges:
-        raise ValueError(
-            f"bpe_segment: {len(merges)} merges exceeds max_expr_merges="
-            f"{max_expr_merges} for the replace-chain expression path — "
-            "use bpe_segment_udf (broadcast merge-rank Arrow UDF; "
-            "token-identical, built for production vocabularies)"
+    back to interpreted, and every WORD OCCURRENCE pays all 32k scans),
+    so the table goes to bpe_segment_udf — the broadcast merge-rank
+    path, token-identical (tests/test_bpe.py differentials)."""
+    if len(merges) > _EXPR_MERGES:
+        return bpe_segment_udf(
+            df, merges, text_col, id_col, byte_level, counts_only
         )
-    from slowspark.textops import ws_token_array
-
-    state = _encode(F.col("word"))
-    for m in merges:
-        state = F.replace(
-            state,
-            F.lit(f"{SENT}{m['left']}{SENT}{SENT}{m['right']}{SENT}"),
-            F.lit(f"{SENT}{m['merged']}{SENT}"),
-        )
+    occurrences = _occurrences(df, text_col, id_col, byte_level)
     if byte_level:
-        # occurrences stay raw pre-tokens; the byte map runs over the
-        # DISTINCT pre-token table only, then the same replace chain
-        # applies to the mapped form and joins back on the raw token
-        occurrences = df.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(gpt2_pretoken_array(text_col)).alias("pos", "pt"),
+        # the byte map runs over the DISTINCT pre-token table only; the
+        # chain applies to the mapped form, which joins back on the raw
+        # pre-token
+        mapped = _segment_words(
+            occurrences.select("word").distinct(), None,
+            lambda w, _: _byte_map(w), _MAPPED,
         )
-        mapped = _byte_map_words(
-            occurrences.select(F.col("pt").alias("rawpt")).distinct(),
-            "rawpt", "word", keep=[("rawpt", "string")],
-        )
-        segmented = mapped.select("rawpt", state.alias("s")).select(
-            "rawpt", _symbols("s").alias("sym")
-        )
-        toks = occurrences.join(
-            segmented, occurrences["pt"] == segmented["rawpt"]
-        ).select("id", "pos", "sym")
-        return (_count_tokens if counts_only else _reassemble)(toks, id_col)
-    toks = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(ws_token_array(text_col)).alias("pos", "word"),
-        )
-        .select("id", "pos", state.alias("s"))
-        .select("id", "pos", _symbols("s").alias("sym"))
-    )
+        segmented = mapped.select("word", _symbols(
+            _merge_chain(_encode(F.col("mapped")), merges)
+        ).alias("sym"))
+        toks = occurrences.join(segmented, "word")
+    else:
+        toks = occurrences.withColumn("sym", _symbols(
+            _merge_chain(_encode(F.col("word")), merges)
+        ))
     return (_count_tokens if counts_only else _reassemble)(toks, id_col)
 
 
@@ -474,67 +496,30 @@ def bpe_segment_udf(
     counts_only: bool = False,
 ) -> DataFrame:
     """Production-vocabulary segmentation: same contract and output as
-    bpe_segment, any number of merges (counts_only likewise). The merge table travels ONCE per
-    executor as a Spark broadcast of the {(left, right): rank} dict; an
-    Arrow-batched UDF (mapInArrow) segments each DISTINCT word once with the
+    bpe_segment, any number of merges (counts_only likewise). The
+    {(left, right): rank} dict (rank = position in `merges`, the order
+    the chain replays) is the broadcast model of the distinct-word stage
+    (_segment_words), which segments each DISTINCT word once with the
     greedy lowest-rank loop (see _merge_word for the equivalence
-    argument vs the in-order replace chain), and the per-word result
-    joins back to the exploded occurrences.
+    argument vs the in-order replace chain); the per-word result joins
+    back to the exploded occurrences. byte_level: the occurrences are
+    GPT-2 pre-tokens and the byte map runs inside the same stage.
 
     Scale shape: the Python work is O(distinct words) — 10^7-ish at web
     scale — NOT O(word occurrences) (10^11+); the occurrence-side cost
     is one shuffle join of (id, pos, word) against the segmented
     distinct-word table plus the same groupBy reassembly as the
-    expression path. Per word the loop is O(len^2 * log-ish) on ~10-char
-    strings regardless of vocabulary size, vs the replace chain's
-    O(len * n_merges) — at 32k merges the UDF path is ~3 orders of
-    magnitude less string scanning."""
-    from pyspark.sql import types as T
-
-    from slowspark.textops import ws_token_array
-    from slowspark.util import arrow_batch
-
-    ranks = {(m["left"], m["right"]): m["merge_ix"] for m in merges}
-    sc = df.sparkSession.sparkContext
-    bc_ranks = sc.broadcast(ranks)
-
-    def seg_fn(batches):
-        r = bc_ranks.value
-        b2u = bytes_to_unicode() if byte_level else None
-        for batch in batches:
-            words = batch.column(0).to_pylist()
-            ws = (
-                ["".join(b2u[b] for b in w.encode("utf-8")) for w in words]
-                if byte_level else words
-            )
-            yield arrow_batch(
-                seg_schema, [batch.column(0), [_merge_word(w, r) for w in ws]]
-            )
-
-    # no sentinel filter: bpe_segment doesn't filter either, and the two
-    # paths must stay token-identical. Words containing \x1f (absent
-    # from real text; word_frequencies never learns from them) have
-    # undefined segmentation on BOTH paths. byte_level: occurrences are
-    # GPT-2 pre-tokens and the byte map runs INSIDE the distinct-word
-    # Python stage — same O(distinct) bound, same plan shape (pinned,
-    # tests/test_plans.py).
-    occurrences = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(
-            gpt2_pretoken_array(text_col) if byte_level
-            else ws_token_array(text_col)
-        ).alias("pos", "word"),
+    expression path (plan shape pinned, tests/test_plans.py). Per word
+    the loop is O(len^2 * log-ish) on ~10-char strings regardless of
+    vocabulary size, vs the replace chain's O(len * n_merges) — at 32k
+    merges the UDF path is ~3 orders of magnitude less string
+    scanning."""
+    ranks = {(m["left"], m["right"]): i for i, m in enumerate(merges)}
+    occurrences = _occurrences(df, text_col, id_col, byte_level)
+    segmented = _segment_words(
+        occurrences.select("word").distinct(), ranks,
+        (lambda w, r: _merge_word(_byte_map(w), r)) if byte_level
+        else _merge_word,
     )
-    seg_schema = T.StructType(
-        [
-            T.StructField("word", T.StringType()),
-            T.StructField("sym", T.ArrayType(T.StringType())),
-        ]
-    )
-    segmented = (
-        occurrences.select("word")
-        .distinct()
-        .mapInArrow(seg_fn, schema=seg_schema)
-    )
-    toks = occurrences.join(segmented, "word").select("id", "pos", "sym")
+    toks = occurrences.join(segmented, "word")
     return (_count_tokens if counts_only else _reassemble)(toks, id_col)

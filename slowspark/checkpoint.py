@@ -7,9 +7,10 @@ current input signature. A fresh stage runs one job, the write: the row
 count and content hash are observed on the rows as they are written, and
 the stored schema lets every read of the table skip Parquet schema
 inference, so a resumed stage runs no job at all.
-Content hashes are order-insensitive (sum of per-row xxhash64) and every
-upstream value is deterministic (hash-derived ids, no rand()), so a resumed
-run is bit-identical to a fresh one — the Spark analog of the reference's
+Content hashes are order-insensitive (sum of per-row xxhash64 over the
+stored values) and every upstream value is deterministic (hash-derived
+ids, no rand()), so a resumed run is bit-identical to a fresh one — the
+Spark analog of the reference's
 restartability guarantee (same 310 entries at any read-buffer size,
 /root/reference/src/codec.rs:586-599).
 """
@@ -32,11 +33,11 @@ from slowspark.catalog import Catalog
 
 
 def _hash_sum(cols: list[Column]) -> Column:
-    """SUM of per-row xxhash64 over `cols` (stage hashes pass them cast to
-    string). Sum — not xor — because xor cancels duplicate rows pairwise
-    (two identical rows hash like zero rows), which would silently pass a
-    corrupted aggregate output that happened to duplicate a row; sum
-    counts multiplicity. The sum runs in decimal(38,0) so ANSI mode can't
+    """SUM of per-row xxhash64 over `cols` (stage hashes pass them as
+    stored, through `_hash_col`). Sum — not xor — because xor cancels
+    duplicate rows pairwise (two identical rows hash like zero rows),
+    which would silently pass a corrupted aggregate output that happened
+    to duplicate a row; sum counts multiplicity. The sum runs in decimal(38,0) so ANSI mode can't
     overflow; `_mod64` reduces it."""
     return F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))
 
@@ -45,13 +46,28 @@ def _mod64(s) -> int:
     return int(s or 0) % (1 << 64)
 
 
+def _hash_col(
+    schema: T.StructType, c: str, partition_by: list[str] = ()
+) -> Column:
+    """Column `c` of `schema` as the hash reads it: the stored value, not
+    a string rendering of it (a rendering hashes `["a, b"]` and
+    `["a", "b"]` alike). A map goes in as its entries, because xxhash64
+    rejects maps; a string partition column's "" as null, because a Hive
+    partition directory stores it as null."""
+    t = schema[c].dataType
+    col = F.col(c)
+    if c in partition_by and isinstance(t, T.StringType):
+        col = F.nullif(col, F.lit(""))
+    return F.map_entries(col) if isinstance(t, T.MapType) else col
+
+
 def content_hash(df: DataFrame, cols: list[str] | None = None) -> int:
     """Order-insensitive content hash (`_hash_sum` mod 2^64) over selected
     columns, all of them by default. Runs one aggregate job; run_stage
     gets the same value from its write instead."""
     cols = cols or df.columns
     s = df.agg(
-        _hash_sum([F.col(c).cast("string") for c in cols]).alias("s")
+        _hash_sum([_hash_col(df.schema, c) for c in cols]).alias("s")
     ).first()["s"]
     return _mod64(s)
 
@@ -112,15 +128,9 @@ def run_stage(
         [f for f in df.schema.fields if f.name not in partition_by]
         + [df.schema[c] for c in partition_by]
     )
-    # hash the values a read of the table returns: a Hive partition
-    # directory stores "" as null
+    # hash the values a read of the table returns
     read_back = [
-        (
-            F.nullif(F.col(c), F.lit(""))
-            if c in partition_by and isinstance(schema[c].dataType, T.StringType)
-            else F.col(c)
-        ).cast("string")
-        for c in hash_cols or schema.names
+        _hash_col(schema, c, partition_by) for c in hash_cols or schema.names
     ]
     stats = Observation()
     cat.write(

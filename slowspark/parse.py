@@ -99,7 +99,8 @@ def parse_pages(
     """
     if masking not in ("none", "placeholder"):
         raise ValueError(f"masking must be 'none' or 'placeholder', got {masking!r}")
-    in_cols = [c for c in ("url", "text", "lang", "warc_ts") if c in pages.columns]
+    # url is required: it is non-null in ENTRY_SCHEMA and keys entry_id
+    in_cols = ["url", "text"] + [c for c in ("lang", "warc_ts") if c in pages.columns]
     mapper = context_mapper
     forced_cols: set[str] = set()
     if columns is None:
@@ -120,10 +121,9 @@ def parse_pages(
     # full column set this is a no-op (fields=None = compute everything)
     prune = None if columns is None else frozenset(out_cols)
 
-    by_name = {f.name: f for f in ENTRY_SCHEMA.fields}
-    schema_no_id = StructType.fromDDL(",".join(
-        f"`{c}` {by_name[c].dataType.simpleString()}" for c in out_cols
-    ))
+    schema_no_id = StructType(
+        [f for f in ENTRY_SCHEMA.fields if f.name in out_cols]
+    )
 
     def fn(batches):
         for batch in batches:

@@ -232,9 +232,11 @@ def write_warc(
         for row in rows:
             payload = row[payload_col]
             url = str(row[url_col])
+            # no ts_col, or a null capture date: the epoch
+            t = row[ts_col] if ts_col else None
             ts = (
-                row[ts_col].strftime("%Y-%m-%dT%H:%M:%SZ")
-                if ts_col else "1970-01-01T00:00:00Z"
+                t.strftime("%Y-%m-%dT%H:%M:%SZ") if t is not None
+                else "1970-01-01T00:00:00Z"
             )
             rid = hashlib.md5(url.encode()).hexdigest()
             hdrs = [
@@ -442,7 +444,6 @@ def write_jsonl(
     import json
     import os
     import glob as _glob
-    from datetime import datetime
 
     if n_files < 1:
         raise ValueError(f"write_jsonl: n_files must be >= 1, got {n_files}")
@@ -468,7 +469,7 @@ def write_jsonl(
         lines = []
         for row in rows:
             # JSON has no NaN: a NaN double is written as null (and a
-            # timestamp as its naive ISO text, by `default`)
+            # timestamp or a date as its naive ISO text, by `default`)
             obj = {
                 c: None if isinstance(row[c], float) and row[c] != row[c]
                 else row[c]
@@ -476,7 +477,8 @@ def write_jsonl(
             }
             lines.append(
                 json.dumps(obj, sort_keys=True, ensure_ascii=False,
-                           separators=(",", ":"), default=datetime.isoformat)
+                           separators=(",", ":"),
+                           default=lambda v: v.isoformat())
             )
         blob = ("\n".join(lines) + "\n").encode("utf-8")
         if compress:

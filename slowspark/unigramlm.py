@@ -14,8 +14,10 @@ segmentation run over that table (10^7-ish rows at web scale, vs 10^12
 tokens). The piece table is bounded by seed_size and collected to the
 driver once per round (a few MB at production vocab sizes — the
 documented bounded-collect idiom; the E-step itself is distributed).
-Python appears only in the Arrow-batched Viterbi UDF over DISTINCT
-words, exactly like bpe_segment_udf.
+Python appears only in the Viterbi pass over DISTINCT words, which is
+bpe's one distinct-word segmentation stage (bpe._segment_words, the
+model broadcast once) with viterbi_pieces as its per-word function —
+the stage bpe_segment_udf runs its merge-rank loop in.
 
 Determinism contract (what lets DuckDB replay the segmenter): Viterbi
 scans candidate starts in ASCENDING order with strictly-greater
@@ -33,7 +35,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 UNK_LOGP = -100.0
 
@@ -116,40 +118,47 @@ def viterbi_pieces(word: str, logp: dict, max_piece_len: int) -> list:
     return out
 
 
+def _viterbi(word: str, model: tuple) -> list:
+    """viterbi_pieces under the broadcast (logp, max_piece_len) model."""
+    return viterbi_pieces(word, *model)
+
+
 def _viterbi_counts(
     words: DataFrame, logp: dict, max_piece_len: int
 ) -> DataFrame:
     """E-step / corpus-count pass: per-piece usage counts over the
-    distinct-word table, Viterbi per word in an Arrow-batched UDF with
-    the model dict broadcast once per executor, weighted by word
-    frequency. Python work is O(distinct words x len x max_piece_len)."""
-    from slowspark.util import arrow_batch
+    distinct-word table, Viterbi per word in the distinct-word stage,
+    weighted by word frequency. Python work is O(distinct words x len x
+    max_piece_len)."""
+    from slowspark.bpe import _segment_words
 
-    sc = words.sparkSession.sparkContext
-    bc = sc.broadcast((logp, max_piece_len))
-
-    def seg_fn(batches):
-        lp, mpl = bc.value
-        for batch in batches:
-            pieces = [viterbi_pieces(w, lp, mpl)
-                      for w in batch.column(0).to_pylist()]
-            yield arrow_batch(
-                schema, [batch.column(0), batch.column(1), pieces]
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("word", T.StringType()),
-            T.StructField("count", T.LongType()),
-            T.StructField("pieces", T.ArrayType(T.StringType())),
-        ]
+    seg = _segment_words(
+        words.select("word", "count"), (logp, max_piece_len), _viterbi
     )
-    seg = words.select("word", "count").mapInArrow(seg_fn, schema)
     return (
-        seg.select("count", F.explode("pieces").alias("piece"))
+        seg.select("count", F.explode("sym").alias("piece"))
         .groupBy("piece")
         .agg(F.sum("count").alias("count"))
     )
+
+
+def _word_table(df: DataFrame, text_col: str) -> DataFrame:
+    """bpe.word_frequencies, materialized and spread: the distinct-word
+    table the trainer's EM rounds and the segment counts each read. It
+    comes out of an AQE-coalesced groupBy (~1 partition at test scale),
+    so it is materialized before spread reads its partition count."""
+    from slowspark.bpe import word_frequencies
+    from slowspark.util import materialize, spread
+
+    return spread(materialize(word_frequencies(df, text_col)))
+
+
+def _piece_logp(model: DataFrame) -> dict[str, float]:
+    """A trained model's {piece: logp} on the driver (bounded collect:
+    one row per vocabulary piece)."""
+    return {
+        r["piece"]: r["logp"] for r in model.select("piece", "logp").collect()
+    }
 
 
 def unigram_train(
@@ -174,15 +183,10 @@ def unigram_train(
     if vocab_size < 1 or n_rounds < 1:
         raise ValueError("unigram_train: vocab_size and n_rounds must "
                          f"be >= 1, got {vocab_size}, {n_rounds}")
-    from slowspark.bpe import word_frequencies
-    from slowspark.util import local_frame, materialize, spread
+    from slowspark.util import local_frame
 
     if words is None:
-        # the word table comes out of an AQE-coalesced groupBy (~1
-        # partition at test scale) and feeds three Viterbi passes; an
-        # already-materialized `words` (the shared-pass path) is used
-        # as-is
-        words = spread(materialize(word_frequencies(df, text_col)))
+        words = _word_table(df, text_col)
     pieces = seed_pieces(words, max_piece_len, seed_size)
     # bounded collect: <= seed_size + |alphabet| rows per round
     pairs = [(r["piece"], r["count"]) for r in pieces.collect()]
@@ -229,15 +233,9 @@ def unigram_segment_counts(
     Same distinct-word bound as training's E-step. Pass the trainer's
     `words` table to share ONE tokenize + distinct pass between
     training and segmentation (r9: each built its own)."""
-    from slowspark.bpe import word_frequencies
-    from slowspark.util import materialize, spread
-
-    logp = {
-        r["piece"]: r["logp"] for r in model.select("piece", "logp").collect()
-    }
     if words is None:
-        words = spread(materialize(word_frequencies(df, text_col)))
-    return _viterbi_counts(words, logp, max_piece_len).select(
+        words = _word_table(df, text_col)
+    return _viterbi_counts(words, _piece_logp(model), max_piece_len).select(
         "piece", F.col("count").alias("n")
     )
 
@@ -249,44 +247,17 @@ def unigram_segment(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Per-document token counts under a trained model: (id, n_tokens)
-    — the packing input (pack_sequences n_tokens_col contract, same
-    shape as bpe_segment's). The Viterbi UDF runs over DISTINCT words
-    only; occurrences join back by word — O(distinct) Python, one
-    occurrence-side shuffle."""
-    from slowspark.textops import ws_token_array
-    from slowspark.util import arrow_batch
+    """Per-document token counts under a trained model: (id, n_tokens
+    int) — the packing input (pack_sequences n_tokens_col contract, same
+    shape as bpe_segment's counts_only output, through the same
+    occurrence table, distinct-word stage and per-doc count). The
+    Viterbi runs over DISTINCT words only; occurrences join back by
+    word — O(distinct) Python, one occurrence-side shuffle."""
+    from slowspark.bpe import _count_tokens, _occurrences, _segment_words
 
-    logp = {
-        r["piece"]: r["logp"] for r in model.select("piece", "logp").collect()
-    }
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast((logp, max_piece_len))
-
-    schema = T.StructType(
-        [
-            T.StructField("word", T.StringType()),
-            T.StructField("n_pieces", T.LongType()),
-        ]
+    occurrences = _occurrences(df, text_col, id_col, byte_level=False)
+    segmented = _segment_words(
+        occurrences.select("word").distinct(),
+        (_piece_logp(model), max_piece_len), _viterbi,
     )
-
-    def seg_fn(batches):
-        lp, mpl = bc.value
-        for batch in batches:
-            n_pieces = [len(viterbi_pieces(w, lp, mpl))
-                        for w in batch.column(0).to_pylist()]
-            yield arrow_batch(schema, [batch.column(0), n_pieces])
-
-    occurrences = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(ws_token_array(text_col)).alias("word"),
-    )
-    per_word = occurrences.select("word").distinct().mapInArrow(
-        seg_fn, schema
-    )
-    return (
-        occurrences.join(per_word, "word")
-        .groupBy("id")
-        .agg(F.sum("n_pieces").alias("n_tokens"))
-        .select(F.col("id").alias(id_col), "n_tokens")
-    )
+    return _count_tokens(occurrences.join(segmented, "word"), id_col)

@@ -145,15 +145,12 @@ def test_bpe_segment_udf_matches_expression_path_small(spark):
         assert udf[d]["n_tokens"] == expr[d]["n_tokens"]
 
 
-def test_bpe_segment_udf_matches_expression_path_200_merges(spark):
-    """Token-identity differential at ~200 merges (the production-side
-    regime the expression path tops out at). The sf testdata's synthetic
-    vocabulary exhausts its count>=2 pairs at 89 merges, so this builds
-    a deterministic richer corpus (md5-hex words, Zipf-ish counts) that
-    supports a full 200-merge table."""
+def _rich_corpus(spark):
+    """A deterministic corpus richer than the sf testdata (whose
+    synthetic vocabulary exhausts its count>=2 pairs at 89 merges):
+    1,500 md5-hex words with Zipf-ish counts, enough pairs for 300+
+    merges at word and at byte level."""
     import hashlib
-
-    from slowspark.bpe import bpe_segment_udf
 
     words = [
         hashlib.md5(f"w{i}".encode()).hexdigest()[: 5 + i % 8]
@@ -164,12 +161,20 @@ def test_bpe_segment_udf_matches_expression_path_200_merges(spark):
         (d, " ".join(toks[d * 60 : (d + 1) * 60]))
         for d in range(len(toks) // 60)
     ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
+    return docs, spark.createDataFrame(docs, "doc_id long, text string")
+
+
+def test_bpe_segment_udf_matches_expression_path_200_merges(spark):
+    """Token-identity differential at ~200 merges (the production-side
+    regime the expression path tops out at)."""
+    from slowspark.bpe import bpe_segment_udf
+
+    _, df = _rich_corpus(spark)
     merges = bpe_learn(df, n_merges=200, rounds_per_pass=32)
     assert len(merges) == 200, len(merges)
     expr = {
         r["doc_id"]: r["tokens"]
-        for r in bpe_segment(df, merges, max_expr_merges=300).collect()
+        for r in bpe_segment(df, merges).collect()
     }
     udf = {
         r["doc_id"]: r["tokens"]
@@ -223,18 +228,34 @@ def test_bpe_learn_batched_skips_conflicting_pairs(spark):
         assert bc_ix > ab_ix
 
 
-def test_bpe_segment_guard_rejects_large_merge_tables(spark):
-    df = spark.createDataFrame(CORPUS, "doc_id long, text string")
-    fake = [
-        {"merge_ix": i, "left": f"l{i}", "right": f"r{i}", "merged": f"l{i}r{i}",
-         "pair_count": 2}
-        for i in range(257)
-    ]
-    with pytest.raises(ValueError, match="bpe_segment_udf"):
-        bpe_segment(df, fake)
-    # raising the knob admits the same table
-    out = bpe_segment(df, fake, max_expr_merges=300)
-    assert out.count() == len(CORPUS)
+@pytest.mark.parametrize("byte_level", [False, True])
+def test_bpe_segment_above_256_merges_takes_the_udf_path(spark, byte_level):
+    """Past 256 merges bpe_segment segments through bpe_segment_udf
+    instead of refusing the table: tokens and counts_only counts equal
+    the UDF path's and the in-order merge replay of the reference, at
+    word level and at byte level."""
+    from slowspark.bpe import _byte_map, bpe_segment_udf
+
+    docs, df = _rich_corpus(spark)
+    merges = bpe_learn(df, n_merges=300, rounds_per_pass=64,
+                       byte_level=byte_level)
+    assert len(merges) == 300, len(merges)
+    got = {r["doc_id"]: r["tokens"] for r in
+           bpe_segment(df, merges, byte_level=byte_level).collect()}
+    udf = {r["doc_id"]: r["tokens"] for r in
+           bpe_segment_udf(df, merges, byte_level=byte_level).collect()}
+    assert got == udf
+    for doc_id, text in docs[::25]:
+        words = (
+            [_byte_map(pt) for pt in _py_pretokenize(text)] if byte_level
+            else text.split()
+        )
+        assert got[doc_id] == [
+            t for w in words for t in _ref_segment(w, merges)
+        ], doc_id
+    counts = {r["doc_id"]: r["n_tokens"] for r in bpe_segment(
+        df, merges, byte_level=byte_level, counts_only=True).collect()}
+    assert counts == {d: len(t) for d, t in got.items()}
 
 
 # ---------------------------------------------------------------------------

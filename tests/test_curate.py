@@ -983,6 +983,35 @@ def test_curation_bpe_packing_stage(spark, tmp_path):
         run += packed[i]["n_tokens"]
 
 
+def test_curation_bpe_vocab_above_256_merges(spark, tmp_path):
+    """A vocab of more than 256 merges (3,200 distinct words learn 300)
+    segments through the merge-rank path instead of failing the run
+    after bpe_vocab is written: packed n_tokens equal bpe_segment_udf's
+    counts."""
+    from slowspark.bpe import bpe_segment_udf
+
+    rows = [(i, _salad_doc(f"d{i}", 80), "en") for i in range(40)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    tables = run_curation(
+        spark, docs, str(tmp_path / "wh"), "test:v1", min_words=10,
+        seq_len=64, bpe_merges_n=300,
+    )
+    vocab = tables["bpe_vocab"].orderBy("merge_ix").collect()
+    assert len(vocab) == 300
+    merges = [
+        {"left": r["lhs"], "right": r["rhs"], "merged": r["merged"]}
+        for r in vocab
+    ]
+    seg = {
+        r["doc_id"]: r["n_tokens"]
+        for r in bpe_segment_udf(
+            tables["sampled"], merges, counts_only=True
+        ).collect()
+    }
+    packed = {r["doc_id"]: r["n_tokens"] for r in tables["packed"].collect()}
+    assert len(packed) == len(rows) and packed == seg
+
+
 def test_curation_bpe_byte_level_stage(spark, tmp_path):
     """--bpe-byte-level: the vocab/counts stages run in GPT-2 byte mode —
     packed n_tokens equal the byte-level segmentation (leading-space

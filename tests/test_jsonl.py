@@ -132,6 +132,24 @@ def test_jsonl_struct_int_field_beside_a_null_struct(spark, tmp_path):
     }
 
 
+def test_jsonl_date_column_is_iso_text(spark, tmp_path):
+    """A date, at the top level or inside a struct, is written as its
+    YYYY-MM-DD text; a timestamp keeps its naive ISO text."""
+    import datetime
+
+    df = spark.createDataFrame(
+        [(1, datetime.date(2024, 1, 2), (datetime.date(1999, 12, 31),),
+          datetime.datetime(2024, 1, 2, 3, 4, 5, 123456))],
+        "doc_id long, d date, s struct<e:date>, t timestamp",
+    )
+    out = str(tmp_path / "date")
+    write_jsonl(df, out, n_files=1, compress=False)
+    assert _lines(out) == {
+        1: '{"d":"2024-01-02","doc_id":1,"s":{"e":"1999-12-31"},'
+           '"t":"2024-01-02T03:04:05.123456"}',
+    }
+
+
 def test_jsonl_stale_parts_cleared_and_uncompressed(spark, tmp_path):
     out = str(tmp_path / "ds")
     write_jsonl(_docs(spark), out, n_files=6)

@@ -459,6 +459,26 @@ def test_parse_scan_prunes_html_column(spark, pages, tmp_path):
     assert "text:string" in m.group(1)
 
 
+def test_parse_pages_keeps_entry_schema_nullability(spark, pages):
+    """The parse output declares ENTRY_SCHEMA's own fields, nullability
+    included (url, entry_index, entry_kind and objects[].object_name are
+    non-null), for the full column set and for a pruned one."""
+    from pyspark.sql.types import StructType
+
+    from perfbench.workloads import CENSUS_COLS
+    from slowspark.schema import ENTRY_SCHEMA
+
+    for columns in (None, CENSUS_COLS):
+        keep = set(columns or ENTRY_SCHEMA.names) | {"url", "entry_index"}
+        want = StructType([f for f in ENTRY_SCHEMA.fields if f.name in keep])
+        out = parse_pages(pages, columns=columns).drop("entry_id")
+        assert out.schema == want, columns
+        assert out.count() > 0
+    # url keys entry_id: pages without it fail at analysis, naming it
+    with pytest.raises(Exception, match="url"):
+        parse_pages(pages.drop("url"))
+
+
 def test_parse_pages_column_pruning_matches_full(spark, pages):
     """Narrow (columns=...) parse output equals the full parse projected to
     the same columns — manual pushdown through the Python boundary must not
@@ -539,6 +559,20 @@ def test_content_hash_counts_duplicate_rows(spark):
     # order-insensitive: reversed row order hashes identically
     rev = spark.createDataFrame([(2, "b"), (1, "a")], "id long, v string")
     assert content_hash(rev) == h_base
+
+
+def test_content_hash_reads_stored_values(spark):
+    """The hash reads each value as stored, not a string rendering of it:
+    ["a, b"] and ["a", "b"] render alike but hash apart. A map column is
+    hashed too, through its entries."""
+    from slowspark.checkpoint import content_hash
+
+    one = spark.createDataFrame([(["a, b"],)], "v array<string>")
+    two = spark.createDataFrame([(["a", "b"],)], "v array<string>")
+    assert content_hash(one) != content_hash(two)
+    m = spark.createDataFrame([({"k": "v"},)], "m map<string,string>")
+    other = spark.createDataFrame([({"k": "w"},)], "m map<string,string>")
+    assert content_hash(m) != content_hash(other)
 
 
 def test_catalog_exists_requires_success_marker(spark, tmp_path):

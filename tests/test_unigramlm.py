@@ -97,6 +97,24 @@ def test_viterbi_prefers_frequent_whole_pieces(spark):
     assert viterbi_pieces("thecat", logp, 4) == ["the", "cat"]
 
 
+def test_unigram_segment_counts_match_viterbi_per_word(spark):
+    """unigram_segment's per-doc n_tokens is the sum of viterbi_pieces
+    lengths over the doc's words, typed int like bpe_segment's."""
+    from slowspark.unigramlm import unigram_segment
+
+    docs = [(i, t) for i, t in enumerate(CORPUS)]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    model = unigram_train(df, vocab_size=12, n_rounds=1, max_piece_len=4,
+                          seed_size=40)
+    logp = {r["piece"]: r["logp"] for r in model.collect()}
+    seg = unigram_segment(df, model, max_piece_len=4)
+    assert dict(seg.dtypes)["n_tokens"] == "int"
+    assert {r["doc_id"]: r["n_tokens"] for r in seg.collect()} == {
+        i: sum(len(viterbi_pieces(w, logp, 4)) for w in t.split())
+        for i, t in docs
+    }
+
+
 def test_viterbi_unk_coverage_and_tie_rule():
     # unseen char 'z' covered at UNK_LOGP as a single piece
     logp = {"ab": -1.0, "a": -2.0, "b": -2.0}

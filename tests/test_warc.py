@@ -99,6 +99,24 @@ def test_warc_header_ints_and_nulls(spark, tmp_path):
     assert back["https://example.org/b"].get("X-Slowspark-s") is None
 
 
+def test_warc_null_timestamp_writes_the_epoch_date(spark, tmp_path):
+    """A null `ts_col` value writes the epoch WARC-Date, the one the
+    writer uses without `ts_col`, instead of failing the export."""
+    import datetime
+
+    docs = spark.createDataFrame(
+        [("https://example.org/a", b"x", datetime.datetime(2024, 1, 2, 3, 4, 5)),
+         ("https://example.org/b", b"y", None)],
+        "url string, payload binary, t timestamp",
+    )
+    out = str(tmp_path / "ts")
+    write_warc(docs, out, n_files=1, ts_col="t", compress=False)
+    (f,) = glob.glob(out + "/*.warc")
+    blob = open(f, "rb").read().decode()
+    assert "WARC-Date: 2024-01-02T03:04:05Z\r\n" in blob
+    assert "WARC-Date: 1970-01-01T00:00:00Z\r\n" in blob
+
+
 def test_warc_reader_accepts_lowercase_headers(spark, tmp_path):
     """ISO 28500 field names are case-insensitive — a spec-valid
     third-party WARC with 'content-length:' / 'warc-type:' must parse

@@ -351,11 +351,10 @@ def _exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting (training-data op): whitespace tokens per doc."""
+    from slowspark.textops import token_count
+
     d = _read(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).alias("ws_tokens"),
-    )
+    return token_count(d, "text").select("doc_id", "ws_tokens")
 
 
 def _quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1477,25 +1476,20 @@ _SEQ_MANIFEST_ORACLE = """
 _KMV_K = 64
 
 
+def _lang_bigrams(docs: DataFrame) -> DataFrame:
+    """(lang, bg): one row per token bigram of each doc of >= 2 tokens."""
+    from slowspark.textops import exploded_ngrams, word_count
+
+    return exploded_ngrams(
+        docs.filter(word_count("text") >= 2), "text", "lang", 2, "bg"
+    )
+
+
 def _kmv_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lang, bg): per-lang token bigrams — ~900 distincts per lang at
     sf0.01, enough above k=64 that the KMV estimator genuinely
     estimates instead of degenerating to the exact small-set path."""
-    from slowspark.textops import ws_token_array
-
-    return (
-        _read(spark, sf_dir, "documents")
-        .select("lang", ws_token_array("text").alias("tk"))
-        .select(
-            "lang",
-            F.explode(
-                F.expr(
-                    "transform(slice(tk, 1, greatest(size(tk) - 1, 0)),"
-                    " (t, i) -> concat(t, ' ', tk[i + 1]))"
-                )
-            ).alias("bg"),
-        )
-    )
+    return _lang_bigrams(_read(spark, sf_dir, "documents"))
 
 
 def _kmv_hashes_parquet(spark: SparkSession, sf_dir: str) -> str:
@@ -1988,14 +1982,14 @@ def _bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_subwords, fertility); integer sums + one division, so the whole
     segmentation-and-aggregate is inside the value hash."""
     from slowspark.bpe import bpe_segment
-    from slowspark.textops import ws_token_array
+    from slowspark.textops import word_count
 
     d = _read(spark, sf_dir, "documents")
     merges = _bpe_learned(spark, sf_dir)
     # counts_only: no token-array assembly shuffle (r9)
     seg = bpe_segment(d, merges, counts_only=True)
     words = d.select(
-        "doc_id", "lang", F.size(ws_token_array("text")).alias("n_words")
+        "doc_id", "lang", word_count("text").alias("n_words")
     )
     return (
         words.join(seg, "doc_id")
@@ -2482,28 +2476,13 @@ def _hll_incremental_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     _kmv_hashes_parquet(spark, sf_dir)  # for the DuckDB side
     idx = _artifact_path(sf_dir, "hll_index")
     docs = _read(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    from slowspark.textops import ws_token_array
-
-    def bigrams_of(d):
-        return d.select(
-            "lang", ws_token_array("text").alias("tk")
-        ).select(
-            "lang",
-            F.explode(
-                F.expr(
-                    "transform(slice(tk, 1, greatest(size(tk) - 1, 0)),"
-                    " (t, i) -> concat(t, ' ', tk[i + 1]))"
-                )
-            ).alias("bg"),
-        )
-
     from slowspark.util import local_frame, materialize
 
-    even = bigrams_of(docs.filter(F.col("doc_id") % 2 == 0))
+    even = _lang_bigrams(docs.filter(F.col("doc_id") % 2 == 0))
     # materialized: the append AND its replay both consume the odd-doc
     # bigram stream — the tokenize + explode otherwise runs twice (r9);
     # replay semantics are unchanged (the same rows are appended again)
-    odd = materialize(bigrams_of(docs.filter(F.col("doc_id") % 2 == 1)))
+    odd = materialize(_lang_bigrams(docs.filter(F.col("doc_id") % 2 == 1)))
     build_hll_index(even, idx, "bg", _HLL_P, group_cols=("lang",))
     append_to_hll_index(odd, idx, "bg", _HLL_P, group_cols=("lang",))
     # COLLECT the pre-replay estimate before mutating the index — a lazy

@@ -233,15 +233,15 @@ def _symbols(state):
 
 
 def _pair_counts(words: DataFrame) -> DataFrame:
-    """(a, b, c): adjacent-symbol pair counts weighted by word count."""
-    pairs = F.expr(
-        "transform(slice(sym, 1, greatest(size(sym) - 1, 0)),"
-        " (t, i) -> struct(t as a, sym[i + 1] as b))"
-    )
+    """(a, b, c): adjacent-symbol pair counts weighted by word count —
+    the textops.token_grams bigram stream over words of >= 2 symbols."""
+    from slowspark.textops import token_grams
+
+    sym = words.select("count", _symbols(F.col("s")).alias("sym"))
+    g = F.col("gram")
     return (
-        words.select("count", _symbols(F.col("s")).alias("sym"))
-        .select("count", F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        token_grams(sym.filter(F.size("sym") >= 2), "sym", 2, "count")
+        .groupBy(g[0].alias("a"), g[1].alias("b"))
         .agg(F.sum("count").alias("c"))
     )
 

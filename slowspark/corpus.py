@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from slowspark.textops import token_grams, word_count, ws_token_array
+
 # the C4 "terrible tiny corpus" stopword rule uses a handful of very
 # frequent English words; language_id's per-language tables live in
 # textops._STOPWORDS — this set is deliberately tiny and English-only
@@ -65,12 +67,7 @@ def quality_filter_flags(
     codegen end-to-end; at 10^12 docs this is a single scan. Thresholds are
     arguments, defaults tuned DOWN for the synthetic word-salad corpus
     (min_words=20; real Gopher uses 50)."""
-    # empty tokens are filtered, not just trimmed: F.trim strips SPACES
-    # only, so "\ntext\n" would otherwise split into phantom '' words
-    # (caught by the hypothesis differential in tests/test_property.py)
-    toks = F.array_remove(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), ""
-    )
+    toks = ws_token_array(text_col)
     n_words = F.size(toks)
     n_chars = F.length(text_col)
     # non-whitespace character count: the denominator-free building block
@@ -122,44 +119,17 @@ def passage_table(
     passage_words: int = 20,
 ) -> DataFrame:
     """Explode each document into fixed-width word passages:
-    (id, passage_idx, passage, passage_md5). Tokens are hoisted into a
-    column and the explode runs over POSITIONS with the slice applied
-    after (textops.exploded_ngrams pattern) — exploding a transform-built
-    array of passages would let InferFiltersFromGenerate inline the
-    tokenize into a per-element filter, O(len^2) per doc."""
-    toks_col, n_col = "__p_toks", "__p_n"
-    k = int(passage_words)
-    if k < 1:
+    (id, passage_idx, passage, passage_md5) — the non-overlapping
+    chunk_passages windows of `passage_words` tokens, plus their md5. A
+    document with no tokens yields no passages."""
+    if passage_words < 1:
         raise ValueError(f"passage_words must be >= 1, got {passage_words}")
-    with_toks = (
-        df.select(id_col, text_col)
-        # drop empty tokens: split('') yields [''] (size 1), which would
-        # give every empty document one empty passage; filtering the
-        # array makes "no text" mean "no passages" in both engines
-        .withColumn(
-            toks_col,
-            F.array_remove(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), ""
-            ),
-        )
-        .withColumn(n_col, F.size(toks_col))
-        # sequence(0, -1) would yield DESCENDING [0, -1]; guard empties
-        .filter(F.col(n_col) > 0)
-    )
-    n_passages = F.ceil(F.col(n_col) / F.lit(k)).cast("int")
-    return (
-        with_toks.withColumn(
-            "passage_idx",
-            F.explode(F.sequence(F.lit(0), n_passages - F.lit(1))),
-        )
-        .withColumn(
-            "passage",
-            F.concat_ws(
-                " ", F.slice(F.col(toks_col), F.col("passage_idx") * k + 1, k)
-            ),
-        )
-        .withColumn("passage_md5", F.md5("passage"))
-        .select(id_col, "passage_idx", "passage", "passage_md5")
+    p = chunk_passages(df, passage_words, passage_words, id_col, text_col)
+    return p.select(
+        id_col,
+        F.col("chunk_ix").alias("passage_idx"),
+        F.col("chunk_text").alias("passage"),
+        F.md5("chunk_text").alias("passage_md5"),
     )
 
 
@@ -248,22 +218,15 @@ def _bigram_trunk(df, text_col, id_col, model_df):
     bigram position of `df`, mtoks = (tk) tokens of the model corpus
     (`model_df`, or `df` itself when None) and big = (w1, w2, cb) the
     model's bigram counts, one map-side-combined groupBy. Bigrams come
-    from a transform/slice expression, no self-join. Each LM chooses what
-    to materialize."""
-    tk = F.array_remove(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), ""
-    ).alias("tk")
+    from the textops.token_grams stream over docs of >= 2 tokens, no
+    self-join. Each LM chooses what to materialize."""
+    tk = ws_token_array(text_col).alias("tk")
 
     def bigrams(t, *keep):
-        return t.filter(F.size("tk") >= 2).select(
-            *keep,
-            F.explode(
-                F.expr(
-                    "transform(slice(tk, 1, greatest(size(tk) - 1, 0)),"
-                    " (t, i) -> struct(t AS w1, tk[i + 1] AS w2))"
-                )
-            ).alias("p"),
-        ).select(*keep, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        g = F.col("gram")
+        return token_grams(t.filter(F.size("tk") >= 2), "tk", 2, *keep).select(
+            *keep, g[0].alias("w1"), g[1].alias("w2")
+        )
 
     toks = df.select(F.col(id_col), tk)
     mtoks = (df if model_df is None else model_df).select(tk)
@@ -318,7 +281,7 @@ def stupid_backoff_logprob(
     n_bigrams = 0, avg_neg_logprob = 0.0 (nothing to judge — route them
     by the word-count quality rule instead).
 
-    Scale shape: bigrams come from a transform/slice expression (no
+    Scale shape: bigrams come from the textops.token_grams stream (no
     self-join); the count tables are one map-side-combined groupBy each;
     scoring is one join of the bigram stream against the bigram table
     (the wide one — shuffle join keyed on the pair; bucket the persisted
@@ -491,13 +454,7 @@ def unigram_logprob(
     smaller than the token table) — Spark picks broadcast vs shuffle join
     from stats; the algebraic identity avg(-ln p) = ln(total) - avg(ln tf)
     means the scalar total joins as a literal, not a cross join of rows."""
-    toks = (
-        df.select(id_col, text_col)
-        .withColumn("__t", F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))
-        .filter(F.size("__t") > 0)
-        .select(id_col, F.explode("__t").alias("term"))
-        .filter(F.col("term") != "")
-    )
+    toks = df.select(id_col, F.explode(ws_token_array(text_col)).alias("term"))
     from slowspark.util import materialize as _materialize
 
     # vocabulary-sized; two consumers (the total scalar + the scoring
@@ -687,7 +644,7 @@ def dataset_card(
     stratum-cardinality rows. NULL strata are kept under the stratum
     value '__null__' — a card that silently drops rows is not an
     audit."""
-    toks = F.size(F.expr(rf"regexp_extract_all({text_col}, '\\S+', 0)"))
+    toks = word_count(text_col)
     keyed = df.select(
         F.coalesce(F.col(stratum_col).cast("string"), F.lit("__null__"))
         .alias("stratum"),
@@ -743,8 +700,8 @@ def mixture_rates(
     hash_sample's default_rate=0).
 
     Scale shape: ONE aggregate over (stratum, token-count) — token
-    counting is the same regexp_extract_all('\\S+') expression as the
-    token_count op — then pure driver arithmetic on a
+    counting is the textops.word_count expression of the token_count
+    op — then pure driver arithmetic on a
     strata-cardinality-sized table. Achieved tokens are exact in
     expectation; per-stratum granularity is hash_sample's 1/buckets."""
     import math
@@ -911,11 +868,7 @@ def _stratum_token_counts(
         r["s"]: int(r["t"] or 0)
         for r in df.filter(F.col(stratum_col).isNotNull())
         .groupBy(F.col(stratum_col).alias("s"))
-        .agg(
-            F.sum(
-                F.size(F.expr(rf"regexp_extract_all({text_col}, '\\S+', 0)"))
-            ).alias("t")
-        )
+        .agg(F.sum(word_count(text_col)).alias("t"))
         .collect()
     }
 
@@ -1139,11 +1092,7 @@ def pack_sequences(
     from pyspark.sql import Window
 
     n_tokens = (
-        F.col(n_tokens_col).cast("long")
-        if n_tokens_col
-        else F.size(
-            F.array_remove(F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), "")
-        )
+        F.col(n_tokens_col).cast("long") if n_tokens_col else word_count(text_col)
     )
     base = df.select(F.col(id_col), n_tokens.alias("n_tokens"))
     from slowspark.util import materialize
@@ -1239,11 +1188,7 @@ def pack_bins(
         raise ValueError(
             f"pack_bins: n_shards must be >= 1, got {n_shards}"
         )
-    toks = (
-        F.col(n_tokens_col)
-        if n_tokens_col
-        else F.size(F.expr(rf"regexp_extract_all({text_col}, '\\S+', 0)"))
-    )
+    toks = F.col(n_tokens_col) if n_tokens_col else word_count(text_col)
     keyed = df.select(
         F.col(id_col).alias("id"),
         toks.cast("long").alias("n_tokens"),
@@ -1444,12 +1389,7 @@ def tfidf_similar_pairs(
 
     logger = logging.getLogger("slowspark")
 
-    toks = (
-        df.select(id_col, text_col)
-        .withColumn("__t", F.split(F.trim(F.lower(F.col(text_col))), r"\s+"))
-        .select(F.col(id_col), F.explode("__t").alias("term"))
-        .filter(F.col("term") != "")
-    )
+    toks = df.select(F.col(id_col), F.explode(ws_token_array(text_col)).alias("term"))
     # materialized: three consumers (dfreq + the weighted branch's two
     # reads) otherwise each re-run the tokenize + tf groupBy (r9)
     tf = materialize(toks.groupBy(id_col, "term").agg(F.count("*").alias("tf")))
@@ -1687,8 +1627,6 @@ def zipf_fit(
     group's vocabulary at corpus scale is 10^8+ terms); the OLS fit
     reduces each group to six sums in one aggregation. Tokenization is
     the repo-wide whitespace convention (ws_token_array)."""
-    from slowspark.textops import ws_token_array
-
     tf = (
         df.select(*group_cols, ws_token_array(text_col).alias("__tk"))
         .select(*group_cols, F.explode("__tk").alias("term"))
@@ -1750,7 +1688,6 @@ def heaps_growth(
     window."""
     from pyspark.sql import Window
 
-    from slowspark.textops import ws_token_array
     from slowspark.util import materialize
 
     toks = df.select(
@@ -1832,15 +1769,14 @@ def chunk_passages(
         raise ValueError(
             f"stride_tokens must be in [1, chunk_tokens], got {stride}"
         )
-    from slowspark.textops import ws_token_array
-
     w, s = F.lit(chunk_tokens), F.lit(stride)
     toks = df.select(
         F.col(id_col), ws_token_array(text_col).alias("__tk")
     ).withColumn("__n", F.size("__tk"))
-    n_chunks = F.when(F.col("__n") <= 0, F.lit(0)).otherwise(
-        F.ceil(F.greatest(F.col("__n") - w, F.lit(0)) / s).cast("int") + 1
-    )
+    # a NULL text has a NULL size: no chunk, like an empty one
+    n_chunks = F.when(F.col("__n") > 0, F.ceil(
+        F.greatest(F.col("__n") - w, F.lit(0)) / s
+    ).cast("int") + 1).otherwise(F.lit(0))
     start = F.col("chunk_ix").cast("long") * s
     return (
         toks.withColumn("__nc", n_chunks)
@@ -1858,9 +1794,8 @@ def chunk_passages(
             F.least(F.col("__n") - start, w.cast("long")).alias(
                 "n_chunk_tokens"
             ),
-            F.array_join(
-                F.slice(F.col("__tk"), (start + 1).cast("int"), chunk_tokens),
-                " ",
+            F.concat_ws(
+                " ", F.slice(F.col("__tk"), (start + 1).cast("int"), chunk_tokens)
             ).alias("chunk_text"),
         )
     )

@@ -24,9 +24,9 @@ oracle cannot recompute), and the Gumbel draw is a pure projection of
 every stage retry, every engine. No rand() anywhere.
 
 Scale shape (the 100 TB story): gram rows are O(2 x tokens) produced by
-a position-sequence explode (never a transform()-built array explode —
-see textops.exploded_ngrams for the O(len^2) lambda-inlining trap this
-avoids); the two model fits are groupBy(bucket) counts — map-side
+the textops.token_grams position explode (never a transform()-built
+array explode — see token_grams for the O(len^2) lambda-inlining trap
+this avoids); the two model fits are groupBy(bucket) counts — map-side
 combined, shuffle fan-in <= n_buckets rows per partition; the per-bucket
 log-ratio table is <= n_buckets rows and BROADCAST to the scoring join;
 per-document weights are one groupBy(id) sum; the top-k cut uses the
@@ -40,7 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from slowspark.textops import ws_token_array
+from slowspark.textops import unigram_bigram_rows
 from slowspark.util import materialize as _materialize
 
 _GUMBEL_DENOM = float(2**32)
@@ -66,33 +66,12 @@ def hashed_ngram_rows(
 ) -> DataFrame:
     """(id, bucket) — one row per unigram and bigram OCCURRENCE, bucket =
     md5-hash of the gram text mod ``n_buckets`` (paper §3.1 uses hashed
-    unigrams+bigrams at 10k buckets). Tokenization is the repo-wide
-    lowered whitespace convention (textops.ws_token_array).
-
-    Explodes a position sequence and slices the tokens column per row —
-    one O(1)/O(2) slice each — instead of exploding a transform()-built
-    gram array (which Catalyst's InferFiltersFromGenerate inlines into a
-    per-element re-split, O(len^2) per doc; see textops.exploded_ngrams).
-    Positions 0..n-1 are unigrams, n..2n-2 are bigrams; a 1-token doc
-    yields its unigram only, an empty doc yields no rows."""
-    toks = "__dsir_toks"
-    pos_arr = (
-        f"CASE WHEN size({toks}) >= 1 "
-        f"THEN sequence(0, 2 * size({toks}) - 2) ELSE array() END"
-    )
-    gram = (
-        f"CASE WHEN __dsir_pos < size({toks}) THEN {toks}[__dsir_pos] "
-        f"ELSE concat_ws(' ', slice({toks}, __dsir_pos - size({toks}) + 1, 2)) END"
-    )
-    return (
-        df.withColumn(toks, ws_token_array(text_col))
-        .select(
-            F.col(id_col), F.col(toks), F.explode(F.expr(pos_arr)).alias("__dsir_pos")
-        )
-        .select(
-            F.col(id_col),
-            _md5_bucket_of(F.expr(gram), salt, n_buckets).alias("bucket"),
-        )
+    unigrams+bigrams at 10k buckets). The grams are
+    textops.unigram_bigram_rows (lowered whitespace tokens, position
+    explode): a 1-token doc yields its unigram only, an empty doc yields
+    no rows."""
+    return unigram_bigram_rows(df, text_col, id_col).select(
+        id_col, _md5_bucket_of(F.col("gram"), salt, n_buckets).alias("bucket")
     )
 
 

@@ -17,7 +17,7 @@ itself), no driver state. Python-per-document is the sanctioned slow
 path here for the same reason as textops.minhash_signatures: six gram
 sizes of run counting plus interval-union coverage exceed what codegen
 expressions express without the O(len^2) lambda-inlining trap
-(textops.exploded_ngrams docstring), and the per-batch numpy work is
+(textops.token_grams docstring), and the per-batch numpy work is
 microseconds per document.
 
 Definitions (each deterministic and engine-reproducible — the driver

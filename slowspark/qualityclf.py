@@ -25,9 +25,9 @@ join of the coefficient table + two map-side-combined aggregations
 float64 everywhere; per-run low-bit sum-order jitter is below the
 round-6 reporting grain the driver oracle hashes at.
 
-Feature hashing is xxhash64 pmod n_buckets — the repo-wide convention
-(textops.exploded_ngrams, dsir.hashed_ngram_counts), reproducible from
-materialized feature rows by any engine.
+Feature hashing is xxhash64 pmod n_buckets over the gram text (the word
+grams are textops.unigram_bigram_rows, DSIR's grams too), reproducible
+from materialized feature rows by any engine.
 
 No reference analog (/root/reference is a slow-log parser, src/*.rs).
 """
@@ -39,8 +39,23 @@ import math
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from slowspark.textops import ws_token_array
+from slowspark.textops import unigram_bigram_rows
 from slowspark.util import local_frame
+
+
+def _hashed_tf(grams: DataFrame, id_col: str, n_buckets: int) -> DataFrame:
+    """(id, bucket, tf) from one (id_col, gram) row per gram occurrence:
+    each gram hashed xxhash64 pmod n_buckets, tf = bucket count / the
+    doc's L2 norm of bucket counts — one groupBy(id, bucket) with
+    map-side combine, then a window re-partition by id for the norm."""
+    from pyspark.sql import Window
+
+    counts = grams.groupBy(
+        F.col(id_col).alias("id"),
+        F.pmod(F.xxhash64("gram"), F.lit(n_buckets)).alias("bucket"),
+    ).agg(F.count("*").cast("double").alias("c"))
+    norm = F.sqrt(F.sum(F.col("c") * F.col("c")).over(Window.partitionBy("id")))
+    return counts.select("id", "bucket", (F.col("c") / norm).alias("tf"))
 
 
 def hashed_text_features(
@@ -62,30 +77,14 @@ def hashed_text_features(
     driver task at any stable step size). Docs with zero tokens produce
     no rows — score_documents gives them sigmoid(intercept).
 
-    Scale shape: explode + one groupBy(id, bucket) with map-side combine,
-    then a window re-partition by id for the per-doc norm — two narrow
-    shuffles of the already-aggregated (doc, distinct-gram) table."""
-    grams = F.col("tk")
-    if bigrams:
-        # slice is 1-indexed; transform's i and tk[...] are 0-indexed, so
-        # slice element i pairs with tk[i + 1] — the following token
-        big = F.expr(
-            "transform(slice(tk, 1, greatest(size(tk) - 1, 0)),"
-            " (t, i) -> concat(t, ' ', tk[i + 1]))"
-        )
-        grams = F.concat(grams, big)
-    base = (
-        df.select(F.col(id_col).alias("id"), ws_token_array(text_col).alias("tk"))
-        .select("id", grams.alias("grams"))
-        .select("id", F.explode("grams").alias("gram"))
+    Scale shape: the lambda-free position explode of
+    textops.unigram_bigram_rows + one groupBy(id, bucket) with map-side
+    combine, then a window re-partition by id for the per-doc norm — two
+    narrow shuffles of the already-aggregated (doc, distinct-gram)
+    table."""
+    return _hashed_tf(
+        unigram_bigram_rows(df, text_col, id_col, bigrams), id_col, n_buckets
     )
-    from pyspark.sql import Window
-
-    counts = base.groupBy(
-        "id", F.pmod(F.xxhash64("gram"), F.lit(n_buckets)).alias("bucket")
-    ).agg(F.count("*").cast("double").alias("c"))
-    norm = F.sqrt(F.sum(F.col("c") * F.col("c")).over(Window.partitionBy("id")))
-    return counts.select("id", "bucket", (F.col("c") / norm).alias("tf"))
 
 
 def train_logreg(
@@ -311,8 +310,6 @@ def hashed_char_ngram_features(
     window norm — identical to the word-gram sibling."""
     if n < 1:
         raise ValueError(f"hashed_char_ngram_features: n must be >= 1, got {n}")
-    from pyspark.sql import Window
-
     grams = F.expr(
         f"CASE WHEN length(__t) >= {n} THEN "
         f"transform(sequence(1, length(__t) - {n} + 1), "
@@ -322,11 +319,7 @@ def hashed_char_ngram_features(
         df.select(F.col(id_col).alias("id"), F.lower(F.col(text_col)).alias("__t"))
         .select("id", F.explode(grams).alias("gram"))
     )
-    counts = base.groupBy(
-        "id", F.pmod(F.xxhash64("gram"), F.lit(n_buckets)).alias("bucket")
-    ).agg(F.count("*").cast("double").alias("c"))
-    norm = F.sqrt(F.sum(F.col("c") * F.col("c")).over(Window.partitionBy("id")))
-    return counts.select("id", "bucket", (F.col("c") / norm).alias("tf"))
+    return _hashed_tf(base, "id", n_buckets)
 
 
 def train_langid(

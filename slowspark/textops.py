@@ -1066,7 +1066,8 @@ def with_ngram_set(
     df: DataFrame, text_col: str = "text", out: str = "grams", n: int = 3
 ) -> DataFrame:
     """Word n-gram set column (built-ins only): tokens -> sliding n-grams ->
-    distinct. Tokens are materialized into a column FIRST so the per-element
+    distinct, the grams of token_grams as an array (Jaccard needs arrays).
+    Tokens are materialized into a column FIRST so the per-element
     transform lambda slices an array reference — inlining split(text) into
     the lambda makes Catalyst re-tokenize the whole document per element,
     turning an O(len) projection into O(len^2) (measured 3x wall on the
@@ -1076,14 +1077,10 @@ def with_ngram_set(
         df.withColumn(toks_col, ws_token_array(text_col))
         .withColumn(
             out,
-            F.array_distinct(
-                F.expr(
-                    f"CASE WHEN size({toks_col}) >= {n} THEN "
-                    f"transform(sequence(0, size({toks_col}) - {n}), "
-                    f"i -> concat_ws(' ', slice({toks_col}, i + 1, {n}))) "
-                    f"ELSE array(concat_ws(' ', {toks_col})) END"
-                )
-            ),
+            F.array_distinct(F.transform(
+                _gram_starts(toks_col, n),
+                lambda i: F.concat_ws(" ", _gram_at(toks_col, i, n)),
+            )),
         )
         .drop(toks_col)
     )
@@ -1362,22 +1359,9 @@ def exact_substring_dedup(
     ).withColumn("n_tokens", F.size(toks_col))
     base = _materialize(base.select(id_col, toks_col, "n_tokens"))
 
-    pos_arr = (
-        f"CASE WHEN n_tokens >= {n} THEN sequence(0, n_tokens - {n}) "
-        f"ELSE array() END"
-    )
-    occ = (
-        base.select(
-            F.col(id_col),
-            F.col(toks_col),
-            F.explode(F.expr(pos_arr)).alias("pos"),
-        )
-        .select(
-            F.col(id_col),
-            F.col("pos"),
-            F.expr(f"concat_ws(' ', slice({toks_col}, pos + 1, {n}))").alias("gram"),
-        )
-    )
+    occ = token_grams(
+        base.filter(F.col("n_tokens") >= n), toks_col, n, id_col
+    ).select(id_col, "pos", F.concat_ws(" ", "gram").alias("gram"))
     spans = _duplicated_spans(occ, id_col, ["gram"], n)
     kept = F.expr(
         f"CASE WHEN __spans IS NULL THEN {toks_col} ELSE "
@@ -1652,14 +1636,12 @@ def repetition_stats(
     # bigrams via exploded_ngrams (position explode): exploding a
     # transform()-built gram array lets InferFiltersFromGenerate +
     # predicate pushdown inline the lambda into a Filter that re-splits the
-    # text per element — O(len^2) per doc (see exploded_ngrams). Docs with
+    # text per element — O(len^2) per doc (see token_grams). Docs with
     # < 2 tokens are filtered out BEFORE the gram stage (exploded_ngrams
     # would give them a single all-tokens gram; the documented contract is
     # 0.0, which the left join's coalesce restores).
     grams = exploded_ngrams(
-        df.withColumn("__rs_n", F.size(ws_token_array(text_col)))
-        .filter(F.col("__rs_n") >= 2),
-        text_col, id_col, n=2,
+        df.filter(word_count(text_col) >= 2), text_col, id_col, n=2
     )
     per_gram = grams.groupBy(id_col, "gram").agg(F.count("*").alias("n"))
     top = per_gram.groupBy(id_col).agg(
@@ -1679,7 +1661,7 @@ def repetition_stats(
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic quality features + a composite score; all JVM-side."""
     length = F.length(F.col(text_col))
-    n_tokens = F.size(ws_token_array(text_col, lowered=False))
+    n_tokens = word_count(text_col)
     punct = F.length(F.regexp_replace(F.col(text_col), r"[^.!?,;:]", ""))
     upper = F.length(F.regexp_replace(F.col(text_col), r"[^A-Z]", ""))
     alpha = F.length(F.regexp_replace(F.col(text_col), r"[^A-Za-z]", ""))
@@ -1712,15 +1694,75 @@ def ws_token_array(text_col: str, lowered: bool = True):
     regression net for this class of bug)."""
     base = F.lower(F.col(text_col)) if lowered else F.col(text_col)
     # array_remove, not F.filter(lambda): keeps the expression lambda-free
-    # so the exploded_ngrams no-lambda plan pin (the O(len^2) inlining
-    # trap detector) stays strict
+    # so the gram stream's no-lambda plan pins (the O(len^2) inlining
+    # trap detector) stay strict
     return F.array_remove(F.split(F.trim(base), r"\s+"), "")
+
+
+def word_count(text_col: str):
+    """Whitespace-token count of `text_col` — the one word count (case
+    never changes it); NULL for a NULL text."""
+    return F.size(ws_token_array(text_col, lowered=False))
+
+
+def _gram_starts(toks, n):
+    """Start positions 0..max(size - n, 0) of the n-grams of array column
+    `toks`: a row with fewer than n tokens keeps one start, whose window
+    holds all of them."""
+    return F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
+
+
+def _gram_at(toks, pos, n):
+    """The n-token window of array column `toks` starting at 0-based `pos`."""
+    return F.slice(toks, pos + 1, n)
+
+
+def token_grams(df: DataFrame, toks: str, n, *keep: str) -> DataFrame:
+    """(*keep, pos, gram): the one word-gram stream — one row per n-gram
+    start position of the token-array column `toks` of df, gram = the
+    array of up to n tokens starting there. A row with fewer than n tokens
+    yields one window holding all of them (an empty array for none);
+    callers that want whole n-grams only pre-filter size(toks) >= n. `n`
+    is an int, or an integer column named in `keep` (one stream for
+    several orders).
+
+    Explodes the POSITIONS, deliberately not a transform()-built gram
+    array: exploding such an array looks equivalent, but Spark's
+    InferFiltersFromGenerate + predicate pushdown inline the whole lambda
+    into a Filter where the tokens alias is re-split PER LAMBDA ELEMENT —
+    O(len^2) per document (measured ~15x on the contamination query at
+    sf0.1; 26 s against 0.9 s for the quality classifier's features of
+    250 docs of 1,083 tokens, local[2] on a 4-vCPU host). Exploding the
+    position sequence keeps the tokens array a plain column reference
+    through the Generate; each output row then does one O(n) slice."""
+    return df.select(
+        *keep, F.col(toks), F.explode(_gram_starts(toks, n)).alias("pos")
+    ).select(*keep, "pos", _gram_at(toks, F.col("pos"), n).alias("gram"))
+
+
+def unigram_bigram_rows(
+    df: DataFrame, text_col: str, id_col: str, bigrams: bool = True
+) -> DataFrame:
+    """(id, gram): one row per lowered whitespace unigram and (with
+    `bigrams`) bigram OCCURRENCE — the feature grams of the DSIR and
+    quality-classifier models. One scan: each doc's token array is
+    exploded once per order and fed to token_grams, with the order as
+    its gram length and a pre-filter of docs shorter than it; a doc with
+    no tokens yields no rows."""
+    tk = "__ub_tk"
+    order = F.explode(F.array(F.lit(1), F.lit(2))) if bigrams else F.lit(1)
+    return token_grams(
+        df.select(F.col(id_col), ws_token_array(text_col).alias(tk),
+                  order.alias("__ub_n"))
+        .filter(F.size(tk) >= F.col("__ub_n")),
+        tk, F.col("__ub_n"), id_col, "__ub_n",
+    ).select(id_col, F.concat_ws(" ", "gram").alias("gram"))
 
 
 def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace tokens + a BPE-ish subword estimate (regex word pieces +
     chars/4 heuristic for long words) — built-ins only."""
-    ws_tokens = F.size(ws_token_array(text_col, lowered=False))
+    ws_tokens = word_count(text_col)
     word_pieces = F.size(
         F.regexp_extract_all(
             F.col(text_col), F.lit(r"[A-Za-z]{1,8}|\d{1,3}|[^\sA-Za-z\d]"), F.lit(0)
@@ -1806,33 +1848,16 @@ def exploded_ngrams(
     n: int = 3,
     out: str = "gram",
 ) -> DataFrame:
-    """(id, gram) rows — one row per word-n-gram OCCURRENCE.
-
-    Explode-the-POSITIONS shape, deliberately not explode(with_ngram_set):
-    exploding a transform()-built gram array looks equivalent, but Spark's
-    InferFiltersFromGenerate + predicate pushdown inline the whole lambda
-    into a Filter where the tokens alias is re-split PER LAMBDA ELEMENT —
-    O(len^2) per document (measured ~15x on the contamination query at
-    sf0.1). Exploding the position sequence keeps the tokens array a plain
-    column reference through the Generate; each output row then does one
-    O(n) slice. Documents with fewer than n tokens yield one gram of all
-    their tokens (position -1 sentinel), matching with_ngram_set."""
+    """(id, gram) rows — one row per word-n-gram OCCURRENCE, the
+    token_grams stream (position explode, lambda-free) with each gram
+    space-joined. Documents with fewer than n tokens yield one gram of all
+    their tokens, matching with_ngram_set; pre-filter on the token count
+    to drop them."""
     toks = "__ng_toks"
-    pos_arr = (
-        f"CASE WHEN size({toks}) >= {n} THEN sequence(0, size({toks}) - {n}) "
-        f"ELSE array(-1) END"
-    )
-    gram = (
-        f"CASE WHEN __ng_pos >= 0 THEN "
-        f"concat_ws(' ', slice({toks}, __ng_pos + 1, {n})) "
-        f"ELSE concat_ws(' ', {toks}) END"
-    )
-    ids = [F.col(id_col)] if id_col is not None else []
-    return (
-        df.withColumn(toks, ws_token_array(text_col))
-        .select(*ids, F.col(toks), F.explode(F.expr(pos_arr)).alias("__ng_pos"))
-        .select(*ids, F.expr(gram).alias(out))
-    )
+    ids = [id_col] if id_col is not None else []
+    return token_grams(
+        df.withColumn(toks, ws_token_array(text_col)), toks, n, *ids
+    ).select(*ids, F.concat_ws(" ", "gram").alias(out))
 
 
 def eval_ngram_hashes(
@@ -2120,17 +2145,9 @@ def pmi_pairs(
     )
     totals = uni.groupBy(*gcols).agg(F.sum("c").alias("n_total"))
     pairs = (
-        toks.select(
-            *gcols,
-            F.explode(
-                F.expr(
-                    "transform(slice(__tk, 1, greatest(size(__tk) - 1, 0)),"
-                    " (t, i) -> struct(t as a, __tk[i + 1] as b))"
-                )
-            ).alias("p"),
-        )
-        .select(*gcols, F.col("p.a").alias("term_a"), F.col("p.b").alias("term_b"))
-        .groupBy(*gcols, "term_a", "term_b")
+        token_grams(toks.filter(F.size("__tk") >= 2), "__tk", 2, *gcols)
+        .groupBy(*gcols, F.col("gram")[0].alias("term_a"),
+                 F.col("gram")[1].alias("term_b"))
         .agg(F.count("*").alias("n_pair"))
         .filter(F.col("n_pair") >= min_count)
     )

@@ -1153,7 +1153,7 @@ def test_chunk_passages_windows_and_stride(spark):
     from slowspark.corpus import chunk_passages
 
     df = spark.createDataFrame(
-        [(1, "t0 t1 t2 t3 t4 t5 t6"), (2, "a b"), (3, "")],
+        [(1, "t0 t1 t2 t3 t4 t5 t6"), (2, "a b"), (3, ""), (4, None)],
         "doc_id long, text string",
     )
     got = {

@@ -51,6 +51,49 @@ def test_hashed_features_bigram_content(spark):
     assert got == exp
 
 
+def test_hashed_features_match_python_reference(spark):
+    """Differential: unigram + bigram L2-tf features against a Python
+    reference on 0-, 1-, 2- and ~1,000-token docs (repeated grams, edge
+    and interior whitespace runs, one bucket space small enough to
+    collide). Spark's xxhash64 hashes the reference's gram strings."""
+    import random
+    import re
+    from collections import Counter
+
+    rng = random.Random(7)
+    words = ["the", "cat", "Sat", "on", "a", "mat", "x"]
+    long_doc = " ".join(rng.choice(words) for _ in range(1000))
+    rows = [(1, ""), (2, " \n\t "), (3, "Word"), (4, "\na  B\n"),
+            (5, long_doc), (6, None)]
+    n_buckets = 1 << 6
+    for bigrams in (True, False):
+        grams = {}
+        for i, t in rows:
+            toks = [w for w in re.split(r"[ \t\n\x0b\f\r]+", (t or "").lower()) if w]
+            big = [f"{a} {b}" for a, b in zip(toks, toks[1:])] if bigrams else []
+            grams[i] = toks + big
+        distinct = sorted({g for gs in grams.values() for g in gs})
+        bucket = {
+            r["g"]: r["b"]
+            for r in spark.createDataFrame([(g,) for g in distinct], "g string")
+            .select("g", F.pmod(F.xxhash64("g"), F.lit(n_buckets)).alias("b"))
+            .collect()
+        }
+        want = {}
+        for i, gs in grams.items():
+            c = Counter(bucket[g] for g in gs)
+            norm = sum(v * v for v in c.values()) ** 0.5
+            want.update({(i, b): v / norm for b, v in c.items()})
+        got = {
+            (r["id"], r["bucket"]): r["tf"]
+            for r in hashed_text_features(
+                _docs(spark, rows), n_buckets=n_buckets, bigrams=bigrams
+            ).collect()
+        }
+        assert got.keys() == want.keys()
+        assert all(abs(got[k] - want[k]) < 1e-12 for k in want)
+
+
 @pytest.fixture(scope="module")
 def trained(spark):
     rows = []

@@ -224,16 +224,47 @@ def test_simhash_sf001_regression_golden(spark):
     assert n == 2507
 
 
+def _lambda_bodies(plan: str) -> list[str]:
+    """Every lambdafunction(...) of a plan string, parentheses balanced."""
+    bodies, i = [], plan.find("lambdafunction(")
+    while i >= 0:
+        depth = 0
+        for j in range(i + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            if depth == 0:
+                break
+        bodies.append(plan[i:j + 1])
+        i = plan.find("lambdafunction(", i + 1)
+    return bodies
+
+
 def test_exploded_ngrams_plan_has_no_lambda(spark, docs):
     """Plan-shape pin for the O(len^2) Catalyst trap: exploded_ngrams must
     contain NO lambda function anywhere in its optimized plan (a transform-
     built gram array would reappear as an inlined per-element lambda in the
-    Generate's inferred Filter)."""
-    plan = (
+    Generate's inferred Filter), and no other consumer of the gram stream
+    may carry a lambda that re-splits the text per element."""
+    from slowspark import corpus, dsir
+    from slowspark.qualityclf import hashed_text_features
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "lambdafunction" not in plan(
         textops.exploded_ngrams(docs, "text", "doc_id", 5)
-        ._jdf.queryExecution().optimizedPlan().toString()
     )
-    assert "lambdafunction" not in plan
+    consumers = {
+        "hashed_text_features": hashed_text_features(docs),
+        "hashed_ngram_rows": dsir.hashed_ngram_rows(docs),
+        "pmi_pairs": textops.pmi_pairs(docs, min_count=1),
+        "stupid_backoff_logprob": corpus.stupid_backoff_logprob(docs),
+        "kneser_ney_logprob": corpus.kneser_ney_logprob(docs),
+        "exact_substring_dedup": textops.exact_substring_dedup(docs, n=5),
+        "with_ngram_set": textops.with_ngram_set(docs, n=5),
+    }
+    for name, df in consumers.items():
+        resplit = [b for b in _lambda_bodies(plan(df)) if "split(" in b]
+        assert not resplit, (name, resplit[0][:200])
 
 
 def test_exploded_ngrams_differential_random(spark):
